@@ -209,10 +209,11 @@ def _hard_recall_by_kind(predicted_labels, truth) -> dict:
         .filter(F.col("nk") > 1)
         .count()
     )
-    assert n_mixed == 0, (
-        f"hard-corpus truth has {n_mixed} mixed-kind clusters; "
-        "_hard_recall_by_kind's side-a attribution no longer holds"
-    )
+    if n_mixed:
+        raise RuntimeError(
+            f"hard-corpus truth has {n_mixed} mixed-kind clusters; "
+            "_hard_recall_by_kind's side-a attribution no longer holds"
+        )
     tp_pairs = (
         t.select(F.col("spec_id").alias("a"), "cluster_id", "kind")
         .join(t.select(F.col("spec_id").alias("b"), "cluster_id"), "cluster_id")

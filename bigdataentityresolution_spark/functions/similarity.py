@@ -1,20 +1,16 @@
-"""Similarity feature columns: cosine / jaccard / levenshtein / embedding ops.
+"""Similarity feature columns: cosine / jaccard / levenshtein.
 
 The reference scores pairs with a logistic regression over concatenated
 TF-IDF vectors (src/functs.c:1005-1031, src/logistic.c). The new engine
 feeds the LR richer pairwise features (north_star): cosine over TF-IDF
-maps, Jaccard over shingle sets, bounded Levenshtein — all computed
-JVM-side; embedding math uses either JVM array expressions or an
-Arrow-vectorized pandas UDF (never per-row Python).
+maps, Jaccard over shingle sets, bounded Levenshtein — all JVM-side
+map/array expressions (no Python on the hot path).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def cosine_maps(a: Column, b: Column) -> Column:
@@ -29,18 +25,6 @@ def cosine_maps(a: Column, b: Column) -> Column:
     )
     na = F.sqrt(F.aggregate(F.map_values(a), F.lit(0.0), lambda acc, v: acc + v * v))
     nb = F.sqrt(F.aggregate(F.map_values(b), F.lit(0.0), lambda acc, v: acc + v * v))
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
-
-
-def cosine_arrays(a: Column, b: Column) -> Column:
-    """Cosine similarity of two dense ARRAY<FLOAT/DOUBLE> columns (JVM-side).
-
-    zip_with dot product — fine for moderate dims; for very wide
-    embeddings prefer :func:`cosine_topk_pandas` (Arrow + numpy matmul).
-    """
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
@@ -62,24 +46,3 @@ def levenshtein_bounded(a: Column, b: Column, bound: int = 256) -> Column:
     dist = F.levenshtein(pa, pb).cast("double")
     mx = F.greatest(F.length(pa), F.length(pb)).cast("double")
     return F.round(F.when(mx > 0, 1.0 - dist / mx).otherwise(F.lit(1.0)), 6)
-
-
-# ---- Arrow-vectorized embedding kernels (the sanctioned Python path) ----
-
-@F.pandas_udf(T.DoubleType())
-def cosine_pairs_pandas(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batched cosine similarity for paired embedding columns.
-
-    Arrow hands us the whole batch; numpy does one vectorized pass.
-    """
-    ma = np.stack(a.to_numpy())
-    mb = np.stack(b.to_numpy())
-    dots = np.einsum("ij,ij->i", ma, mb)
-    norms = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-    out = np.where(norms > 0, dots / np.where(norms == 0, 1, norms), 0.0)
-    return pd.Series(out)
-
-
-def norm_array(col: Column) -> Column:
-    """L2 norm of ARRAY<FLOAT/DOUBLE> (JVM-side)."""
-    return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, v: acc + v * v))

@@ -186,7 +186,8 @@ def block_membership(
     Pair-level blocking misses are additionally healed by transitive
     closure (a~c, c~b ⇒ a,b same cluster).
     """
-    assert num_perm % bands == 0, "bands must divide num_perm"
+    if num_perm % bands != 0:
+        raise ValueError(f"bands ({bands}) must divide num_perm ({num_perm})")
     sig = minhash_signatures_df(
         files, id_col=id_col, text_col=text_col, shingle_n=shingle_n,
         num_perm=num_perm, seed=seed, tokenizer=tokenizer, hash_fn=hash_fn,

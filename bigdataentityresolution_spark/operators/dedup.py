@@ -101,7 +101,10 @@ def simhash_duplicate_pairs(
     cap members per chunk (deterministic by id) — same defusal as
     blocking.candidate_pairs (VERDICT.md 'What's wrong' #3).
     """
-    assert max_hamming < n_chunks, "recall guarantee needs max_hamming < n_chunks"
+    if max_hamming >= n_chunks:
+        raise ValueError(
+            f"recall guarantee needs max_hamming ({max_hamming}) < n_chunks ({n_chunks})"
+        )
     chunk_bits = 60 // n_chunks
     d = docs.select(
         F.col(id_col).cast("string").alias("spec_id"),

@@ -207,26 +207,19 @@ def pair_features_from_est(
     candidates_with_est: DataFrame,
     docs_compact: DataFrame,
     lev_bound: int = 128,
-    sig_prefilter: float | None = 0.2,
 ) -> DataFrame:
     """Featurize (a, b, est_j) candidates produced by
-    blocking.candidate_pairs_with_est: the est-Jaccard prefilter runs
-    BEFORE any join (the est was computed in-block), so only survivors
-    (~5 % at the default floor) probe the compact doc state for the
-    TF-IDF map + prefix — at bench scale this removed the pipeline's
-    hottest shuffle (2·|pairs| sketch probes). Signature columns never
-    ride this join at all. Callers mixing candidate CHANNELS (the ER
-    pipeline's lexical ∪ semantic union) pass sig_prefilter=None and
-    apply the filter per-channel before the union — semantic-channel
-    pairs are selected precisely because they live below the sketch
-    estimate's reach, so the prefilter must never see them.
+    blocking.candidate_pairs_with_est. The est was computed in-block, so
+    the caller applies any est-Jaccard prefilter BEFORE this join (the ER
+    pipeline does it per candidate channel) and only survivors (~5 % at
+    the default floor) probe the compact doc state for the TF-IDF map +
+    prefix — at bench scale this removed the pipeline's hottest shuffle
+    (2·|pairs| sketch probes). Signature columns never ride this join at
+    all.
 
     Output schema matches pair_features_compact: (a, b, f_jaccard,
     f_cosine, f_lev, f_vocab_cov).
     """
-    out = candidates_with_est
-    if sig_prefilter is not None:
-        out = out.filter(F.col("est_j") >= sig_prefilter)
     side = docs_compact.hint("shuffle_hash").select(
         F.col("spec_id").alias("_id"),
         F.col("features").alias("_vec"),
@@ -241,7 +234,7 @@ def pair_features_from_est(
         F.col("_prefix").alias("_prefix_b"),
     )
     out = (
-        out.join(a, "a")
+        candidates_with_est.join(a, "a")
         .join(b, "b")
         .withColumn("f_jaccard", F.col("est_j"))
         .withColumn("f_cosine", F.round(cosine_maps(F.col("_vec_a"), F.col("_vec_b")), 9))
@@ -726,8 +719,7 @@ def calibrate_edge_threshold(
 def calibrate_override_bar(
     labeled_pairs: DataFrame,
     model: LRModel,
-    jaccard_min: float,
-    cosine_min: float,
+    region: Column,
     feature_cols: tuple[str, ...] = FEATURE_COLS,
     label_col: str = "label",
     floor: float = 0.8,
@@ -735,7 +727,6 @@ def calibrate_override_bar(
     margin: float = 0.02,
     min_n: int = 150,
     driver_max: int = 2_000_000,
-    cosine_exempt_empty: bool = True,
 ) -> float:
     """Calibrate the high-confidence override bar on the labeled pairs.
 
@@ -745,14 +736,14 @@ def calibrate_override_bar(
     adversarial clones score proba 0.95-0.98 and a 0.98 bar rejects all
     of them — recall 0.69) or unsafe on a corpus whose negatives the
     model scores high. Calibration answers it directly: the bar is the
-    max proba any LABELED NEGATIVE that passes the relaxed floors
-    achieves, plus a margin — i.e. the smallest bar the evidence says no
+    max proba any LABELED NEGATIVE inside the gate's ``region`` achieves,
+    plus a margin — i.e. the smallest bar the evidence says no
     known-negative clears — clamped to [floor, cap].
 
     **Lowering the bar below ``cap`` requires POSITIVE evidence.** If
-    fewer than ``min_n`` labeled negatives pass the relaxed floors, the
+    fewer than ``min_n`` labeled negatives fall inside the region, the
     sample says nothing about the high-proba tail of the corpus's
-    relaxed-region negatives, and the bar stays at ``cap``. Absence of
+    in-region negatives, and the bar stays at ``cap``. Absence of
     evidence is not favorable evidence — measured r4: on the standard
     bench corpus ZERO labeled negatives pass the relaxed floors, and an
     earlier draft that fell back to ``floor`` admitted 117 cross-cluster
@@ -784,21 +775,16 @@ def calibrate_override_bar(
     Driver-local like calibrate_edge_threshold: labeled pairs are the
     problem's small relation.
 
-    ``cosine_exempt_empty``: the default region matches the edge
-    policy's vocab-empty exemption (a pair with an empty TF-IDF
-    projection has cosine identically 0 and must not be hard-vetoed).
-    The SEMANTIC override path calibrates with ``False`` — its region
-    IS "cosine at least cmin", so zero-cosine pairs are outside it by
-    definition and their (numerous, low-proba) labeled negatives must
+    ``region`` is the acceptance gate's own region predicate over the
+    feature columns (plans.pipeline.edge_gates), so the evidence that
+    grants a bar is drawn from exactly the pairs the bar admits — e.g.
+    the SEMANTIC gate's region IS "cosine at least cmin", and the
+    (numerous, low-proba) zero-cosine labeled negatives outside it must
     not dilute the in-region evidence.
     """
-    cos_ok = F.col("f_cosine") >= F.lit(float(cosine_min))
-    if cosine_exempt_empty:
-        cos_ok = cos_ok | (F.col("f_cosine") == 0)
-    relaxed = (F.col("f_jaccard") >= F.lit(float(jaccard_min))) & cos_ok
     pdf = (
         predict(labeled_pairs, model, feature_cols)
-        .filter((F.col(label_col) == 0) & relaxed)
+        .filter((F.col(label_col) == 0) & region)
         .select("proba")
         .limit(driver_max)
         .toPandas()

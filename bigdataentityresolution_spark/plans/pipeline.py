@@ -34,8 +34,10 @@ import os
 import sys
 import time
 from dataclasses import asdict, dataclass
+from functools import reduce
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataentityresolution_spark.functions.text import tokenize
@@ -83,8 +85,9 @@ class ERConfig:
     # now surfaces. Measured on the HARD tier: 540 true pairs died at
     # the 0.2 prefilter; lowering it (with the matching override floor)
     # is worth ~3 recall points at unchanged precision — the calibrated
-    # override bar, not this filter, is the precision defense.
-    sig_prefilter: float = 0.12
+    # override bar, not this filter, is the precision defense. None
+    # featurizes every lexical candidate.
+    sig_prefilter: float | None = 0.12
     newton_rounds: int = 5  # IRLS is quadratic — 5 rounds reach |step| < 1e-4
     self_train: bool = True
     self_train_limit_factor: int = 12  # pairs_limit = train_size × 12 (src/functs.c:23)
@@ -127,23 +130,16 @@ class ERConfig:
     # override then merged 4.3k unrelated files into one cluster).
     # The relaxed minima are a structural sanity bar the model cannot
     # override: no edge below them is accepted no matter the score.
-    # "auto" (default) calibrates the bar on the labeled pairs
-    # (scoring.calibrate_override_bar): the max proba any labeled
-    # negative passing the relaxed floors achieves + margin, clamped to
-    # [0.8, 0.99] — 0.8 is the reference's own confidence clamp
-    # (src/logistic.c:734) kept as the structural minimum. A fixed bar
-    # was the r4 failure mode this replaces: true adversarial clones
-    # score proba 0.95-0.98 and a hardcoded 0.98 bar rejected every one
-    # of them (hard-tier recall 0.69 measured; 0.84 calibrated at the
-    # r4 32/16 banding, 0.971 hard-kind at the shipped 64/32 banding —
-    # precision 0.9997 throughout). Lowering the bar below the cap
-    # requires >= min_n (150, rule-of-three ≲2% tail bound) labeled
-    # negatives INSIDE the relaxed region — an empty or thin sample
-    # yields the cap, not the floor (measured r4: the standard corpus
-    # has zero such negatives yet 117 cross-cluster pairs scoring
-    # 0.80-0.898 there — a floor fallback cost precision 1.0 -> 0.970;
-    # the tiny hard corpus has 46, and granting on them cost precision
-    # 0.95 -> 0.80).
+    # "auto" (default) calibrates the bar on the labeled pairs inside
+    # the relaxed region (scoring.calibrate_override_bar, which records
+    # the evidence rules and their measurements), clamped to [0.8, 0.99]
+    # — 0.8 is the reference's own confidence clamp (src/logistic.c:734)
+    # kept as the structural minimum. A fixed bar was the r4 failure mode
+    # this replaces: true adversarial clones score proba 0.95-0.98 and a
+    # hardcoded 0.98 bar rejected every one of them (hard-tier recall
+    # 0.69 measured; 0.84 calibrated at the r4 32/16 banding, 0.971
+    # hard-kind at the shipped 64/32 banding — precision 0.9997
+    # throughout).
     edge_high_conf_override: float | str | None = "auto"
     # 0.12 in lockstep with sig_prefilter (r4; was 0.2): an edge the
     # prefilter admits must also be ACCEPTABLE, else the featurization
@@ -179,14 +175,14 @@ class ERConfig:
     # — deliberately: the labeled negatives that anchor the semantic
     # bar's evidence (template-similar pairs) live at cosine 0.38-0.47
     # on the hard tier, so a higher floor would empty the evidence
-    # region and the bar would stay at its cap (no semantic edges).
+    # region and the bar would stay at its cap (no semantic edges). Those
+    # negatives score proba <= 0.22, so the bar lands at its 0.8
+    # structural floor there while orphan true pairs score 0.84+.
     edge_semantic_cosine_min: float = 0.35
-    # "auto" calibrates on labeled pairs over the region
-    # {f_cosine >= edge_semantic_cosine_min} with NO vocab-empty
-    # exemption and NO jaccard requirement (calibrate_override_bar with
-    # jaccard_min=0, cosine_exempt_empty=False); float pins it; None
-    # disables the semantic accept path (the channel then only feeds
-    # pairs that some other gate accepts).
+    # "auto" calibrates on the labeled pairs inside the semantic gate's
+    # region (see edge_gates); float pins it; None disables the semantic
+    # accept path (the channel then only feeds pairs that some other
+    # gate accepts).
     edge_semantic_override: float | str | None = "auto"
     # Submit independent stage groups as CONCURRENT Spark jobs (label
     # closure ∥ corpus prep; training ∥ candidate generation). The DAG's
@@ -210,9 +206,89 @@ class ERConfig:
     tf_mode: str = "log"
     seed: int = 42
 
+    def __post_init__(self) -> None:
+        if self.bands <= 0 or self.num_perm % self.bands != 0:
+            raise ValueError(f"bands={self.bands} must be positive and divide num_perm")
+        if self.tf_mode not in ("log", "raw"):
+            raise ValueError(f"tf_mode must be 'log' or 'raw', got {self.tf_mode!r}")
+        k = self.vocab_k
+        if k != "auto" and not (isinstance(k, int) and not isinstance(k, bool) and k > 0):
+            raise ValueError(f"vocab_k must be 'auto' or a positive int, got {k!r}")
+        for name in ("edge_threshold", "edge_high_conf_override", "edge_semantic_override"):
+            v = getattr(self, name)
+            if isinstance(v, str) and v != "auto":
+                raise ValueError(f"{name} must be 'auto', a float or None, got {v!r}")
+
     def fingerprint(self, extra: str = "") -> str:
         payload = json.dumps(asdict(self), sort_keys=True) + extra
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
+
+
+class Gate(NamedTuple):
+    """One edge-acceptance path: a scored pair inside ``region`` whose
+    proba clears ``bar`` (no extra bar when None) may become an edge."""
+
+    name: str
+    region: Column
+    bar: float | None
+
+
+def edge_gates(
+    config: ERConfig, labeled: DataFrame | None = None, model: S.LRModel | None = None
+) -> list[Gate]:
+    """The ordered edge-acceptance table derived from ``config``:
+
+      floors    full cosine + est-Jaccard floors, no bar beyond the threshold
+      override  relaxed floors + the high-confidence bar
+      semantic  exact-cosine floor + its own bar (semantic channel only)
+
+    A bar of "auto" is calibrated on ``labeled`` (label + feature columns
+    + f_vocab_cov) under ``model`` over the gate's own region, so the
+    region that grants the bar is exactly the region it admits; a gate
+    whose bar is None in the config is dropped.
+
+    A cosine floor exempts pairs where either doc has an EMPTY vocab
+    projection (f_vocab_cov == 0, so f_cosine is identically 0): they
+    must still clear the Jaccard floor and the bar, but a cosine floor
+    must not hard-veto them or vocab-diverse corpora lose recall
+    silently (ADVICE.md r1). The semantic region IS "cosine at least
+    cmin", so it has no exemption and no Jaccard requirement: it is the
+    only gate low-shingle-overlap near-dups (the semantic channel's whole
+    purpose) can clear. Every gate applies to every scored pair — policy
+    over feature space, not candidate provenance.
+    """
+    jac, cos = F.col("f_jaccard"), F.col("f_cosine")
+    vocab_empty = F.col("f_vocab_cov") == 0
+
+    floors = F.lit(True)
+    if config.edge_cosine_floor is not None:
+        floors = floors & ((cos >= F.lit(float(config.edge_cosine_floor))) | vocab_empty)
+    if config.edge_jaccard_floor is not None:
+        floors = floors & (jac >= F.lit(float(config.edge_jaccard_floor)))
+    override = (jac >= F.lit(float(config.edge_override_jaccard_min))) & (
+        (cos >= F.lit(float(config.edge_override_cosine_min))) | vocab_empty
+    )
+    semantic = cos >= F.lit(float(config.edge_semantic_cosine_min))
+    gates = [Gate("floors", floors, None)]
+    for name, region, bar in (
+        ("override", override, config.edge_high_conf_override),
+        ("semantic", semantic, config.edge_semantic_override if config.semantic_channel else None),
+    ):
+        if bar == "auto":
+            bar = S.calibrate_override_bar(labeled, model, region)
+        if bar is not None:
+            gates.append(Gate(name, region, float(bar)))
+    return gates
+
+
+def accept_path(gates: list[Gate]) -> Column:
+    """Name of the first gate whose region holds the pair and whose bar
+    its proba clears; NULL when no gate accepts it."""
+    path = None
+    for g in gates:
+        ok = g.region if g.bar is None else g.region & (F.col("proba") >= F.lit(g.bar))
+        path = F.when(ok, g.name) if path is None else path.when(ok, g.name)
+    return path
 
 
 def verify_content_invariant(source: DataFrame, staged: DataFrame, id_col: str = "spec_id") -> int:
@@ -344,11 +420,7 @@ def run_er_pipeline(
     # this relation, so sharing one cached/checkpointed DataFrame removes
     # any tie-ordering doubt and computes the corpus-wide vocab agg once.
     n_docs = files.count()
-    vocab_k = (
-        min(max(1000, n_docs), 1_000_000)
-        if config.vocab_k == "auto"
-        else int(config.vocab_k)
-    )
+    vocab_k = min(max(1000, n_docs), 1_000_000) if config.vocab_k == "auto" else config.vocab_k
     # index_vocab folded into the stage: the dense term_idx assignment is
     # a single-partition global sort by nature, so it must run ONCE here
     # (cached/checkpointed) — both prep paths then reuse it instead of
@@ -425,6 +497,11 @@ def run_er_pipeline(
     # of k rows/doc plus the capped in-block pair explosion. est_j is
     # computed in-block exactly like the lexical channel (sigs ride the
     # membership) so the two channels union on an identical schema.
+    # `channels` holds one (candidates with est_j, est-Jaccard prefilter
+    # or None) entry per channel. The semantic channel has no prefilter:
+    # its pairs are chosen BECAUSE they sit below the sketch estimate's
+    # reach; their gate is the exact cosine computed downstream.
+    channels = [(candidates, config.sig_prefilter)]
     sem_candidates = None
     if config.semantic_channel:
         sem_candidates = runner.run(
@@ -438,6 +515,7 @@ def run_er_pipeline(
             ),
             fp_files,
         )
+        channels.append((sem_candidates, None))
 
     # ---- stage: label closure (reference semantics: ALL labels) ------------
     fp_labels = config.fingerprint("labels")
@@ -503,11 +581,12 @@ def run_er_pipeline(
             tokenizer=tok,
             tf_mode=config.tf_mode,
         )
-        # no prefilter: every labeled pair must be featurized
+        # no prefilter: every labeled pair must be featurized; f_vocab_cov
+        # rides along because the gate regions calibrated here read it
         return S.pair_features_compact(
             tp, train_prep, num_perm=config.num_perm,
             lev_bound=config.lev_bound, sig_prefilter=None,
-        ).select("a", "b", "label", *S.FEATURE_COLS)
+        ).select("a", "b", "label", *S.FEATURE_COLS, "f_vocab_cov")
 
     # ---- concurrent job groups ---------------------------------------------
     # Three independent groups:
@@ -557,30 +636,21 @@ def run_er_pipeline(
     # can materialize it concurrently with the train+fit join — the
     # features don't read the model; only the cheap predict projection
     # does, so the two tails overlap instead of stacking) ----------------
+    # Prefiltering each channel BEFORE the union keeps ~10% of the
+    # lexical side, so the dedup shuffle sees ~0.4M rows at bench scale
+    # instead of the 4M raw union (measured: filtering after the union
+    # cost ~1 full pair shuffle of mostly-dead rows). est_j is a pure
+    # function of the pair, so max() is a no-op on duplicates; one
+    # channel needs no dedup.
     def cand_features():
-        if sem_candidates is not None:
-            # Channel union AFTER the est-Jaccard prefilter: the lexical
-            # side keeps only prefilter survivors (~10%) and the semantic
-            # side keeps everything (its pairs are chosen BECAUSE they
-            # sit below the sketch estimate's reach; their gate is the
-            # exact cosine computed downstream), so the dedup shuffle
-            # sees ~0.4M rows at bench scale instead of the 4M raw union
-            # (measured: filtering after the union cost ~1 full pair
-            # shuffle of mostly-dead rows). est_j is a pure function of
-            # the pair, so max() is a no-op on duplicates.
-            cand = (
-                candidates.filter(F.col("est_j") >= F.lit(float(config.sig_prefilter)))
-                .unionByName(sem_candidates)
-                .groupBy("a", "b")
-                .agg(F.max("est_j").alias("est_j"))
-            )
-            return S.pair_features_from_est(
-                cand, docs_prep,
-                lev_bound=config.lev_bound, sig_prefilter=None,
-            ).select("a", "b", *S.FEATURE_COLS, "f_vocab_cov")
+        cand = reduce(DataFrame.unionByName, [
+            c if p is None else c.filter(F.col("est_j") >= F.lit(float(p)))
+            for c, p in channels
+        ])
+        if len(channels) > 1:
+            cand = cand.groupBy("a", "b").agg(F.max("est_j").alias("est_j"))
         return S.pair_features_from_est(
-            candidates, docs_prep,
-            lev_bound=config.lev_bound, sig_prefilter=config.sig_prefilter,
+            cand, docs_prep, lev_bound=config.lev_bound
         ).select("a", "b", *S.FEATURE_COLS, "f_vocab_cov")
 
     cand_feats = runner.run("cand_features", cand_features, fp_files).cache()
@@ -665,42 +735,11 @@ def run_er_pipeline(
     else:
         thr = model.threshold
 
-    if config.edge_high_conf_override == "auto":
-        override_bar = S.calibrate_override_bar(
-            train_pairs.select("label", *S.FEATURE_COLS),
-            model,
-            jaccard_min=config.edge_override_jaccard_min,
-            cosine_min=config.edge_override_cosine_min,
-        )
-        plog(f"override bar calibrated: {override_bar:.4f}")
-    elif config.edge_high_conf_override is not None:
-        override_bar = float(config.edge_high_conf_override)
-    else:
-        override_bar = None
-
-    # Semantic bar: same calibration machinery and evidence gates as the
-    # jaccard-relaxed override, over the semantic region {f_cosine >=
-    # cmin} with no jaccard requirement and no vocab-empty exemption
-    # (zero-cosine pairs are outside a cosine region by definition).
-    # The min_n rule-of-three gate carries over unchanged: a corpus whose
-    # labeled negatives never reach cosine cmin grants only the 0.99 cap
-    # — the semantic path then admits nothing the evidence doesn't
-    # support (measured: the hard tier's template-group negatives sit at
-    # cosine 0.38-0.47 / proba <= 0.22, so the bar lands at its 0.8
-    # structural floor there while orphan true pairs score 0.84+).
-    sem_bar = None
-    if config.semantic_channel and config.edge_semantic_override is not None:
-        if config.edge_semantic_override == "auto":
-            sem_bar = S.calibrate_override_bar(
-                train_pairs.select("label", *S.FEATURE_COLS),
-                model,
-                jaccard_min=0.0,
-                cosine_min=config.edge_semantic_cosine_min,
-                cosine_exempt_empty=False,
-            )
-            plog(f"semantic bar calibrated: {sem_bar:.4f}")
-        else:
-            sem_bar = float(config.edge_semantic_override)
+    gates = edge_gates(config, train_pairs, model)
+    plog("edge gates: " + ", ".join(f"{g.name}={g.bar}" for g in gates))
+    fp_cluster = config.fingerprint(
+        "cluster" + json.dumps([thr, [(g.name, g.bar) for g in gates]])
+    )
 
     def final_cluster():
         pos_label_edges = labeled_pairs.filter(F.col("label") == 1).select(
@@ -711,52 +750,14 @@ def run_er_pipeline(
             F.least("left_spec_id", "right_spec_id").alias("a"),
             F.greatest("left_spec_id", "right_spec_id").alias("b"),
         )
-        accepted = scored.filter(F.col("proba") >= F.lit(float(thr)))
-        floor_ok = F.lit(True)
-        if config.edge_cosine_floor is not None:
-            # The floor's precondition is a meaningful TF-IDF map on both
-            # sides: a pair where either doc has an EMPTY vocab projection
-            # has f_cosine identically 0 and is exempted (it still must
-            # clear the model threshold + est-Jaccard floor) — otherwise
-            # vocab-diverse corpora lose recall silently (ADVICE.md r1).
-            floor_ok = floor_ok & (
-                (F.col("f_cosine") >= F.lit(float(config.edge_cosine_floor)))
-                | (F.col("f_vocab_cov") == 0)
-            )
-        if config.edge_jaccard_floor is not None:
-            floor_ok = floor_ok & (
-                F.col("f_jaccard") >= F.lit(float(config.edge_jaccard_floor))
-            )
-        accept_ok = floor_ok
-        if override_bar is not None:
-            relaxed_ok = (
-                (F.col("f_jaccard") >= F.lit(float(config.edge_override_jaccard_min)))
-                & (
-                    (F.col("f_cosine") >= F.lit(float(config.edge_override_cosine_min)))
-                    | (F.col("f_vocab_cov") == 0)
-                )
-            )
-            accept_ok = accept_ok | (
-                relaxed_ok & (F.col("proba") >= F.lit(float(override_bar)))
-            )
-        if sem_bar is not None:
-            # SEMANTIC path: exact-cosine floor + calibrated bar, no
-            # jaccard requirement — the only gate low-shingle-overlap
-            # near-dups (the channel's whole purpose) can clear. Applies
-            # uniformly to all scored pairs (policy over feature space,
-            # not candidate provenance).
-            sem_ok = F.col("f_cosine") >= F.lit(float(config.edge_semantic_cosine_min))
-            accept_ok = accept_ok | (sem_ok & (F.col("proba") >= F.lit(float(sem_bar))))
-        accepted = accepted.filter(accept_ok)
+        accepted = scored.filter(
+            (F.col("proba") >= F.lit(float(thr))) & accept_path(gates).isNotNull()
+        )
         pred_edges = accepted.select("a", "b").join(
             neg_label_pairs, ["a", "b"], "left_anti"
         )
         edges = pos_label_edges.unionByName(pred_edges)
-        cc_dir = (
-            os.path.join(workdir, f"cc_final_{config.fingerprint('cluster' + str(thr) + str(override_bar) + str(sem_bar))}")
-            if workdir
-            else None
-        )
+        cc_dir = os.path.join(workdir, f"cc_final_{fp_cluster}") if workdir else None
         return C.connected_components(
             edges,
             nodes=files.select("spec_id"),
@@ -766,22 +767,16 @@ def run_er_pipeline(
         )
 
     plog("final_cluster: start")
-    final_labels = runner.run(
-        "cluster",
-        final_cluster,
-        config.fingerprint("cluster" + str(thr) + str(override_bar) + str(sem_bar)),
-    )
+    final_labels = runner.run("cluster", final_cluster, fp_cluster)
     plog("final_cluster: done")
 
     matches = C.extract_matches(final_labels)
 
     candidates_all = candidates
-    if sem_candidates is not None:
-        candidates_all = (
-            candidates.select("a", "b")
-            .unionByName(sem_candidates.select("a", "b"))
-            .distinct()
-        )
+    if len(channels) > 1:
+        candidates_all = reduce(
+            DataFrame.unionByName, [c.select("a", "b") for c, _ in channels]
+        ).distinct()
 
     return {
         "docs_prep": docs_prep,
@@ -795,8 +790,7 @@ def run_er_pipeline(
         "model": model,
         "scored": scored,
         "edge_threshold": thr,
-        "override_bar": override_bar,
-        "sem_bar": sem_bar,
+        "gates": gates,
         "labels": final_labels,
         "matches": matches,
         "runner": runner,

@@ -13,8 +13,8 @@ stage that dropped it:
                    sig_prefilter at featurization (pipeline.py cand
                    features), so it was never scored (proba is NULL)
 - below_threshold: scored, but proba < calibrated edge threshold
-- floor_rejected:  proba >= threshold but failed BOTH the full floors
-                   and the high-confidence override gate
+- gate_rejected:   proba >= threshold but no acceptance gate passed it
+                   (pipeline.accept_path is NULL)
 - clustered_apart: the DIRECT pair was dropped but recall is pairwise
                    over clusters — these leaves are only truly lost if
                    no other member path links them (already counted in
@@ -50,7 +50,11 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from bigdataentityresolution_spark.session import get_spark
-    from bigdataentityresolution_spark.plans.pipeline import ERConfig, run_er_pipeline
+    from bigdataentityresolution_spark.plans.pipeline import (
+        ERConfig,
+        accept_path,
+        run_er_pipeline,
+    )
 
     os.environ["SPARK_GRAFT_CPUS"] = str(args.cpus)
     spark = get_spark(app_name="hard_recall_diag")
@@ -60,8 +64,9 @@ def main() -> None:
     result = run_er_pipeline(spark, files, pairs, workdir=None, config=ERConfig())
     labels = result["labels"].cache()
     labels.count()
+    gates = result["gates"]
     print(f"pipeline: {time.time() - t0:.1f}s  thr={result['edge_threshold']:.4f} "
-          f"override_bar={result['override_bar']}")
+          f"gates={ {g.name: g.bar for g in gates} }")
 
     kind = F.regexp_extract("spec_id", r"src/(hard|orphan)", 1)
     t = truth.withColumn("kind", kind)
@@ -90,7 +95,6 @@ def main() -> None:
         "proba", "f_cosine", "f_jaccard", "f_vocab_cov",
     )
     thr = float(result["edge_threshold"])
-    bar = result["override_bar"]
     diag = (
         missed.join(cand, ["a", "b"], "left")
         .join(scored, ["a", "b"], "left")
@@ -99,11 +103,12 @@ def main() -> None:
             F.when(F.col("is_cand").isNull(), "not_candidate")
             # NULL proba = candidate that the est-Jaccard prefilter
             # dropped before scoring (ADVICE r4: without this branch the
-            # NULL falls through `proba < thr` into floor_rejected and
+            # NULL falls through `proba < thr` into gate_rejected and
             # pollutes the proba aggregations below)
             .when(F.col("proba").isNull(), "prefilter_dropped")
             .when(F.col("proba") < thr, "below_threshold")
-            .otherwise("floor_rejected"),
+            .when(accept_path(gates).isNull(), "gate_rejected")
+            .otherwise("accepted"),
         )
     ).cache()
 
@@ -112,7 +117,7 @@ def main() -> None:
 
     print("== feature distribution of scored-but-rejected misses ==")
     (
-        diag.filter(F.col("stage").isin("below_threshold", "floor_rejected"))
+        diag.filter(F.col("stage").isin("below_threshold", "gate_rejected"))
         .groupBy("kind", "stage")
         .agg(
             F.count("*").alias("n"),
@@ -126,42 +131,18 @@ def main() -> None:
         .show(50, False)
     )
 
-    if bar is not None:
-        # Gate constants come from the SAME ERConfig the run used
-        # (ADVICE r4: hardcoded 0.2/0.35 misattributed pairs once the
-        # shipped default override floor moved to 0.12). The attribution
-        # covers ALL THREE accept paths (full floors / jaccard-relaxed
-        # override / r5 semantic) — a rejected pair's "why" is the bar of
-        # the last region it was inside, not the first gate checked.
-        cfg = ERConfig()
-        jmin = float(cfg.edge_override_jaccard_min)
-        cmin = float(cfg.edge_override_cosine_min)
-        sem_bar = result["sem_bar"]
-        sem_cmin = float(cfg.edge_semantic_cosine_min)
-        in_override = (F.col("f_jaccard") >= jmin) & (
-            (F.col("f_cosine") >= cmin) | (F.col("f_vocab_cov") == 0)
-        )
-        in_sem = (
-            F.col("f_cosine") >= sem_cmin if sem_bar is not None else F.lit(False)
-        )
-        print(f"== floor_rejected misses vs gates (override bar={bar:.4f} "
-              f"jacc_min={jmin} cos_min={cmin}; semantic bar={sem_bar} "
-              f"cos_min={sem_cmin}) ==")
-        (
-            diag.filter(F.col("stage") == "floor_rejected")
-            .withColumn(
-                "why",
-                F.when(in_override & (F.col("proba") < bar), "proba<bar")
-                .when(in_sem & (F.col("proba") < F.lit(sem_bar or 2.0)), "proba<sem_bar")
-                .when(in_override | in_sem, "??")  # in-region + over-bar ⇒ impossible here
-                .when(F.col("f_jaccard") < jmin, f"jacc<{jmin}&cos<{sem_cmin}")
-                .otherwise(f"cos<{cmin}"),
-            )
-            .groupBy("kind", "why")
-            .count()
-            .orderBy("kind", "why")
-            .show(50, False)
-        )
+    # A gate-rejected pair missed the bar of every gate whose region holds
+    # it; "why" lists those regions, read from the run's own gate table.
+    print("== gate_rejected misses by the gate regions that hold them ==")
+    in_regions = F.concat_ws("+", *[F.when(g.region, g.name) for g in gates])
+    (
+        diag.filter(F.col("stage") == "gate_rejected")
+        .withColumn("why", F.when(in_regions == "", "no region").otherwise(in_regions))
+        .groupBy("kind", "why")
+        .count()
+        .orderBy("kind", "why")
+        .show(50, False)
+    )
 
     print("== totals ==")
     tk = true_pairs.groupBy("kind").count().collect()

@@ -103,7 +103,7 @@ def main() -> None:
             "labeled_fp": lm["fp"],
             "labeled_fn": lm["fn"],
             "thr": round(float(result["edge_threshold"]), 4),
-            "override_bar": result["override_bar"],
+            "gates": {g.name: g.bar for g in result["gates"]},
         }), flush=True)
         labels.unpersist()
         result["runner"].release()

@@ -61,7 +61,7 @@ def main() -> None:
     docs_prep = result["docs_prep"]
     model = result["model"]
     print(f"pipeline: {time.time() - t0:.1f}s  thr={result['edge_threshold']:.4f} "
-          f"bar={result['override_bar']}", flush=True)
+          f"gates={ {g.name: g.bar for g in result['gates']} }", flush=True)
 
     kind = F.regexp_extract("spec_id", r"src/(hard|orphan|tmpl_\d+)", 1)
     t = truth.withColumn("kind", kind)

@@ -195,3 +195,87 @@ def test_filtered_train_prep_feature_parity(spark, tiny_tables):
     assert f_train.exceptAll(f_full).count() == 0
     for df in (sigs, postings_df, top_vocab):
         df.unpersist()
+
+
+def test_semantic_channel_without_prefilter(spark, tiny_tables):
+    """sig_prefilter=None with the semantic channel on: every lexical
+    candidate is featurized and the run still reaches labels."""
+    files_df, _, pairs_df = tiny_tables
+    cfg = P.ERConfig(sig_prefilter=None, self_train=False, newton_rounds=2)
+    r = P.run_er_pipeline(spark, files_df, pairs_df, workdir=None, config=cfg)
+    assert r["labels"].count() == files_df.count()
+    r["runner"].release()
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        {"num_perm": 64, "bands": 30},
+        {"bands": 0},
+        {"tf_mode": "sqrt"},
+        {"vocab_k": "big"},
+        {"vocab_k": 0},
+        {"vocab_k": True},
+        {"edge_threshold": "calibrated"},
+        {"edge_high_conf_override": "on"},
+        {"edge_semantic_override": "yes"},
+    ],
+)
+def test_erconfig_rejects_invalid(kwargs):
+    with pytest.raises(ValueError):
+        P.ERConfig(**kwargs)
+
+
+def test_accept_path_gate_table(spark):
+    # Fixed bars, so the table needs no calibration: floors cos 0.5 / jacc
+    # 0.45; override jacc 0.12, cos 0.35, bar 0.9; semantic cos 0.35, bar 0.85.
+    with_sem = P.ERConfig(edge_high_conf_override=0.9, edge_semantic_override=0.85)
+    no_sem = P.ERConfig(edge_high_conf_override=0.9, edge_semantic_override=None)
+    # (f_cosine, f_jaccard, f_vocab_cov, proba, path, path without semantic)
+    rows = [
+        (0.6, 0.5, 5, 0.5, "floors", "floors"),          # inside floors
+        (0.5, 0.45, 5, 0.5, "floors", "floors"),         # exactly at both floors
+        (0.4999, 0.5, 5, 0.5, None, None),               # cosine just below floor
+        (0.6, 0.4499, 5, 0.5, None, None),               # jaccard just below floor
+        (0.0, 0.5, 0, 0.5, "floors", "floors"),          # vocab-empty exemption
+        (0.0, 0.5, 3, 0.99, None, None),                 # cos 0 but vocab not empty
+        (0.6, 0.5, 5, 0.95, "floors", "floors"),         # floors and override: first wins
+        (0.0, 0.2, 0, 0.9, "override", "override"),      # override at its bar
+        (0.0, 0.2, 0, 0.8999, None, None),               # override just below its bar
+        (0.4, 0.1199, 5, 0.95, "semantic", None),        # jaccard just outside override
+        (0.4, 0.2, 5, 0.95, "override", "override"),     # override and semantic
+        (0.35, 0.05, 5, 0.85, "semantic", None),         # semantic at its bar
+        (0.35, 0.05, 5, 0.8499, None, None),             # semantic just below its bar
+        (0.3499, 0.05, 5, 0.99, None, None),             # cosine just outside semantic
+    ]
+    df = spark.createDataFrame(
+        [r[:4] for r in rows],
+        "f_cosine double, f_jaccard double, f_vocab_cov int, proba double",
+    )
+    for cfg, col in ((with_sem, 4), (no_sem, 5)):
+        gates = P.edge_gates(cfg)
+        got = [r["path"] for r in df.select(P.accept_path(gates).alias("path")).collect()]
+        assert got == [r[col] for r in rows]
+    assert [g.name for g in P.edge_gates(no_sem)] == ["floors", "override"]
+    no_channel = P.ERConfig(edge_high_conf_override=0.9, semantic_channel=False)
+    assert [g.name for g in P.edge_gates(no_channel)] == ["floors", "override"]
+
+
+def test_gate_calibration_uses_acceptance_region(spark):
+    """An "auto" bar is calibrated over its gate's own region: a labeled
+    negative with f_cosine == 0 but a non-empty vocab projection is
+    outside the override region (acceptance exempts only f_vocab_cov ==
+    0), so it grants no evidence and the bar stays at its 0.99 cap."""
+    from bigdataentityresolution_spark.operators import scoring as S
+
+    m_low = S.LRModel(weights=(-8.0, -8.0, 0.0), bias=-4.0)
+    schema = "label int, f_cosine double, f_jaccard double, f_lev double, f_vocab_cov int"
+    cfg = P.ERConfig(edge_semantic_override=None)
+    pos = [(1, 0.9, 0.8, 0.1, 5)] * 10
+
+    def override_bar(vocab_cov):
+        df = spark.createDataFrame([(0, 0.0, 0.3, 0.5, vocab_cov)] * 160 + pos, schema)
+        return {g.name: g.bar for g in P.edge_gates(cfg, df, m_low)}["override"]
+
+    assert override_bar(3) == 0.99
+    assert override_bar(0) == 0.8

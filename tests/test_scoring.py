@@ -306,6 +306,11 @@ def test_prune_weak_examples_boundaries(spark):
     assert kept == {1, 4, 5, 7}
 
 
+def _region():
+    """The relaxed region the tests calibrate over."""
+    return (F.col("f_jaccard") >= 0.2) & (F.col("f_cosine") >= 0.35)
+
+
 def _pairs_df(spark, rows):
     """rows: (label, f_cosine, f_jaccard, f_lev)"""
     return spark.createDataFrame(
@@ -324,12 +329,12 @@ def test_calibrate_override_bar_requires_evidence(spark):
         spark,
         [(0, 0.1, 0.05, 0.9), (0, 0.2, 0.1, 0.8), (1, 0.9, 0.8, 0.1)] * 20,
     )
-    bar = S.calibrate_override_bar(df, m, jaccard_min=0.2, cosine_min=0.35)
+    bar = S.calibrate_override_bar(df, m, _region())
     assert bar == 0.99
 
     # negatives in the region but fewer than min_n -> still cap
     few = _pairs_df(spark, [(0, 0.5, 0.3, 0.5)] * 5 + [(1, 0.9, 0.8, 0.1)] * 5)
-    bar = S.calibrate_override_bar(few, m, jaccard_min=0.2, cosine_min=0.35)
+    bar = S.calibrate_override_bar(few, m, _region())
     assert bar == 0.99
 
 
@@ -343,7 +348,7 @@ def test_calibrate_override_bar_with_evidence(spark):
     df = _pairs_df(
         spark, [(0, 0.5, 0.3, 0.5)] * 160 + [(1, 0.9, 0.8, 0.1)] * 10
     )
-    assert S.calibrate_override_bar(df, m_low, jaccard_min=0.2, cosine_min=0.35) == 0.8
+    assert S.calibrate_override_bar(df, m_low, _region()) == 0.8
 
     # below min_n in-region negatives: no grant, bar stays at cap —
     # 46 negatives walked 120 false cluster pairs through the r4
@@ -351,13 +356,13 @@ def test_calibrate_override_bar_with_evidence(spark):
     df_thin = _pairs_df(
         spark, [(0, 0.5, 0.3, 0.5)] * 40 + [(1, 0.9, 0.8, 0.1)] * 10
     )
-    assert S.calibrate_override_bar(df_thin, m_low, jaccard_min=0.2, cosine_min=0.35) == 0.99
+    assert S.calibrate_override_bar(df_thin, m_low, _region()) == 0.99
 
     # a high-scoring in-region negative pushes the bar to worst +
     # headroom, where headroom = max(margin, half the distance to
     # certainty) — a near-1 worst negative demands proportional room
     m_hi = S.LRModel(weights=(4.0, 4.0, 0.0), bias=0.0)
-    bar = S.calibrate_override_bar(df, m_hi, jaccard_min=0.2, cosine_min=0.35)
+    bar = S.calibrate_override_bar(df, m_hi, _region())
     import numpy as np
 
     worst = 1 / (1 + np.exp(-(4.0 * 0.5 + 4.0 * 0.3)))
