@@ -285,6 +285,35 @@ def semantic_topk_membership(
     )
 
 
+def est_jaccard(sig_a: Column, sig_b: Column, num_perm: int) -> Column:
+    """MinHash-estimated Jaccard: the fraction of agreeing signature
+    slots, rounded to 9 places — the est_j of every candidate channel
+    and of the train pairs' sig join."""
+    agree = F.aggregate(
+        F.zip_with(sig_a, sig_b, lambda p, q: (p == q).cast("int")),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+    return F.round(agree.cast("double") / F.lit(float(num_perm)), 9)
+
+
+def pairs_with_est(pairs: DataFrame, sigs: DataFrame, num_perm: int) -> DataFrame:
+    """``pairs`` (a, b[, ...]) plus est_j, from a join of both sides to
+    their (spec_id, sig) rows — for pairs that did not come out of a
+    blocking channel (labeled pairs); a pair with a side missing from
+    ``sigs`` drops out."""
+
+    def side(s: str) -> DataFrame:
+        return sigs.select(F.col("spec_id").alias(s), F.col("sig").alias(f"_sig_{s}"))
+
+    return (
+        pairs.join(side("a"), "a")
+        .join(side("b"), "b")
+        .withColumn("est_j", est_jaccard(F.col("_sig_a"), F.col("_sig_b"), num_perm))
+        .drop("_sig_a", "_sig_b")
+    )
+
+
 def candidate_pairs_with_est_from_membership(
     mem: DataFrame,
     num_perm: int = 32,
@@ -308,14 +337,6 @@ def candidate_pairs_with_est_from_membership(
         .filter(F.size("ms") >= 2)
     )
 
-    def est(x_sig: Column, y_sig: Column) -> Column:
-        agree = F.aggregate(
-            F.zip_with(x_sig, y_sig, lambda p, q: (p == q).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
-        return F.round(agree.cast("double") / F.lit(float(num_perm)), 9)
-
     pair_arr = F.flatten(
         F.transform(
             F.col("ms"),
@@ -324,7 +345,7 @@ def candidate_pairs_with_est_from_membership(
                 lambda y: F.struct(
                     x["spec_id"].alias("a"),
                     y["spec_id"].alias("b"),
-                    est(x["sig"], y["sig"]).alias("est_j"),
+                    est_jaccard(x["sig"], y["sig"], num_perm).alias("est_j"),
                 ),
             ),
         )

@@ -7,12 +7,13 @@ Re-expression of the reference's classifier stage (src/logistic.c):
   Hogwild-style concurrent batch updates under a mutex
   (src/logistic.c:346-472, batches of 500 pairs, 2 GD iterations each,
   lr=0.6, stop=0.15, moving threshold clamped to [0.2, 0.8]).
-- The new engine computes THREE pairwise similarity features
-  (cosine over TF-IDF maps, Jaccard over token sets, bounded
-  Levenshtein — all JVM expressions, functions/similarity.py) and
-  trains the same LR loop SYNCHRONOUSLY: per round, per-batch gradients
-  computed in an Arrow-vectorized applyInPandas kernel, averaged on the
-  driver, weights broadcast back. Deterministic replacement for the
+- The new engine computes THREE pairwise similarity features in one
+  featurizer, :func:`pair_features`, shared by train and candidate
+  pairs (cosine over top-k-pruned TF-IDF maps, MinHash-estimated
+  Jaccard, bounded prefix Levenshtein — all JVM expressions,
+  functions/similarity.py) and trains the same LR loop SYNCHRONOUSLY:
+  per round, per-batch gradients computed in an Arrow-vectorized
+  applyInPandas kernel, averaged on the driver, weights broadcast back. Deterministic replacement for the
   reference's racy Hogwild (SURVEY.md §2.10).
 
 Deliberate deviations (SURVEY.md §7.2, documented not cargo-culted):
@@ -36,7 +37,6 @@ from pyspark.sql import functions as F
 
 from bigdataentityresolution_spark.functions.similarity import (
     cosine_maps,
-    jaccard_arrays,
     levenshtein_bounded,
 )
 
@@ -61,93 +61,25 @@ class LRModel:
 
 
 def pair_features(
-    candidates: DataFrame,
-    docs: DataFrame,
-    id_col: str = "spec_id",
-    vector_col: str = "features",
-    tokens_col: str = "tokens",
-    text_col: str = "content",
+    pairs_with_est: DataFrame,
+    doc_state: DataFrame,
     lev_bound: int = 128,
 ) -> DataFrame:
-    """Join candidate (a, b) pairs to both sides' doc representations and
-    compute the similarity feature columns.
+    """The one pair featurizer: join (a, b, est_j[, ...]) pairs to both
+    sides' per-doc state (plans.pipeline.doc_state: spec_id, prefix,
+    features, sig) and compute
 
-    docs must carry: id, TF-IDF map (vector_col), token array
-    (tokens_col), and raw text (text_col). Only the Levenshtein prefix
-    (lev_bound chars) of the text is shipped through the join — at
-    10^12 rows the full content must never ride a pair shuffle.
-    """
-    side = docs.select(
-        F.col(id_col).alias("_id"),
-        F.col(vector_col).alias("_vec"),
-        F.col(tokens_col).alias("_toks"),
-        F.substring(F.col(text_col), 1, lev_bound).alias("_prefix"),
-    )
-    a = side.select(
-        F.col("_id").alias("a"),
-        F.col("_vec").alias("_vec_a"),
-        F.col("_toks").alias("_toks_a"),
-        F.col("_prefix").alias("_prefix_a"),
-    )
-    b = side.select(
-        F.col("_id").alias("b"),
-        F.col("_vec").alias("_vec_b"),
-        F.col("_toks").alias("_toks_b"),
-        F.col("_prefix").alias("_prefix_b"),
-    )
-    out = (
-        candidates.join(a, "a")
-        .join(b, "b")
-        .withColumn(
-            "f_jaccard", F.round(jaccard_arrays(F.col("_toks_a"), F.col("_toks_b")), 9)
-        )
-        .withColumn("f_cosine", F.round(cosine_maps(F.col("_vec_a"), F.col("_vec_b")), 9))
-        # Levenshtein is the one O(len²) feature (lev_bound² DP cells per
-        # pair). Most LSH candidates are junk (low Jaccard); gate the DP
-        # behind the cheap token-Jaccard test — a pair with J < 0.1 gets
-        # f_lev = 0.0, which the classifier reads the same way the true
-        # distance would (clear non-match). Deterministic and documented.
-        .withColumn(
-            "f_lev",
-            F.when(
-                F.col("f_jaccard") >= 0.1,
-                levenshtein_bounded(F.col("_prefix_a"), F.col("_prefix_b"), lev_bound),
-            ).otherwise(F.lit(0.0)),
-        )
-    )
-    return out.drop("_vec_a", "_vec_b", "_toks_a", "_toks_b", "_prefix_a", "_prefix_b")
+      f_jaccard   — the MinHash-estimated Jaccard, est_j as given
+                    (blocking.est_jaccard; candidates carry it from the
+                    blocking stage, train pairs from a sig join)
+      f_cosine    — cosine over the top-k-pruned int-keyed TF-IDF maps
+      f_lev       — bounded prefix Levenshtein, gated on f_jaccard
+      f_vocab_cov — min map size of the pair (NOT a model feature)
 
-
-def est_jaccard_expr(sig_a: Column, sig_b: Column, num_perm: int) -> Column:
-    """MinHash-estimated Jaccard: fraction of agreeing signature slots."""
-    agree = F.aggregate(
-        F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    return agree.cast("double") / F.lit(float(num_perm))
-
-
-def pair_features_compact(
-    candidates: DataFrame,
-    docs_compact: DataFrame,
-    num_perm: int = 32,
-    lev_bound: int = 128,
-    sig_prefilter: float | None = 0.2,
-) -> DataFrame:
-    """The SCALE path for pair features: candidates join only COMPACT
-    per-doc state — (spec_id, sig ARRAY<BIGINT>, features MAP, prefix).
-
-    Why this exists (measured, see BENCH/BASELINE.md history): joining the
-    full token arrays through a multi-million-pair shuffle replicates
-    each doc's ~KB payload ~fan-out times and spills; the sketch is 256 B.
-    Feature set:
-      f_jaccard — MinHash-ESTIMATED Jaccard (signature agreement)
-      f_cosine  — cosine over top-k-pruned TF-IDF maps
-      f_lev     — bounded prefix Levenshtein, gated on f_jaccard
-    sig_prefilter drops pairs whose estimated Jaccard is below the bar
-    BEFORE the expensive features — label-driven edges never pass through
-    here, so blocking recall is unaffected and closure heals stragglers.
+    Extra pair columns (e.g. label) pass through; est_j is dropped. Any
+    est-Jaccard prefilter is the caller's, applied BEFORE this join (the
+    ER pipeline does it per candidate channel), so only survivors probe
+    the doc state; signatures never ride this join.
     """
     # shuffle_hash hint: NEVER let the planner broadcast the doc-state
     # side. Its size estimate is unreliable before the cache materializes
@@ -156,71 +88,7 @@ def pair_features_compact(
     # 10.8 GiB broadcast and killed the job). Shuffled-hash join is the
     # plan that survives 10^12 rows: pairs shuffle on the id, docs build
     # per-partition hash tables, no sort of the pair side.
-    side = docs_compact.hint("shuffle_hash").select(
-        F.col("spec_id").alias("_id"),
-        F.col("sig").alias("_sig"),
-        F.col("features").alias("_vec"),
-        F.col("prefix").alias("_prefix"),
-    )
-    a = side.select(
-        F.col("_id").alias("a"), F.col("_sig").alias("_sig_a"),
-        F.col("_vec").alias("_vec_a"), F.col("_prefix").alias("_prefix_a"),
-    )
-    b = side.select(
-        F.col("_id").alias("b"), F.col("_sig").alias("_sig_b"),
-        F.col("_vec").alias("_vec_b"), F.col("_prefix").alias("_prefix_b"),
-    )
-    out = (
-        candidates.join(a, "a")
-        .join(b, "b")
-        .withColumn(
-            "f_jaccard",
-            F.round(est_jaccard_expr(F.col("_sig_a"), F.col("_sig_b"), num_perm), 9),
-        )
-    )
-    if sig_prefilter is not None:
-        out = out.filter(F.col("f_jaccard") >= sig_prefilter)
-    out = (
-        out.withColumn("f_cosine", F.round(cosine_maps(F.col("_vec_a"), F.col("_vec_b")), 9))
-        .withColumn(
-            "f_lev",
-            F.when(
-                F.col("f_jaccard") >= 0.1,
-                levenshtein_bounded(F.col("_prefix_a"), F.col("_prefix_b"), lev_bound),
-            ).otherwise(F.lit(0.0)),
-        )
-        # vocab coverage diagnostic (NOT a model feature): min map size of
-        # the pair. A doc whose tokens all fall outside the top-k vocab
-        # has an empty TF-IDF map and f_cosine identically 0 — edge
-        # policies must not let a cosine floor hard-veto such pairs
-        # (ADVICE.md r1: recall can silently collapse on vocab-diverse
-        # corpora).
-        .withColumn(
-            "f_vocab_cov",
-            F.least(F.size(F.map_keys("_vec_a")), F.size(F.map_keys("_vec_b"))),
-        )
-    )
-    return out.drop("_sig_a", "_sig_b", "_vec_a", "_vec_b", "_prefix_a", "_prefix_b")
-
-
-def pair_features_from_est(
-    candidates_with_est: DataFrame,
-    docs_compact: DataFrame,
-    lev_bound: int = 128,
-) -> DataFrame:
-    """Featurize (a, b, est_j) candidates produced by
-    blocking.candidate_pairs_with_est. The est was computed in-block, so
-    the caller applies any est-Jaccard prefilter BEFORE this join (the ER
-    pipeline does it per candidate channel) and only survivors (~5 % at
-    the default floor) probe the compact doc state for the TF-IDF map +
-    prefix — at bench scale this removed the pipeline's hottest shuffle
-    (2·|pairs| sketch probes). Signature columns never ride this join at
-    all.
-
-    Output schema matches pair_features_compact: (a, b, f_jaccard,
-    f_cosine, f_lev, f_vocab_cov).
-    """
-    side = docs_compact.hint("shuffle_hash").select(
+    side = doc_state.hint("shuffle_hash").select(
         F.col("spec_id").alias("_id"),
         F.col("features").alias("_vec"),
         F.col("prefix").alias("_prefix"),
@@ -234,10 +102,13 @@ def pair_features_from_est(
         F.col("_prefix").alias("_prefix_b"),
     )
     out = (
-        candidates_with_est.join(a, "a")
+        pairs_with_est.join(a, "a")
         .join(b, "b")
         .withColumn("f_jaccard", F.col("est_j"))
         .withColumn("f_cosine", F.round(cosine_maps(F.col("_vec_a"), F.col("_vec_b")), 9))
+        # Levenshtein is the one O(len²) feature (lev_bound² DP cells per
+        # pair); a pair with est-Jaccard < 0.1 gets f_lev = 0.0, which the
+        # classifier reads the same way the true distance would.
         .withColumn(
             "f_lev",
             F.when(
@@ -245,6 +116,10 @@ def pair_features_from_est(
                 levenshtein_bounded(F.col("_prefix_a"), F.col("_prefix_b"), lev_bound),
             ).otherwise(F.lit(0.0)),
         )
+        # A doc whose tokens all fall outside the top-k vocab has an empty
+        # TF-IDF map and f_cosine identically 0 — edge policies must not
+        # let a cosine floor hard-veto such pairs (ADVICE.md r1: recall
+        # can silently collapse on vocab-diverse corpora).
         .withColumn(
             "f_vocab_cov",
             F.least(F.size(F.map_keys("_vec_a")), F.size(F.map_keys("_vec_b"))),

@@ -33,6 +33,7 @@ import json
 import os
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
 from functools import reduce
 from typing import NamedTuple
@@ -184,14 +185,6 @@ class ERConfig:
     # accept path (the channel then only feeds pairs that some other
     # gate accepts).
     edge_semantic_override: float | str | None = "auto"
-    # Submit independent stage groups as CONCURRENT Spark jobs (label
-    # closure ∥ corpus prep; training ∥ candidate generation). The DAG's
-    # serial stage chain cannot feed a wide cluster by itself — measured
-    # at bench scale: >60% executor idle time at local[16] from barrier
-    # latency. Job-level parallelism is the reference's own design
-    # (threaded jobScheduler, src/jobscheduler.c) re-expressed on Spark's
-    # thread-safe scheduler.
-    overlap_jobs: bool = True
     # Connected-components loop controls: round bound and reliable-
     # checkpoint cadence. Each `cc_checkpoint_every` rounds the frontier
     # is persisted (parquet when a workdir/checkpoint_dir is set) —
@@ -307,55 +300,42 @@ def verify_content_invariant(source: DataFrame, staged: DataFrame, id_col: str =
     )
 
 
-def build_prep_for_docs(
+def doc_state(
     files: DataFrame,
+    postings: DataFrame,
     sigs: DataFrame,
     top_vocab: DataFrame,
-    doc_ids: DataFrame,
     n_docs: int,
     lev_bound: int,
-    tokenizer=None,
-    tf_mode: str = "log",
+    tf_mode: str,
 ) -> DataFrame:
-    """Compact per-doc pair-join state (prefix + int-keyed TF-IDF vector +
-    MinHash sig) for ONLY the docs in ``doc_ids`` (one spec_id column).
+    """(spec_id, prefix, features, sig) — the compact per-doc state every
+    pair join carries (scoring.pair_features): the Levenshtein prefix,
+    the int-keyed TF-IDF map over the shared top-k vocabulary (empty for
+    a doc with no vocab term) and the MinHash sig. The raw content and
+    token arrays never ride a pair join (measured: full-payload joins
+    spill at multi-million-candidate scale and stop scaling).
 
-    Bit-identical per doc to the full-corpus prep stage: per-doc state is
-    a pure function of (the doc's own tokens, the SHARED top-k
-    vocabulary, n_docs, the doc's prefix and signature) — re-tokenizing
-    the selected docs produces exactly the postings rows a filter of the
-    corpus-wide postings would, so restricting files/sigs with broadcast
-    semi-joins on the id set changes nothing about the values — only how
-    much work materializing them costs. Used by the training path so
-    featurizing a few thousand labeled pairs never waits on (or
-    shuffles) corpus-scale state.
+    Per-doc state is a pure function of (the doc's own postings, the
+    shared vocabulary, n_docs, the doc's prefix and sig), so the prep
+    stage (corpus-wide inputs) and the train path (inputs restricted to
+    the train docs) get bit-identical rows for the same doc.
     """
-    ids = doc_ids.select("spec_id")
-    # Re-tokenize ONLY the selected docs instead of semi-joining the
-    # corpus-wide postings relation: postings is |corpus-tokens| rows, so
-    # even a broadcast semi-join over it costs full passes (measured: the
-    # concurrent train chain spent ~2 postings-cache scans here and
-    # became the pipeline tail at 8 cores). A broadcast semi-join on the
-    # files table + an explode of the few thousand selected docs is a
-    # fraction of one postings pass — and on a real table the semi-join
-    # pushes into the scan (DPP/bloom), which a pass over a materialized
-    # corpus-wide postings cache never can.
-    files_t = files.join(F.broadcast(ids), "spec_id", "left_semi")
-    p_t = TI.postings(
-        files_t, id_col="spec_id", text_col="content", tokenizer=tokenizer
-    )
-    vecs = TI.doc_vectors_indexed(p_t, top_vocab, n_docs, tf_mode=tf_mode).withColumnRenamed(
+    # tfidf operators speak "doc_id" internally; map back to spec_id.
+    vecs = TI.doc_vectors_indexed(postings, top_vocab, n_docs, tf_mode=tf_mode).withColumnRenamed(
         "doc_id", "spec_id"
     )
     empty_map = F.map_from_arrays(
         F.array().cast("array<int>"), F.array().cast("array<float>")
     )
+    # shuffle_hash hints: at corpus scale these are corpus×corpus
+    # equi-joins — the planner must never try to broadcast either side
+    # (see scoring.pair_features for the measured failure).
     return (
-        files.join(F.broadcast(ids), "spec_id", "left_semi")
-        .select("spec_id", F.substring("content", 1, lev_bound).alias("prefix"))
-        .join(vecs, "spec_id", "left")
+        files.select("spec_id", F.substring("content", 1, lev_bound).alias("prefix"))
+        .join(vecs.hint("shuffle_hash"), "spec_id", "left")
         .withColumn("features", F.coalesce("features", empty_map))
-        .join(sigs.join(F.broadcast(ids), "spec_id", "left_semi"), "spec_id")
+        .join(sigs.hint("shuffle_hash"), "spec_id")
     )
 
 
@@ -440,31 +420,10 @@ def run_er_pipeline(
         fp_files,
     )
 
-    # ---- stage: prep (compact per-doc state: sig + TF-IDF map + prefix) ----
-    # Everything a pair shuffle will ever carry. The raw content/token
-    # arrays never ride a pair join (measured: full-payload joins spill
-    # at multi-million-candidate scale and stop scaling).
+    # ---- stage: prep (compact per-doc state: prefix + TF-IDF map + sig) ----
     def prep():
-        p = postings_df
-        # tfidf operators speak "doc_id" internally; map back to spec_id.
-        # Int-keyed float vectors: this map rides every pair shuffle —
-        # payload size is the scaling lever (see doc_vectors_indexed).
-        vecs = TI.doc_vectors_indexed(
-            p, top_vocab, n_docs, tf_mode=config.tf_mode
-        ).withColumnRenamed("doc_id", "spec_id")
-        empty_map = F.map_from_arrays(
-            F.array().cast("array<int>"), F.array().cast("array<float>")
-        )
-        # shuffle_hash hints: these are corpus×corpus equi-joins — the
-        # planner must never try to broadcast either side (see
-        # pair_features_compact for the measured failure).
-        return (
-            files.select(
-                "spec_id", F.substring("content", 1, config.lev_bound).alias("prefix")
-            )
-            .join(vecs.hint("shuffle_hash"), "spec_id", "left")
-            .withColumn("features", F.coalesce("features", empty_map))
-            .join(sigs.hint("shuffle_hash"), "spec_id")
+        return doc_state(
+            files, postings_df, sigs, top_vocab, n_docs, config.lev_bound, config.tf_mode
         )
 
     docs_prep = runner.run("prep", prep, fp_files)
@@ -541,20 +500,22 @@ def run_er_pipeline(
     # Train on the train split's labeled pairs (reference: LR trains on
     # pairs among first-60% specs, src/main.c:296-308).
     #
-    # The train features come from a FILTERED prep — the per-doc compact
-    # state (prefix + TF-IDF vector + sig) built ONLY for the docs the
-    # labeled pairs touch, via broadcast semi-joins on the tiny train-doc
-    # id set. Per-doc state is a pure function of (that doc's postings,
-    # the shared corpus vocabulary, the doc's prefix, the doc's sig), so
-    # the features are bit-identical to a join against the full corpus
-    # prep (tests/test_pipeline.py asserts this) — but the train+fit
-    # chain no longer waits for the corpus-wide prep to materialize: it
+    # The train features join doc_state built ONLY for the docs the
+    # labeled pairs touch: files and sigs restricted by one broadcast
+    # semi-join on the tiny train-doc id set, postings re-tokenized from
+    # those files. Re-tokenizing beats semi-joining the corpus-wide
+    # postings relation: postings is |corpus tokens| rows, so even a
+    # broadcast semi-join over it costs full passes (measured: the
+    # concurrent train chain spent ~2 postings-cache scans there and
+    # became the pipeline tail at 8 cores), while on a real table the
+    # files semi-join pushes into the scan (DPP/bloom). The features are
+    # bit-identical to a join against the prep stage's doc state
+    # (tests/test_pipeline.py asserts this), but the train+fit chain
     # forks right after the postings/vocab stages and the driver-local
     # IRLS fit runs CONCURRENTLY with the heavy docs_prep job instead of
     # serially after it (measured: the fit added ~5 s of pure critical
-    # path at 16 cores). At production scale the same property matters
-    # more: training on a few thousand labeled pairs must not gate on
-    # featurizing 10^12 docs.
+    # path at 16 cores). Training on a few thousand labeled pairs must
+    # not gate on featurizing 10^12 docs.
     def train_features():
         lp = labeled_pairs
         if "split" not in lp.columns:
@@ -571,25 +532,38 @@ def run_er_pipeline(
             F.greatest("left_spec_id", "right_spec_id").alias("b"),
             "label",
         ).distinct()
-        train_prep = build_prep_for_docs(
-            files, sigs, top_vocab,
-            doc_ids=tp.select(F.col("a").alias("spec_id")).unionByName(
-                tp.select(F.col("b").alias("spec_id"))
-            ).distinct(),
-            n_docs=n_docs,
-            lev_bound=config.lev_bound,
-            tokenizer=tok,
-            tf_mode=config.tf_mode,
+        # cached (released with the stage caches): the id set feeds every
+        # semi-join of the train chain, which would otherwise recompute it
+        # and carry one copy of its plan per join through each AQE re-plan
+        # (measured on a 1,201-file corpus: 2-4 s of CPU per run)
+        ids = (
+            tp.select(F.col("a").alias("spec_id"))
+            .unionByName(tp.select(F.col("b").alias("spec_id")))
+            .distinct()
+            .cache()
+        )
+        runner.cached.append(ids)
+        files_t, sigs_t = (
+            df.join(F.broadcast(ids), "spec_id", "left_semi") for df in (files, sigs)
+        )
+        state = doc_state(
+            files_t,
+            TI.postings(files_t, id_col="spec_id", text_col="content", tokenizer=tok),
+            sigs_t, top_vocab, n_docs, config.lev_bound, config.tf_mode,
         )
         # no prefilter: every labeled pair must be featurized; f_vocab_cov
         # rides along because the gate regions calibrated here read it
-        return S.pair_features_compact(
-            tp, train_prep, num_perm=config.num_perm,
-            lev_bound=config.lev_bound, sig_prefilter=None,
+        return S.pair_features(
+            B.pairs_with_est(tp, sigs_t, config.num_perm), state, config.lev_bound
         ).select("a", "b", "label", *S.FEATURE_COLS, "f_vocab_cov")
 
     # ---- concurrent job groups ---------------------------------------------
-    # Three independent groups:
+    # Independent stage groups run as CONCURRENT Spark jobs: the DAG's
+    # serial stage chain cannot feed a wide cluster by itself (measured
+    # at bench scale: >60% executor idle time at local[16] from barrier
+    # latency). Job-level parallelism is the reference's own design
+    # (threaded jobScheduler, src/jobscheduler.c) re-expressed on Spark's
+    # thread-safe scheduler. Three independent groups:
     #   A) label-closure CC (labeled pairs only — NOT on the final-label
     #      critical path; its output feeds the result dict and sinks)
     #   B) prep → train features + IRLS fit (labeled pairs × docs_prep)
@@ -649,47 +623,41 @@ def run_er_pipeline(
         ])
         if len(channels) > 1:
             cand = cand.groupBy("a", "b").agg(F.max("est_j").alias("est_j"))
-        return S.pair_features_from_est(
-            cand, docs_prep, lev_bound=config.lev_bound
-        ).select("a", "b", *S.FEATURE_COLS, "f_vocab_cov")
+        return S.pair_features(cand, docs_prep, config.lev_bound).select(
+            "a", "b", *S.FEATURE_COLS, "f_vocab_cov"
+        )
 
     cand_feats = runner.run("cand_features", cand_features, fp_files).cache()
 
-    if config.overlap_jobs:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            closure_future = pool.submit(in_pool("closure", run_closure))
-            plog("sigs.count: start")
-            sigs.count()  # the one dependency group C reads
-            plog("sigs.count: done; forking candidates")
-            cand_future = pool.submit(in_pool("candidates", candidates.count))
-            # Group B's SHARED inputs (postings + top-k vocab) materialize
-            # once on the main thread, then train+fit forks IMMEDIATELY —
-            # its filtered prep reads only vocab/sigs/files (it
-            # re-tokenizes the few thousand train docs), so the
-            # driver-local IRLS fit overlaps the heavy corpus-wide
-            # docs_prep materialization instead of serially following it.
-            postings_df.count()
-            top_vocab.count()
-            plog("postings+vocab: done; forking train+fit")
-            fit_future = pool.submit(in_pool("train", run_train_and_fit))
-            docs_prep.count()  # the final-labeling path's heavy dependency
-            plog("docs_prep.count: done")
-            cand_future.result()  # candidates cache materialized (no
-            plog("candidates.count: joined")  # first-touch race below)
-            candfeat_future = pool.submit(
-                in_pool("candfeat", cand_feats.count)
-            )
-            train_pairs, model = fit_future.result()
-            plog("train+fit: joined")
-            candfeat_future.result()
-            plog("cand_features: materialized")
-            closure_raw = closure_future.result()
-            plog("closure: joined")
-    else:
-        closure_raw = run_closure()
-        train_pairs, model = run_train_and_fit()
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        closure_future = pool.submit(in_pool("closure", run_closure))
+        plog("sigs.count: start")
+        sigs.count()  # the one dependency group C reads
+        plog("sigs.count: done; forking candidates")
+        cand_future = pool.submit(in_pool("candidates", candidates.count))
+        # Group B's SHARED inputs (postings + top-k vocab) materialize
+        # once on the main thread, then train+fit forks IMMEDIATELY —
+        # its filtered prep reads only vocab/sigs/files (it
+        # re-tokenizes the few thousand train docs), so the
+        # driver-local IRLS fit overlaps the heavy corpus-wide
+        # docs_prep materialization instead of serially following it.
+        postings_df.count()
+        top_vocab.count()
+        plog("postings+vocab: done; forking train+fit")
+        fit_future = pool.submit(in_pool("train", run_train_and_fit))
+        docs_prep.count()  # the final-labeling path's heavy dependency
+        plog("docs_prep.count: done")
+        cand_future.result()  # candidates cache materialized (no
+        plog("candidates.count: joined")  # first-touch race below)
+        candfeat_future = pool.submit(
+            in_pool("candfeat", cand_feats.count)
+        )
+        train_pairs, model = fit_future.result()
+        plog("train+fit: joined")
+        candfeat_future.result()
+        plog("cand_features: materialized")
+        closure_raw = closure_future.result()
+        plog("closure: joined")
 
     closure_df = closure_raw.cache()
     label_clusters = closure_df.filter(F.col("_kind") == "label").drop("_kind")

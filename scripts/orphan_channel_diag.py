@@ -48,6 +48,7 @@ def main() -> None:
     bench.HARD_CORPUS_DIR = os.environ["SPARK_GRAFT_HARD_CORPUS"]
     from pyspark.sql import functions as F
 
+    from bigdataentityresolution_spark.operators import blocking as B
     from bigdataentityresolution_spark.operators import scoring as S
     from bigdataentityresolution_spark.plans.pipeline import ERConfig, run_er_pipeline
     from bigdataentityresolution_spark.session import get_spark
@@ -107,9 +108,8 @@ def main() -> None:
     }
 
     for name, p in pops.items():
-        feats = S.pair_features_compact(
-            p, docs_prep, num_perm=cfg.num_perm, lev_bound=cfg.lev_bound,
-            sig_prefilter=None,
+        feats = S.pair_features(
+            B.pairs_with_est(p, docs_prep, cfg.num_perm), docs_prep, cfg.lev_bound
         )
         scored = S.predict(feats, model).cache()
         agg = scored.agg(

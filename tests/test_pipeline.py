@@ -115,86 +115,65 @@ def test_resume_invalidates_on_config_change(spark, tiny_tables, tmp_path_factor
     assert r["runner"].manifests["candidates"]["resumed"] is False
 
 
-def test_filtered_train_prep_feature_parity(spark, tiny_tables):
-    """The train path featurizes against a prep restricted (by broadcast
-    semi-joins) to the docs the labeled pairs touch. Per-doc compact
-    state is a pure function of (doc postings, shared vocab, n_docs,
-    prefix, sig), so the features must be BIT-identical to a join
-    against the full corpus prep — where "full corpus prep" is built the
-    EXACT way run_er_pipeline's prep stage builds it (corpus-wide
-    postings → doc_vectors_indexed → join sigs), NOT via
-    build_prep_for_docs over all ids: comparing the re-tokenize path
-    against itself would let a divergence between the two construction
-    paths slip through (ADVICE r3 #3)."""
-    from bigdataentityresolution_spark.functions.text import tokenize
+def test_filtered_train_prep_feature_parity(pipeline_result):
+    """The train path featurizes against doc state restricted to the
+    docs the labeled pairs touch (re-tokenized). Per-doc state is a pure
+    function of the doc, so featurizing the pipeline's own train pairs
+    against its own corpus-wide prep (result["docs_prep"]) must give
+    BIT-identical rows: any divergence between the two paths fails."""
     from bigdataentityresolution_spark.operators import blocking as B
     from bigdataentityresolution_spark.operators import scoring as S
-    from bigdataentityresolution_spark.operators import tfidf as TI
 
-    files_df, _, pairs_df = tiny_tables
     cfg = P.ERConfig()
-    tok = tokenize("content")
-    sigs = B.minhash_signatures_df(
-        files_df, id_col="spec_id", text_col="content",
-        shingle_n=cfg.shingle_n, num_perm=cfg.num_perm, seed=cfg.seed,
-        tokenizer=tok,
-    ).cache()
-    postings_df = TI.postings(
-        files_df, id_col="spec_id", text_col="content", tokenizer=tok
-    ).cache()
-    n_docs = files_df.count()
-    vocab_k = min(max(1000, n_docs), 1_000_000) if cfg.vocab_k == "auto" else int(cfg.vocab_k)
-    top_vocab = TI.er_vocab(
-        TI.vocab(postings_df, n_docs), n_docs, vocab_k, max_df_ratio=cfg.max_df_ratio
-    ).cache()
+    docs_prep = pipeline_result["docs_prep"]
+    train = pipeline_result["train_pairs"]
+    cols = ["a", "b", "label", *S.FEATURE_COLS, "f_vocab_cov"]
 
-    tp = pairs_df.select(
-        F.least("left_spec_id", "right_spec_id").alias("a"),
-        F.greatest("left_spec_id", "right_spec_id").alias("b"),
-        "label",
-    ).distinct()
-    ids = (
-        tp.select(F.col("a").alias("spec_id"))
-        .unionByName(tp.select(F.col("b").alias("spec_id")))
-        .distinct()
-    )
+    with_est = B.pairs_with_est(train.select("a", "b", "label"), docs_prep, cfg.num_perm)
+    again = S.pair_features(with_est, docs_prep, cfg.lev_bound).select(*cols)
+    assert train.count() > 0
+    assert again.count() == train.count()
+    assert again.exceptAll(train.select(*cols)).count() == 0
+    assert train.select(*cols).exceptAll(again).count() == 0
 
-    # mirror of run_er_pipeline's prep stage (plans/pipeline.py prep()):
-    # doc vectors from the CORPUS-WIDE postings relation, left-join onto
-    # the prefix projection, empty-map fill, join sigs
-    vecs = TI.doc_vectors_indexed(
-        postings_df, top_vocab, n_docs, tf_mode=cfg.tf_mode
-    ).withColumnRenamed("doc_id", "spec_id")
-    empty_map = F.map_from_arrays(
-        F.array().cast("array<int>"), F.array().cast("array<float>")
-    )
-    full_prep = (
-        files_df.select(
-            "spec_id", F.substring("content", 1, cfg.lev_bound).alias("prefix")
-        )
-        .join(vecs.hint("shuffle_hash"), "spec_id", "left")
-        .withColumn("features", F.coalesce("features", empty_map))
-        .join(sigs.hint("shuffle_hash"), "spec_id")
-    )
-    train_prep = P.build_prep_for_docs(
-        files_df, sigs, top_vocab,
-        doc_ids=ids, n_docs=n_docs, lev_bound=cfg.lev_bound, tokenizer=tok,
-        tf_mode=cfg.tf_mode,
-    )
-    cols = ["a", "b", "label", *S.FEATURE_COLS]
-    f_full = S.pair_features_compact(
-        tp, full_prep, num_perm=cfg.num_perm, lev_bound=cfg.lev_bound,
-        sig_prefilter=None,
-    ).select(*cols)
-    f_train = S.pair_features_compact(
-        tp, train_prep, num_perm=cfg.num_perm, lev_bound=cfg.lev_bound,
-        sig_prefilter=None,
-    ).select(*cols)
-    assert f_full.count() == f_train.count() == tp.count()
-    assert f_full.exceptAll(f_train).count() == 0
-    assert f_train.exceptAll(f_full).count() == 0
-    for df in (sigs, postings_df, top_vocab):
-        df.unpersist()
+
+def _degenerate_inputs(case, files_df, pairs_df):
+    if case == "empty_corpus":
+        return files_df.limit(0), pairs_df.limit(0)
+    if case == "no_labels":
+        return files_df, pairs_df.limit(0)
+    if case == "positives_only":
+        return files_df, pairs_df.filter(F.col("label") == 1)
+    # no doc has a token, so every vocab map comes from doc_state's
+    # empty-map fill ("x x x x" would not do: er_vocab falls back to the
+    # unpruned vocab, which keeps "x" at idf 0)
+    return files_df.withColumn("content", F.lit("- - - -")), pairs_df
+
+
+@pytest.mark.parametrize(
+    "case", ["empty_corpus", "no_labels", "positives_only", "empty_vocab"]
+)
+def test_degenerate_inputs(spark, tiny_tables, case):
+    """Degenerate inputs give defined results, not a failure deep in a plan."""
+    files_df, _, pairs_df = tiny_tables
+    files_in, pairs_in = _degenerate_inputs(case, files_df, pairs_df)
+    cfg = P.ERConfig(self_train=False, newton_rounds=2)
+    r = P.run_er_pipeline(spark, files_in, pairs_in, workdir=None, config=cfg)
+    bars = {g.name: g.bar for g in r["gates"]}
+    n_labels = r["labels"].count()
+    if case == "empty_corpus":
+        assert n_labels == 0
+        assert r["edge_threshold"] == 0.5
+        assert bars == {"override": 0.99, "semantic": 0.99, "floors": None}
+    else:
+        assert n_labels == files_df.count()
+    if case == "positives_only":
+        assert bars["override"] == bars["semantic"] == 0.99
+    if case == "empty_vocab":
+        scored = r["scored"]
+        assert scored.count() > 0
+        assert scored.filter(F.col("f_vocab_cov") != 0).count() == 0
+    r["runner"].release()
 
 
 def test_semantic_channel_without_prefilter(spark, tiny_tables):
