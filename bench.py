@@ -274,8 +274,8 @@ def bench_hotkey(spark) -> dict:
     sigs.count()
     mem = B.membership_from_signatures(sigs).cache()
     mem.count()
-    stats = B.block_stats(mem).agg(
-        F.max("n_members").alias("mx"), F.count(F.lit(1)).alias("n_blocks")
+    stats = mem.groupBy("block_key").count().agg(
+        F.max("count").alias("mx"), F.count(F.lit(1)).alias("n_blocks")
     ).first()
 
     t0 = time.time()

@@ -89,18 +89,6 @@ def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
     return F.array(*keys)
 
 
-def lsh_band_keys_sql(signature_expr: str, bands: int, rows_per_band: int) -> str:
-    """DuckDB twin of :func:`lsh_band_keys`."""
-    keys = []
-    for band in range(bands):
-        elems = " || '_' || ".join(
-            f"CAST(list_extract({signature_expr}, {band * rows_per_band + r + 1}) AS VARCHAR)"
-            for r in range(rows_per_band)
-        )
-        keys.append(f"('{band}' || ':' || ({elems}))")
-    return "[" + ", ".join(keys) + "]"
-
-
 def simhash64(tokens_col: Column) -> Column:
     """60-bit SimHash of a token array as BIGINT.
 

@@ -26,11 +26,13 @@ Scale design (the part that must survive 10^12 files):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from bigdataentityresolution_spark.functions.hashes import lsh_band_keys, minhash_signature
-from bigdataentityresolution_spark.functions.text import shingles, tokenize
+from bigdataentityresolution_spark.functions.hashes import lsh_band_keys, perm_params
+from bigdataentityresolution_spark.functions.text import HASH_PRIME, tokenize
 
 # Polynomial base combining adjacent token hashes into an n-gram hash
 # (numeric shingles). Any base coprime-ish to HASH_PRIME works; value is
@@ -46,73 +48,54 @@ def minhash_signatures_df(
     num_perm: int = 32,
     seed: int = 42,
     tokenizer: Column | None = None,
-    hash_fn: str = "xxhash",
 ) -> DataFrame:
-    """(spec_id, sig ARRAY<BIGINT>) — the compact per-record sketch.
+    """(spec_id, sig ARRAY<INT>) — the compact per-record sketch.
 
     Long-format MinHash: explode shingles, hash each ONCE, num_perm
     min-aggregates (map-side partial agg → tiny shuffle). This sketch is
     computed ONE time per corpus and reused for (a) LSH band keys and
     (b) the estimated-Jaccard pair feature — at 10^12 rows the sketch
-    (256 B) is what rides every downstream shuffle, never the text.
+    (128 B) is what rides every downstream shuffle, never the text.
 
-    hash_fn: "xxhash" (default — per-token codegen'd xxhash64 folded into
-    [0, HASH_PRIME), adjacent token hashes combined polynomially into
-    numeric n-gram hashes; no shingle strings are ever built) or
-    "portable" (string shingles + the char-fold polynomial hash the
-    DuckDB oracle can reproduce — use where cross-engine parity matters).
+    Shingles are numeric: each token is hashed once (codegen'd xxhash64
+    folded into [0, HASH_PRIME)) and n adjacent token hashes combine
+    polynomially into an n-gram hash, so no shingle string is ever
+    built. (The string-shingle twin the DuckDB oracle reproduces is
+    functions.hashes.minhash_signature.)
     """
-    from bigdataentityresolution_spark.functions.hashes import perm_params
-    from bigdataentityresolution_spark.functions.text import HASH_PRIME, portable_hash
-
     toks = tokenizer if tokenizer is not None else tokenize(text_col)
-    if hash_fn == "portable":
-        # char-fold polynomial hash over shingle STRINGS — interpreted per
-        # char, but the only form the DuckDB oracle can reproduce
-        exploded = files.select(
-            F.col(id_col).alias("spec_id"),
-            F.explode(shingles(toks, shingle_n)).alias("shingle"),
-        )
-        hashed = exploded.select("spec_id", portable_hash(F.col("shingle")).alias("h"))
+    # Materialize the per-token hash array as its own projection
+    # (evaluated once per row — multiple downstream references must not
+    # re-tokenize). The measured string path (array_join per gram)
+    # allocated so hard it anti-scaled with task threads. Everything
+    # stays map-side: the only shuffle is the partial-aggregated
+    # signature rows.
+    th_df = files.select(
+        F.col(id_col).alias("spec_id"),
+        F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(HASH_PRIME))).alias("th"),
+    )
+    if shingle_n <= 1:
+        grams = F.col("th")
     else:
-        # NUMERIC gram path (the scale default): hash each token once
-        # (xxhash64), materialize the per-token hash array as its own
-        # projection (evaluated once per row — multiple downstream
-        # references must not re-tokenize), then combine n adjacent token
-        # hashes polynomially. Shingle STRINGS are never materialized —
-        # the measured string path (array_join per gram) allocated so hard
-        # it anti-scaled with task threads. Everything stays map-side:
-        # the only shuffle is the partial-aggregated signature rows.
-        th_df = files.select(
-            F.col(id_col).alias("spec_id"),
-            F.transform(
-                toks, lambda t: F.pmod(F.xxhash64(t), F.lit(HASH_PRIME))
-            ).alias("th"),
-        )
-        if shingle_n <= 1:
-            grams = F.col("th")
-        else:
-            m = F.greatest(F.size("th") - F.lit(shingle_n - 1), F.lit(1))
+        m = F.greatest(F.size("th") - F.lit(shingle_n - 1), F.lit(1))
 
-            def gram(i: Column) -> Column:
-                # F.get is 0-based and null-safe (no ANSI range error);
-                # short docs pad missing positions with 0 — every record
-                # stays blockable (reference: src/myHash.c:47-62).
-                acc = F.coalesce(F.get("th", i), F.lit(0).cast("long"))
-                for j in range(1, shingle_n):
-                    nxt = F.coalesce(F.get("th", i + F.lit(j)), F.lit(0).cast("long"))
-                    acc = (acc * F.lit(GRAM_COMB) + nxt) % F.lit(HASH_PRIME)
-                return acc
+        def gram(i: Column) -> Column:
+            # F.get is 0-based and null-safe (no ANSI range error);
+            # short docs pad missing positions with 0 — every record
+            # stays blockable (reference: src/myHash.c:47-62).
+            acc = F.coalesce(F.get("th", i), F.lit(0).cast("long"))
+            for j in range(1, shingle_n):
+                nxt = F.coalesce(F.get("th", i + F.lit(j)), F.lit(0).cast("long"))
+                acc = (acc * F.lit(GRAM_COMB) + nxt) % F.lit(HASH_PRIME)
+            return acc
 
-            grams = F.transform(F.sequence(F.lit(0), m - F.lit(1)), gram)
-        hashed = th_df.select(
-            "spec_id",
-            F.explode(
-                F.when(F.size("th") > 0, grams).otherwise(
-                    F.array(F.lit(0).cast("long"))
-                )
-            ).alias("h"),
-        )
+        grams = F.transform(F.sequence(F.lit(0), m - F.lit(1)), gram)
+    hashed = th_df.select(
+        "spec_id",
+        F.explode(
+            F.when(F.size("th") > 0, grams).otherwise(F.array(F.lit(0).cast("long")))
+        ).alias("h"),
+    )
     # INT slots: every value is < HASH_PRIME < 2^31, so the sketch is 128 B
     # not 256 B — this array rides the membership shuffle and every
     # training-pair join, payload size is the scaling lever.
@@ -131,49 +114,9 @@ def minhash_signatures_df(
 def membership_from_signatures(
     signatures: DataFrame, bands: int = 16, num_perm: int = 32, carry_sig: bool = False
 ) -> DataFrame:
-    """(spec_id, block_key[, sig]) from a precomputed signature table —
-    pure projection + explode, no rescan of the corpus.
-
-    carry_sig=True keeps the 128 B sketch on every band row so consumers
-    that need it in-block (candidate_pairs_with_est) never join back to
-    the signature table — that join was a second corpus-wide shuffle at
-    100 TB shape for data the explode already had in hand."""
-    rows_per_band = num_perm // bands
-    keys = [
-        F.concat_ws(
-            ":",
-            F.lit(str(band)),
-            F.concat_ws(
-                "_",
-                *[
-                    F.element_at("sig", band * rows_per_band + r + 1)
-                    for r in range(rows_per_band)
-                ],
-            ),
-        )
-        for band in range(bands)
-    ]
-    cols = ["spec_id", F.explode(F.array(*keys)).alias("block_key")]
-    if carry_sig:
-        cols.append("sig")
-    return signatures.select(*cols)
-
-
-def block_membership(
-    files: DataFrame,
-    id_col: str = "spec_id",
-    text_col: str = "content",
-    shingle_n: int = 2,
-    num_perm: int = 32,
-    bands: int = 16,
-    seed: int = 42,
-    tokenizer: Column | None = None,
-    hash_fn: str = "xxhash",
-) -> DataFrame:
-    """(spec_id, block_key) — one row per record per LSH band.
-
-    All hashing is codegen'd expression work computed in the scan
-    projection; the only shuffle is whatever the consumer does next.
+    """(spec_id, block_key[, sig]) — one row per record per LSH band
+    (hashes.lsh_band_keys), projected from a precomputed signature table
+    with no rescan of the corpus.
 
     Function default banding (16 bands × 2 rows over 32 perms) suits
     easy near-dup regimes: true clone pairs at 2-shingle Jaccard ≥ 0.5
@@ -183,57 +126,78 @@ def block_membership(
     probability at J 0.15/0.20/0.25 from 30/48/64% to 52/73/87% — the
     regime adversarially-mutated clones live in (measured on the HARD
     tier: hard-kind recall 0.8865 → 0.9708; scripts/hard_sweep.py).
-    Pair-level blocking misses are additionally healed by transitive
-    closure (a~c, c~b ⇒ a,b same cluster).
-    """
+
+    carry_sig=True keeps the 128 B sketch on every band row so consumers
+    that need it in-block (candidate_pairs_with_est) never join back to
+    the signature table — that join was a second corpus-wide shuffle at
+    100 TB shape for data the explode already had in hand."""
     if num_perm % bands != 0:
         raise ValueError(f"bands ({bands}) must divide num_perm ({num_perm})")
-    sig = minhash_signatures_df(
-        files, id_col=id_col, text_col=text_col, shingle_n=shingle_n,
-        num_perm=num_perm, seed=seed, tokenizer=tokenizer, hash_fn=hash_fn,
-    )
-    return membership_from_signatures(sig, bands=bands, num_perm=num_perm)
+    keys = lsh_band_keys(F.col("sig"), bands, num_perm // bands)
+    cols = ["spec_id", F.explode(keys).alias("block_key")]
+    if carry_sig:
+        cols.append("sig")
+    return signatures.select(*cols)
 
 
-def candidate_pairs(
-    membership: DataFrame,
-    per_block_cap: int = 64,
-    shuffle_partitions: int | None = None,
+def cap_per_block(
+    membership: DataFrame, per_block_cap: int, block_cols: tuple[str, ...] = ("block_key",)
 ) -> DataFrame:
-    """(a, b) candidate pairs with a < b, deduped across blocks.
-
-    Pipeline: cap members per block (window) → collect sorted member
-    array per block (ONE shuffle on block_key) → explode the pair
-    combinations expression-side → distinct().
-
-    per_block_cap bounds worst-case work: a block with m members emits
-    min(m, cap)·(min(m, cap)-1)/2 pairs. Reference analog:
-    pairs_limit = set_size × 12 + 4-bucket stripes
-    (src/functs.c:1718,1752-1768).
-    """
-    w = Window.partitionBy("block_key").orderBy("spec_id")
-    capped = (
+    """The first ``per_block_cap`` members of each block in spec_id order
+    — the hot-block defusal every within-block pair generator applies
+    BEFORE it explodes pairs, so a block emits at most cap·(cap-1)/2."""
+    w = Window.partitionBy(*block_cols).orderBy("spec_id")
+    return (
         membership.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= per_block_cap)
         .drop("_rn")
     )
-    members = (
-        capped.groupBy("block_key")
-        .agg(F.sort_array(F.collect_set("spec_id")).alias("ms"))
-        .filter(F.size("ms") >= 2)
-    )
-    # pairs(ms) = [(ms[i], ms[j]) for i < j] as a flat array expression
-    pair_arr = F.flatten(
+
+
+def _pair_array(ms: Column, pair: Callable[[Column, Column], Column]) -> Column:
+    """[pair(ms[i], ms[j]) for i < j] as one flat array expression."""
+    return F.flatten(
         F.transform(
-            F.col("ms"),
+            ms,
             lambda x, i: F.transform(
-                F.slice(F.col("ms"), i + F.lit(2), F.size(F.col("ms"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
+                F.slice(ms, i + F.lit(2), F.size(ms)), lambda y: pair(x, y)
             ),
         )
     )
-    pairs = members.select(F.explode(pair_arr).alias("p")).select("p.a", "p.b")
-    return pairs.distinct()
+
+
+def candidate_pairs(membership: DataFrame, per_block_cap: int = 64) -> DataFrame:
+    """(a, b[, est_j]) candidate pairs with a < b, deduped across blocks,
+    from ANY (spec_id, block_key[, sig]) membership (one row per record
+    per key) — the one within-block pair generator of every channel.
+
+    cap_per_block → collect the sorted (spec_id[, sig]) array per block
+    (ONE shuffle on block_key) → explode the pairs expression-side →
+    distinct(). Reference analog of the cap: pairs_limit = set_size × 12
+    + 4-bucket stripes (src/functs.c:1718,1752-1768).
+
+    With ``sig``, each pair's est_j is computed from the sketches already
+    co-located in the block (no join back to the signature table); it is
+    a pure function of (a, b), so distinct on the full row is the pair
+    dedup.
+    """
+    with_sig = "sig" in membership.columns
+    member = F.struct("spec_id", "sig") if with_sig else F.struct("spec_id")
+
+    def pair(x: Column, y: Column) -> Column:
+        cols = [x["spec_id"].alias("a"), y["spec_id"].alias("b")]
+        if with_sig:
+            cols.append(est_jaccard(x["sig"], y["sig"]).alias("est_j"))
+        return F.struct(*cols)
+
+    members = (
+        cap_per_block(membership, per_block_cap)
+        .groupBy("block_key")
+        .agg(F.array_sort(F.collect_list(member)).alias("ms"))
+        .filter(F.size("ms") >= 2)
+    )
+    pairs = members.select(F.explode(_pair_array(F.col("ms"), pair)).alias("p"))
+    return pairs.select("p.*").distinct()
 
 
 def semantic_topk_membership(
@@ -249,8 +213,8 @@ def semantic_topk_membership(
     (prefix-filtering from the set-similarity-join literature, PPJoin
     family — the cosine analog of MinHash banding).
 
-    Why this channel exists (VERDICT r4 #1, measured in
-    scripts/semantic_blocking_probe.py on the hard tier): adversarial
+    Why this channel exists (VERDICT r4 #1, measured on the hard tier by
+    scripts/semantic_blocking_probe.py, last at fd3f363): adversarial
     near-dups below shingle-Jaccard reach (paraphrased/refactored
     clones) keep their rare discriminative identifiers, which carry the
     TOP TF-IDF weights — top-5 term blocking reached 99.8% of
@@ -285,7 +249,7 @@ def semantic_topk_membership(
     )
 
 
-def est_jaccard(sig_a: Column, sig_b: Column, num_perm: int) -> Column:
+def est_jaccard(sig_a: Column, sig_b: Column) -> Column:
     """MinHash-estimated Jaccard: the fraction of agreeing signature
     slots, rounded to 9 places — the est_j of every candidate channel
     and of the train pairs' sig join."""
@@ -294,10 +258,10 @@ def est_jaccard(sig_a: Column, sig_b: Column, num_perm: int) -> Column:
         F.lit(0),
         lambda acc, v: acc + v,
     )
-    return F.round(agree.cast("double") / F.lit(float(num_perm)), 9)
+    return F.round(agree.cast("double") / F.size(sig_a).cast("double"), 9)
 
 
-def pairs_with_est(pairs: DataFrame, sigs: DataFrame, num_perm: int) -> DataFrame:
+def pairs_with_est(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
     """``pairs`` (a, b[, ...]) plus est_j, from a join of both sides to
     their (spec_id, sig) rows — for pairs that did not come out of a
     blocking channel (labeled pairs); a pair with a side missing from
@@ -309,53 +273,9 @@ def pairs_with_est(pairs: DataFrame, sigs: DataFrame, num_perm: int) -> DataFram
     return (
         pairs.join(side("a"), "a")
         .join(side("b"), "b")
-        .withColumn("est_j", est_jaccard(F.col("_sig_a"), F.col("_sig_b"), num_perm))
+        .withColumn("est_j", est_jaccard(F.col("_sig_a"), F.col("_sig_b")))
         .drop("_sig_a", "_sig_b")
     )
-
-
-def candidate_pairs_with_est_from_membership(
-    mem: DataFrame,
-    num_perm: int = 32,
-    per_block_cap: int = 64,
-) -> DataFrame:
-    """(a, b, est_j) candidates from ANY (spec_id, block_key, sig)
-    membership — the channel-generic core of candidate_pairs_with_est:
-    cap members per block, collect the sorted (id, sig) array, emit
-    within-block pairs with the MinHash-estimated Jaccard computed
-    expression-side, dedup across blocks. One shuffle on block_key plus
-    the distinct's pair shuffle."""
-    w = Window.partitionBy("block_key").orderBy("spec_id")
-    capped = (
-        mem.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= per_block_cap)
-        .drop("_rn")
-    )
-    members = (
-        capped.groupBy("block_key")
-        .agg(F.array_sort(F.collect_list(F.struct("spec_id", "sig"))).alias("ms"))
-        .filter(F.size("ms") >= 2)
-    )
-
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ms"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ms"), i + F.lit(2), F.size(F.col("ms"))),
-                lambda y: F.struct(
-                    x["spec_id"].alias("a"),
-                    y["spec_id"].alias("b"),
-                    est_jaccard(x["sig"], y["sig"], num_perm).alias("est_j"),
-                ),
-            ),
-        )
-    )
-    pairs = members.select(F.explode(pair_arr).alias("p")).select(
-        "p.a", "p.b", "p.est_j"
-    )
-    # est_j is a pure function of (a, b) → distinct on the full row is
-    # the same dedup as on the pair, no extra aggregation needed
-    return pairs.distinct()
 
 
 def candidate_pairs_with_est(
@@ -364,9 +284,9 @@ def candidate_pairs_with_est(
     num_perm: int = 32,
     per_block_cap: int = 64,
 ) -> DataFrame:
-    """(a, b, est_j) candidate pairs with the MinHash-estimated Jaccard
-    computed INSIDE the blocking stage — the 100 TB-shape successor to
-    candidate_pairs + a downstream signature join.
+    """(a, b, est_j) lexical-channel candidates: LSH band membership
+    carrying the sketch, then candidate_pairs — the MinHash-estimated
+    Jaccard is computed INSIDE the blocking stage.
 
     Why: featurizing pairs by joining each side back to a signature
     table ships 2·|pairs| probes of ~256 B sketches through a shuffle
@@ -387,14 +307,7 @@ def candidate_pairs_with_est(
     mem = membership_from_signatures(
         signatures, bands=bands, num_perm=num_perm, carry_sig=True
     )
-    return candidate_pairs_with_est_from_membership(
-        mem, num_perm=num_perm, per_block_cap=per_block_cap
-    )
-
-
-def block_stats(membership: DataFrame) -> DataFrame:
-    """(block_key, n_members) — skew diagnostics for the bench/metrics."""
-    return membership.groupBy("block_key").agg(F.count("*").alias("n_members"))
+    return candidate_pairs(mem, per_block_cap=per_block_cap)
 
 
 def candidate_pairs_salted(
@@ -414,24 +327,12 @@ def candidate_pairs_salted(
     salted = membership.withColumn(
         "salt", F.pmod(F.xxhash64("spec_id"), F.lit(salt_buckets))
     )
-    w = Window.partitionBy("block_key", "salt").orderBy("spec_id")
-    capped = (
-        salted.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= per_block_cap)
-        .drop("_rn")
+    groups = (
+        cap_per_block(salted, per_block_cap, ("block_key", "salt"))
+        .groupBy("block_key", "salt")
+        .agg(F.sort_array(F.collect_set("spec_id")).alias("ms"))
     )
-    groups = capped.groupBy("block_key", "salt").agg(
-        F.sort_array(F.collect_set("spec_id")).alias("ms")
-    )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ms"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ms"), i + F.lit(2), F.size(F.col("ms"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
+    pair_arr = _pair_array(F.col("ms"), lambda x, y: F.struct(x.alias("a"), y.alias("b")))
     within = groups.filter(F.size("ms") >= 2).select(F.explode(pair_arr).alias("p")).select(
         "p.a", "p.b"
     )

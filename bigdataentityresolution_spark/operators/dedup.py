@@ -25,7 +25,12 @@ from pyspark.sql import functions as F
 from bigdataentityresolution_spark.functions.hashes import simhash64
 from bigdataentityresolution_spark.functions.similarity import jaccard_arrays
 from bigdataentityresolution_spark.functions.text import shingles, tokenize
-from bigdataentityresolution_spark.operators.blocking import block_membership, candidate_pairs
+from bigdataentityresolution_spark.operators.blocking import (
+    cap_per_block,
+    candidate_pairs,
+    membership_from_signatures,
+    minhash_signatures_df,
+)
 from bigdataentityresolution_spark.operators.clustering import connected_components
 
 
@@ -59,10 +64,10 @@ def minhash_duplicate_pairs(
     shingle Jaccard ≥ threshold. ids are cast to string for the generic
     blocking path and cast back by the caller if needed."""
     d = docs.select(F.col(id_col).cast("string").alias("spec_id"), F.col(text_col).alias("_text"))
-    mem = block_membership(
-        d, id_col="spec_id", text_col="_text", shingle_n=shingle_n,
-        num_perm=num_perm, bands=bands,
+    sigs = minhash_signatures_df(
+        d, id_col="spec_id", text_col="_text", shingle_n=shingle_n, num_perm=num_perm
     )
+    mem = membership_from_signatures(sigs, bands=bands, num_perm=num_perm)
     cand = candidate_pairs(mem, per_block_cap=per_block_cap)
     sh = d.select(
         "spec_id", F.array_distinct(shingles(tokenize("_text"), shingle_n)).alias("_sh")
@@ -98,8 +103,9 @@ def simhash_duplicate_pairs(
 
     per_block_cap bounds the quadratic blow-up of a hot chunk (blank /
     templated docs share whole fingerprints): a window keeps the first
-    cap members per chunk (deterministic by id) — same defusal as
-    blocking.candidate_pairs (VERDICT.md 'What's wrong' #3).
+    cap members per chunk (deterministic by id) — blocking.cap_per_block,
+    the same defusal as blocking.candidate_pairs (VERDICT.md 'What's
+    wrong' #3).
     """
     if max_hamming >= n_chunks:
         raise ValueError(
@@ -118,14 +124,7 @@ def simhash_duplicate_pairs(
     ]
     mem = d.select("spec_id", F.col("sh"), F.explode(F.array(*chunks)).alias("block_key"))
     if per_block_cap is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("block_key").orderBy("spec_id")
-        mem = (
-            mem.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= per_block_cap)
-            .drop("_rn")
-        )
+        mem = cap_per_block(mem, per_block_cap)
     a = mem.select(F.col("spec_id").alias("a"), F.col("sh").alias("sh_a"), "block_key")
     b = mem.select(F.col("spec_id").alias("b"), F.col("sh").alias("sh_b"), "block_key")
     return (

@@ -160,10 +160,10 @@ class ERConfig:
     # doc's top-k TF-IDF terms (prefix filtering, PPJoin family —
     # measured 99.8% orphan-pair coverage at ~1x the lexical channel's
     # candidate volume vs 71% at 11x for SimHash-over-TF-IDF bands,
-    # scripts/semantic_blocking_probe.py). Candidates from this channel
-    # bypass the est-Jaccard prefilter (they are chosen BECAUSE they sit
-    # below it); their acceptance gate is the exact TF-IDF cosine + a
-    # separately calibrated high-confidence bar (see
+    # scripts/semantic_blocking_probe.py, last at fd3f363). Candidates
+    # from this channel bypass the est-Jaccard prefilter (they are chosen
+    # BECAUSE they sit below it); their acceptance gate is the exact
+    # TF-IDF cosine + a separately calibrated high-confidence bar (see
     # edge_semantic_override below).
     semantic_channel: bool = True
     semantic_topk: int = 5
@@ -453,9 +453,9 @@ def run_er_pipeline(
     # Depends on docs_prep (the int-keyed vectors + sigs), NOT on a new
     # corpus scan: the top-k is an expression-side sort/slice of the map
     # each doc already carries, so the channel costs one blocking shuffle
-    # of k rows/doc plus the capped in-block pair explosion. est_j is
-    # computed in-block exactly like the lexical channel (sigs ride the
-    # membership) so the two channels union on an identical schema.
+    # of k rows/doc plus the capped in-block pair explosion. Both channels
+    # run blocking.candidate_pairs on a membership carrying sig, so est_j
+    # is one expression and the two union on an identical schema.
     # `channels` holds one (candidates with est_j, est-Jaccard prefilter
     # or None) entry per channel. The semantic channel has no prefilter:
     # its pairs are chosen BECAUSE they sit below the sketch estimate's
@@ -465,11 +465,10 @@ def run_er_pipeline(
     if config.semantic_channel:
         sem_candidates = runner.run(
             "sem_candidates",
-            lambda: B.candidate_pairs_with_est_from_membership(
+            lambda: B.candidate_pairs(
                 B.semantic_topk_membership(
                     docs_prep, k=config.semantic_topk, carry_cols=("sig",)
                 ),
-                num_perm=config.num_perm,
                 per_block_cap=config.semantic_block_cap,
             ),
             fp_files,
@@ -554,7 +553,7 @@ def run_er_pipeline(
         # no prefilter: every labeled pair must be featurized; f_vocab_cov
         # rides along because the gate regions calibrated here read it
         return S.pair_features(
-            B.pairs_with_est(tp, sigs_t, config.num_perm), state, config.lev_bound
+            B.pairs_with_est(tp, sigs_t), state, config.lev_bound
         ).select("a", "b", "label", *S.FEATURE_COLS, "f_vocab_cov")
 
     # ---- concurrent job groups ---------------------------------------------

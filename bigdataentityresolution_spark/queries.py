@@ -161,17 +161,6 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 @_register(
-    "filter_point_lookup",
-    "SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE o_orderkey = 7",
-)
-def q_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Key lookup → point filter (findRecord_byKey, src/myHash.c:221-252)."""
-    return _load(spark, sf_dir, "orders").filter(F.col("o_orderkey") == 7).select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-
-
-@_register(
     "filter_token_admission",
     f"""
     SELECT doc_id, pos, tok FROM (
@@ -494,10 +483,11 @@ def q_pair_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_candidate_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION blocked candidate generator (blocking.candidate_pairs:
-    window cap → per-block member array → expression-side pair explosion →
-    distinct) against a full-fidelity SQL oracle INCLUDING the per-block
-    cap semantics (row_number over spec_id string order, first 16 kept).
+    """The PRODUCTION blocked candidate generator (blocking.candidate_pairs,
+    which both pipeline channels and MinHash dedup run: window cap →
+    per-block member array → expression-side pair explosion → distinct)
+    against a full-fidelity SQL oracle INCLUDING the per-block cap
+    semantics (row_number over spec_id string order, first 16 kept).
 
     Membership is a deterministic Zipf-ish blocking over documents:
     block k = floor(sqrt(doc_id)) has ~2k+1 members, so block sizes span
@@ -786,24 +776,6 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "topk_global",
-    """
-    SELECT o_orderkey, o_totalprice FROM orders
-    ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10
-    """,
-)
-def q_topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MBH top-N selection (src/mbh.c:144-187) → TakeOrderedAndProject,
-    deterministic tie-break by key."""
-    return (
-        _load(spark, sf_dir, "orders")
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(10)
-        .select("o_orderkey", "o_totalprice")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Set operations (SURVEY.md §2.7)
 # ---------------------------------------------------------------------------
@@ -853,26 +825,6 @@ def q_pair_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Scalar functions (SURVEY.md §2.8)
 # ---------------------------------------------------------------------------
-
-@_register(
-    "scalar_string_funcs",
-    """
-    SELECT doc_id, lower(substr(text, 1, 20)) AS prefix20,
-           length(text) AS len, length(regexp_replace(text, '[^a-z]', '', 'g')) AS n_alpha,
-           md5(lang) AS lang_fp
-    FROM documents
-    """,
-)
-def q_scalar_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _load(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.lower(F.substring("text", 1, 20)).alias("prefix20"),
-        F.length("text").alias("len"),
-        F.length(F.regexp_replace("text", "[^a-z]", "")).alias("n_alpha"),
-        F.md5("lang").alias("lang_fp"),
-    )
-
 
 @_register(
     "scalar_portable_hash",

@@ -8,7 +8,7 @@ stage that dropped it:
 - not_candidate:   the pair never appeared in blocked candidate gen
                    (MinHash band miss or per-block cap; the candidates
                    relation contains ALL capped within-block pairs —
-                   blocking.py:259 "no floor here")
+                   blocking.candidate_pairs_with_est "no floor here")
 - prefilter_dropped: became a candidate but est-Jaccard fell below
                    sig_prefilter at featurization (pipeline.py cand
                    features), so it was never scored (proba is NULL)

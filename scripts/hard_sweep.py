@@ -29,7 +29,7 @@ sys.path.insert(0, str(REPO))
 # rounds. "base" is therefore "shipped defaults minus the semantic
 # channel" — the r4 operating point. Sweep semantic levers (topk, cap,
 # sem gate) separately if needed; scripts/semantic_blocking_probe.py
-# covers the channel's own selection sweep.
+# (last at fd3f363) covered the channel's own selection sweep.
 _LEX = {"semantic_channel": False}
 CONFIGS = {
     # the shipped r4 default (64 perms / 32 bands, prefilter+override

@@ -108,9 +108,7 @@ def main() -> None:
     }
 
     for name, p in pops.items():
-        feats = S.pair_features(
-            B.pairs_with_est(p, docs_prep, cfg.num_perm), docs_prep, cfg.lev_bound
-        )
+        feats = S.pair_features(B.pairs_with_est(p, docs_prep), docs_prep, cfg.lev_bound)
         scored = S.predict(feats, model).cache()
         agg = scored.agg(
             F.count(F.lit(1)).alias("n"),

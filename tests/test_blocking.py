@@ -2,14 +2,20 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdataentityresolution_spark.operators import blocking as B
 
 
+def _membership(files_df, shingle_n=2, num_perm=16, bands=4):
+    sigs = B.minhash_signatures_df(files_df, shingle_n=shingle_n, num_perm=num_perm)
+    return B.membership_from_signatures(sigs, bands=bands, num_perm=num_perm)
+
+
 def test_block_membership_shape(spark, tiny_tables):
     files_df, _, _ = tiny_tables
-    mem = B.block_membership(files_df, num_perm=16, bands=4)
+    mem = _membership(files_df, num_perm=16, bands=4)
     rows = mem.limit(10).collect()
     assert set(mem.columns) == {"spec_id", "block_key"}
     assert all(r["block_key"].split(":")[0] in {"0", "1", "2", "3"} for r in rows)
@@ -40,7 +46,7 @@ def test_blocking_recall_on_truth(spark, tiny_tables):
     """Most true positive pairs must share at least one LSH block
     (north_rule: labeled pairs drawn at the same blocking key)."""
     files_df, truth_df, _ = tiny_tables
-    mem = B.block_membership(files_df, shingle_n=2, num_perm=32, bands=16)
+    mem = _membership(files_df, shingle_n=2, num_perm=32, bands=16)
     cand = B.candidate_pairs(mem, per_block_cap=128)
 
     t1 = truth_df.select(F.col("spec_id").alias("a"), F.col("cluster_id").alias("c"))
@@ -58,13 +64,45 @@ def test_blocking_recall_on_truth(spark, tiny_tables):
 
 def test_salted_equals_unsalted(spark, tiny_tables):
     files_df, _, _ = tiny_tables
-    mem = B.block_membership(files_df, num_perm=16, bands=4)
+    mem = _membership(files_df, num_perm=16, bands=4)
     plain = {(r["a"], r["b"]) for r in B.candidate_pairs(mem, per_block_cap=10**6).collect()}
     salted = {
         (r["a"], r["b"])
         for r in B.candidate_pairs_salted(mem, per_block_cap=10**6, salt_buckets=4).collect()
     }
     assert plain == salted
+
+
+def test_candidate_pairs_columns_follow_sig(spark):
+    """One generator for every channel: est_j appears exactly when the
+    membership carries the sketch."""
+    rows = [("s1", "k1", [1, 2, 3, 4]), ("s2", "k1", [1, 2, 0, 0]), ("s3", "k2", [9, 9, 9, 9])]
+    mem = spark.createDataFrame(rows, "spec_id string, block_key string, sig array<int>")
+    plain = B.candidate_pairs(mem.drop("sig"))
+    with_est = B.candidate_pairs(mem)
+    assert set(plain.columns) == {"a", "b"}
+    assert set(with_est.columns) == {"a", "b", "est_j"}
+    assert [tuple(r) for r in with_est.select("a", "b", "est_j").collect()] == [("s1", "s2", 0.5)]
+
+
+def test_in_block_est_equals_sig_join(spark, tiny_tables):
+    """The in-block est_j of candidate_pairs_with_est and the sig-join
+    est_j of pairs_with_est are one expression: same rows both ways."""
+    files_df, _, _ = tiny_tables
+    sigs = B.minhash_signatures_df(files_df, num_perm=16).cache()
+    cand = B.candidate_pairs_with_est(sigs, bands=8, num_perm=16, per_block_cap=64)
+    joined = B.pairs_with_est(cand.select("a", "b"), sigs).select("a", "b", "est_j")
+    assert cand.count() > 0
+    assert cand.exceptAll(joined).count() == 0
+    assert joined.exceptAll(cand).count() == 0
+    sigs.unpersist()
+
+
+def test_membership_rejects_bands_not_dividing_num_perm(spark, tiny_tables):
+    files_df, _, _ = tiny_tables
+    sigs = B.minhash_signatures_df(files_df, num_perm=16)
+    with pytest.raises(ValueError, match="must divide"):
+        B.membership_from_signatures(sigs, bands=5, num_perm=16)
 
 
 def test_semantic_topk_membership_shape_and_ties(spark):
@@ -122,9 +160,7 @@ def test_semantic_channel_reaches_sub_shingle_pairs(spark):
     )
     prep = vecs.join(sigs, "spec_id")
 
-    sem = B.candidate_pairs_with_est_from_membership(
-        B.semantic_topk_membership(prep, k=3, carry_cols=("sig",)), num_perm=64
-    )
+    sem = B.candidate_pairs(B.semantic_topk_membership(prep, k=3, carry_cols=("sig",)))
     sem_pairs = {(r["a"], r["b"]) for r in sem.collect()}
     assert ("a1", "a2") in sem_pairs
 

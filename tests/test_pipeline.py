@@ -129,7 +129,7 @@ def test_filtered_train_prep_feature_parity(pipeline_result):
     train = pipeline_result["train_pairs"]
     cols = ["a", "b", "label", *S.FEATURE_COLS, "f_vocab_cov"]
 
-    with_est = B.pairs_with_est(train.select("a", "b", "label"), docs_prep, cfg.num_perm)
+    with_est = B.pairs_with_est(train.select("a", "b", "label"), docs_prep)
     again = S.pair_features(with_est, docs_prep, cfg.lev_bound).select(*cols)
     assert train.count() > 0
     assert again.count() == train.count()
