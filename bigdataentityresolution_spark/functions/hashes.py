@@ -155,6 +155,19 @@ def simhash_sql_ctes(docs_table: str, id_col: str, tokens_expr: str) -> str:
     )"""
 
 
+def multiset_signature(*cols: Column | str) -> list[Column]:
+    """(n, h, s) aggregates identifying the multiset of rows over
+    ``cols``: count, xor-fold of xxhash64 and an independent sum-fold
+    (mod 2^31 keeps the BIGINT sum overflow-free; it also sees equal-row
+    pairs the xor cancels). Order-independent; all 0 on an empty input."""
+    h = F.xxhash64(*cols)
+    return [
+        F.coalesce(F.count(F.lit(1)), F.lit(0)).alias("n"),
+        F.coalesce(F.bit_xor(h), F.lit(0)).alias("h"),
+        F.coalesce(F.sum(F.pmod(h, F.lit(2**31))), F.lit(0)).alias("s"),
+    ]
+
+
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two BIGINT bit-fingerprints (codegen'd popcount)."""
     return F.bit_count(a.bitwiseXOR(b))

@@ -145,10 +145,6 @@ def token_count(col: Column | str, split_pattern: str = "[^a-z0-9]+") -> Column:
     return F.size(tokenize(col, split_pattern))
 
 
-def token_count_sql(expr: str, split_pattern: str = "[^a-z0-9]+") -> str:
-    return f"len({tokenize_sql(expr, split_pattern)})"
-
-
 # --- Text analytics (training-data pipeline extensions; no reference analog) ---
 
 # Tiny per-language stopword marker sets for the n-gram language-ID

@@ -22,17 +22,20 @@ Semantics preserved from the reference:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from bigdataentityresolution_spark.functions.hashes import multiset_signature
 
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
     """Normalize to a<b, drop self-loops.
 
-    No distinct(): the first star round's ``collect_set`` erases
-    duplicates identically, and a distinct here is a full extra shuffle
+    No distinct(): the next star round's ``collect_set`` erases
+    duplicates identically, and a distinct here is a full extra shuffle:
     of the largest edge set the pipeline ever materializes (labeled ∪
-    predicted) — pure waste on the critical path."""
+    predicted) on input, and of every round's output inside the CC loop
+    (rounds cost 2 shuffles, not 4)."""
     return edges.select(
         F.least("a", "b").alias("a"),
         F.greatest("a", "b").alias("b"),
@@ -158,35 +161,6 @@ def connected_components(
     import os
 
     spark = edges.sparkSession
-
-    def orient(df: DataFrame) -> DataFrame:
-        # orientation + self-loop drop only: a cheap projection. The
-        # per-round distinct() this replaces was a full extra shuffle —
-        # the NEXT star's groupBy(collect_set) dedups identically, so
-        # rounds now cost 2 shuffles instead of 4 (latency-bound floor
-        # of the whole pipeline at bench scale).
-        return df.select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        ).filter(F.col("a") < F.col("b"))
-
-    def with_signature(df: DataFrame):
-        """Attach the multiset signature as observe() metrics: count +
-        xor-fold + an independent sum-fold (mod 2^31 keeps the BIGINT
-        sum overflow-free at any realistic edge count). Metrics are
-        collected by the SAME job that materializes the round batch."""
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        out = df.observe(
-            obs,
-            F.coalesce(F.count(F.lit(1)), F.lit(0)).alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("a", "b")), F.lit(0)).alias("h"),
-            F.coalesce(
-                F.sum(F.pmod(F.xxhash64("a", "b"), F.lit(2**31))), F.lit(0)
-            ).alias("s"),
-        )
-        return out, obs
-
     e = _canonical_edges(edges)
     rounds_done = 0
     prev_sig: tuple[int, int] | None = None
@@ -217,10 +191,10 @@ def connected_components(
         # flat 3-4 s of latency per CC call at ANY core count).
         observations = []
         for _ in range(checkpoint_every):
-            e = orient(_large_star(e))
-            e = orient(_small_star(e))
-            e, obs = with_signature(e)
-            observations.append(obs)
+            e = _canonical_edges(_large_star(e))
+            e = _canonical_edges(_small_star(e))
+            observations.append(Observation())
+            e = e.observe(observations[-1], *multiset_signature("a", "b"))
             rounds_done += 1
         if checkpoint_dir:
             rpath = os.path.join(checkpoint_dir, f"round_{rounds_done}")
@@ -239,13 +213,7 @@ def connected_components(
             # to one direct aggregation of the materialized batch output
             # (old per-batch semantics: convergence then needs one more
             # no-op batch — fine for the empty/degenerate case).
-            row = e.agg(
-                F.coalesce(F.count(F.lit(1)), F.lit(0)).alias("n"),
-                F.coalesce(F.bit_xor(F.xxhash64("a", "b")), F.lit(0)).alias("h"),
-                F.coalesce(
-                    F.sum(F.pmod(F.xxhash64("a", "b"), F.lit(2**31))), F.lit(0)
-                ).alias("s"),
-            ).collect()[0]
+            row = e.agg(*multiset_signature("a", "b")).collect()[0]
             batch_sigs = [(int(row["n"]), int(row["h"]), int(row["s"]))]
         for sig in batch_sigs:
             if sig == prev_sig:

@@ -1,4 +1,5 @@
-"""TF-IDF corpus build: postings → df/idf → top-k vocabulary → doc vectors.
+"""TF-IDF corpus build: postings → df/idf → top-k vocabulary → doc vectors
+(doc_vectors_indexed).
 
 Re-expression of the reference's bag-of-words stage
 (src/boWords.c:50-96,460-481,552-619 + top-1000 heap src/mbh.c:144-187 +
@@ -147,30 +148,6 @@ def prune_postings(postings_df: DataFrame, top_vocab: DataFrame) -> DataFrame:
     return postings_df.join(F.broadcast(top_vocab.select("term")), "term", "left_semi")
 
 
-def doc_vectors(
-    postings_df: DataFrame, top_vocab: DataFrame, n_docs: int
-) -> DataFrame:
-    """(doc_id, features MAP<term, tfidf>) sparse TF-IDF vectors.
-
-    Reference analog: hash_to_spars COO triples (src/functs.c:2015-2034).
-    MAP<STRING,DOUBLE> keeps vectors self-describing; cosine is a
-    map-aggregate expression (functions.similarity.cosine_maps).
-    """
-    lengths = doc_lengths(postings_df)
-    pruned = prune_postings(postings_df, top_vocab)
-    with_idf = pruned.join(F.broadcast(top_vocab.select("term", "idf")), "term").join(
-        lengths, "doc_id"
-    )
-    weighted = with_idf.select(
-        "doc_id",
-        "term",
-        (F.col("tf").cast("double") / F.col("n_tokens") * F.col("idf")).alias("tfidf"),
-    )
-    return weighted.groupBy("doc_id").agg(
-        F.map_from_entries(F.collect_list(F.struct("term", "tfidf"))).alias("features")
-    )
-
-
 def index_vocab(top_vocab: DataFrame) -> DataFrame:
     """(term, idf, term_idx) — dense index assignment over the top-k
     vocabulary (row_number by significance desc, term asc — the exact
@@ -202,9 +179,11 @@ def doc_vectors_indexed(
 ) -> DataFrame:
     """(doc_id, features MAP<INT, FLOAT>) — the PAIR-JOIN representation.
 
-    Same numbers as :func:`doc_vectors` (tf_mode="raw"), but terms are
-    replaced by their dense vocabulary index (row_number over the top-k
-    vocab) and weights stored as float32. A candidate-pair join ships
+    tf_mode="raw" gives the reference weights tf/n_tokens · idf
+    (src/boWords.c:606-619; reference COO triples hash_to_spars,
+    src/functs.c:2015-2034), with each term replaced by its dense
+    vocabulary index (row_number over the top-k vocab) and the weight
+    stored as float32. A candidate-pair join ships
     every doc's vector through two corpus-scale shuffles; with ~200 live
     terms per doc the string-keyed map is ~5 KB/row while the int-keyed
     float map is ~1.7 KB — the single biggest payload riding the pair

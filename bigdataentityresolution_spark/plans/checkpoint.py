@@ -6,10 +6,11 @@ metrics so any stage resumes mid-run". Each stage directory holds
   <workdir>/<stage>/data/          parquet output
   <workdir>/<stage>/_manifest.json
 
-The manifest records the stage name, an input fingerprint (so a resume
-with different inputs invalidates downstream stages), total rows,
-schema, and per-partition row counts (lineage). `StageRunner.run`
-returns the cached parquet when the manifest validates, else recomputes.
+The manifest records the stage name, its fingerprint, total rows, schema,
+and per-partition row counts (lineage). `StageRunner.run` returns the
+cached parquet when the manifest is complete under the given fingerprint,
+else recomputes. A fingerprint covers what its stage reads: source
+identities, config fields and upstream fingerprints (plans.pipeline.STAGES).
 
 The reference has no analog (single-process, all in RAM, SIGINT just
 aborts — src/functs.c:2228-2232); this is new engine capability.
@@ -65,9 +66,9 @@ class StageRunner:
     ) -> DataFrame:
         """Return the stage output, from checkpoint when valid.
 
-        fn: () -> DataFrame. fingerprint: hash of the stage's inputs +
-        config — a mismatch forces recompute (and therefore cascades:
-        downstream fingerprints embed upstream ones).
+        fn: () -> DataFrame. fingerprint: over what the stage reads
+        (plans.pipeline.STAGES); a mismatch forces a recompute, and it
+        cascades because downstream fingerprints embed this one.
         """
         if not self.enabled:
             # no checkpoint dir → keep the stage in the block-manager cache so

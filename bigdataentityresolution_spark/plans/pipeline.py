@@ -6,11 +6,12 @@ mapped in SURVEY.md §3.1), re-architected:
 
   stage        reference                            here
   ------------ ------------------------------------ -------------------------
-  ingest       readDataset JSON walk                source table scan +
-                                                    sha2(content,256) invariant
+  ingest       readDataset JSON walk                content identity: per-row
+                                                    sha2(content,256) folded
+                                                    into the files multiset
   closure      readCSV merge/negative links         connected components over
                (incremental clique merge)           labeled positives
-  prep         hash_to_bow + tfidf_apply + top-1000 postings/vocab/doc_vectors
+  prep         hash_to_bow + tfidf_apply + top-1000 postings/vocab/doc_state
   blocking     hash1 mod 500 buckets                MinHash/LSH band keys
   candidates   bucket-stripe enumeration            capped within-block pairs
   features     concat sparse TF-IDF vectors         cosine/jaccard/levenshtein
@@ -21,9 +22,11 @@ mapped in SURVEY.md §3.1), re-architected:
                                                     predicted edges
   sinks        extractMatches/extractNegatives      same, as DataFrames
 
-Every stage checkpoints through plans.checkpoint.StageRunner; a killed
-run resumes at the first stage whose manifest is missing or whose input
-fingerprint changed.
+Every stage checkpoints through plans.checkpoint.StageRunner under a
+fingerprint derived from the STAGES table (the sources, config fields
+and upstream stages it reads); a killed run resumes every stage whose
+manifest is complete under its fingerprint, and a changed input reruns
+exactly the stages that read it and their descendants.
 """
 
 from __future__ import annotations
@@ -34,13 +37,14 @@ import os
 import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import asdict, dataclass
+from dataclasses import dataclass, fields
 from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdataentityresolution_spark.functions import hashes as H
 from bigdataentityresolution_spark.functions.text import tokenize
 from bigdataentityresolution_spark.operators import blocking as B
 from bigdataentityresolution_spark.operators import clustering as C
@@ -212,9 +216,44 @@ class ERConfig:
             if isinstance(v, str) and v != "auto":
                 raise ValueError(f"{name} must be 'auto', a float or None, got {v!r}")
 
-    def fingerprint(self, extra: str = "") -> str:
-        payload = json.dumps(asdict(self), sort_keys=True) + extra
-        return hashlib.sha256(payload.encode()).hexdigest()[:16]
+
+# The stage graph, declared once: stage -> (what it reads: the sources
+# "files"/"labels" and upstream stages; the ERConfig fields it reads).
+# Every checkpoint fingerprint derives from it (stage_fingerprints), so a
+# change reruns only the stages that read it and their descendants.
+# cluster reads every field: each reaches it anyway, through an upstream
+# stage or its own edge/CC settings, so it has no list to fall out of sync.
+STAGES: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
+    "signatures": (("files",), ("shingle_n", "num_perm", "seed")),
+    "postings": (("files",), ()),
+    "top_vocab": (("files", "postings"), ("vocab_k", "max_df_ratio")),
+    "prep": (("files", "postings", "signatures", "top_vocab"), ("lev_bound", "tf_mode")),
+    "blocking": (("signatures",), ("bands", "num_perm")),
+    "candidates": (("signatures",), ("bands", "num_perm", "per_block_cap")),
+    "sem_candidates": (("prep",), ("semantic_topk", "semantic_block_cap")),
+    "closure": (("files", "labels"), ("cc_max_iter", "cc_checkpoint_every")),
+    "train_features": (("files", "labels", "signatures", "top_vocab"),
+                       ("seed", "lev_bound", "tf_mode")),
+    "cand_features": (("candidates", "sem_candidates", "prep"),
+                      ("sig_prefilter", "semantic_channel", "lev_bound")),
+    "cluster": (("files", "labels", "train_features", "cand_features"),
+                tuple(f.name for f in fields(ERConfig))),
+}
+
+
+def _sha(payload) -> str:
+    return hashlib.sha256(json.dumps(payload).encode()).hexdigest()[:16]
+
+
+def stage_fingerprints(config: ERConfig, sources: dict) -> dict[str, str]:
+    """Checkpoint fingerprint of every stage in STAGES: the sha of
+    [name, [fingerprint of each read], [value of each field]], where a
+    source's fingerprint is its identity in ``sources`` ("files",
+    "labels"; any JSON value, e.g. a multiset_signature triple)."""
+    fp = dict(sources)
+    for name, (reads, cfg_fields) in STAGES.items():
+        fp[name] = _sha([name, [fp[r] for r in reads], [getattr(config, f) for f in cfg_fields]])
+    return {name: fp[name] for name in STAGES}
 
 
 class Gate(NamedTuple):
@@ -282,22 +321,6 @@ def accept_path(gates: list[Gate]) -> Column:
         ok = g.region if g.bar is None else g.region & (F.col("proba") >= F.lit(g.bar))
         path = F.when(ok, g.name) if path is None else path.when(ok, g.name)
     return path
-
-
-def verify_content_invariant(source: DataFrame, staged: DataFrame, id_col: str = "spec_id") -> int:
-    """input_hint invariant: per-row sha2(content,256) equality vs the
-    source table. Returns the number of violating rows (0 == pass)."""
-    s = source.select(F.col(id_col), F.sha2("content", 256).alias("_sha_src"))
-    t = staged.select(F.col(id_col), F.sha2("content", 256).alias("_sha_stage"))
-    return (
-        s.join(t, id_col, "full")
-        .filter(
-            F.col("_sha_src").isNull()
-            | F.col("_sha_stage").isNull()
-            | (F.col("_sha_src") != F.col("_sha_stage"))
-        )
-        .count()
-    )
 
 
 def doc_state(
@@ -368,7 +391,17 @@ def run_er_pipeline(
     """
     plog = _phase_logger()
     runner = StageRunner(spark, workdir)
-    fp_files = config.fingerprint("files")
+    # Source identities [n, h, s], from content: per-row sha2(content, 256)
+    # folded into the files multiset (n is n_docs) and, only when
+    # checkpointing, every labeled-pair column (PLANS.md "Checkpoints: one
+    # stage table" says why not inputFiles()).
+    files_id = list(files.agg(*H.multiset_signature("spec_id", F.sha2("content", 256))).first())
+    n_docs = files_id[0]
+    labels_id = (
+        list(labeled_pairs.agg(*H.multiset_signature(*sorted(labeled_pairs.columns))).first())
+        if runner.enabled else None
+    )
+    fp = stage_fingerprints(config, {"files": files_id, "labels": labels_id})
     tok = tokenize("content")
 
     # ---- stage: signatures (ONE corpus scan → 256 B sketch per record) ----
@@ -379,7 +412,7 @@ def run_er_pipeline(
             seed=config.seed, tokenizer=tok,
         )
 
-    sigs = runner.run("signatures", signatures, fp_files)
+    sigs = runner.run("signatures", signatures, fp["signatures"])
 
     # ---- stage: postings (the ONLY corpus tokenize+explode pass) -----------
     # Materialized as its own stage: vocab, doc-lengths, and doc-vectors
@@ -390,7 +423,7 @@ def run_er_pipeline(
     postings_df = runner.run(
         "postings",
         lambda: TI.postings(files, id_col="spec_id", text_col="content", tokenizer=tok),
-        fp_files,
+        fp["postings"],
     )
 
     # ---- stage: top-k vocabulary (tiny; shared by BOTH prep paths) ---------
@@ -399,7 +432,6 @@ def run_er_pipeline(
     # full corpus prep uses — term indices come from a row_number over
     # this relation, so sharing one cached/checkpointed DataFrame removes
     # any tie-ordering doubt and computes the corpus-wide vocab agg once.
-    n_docs = files.count()
     vocab_k = min(max(1000, n_docs), 1_000_000) if config.vocab_k == "auto" else config.vocab_k
     # index_vocab folded into the stage: the dense term_idx assignment is
     # a single-partition global sort by nature, so it must run ONCE here
@@ -417,7 +449,7 @@ def run_er_pipeline(
                 max_df_ratio=config.max_df_ratio,
             )
         ),
-        fp_files,
+        fp["top_vocab"],
     )
 
     # ---- stage: prep (compact per-doc state: prefix + TF-IDF map + sig) ----
@@ -426,13 +458,13 @@ def run_er_pipeline(
             files, postings_df, sigs, top_vocab, n_docs, config.lev_bound, config.tf_mode
         )
 
-    docs_prep = runner.run("prep", prep, fp_files)
+    docs_prep = runner.run("prep", prep, fp["prep"])
 
     # ---- stage: blocking membership (projection of the signature table) ----
     membership = runner.run(
         "blocking",
         lambda: B.membership_from_signatures(sigs, bands=config.bands, num_perm=config.num_perm),
-        fp_files,
+        fp["blocking"],
     )
 
     # ---- stage: candidate pairs --------------------------------------------
@@ -446,7 +478,7 @@ def run_er_pipeline(
             sigs, bands=config.bands, num_perm=config.num_perm,
             per_block_cap=config.per_block_cap,
         ),
-        fp_files,
+        fp["candidates"],
     )
 
     # ---- stage: SEMANTIC candidates (top-k TF-IDF term blocking) -----------
@@ -471,17 +503,13 @@ def run_er_pipeline(
                 ),
                 per_block_cap=config.semantic_block_cap,
             ),
-            fp_files,
+            fp["sem_candidates"],
         )
         channels.append((sem_candidates, None))
 
     # ---- stage: label closure (reference semantics: ALL labels) ------------
-    fp_labels = config.fingerprint("labels")
-
     def closure():
-        cc_dir = (
-            os.path.join(workdir, f"cc_closure_{fp_labels}") if workdir else None
-        )
+        cc_dir = os.path.join(workdir, f"cc_closure_{fp['closure']}") if workdir else None
         labels, neg = C.closure_from_labeled_pairs(
             labeled_pairs,
             nodes=files.select("spec_id"),
@@ -576,13 +604,13 @@ def run_er_pipeline(
     # cache would race block computation.
     def run_closure():
         plog("closure: start")
-        out = runner.run("closure", closure, fp_labels)
+        out = runner.run("closure", closure, fp["closure"])
         plog("closure: done")
         return out
 
     def run_train_and_fit():
         plog("train_features: DAG build start")
-        tp = runner.run("train_features", train_features, fp_labels).cache()
+        tp = runner.run("train_features", train_features, fp["train_features"]).cache()
         plog("train_features: DAG built, materializing")
         model = S.fit_lr_newton(tp, max_rounds=config.newton_rounds)
         plog("fit: done")
@@ -626,7 +654,7 @@ def run_er_pipeline(
             "a", "b", *S.FEATURE_COLS, "f_vocab_cov"
         )
 
-    cand_feats = runner.run("cand_features", cand_features, fp_files).cache()
+    cand_feats = runner.run("cand_features", cand_features, fp["cand_features"]).cache()
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         closure_future = pool.submit(in_pool("closure", run_closure))
@@ -704,9 +732,7 @@ def run_er_pipeline(
 
     gates = edge_gates(config, train_pairs, model)
     plog("edge gates: " + ", ".join(f"{g.name}={g.bar}" for g in gates))
-    fp_cluster = config.fingerprint(
-        "cluster" + json.dumps([thr, [(g.name, g.bar) for g in gates]])
-    )
+    fp_cluster = _sha([fp["cluster"], thr, [(g.name, g.bar) for g in gates]])
 
     def final_cluster():
         pos_label_edges = labeled_pairs.filter(F.col("label") == 1).select(

@@ -49,6 +49,23 @@ def test_regressions_new_key_without_prior_is_not_flagged(monkeypatch):
     assert out == {}
 
 
+def test_regressions_reports_er_hard_protocol_break(monkeypatch):
+    """Walls across a changed er_hard rep protocol do not compare: the
+    query is reported as a protocol break, whatever the ratio, and never
+    as a regression; an unchanged protocol keeps the wall check."""
+    one_rep = "1-rep min, warm plan shapes"
+    prior = {"queries": {"er_hard": 80.0, "hotkey_capped": 4.0}, "er_hard": {"rep_protocol": one_rep}}
+    monkeypatch.setattr(bench, "_prior_round", lambda: prior)
+    two_rep = "2-rep min, warm plan shapes"
+    now = {"er_hard": 70.0, "hotkey_capped": 4.0}
+    out = bench._regressions(now, protocols={"er_hard": two_rep})
+    assert out == {
+        "er_hard": {"prev": 80.0, "now": 70.0, "protocol_break": {"prev": one_rep, "now": two_rep}}
+    }
+    out = bench._regressions({"er_hard": 80.0 * 1.4}, protocols={"er_hard": one_rep})
+    assert "protocol_break" not in out["er_hard"] and out["er_hard"]["ratio"] == 1.4
+
+
 def test_latest_committed_bench_carries_quality_keys():
     """The committed BENCH history must keep exposing er_hard/hotkey walls,
     else the generic key-matching comparison silently loses them."""

@@ -1,7 +1,11 @@
-"""End-to-end pipeline: F1 vs ground truth + vs label closure, sha
-invariant, checkpoint/resume equivalence."""
+"""End-to-end pipeline: F1 vs ground truth + vs label closure,
+checkpoint/resume equivalence, and the stage table's fingerprints
+(what reruns when a config field or an input changes)."""
 
 from __future__ import annotations
+
+import dataclasses
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -73,15 +77,12 @@ def test_model_quality(pipeline_result):
     assert 0.2 <= model.threshold <= 0.8
 
 
-def test_sha_invariant(spark, tiny_tables):
-    files_df, _, _ = tiny_tables
-    assert P.verify_content_invariant(files_df, files_df) == 0
-    tampered = files_df.withColumn(
-        "content",
-        F.when(F.col("spec_id").startswith("org/name-0000"), F.concat("content", F.lit("x")))
-        .otherwise(F.col("content")),
-    )
-    assert P.verify_content_invariant(files_df, tampered) > 0
+def _resumed(result) -> set:
+    return {s for s, m in result["runner"].manifests.items() if m.get("resumed")}
+
+
+def _sorted_labels(result) -> list:
+    return sorted(map(tuple, result["labels"].collect()))
 
 
 def test_checkpoint_resume_equivalence(spark, tiny_tables, tmp_path_factory):
@@ -91,28 +92,100 @@ def test_checkpoint_resume_equivalence(spark, tiny_tables, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("ckpt"))
     cfg = P.ERConfig(self_train=False, newton_rounds=4)
     r1 = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=cfg)
-    labels1 = sorted(map(tuple, r1["labels"].collect()))
-
     r2 = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=cfg)
-    labels2 = sorted(map(tuple, r2["labels"].collect()))
-    assert labels1 == labels2
-    resumed = [s for s, m in r2["runner"].manifests.items() if m.get("resumed")]
-    assert set(resumed) >= {
-        "prep", "blocking", "candidates", "sem_candidates", "closure", "cluster",
-    }
+    assert _sorted_labels(r1) == _sorted_labels(r2)
+    assert _resumed(r2) == set(P.STAGES)
     # manifests carry per-partition lineage
     m = r2["runner"].manifests["candidates"]
     assert m["rows"] == sum(p["rows"] for p in m["partitions"])
 
 
-def test_resume_invalidates_on_config_change(spark, tiny_tables, tmp_path_factory):
+def test_stage_fingerprint_cascade():
+    """A change of one input changes the fingerprints of exactly the
+    stages that read it and their descendants (pure Python, no Spark)."""
+    sources = {"files": [100, 7, 9], "labels": [40, 3, 5]}
+    base = P.stage_fingerprints(P.ERConfig(), sources)
+    assert len(base) == 11 and len(set(base.values())) == 11
+    everything = set(P.STAGES)
+    cases = [
+        ({"edge_cosine_floor": 0.55}, {}, {"cluster"}),
+        ({"per_block_cap": 32}, {}, {"candidates", "cand_features", "cluster"}),
+        ({"semantic_topk": 3}, {}, {"sem_candidates", "cand_features", "cluster"}),
+        ({"cc_max_iter": 20}, {}, {"closure", "cluster"}),
+        ({"shingle_n": 3}, {}, everything - {"postings", "top_vocab", "closure"}),
+        ({}, {"files": [100, 7, 10]}, everything),
+        ({}, {"labels": [40, 4, 5]}, {"closure", "train_features", "cluster"}),
+    ]
+    for fields, source, expected in cases:
+        got = P.stage_fingerprints(P.ERConfig(**fields), {**sources, **source})
+        assert {s for s in base if got[s] != base[s]} == expected, (fields, source)
+
+
+RESUME_CFG = P.ERConfig(self_train=False, newton_rounds=2)
+
+
+@pytest.fixture(scope="module")
+def base_workdir(spark, tiny_tables, tmp_path_factory):
+    """A workdir holding every checkpoint of one RESUME_CFG run; tests
+    copy it, so each starts from the same complete state."""
     files_df, _, pairs_df = tiny_tables
-    wd = str(tmp_path_factory.mktemp("ckpt2"))
-    cfg = P.ERConfig(self_train=False, newton_rounds=2)
-    P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=cfg)
-    cfg2 = P.ERConfig(self_train=False, newton_rounds=2, per_block_cap=32)
-    r = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=cfg2)
-    assert r["runner"].manifests["candidates"]["resumed"] is False
+    wd = str(tmp_path_factory.mktemp("ckpt_base"))
+    P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=RESUME_CFG)
+    return wd
+
+
+def _copy_workdir(base, tmp_path) -> str:
+    wd = str(tmp_path / "ckpt")
+    shutil.copytree(base, wd)
+    return wd
+
+
+@pytest.mark.parametrize(
+    "change, rerun",
+    [
+        ({"per_block_cap": 32}, {"candidates", "cand_features", "cluster"}),
+        ({"edge_cosine_floor": 0.55}, {"cluster"}),
+    ],
+    ids=["per_block_cap", "edge_cosine_floor"],
+)
+def test_resume_invalidates_on_config_change(
+    spark, tiny_tables, base_workdir, tmp_path, change, rerun
+):
+    files_df, _, pairs_df = tiny_tables
+    wd = _copy_workdir(base_workdir, tmp_path)
+    cfg = dataclasses.replace(RESUME_CFG, **change)
+    r = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=cfg)
+    assert _resumed(r) == set(P.STAGES) - rerun
+    if "edge_cosine_floor" in change:
+        fresh = P.run_er_pipeline(spark, files_df, pairs_df, workdir=None, config=cfg)
+        assert _sorted_labels(r) == _sorted_labels(fresh)
+        fresh["runner"].release()
+
+
+def test_resume_follows_input(spark, tiny_tables, base_workdir, tmp_path):
+    """Checkpoints are keyed by input content: a different corpus run
+    into the same workdir resumes nothing and labels exactly its own
+    files; one changed content row reruns every stage."""
+    from bigdataentityresolution_spark.sources.synthetic import corpus_to_spark, generate_corpus
+
+    files_df, _, pairs_df = tiny_tables
+    files_b, _, pairs_b = corpus_to_spark(spark, generate_corpus(30, n_unrelated=30, seed=2))
+    wd = _copy_workdir(base_workdir, tmp_path)
+    r = P.run_er_pipeline(spark, files_b, pairs_b, workdir=wd, config=RESUME_CFG)
+    assert _resumed(r) == set()
+    ids_b = sorted(row["spec_id"] for row in files_b.select("spec_id").collect())
+    assert sorted(row["spec_id"] for row in r["labels"].select("spec_id").collect()) == ids_b
+
+    one_id = files_df.agg(F.min("spec_id")).first()[0]
+    tampered = files_df.withColumn(
+        "content",
+        F.when(F.col("spec_id") == one_id, F.concat("content", F.lit("x")))
+        .otherwise(F.col("content")),
+    )
+    wd2 = _copy_workdir(base_workdir, tmp_path / "tampered")
+    r2 = P.run_er_pipeline(spark, tampered, pairs_df, workdir=wd2, config=RESUME_CFG)
+    assert _resumed(r2) == set()
+    assert set(r2["runner"].manifests) == set(P.STAGES)
 
 
 def test_filtered_train_prep_feature_parity(pipeline_result):

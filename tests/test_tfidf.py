@@ -80,10 +80,15 @@ def test_top_k_vocab_deterministic_ties(spark, docs_df):
 def test_doc_vectors_pruned_to_vocab(spark, docs_df):
     p = TI.postings(docs_df)
     v = TI.vocab(p, n_docs=len(DOCS))
-    top = TI.top_k_vocab(v, 3)
-    vecs = TI.doc_vectors(p, top, n_docs=len(DOCS)).collect()
-    kept_terms = {r["term"] for r in top.collect()}
+    top = TI.index_vocab(TI.top_k_vocab(v, 3))
+    vecs = TI.doc_vectors_indexed(p, top, n_docs=len(DOCS), tf_mode="raw").collect()
+    term_of = {r["term_idx"]: r["term"] for r in top.collect()}
+    kept_terms = set(term_of.values())
+    oracle = py_tfidf(DOCS)
     for r in vecs:
-        assert set(r["features"]).issubset(kept_terms)
-        for t, w in r["features"].items():
+        terms = {i: term_of.get(i) for i in r["features"]}
+        assert set(terms.values()).issubset(kept_terms)
+        for i, w in r["features"].items():
             assert w > 0
+            # raw mode: the reference weight tf / n_tokens * idf, as float32
+            assert abs(w - oracle[(r["doc_id"], terms[i])][4]) < 1e-6
