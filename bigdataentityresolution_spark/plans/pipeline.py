@@ -232,27 +232,40 @@ STAGES: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
     "candidates": (("signatures",), ("bands", "num_perm", "per_block_cap")),
     "sem_candidates": (("prep",), ("semantic_topk", "semantic_block_cap")),
     "closure": (("files", "labels"), ("cc_max_iter", "cc_checkpoint_every")),
-    "train_features": (("files", "labels", "signatures", "top_vocab"),
-                       ("seed", "lev_bound", "tf_mode")),
+    "train_features": (("labels", "prep"), ("seed", "lev_bound")),
     "cand_features": (("candidates", "sem_candidates", "prep"),
                       ("sig_prefilter", "semantic_channel", "lev_bound")),
-    "cluster": (("files", "labels", "train_features", "cand_features"),
+    "cluster": (("files", "labels", "closure", "train_features", "cand_features"),
                 tuple(f.name for f in fields(ERConfig))),
 }
+
+
+# Stages whose output changed shape under the same reads and fields: the
+# revision joins their fingerprint, so a workdir written by older code
+# recomputes them (and, by the cascade, their readers) instead of resuming
+# the old shape. closure 2: labels only (1 also packed the negative
+# cluster edges into it, tagged by a kind column).
+REVISIONS = {"closure": 2}
 
 
 def _sha(payload) -> str:
     return hashlib.sha256(json.dumps(payload).encode()).hexdigest()[:16]
 
 
-def stage_fingerprints(config: ERConfig, sources: dict) -> dict[str, str]:
+def stage_fingerprints(config: ERConfig, sources: dict) -> dict[str, str | None]:
     """Checkpoint fingerprint of every stage in STAGES: the sha of
-    [name, [fingerprint of each read], [value of each field]], where a
-    source's fingerprint is its identity in ``sources`` ("files",
-    "labels"; any JSON value, e.g. a multiset_signature triple)."""
+    [name, [fingerprint of each read], [value of each field]] (plus its
+    REVISIONS entry, if any), where a source's fingerprint is its
+    identity in ``sources`` ("files", "labels"; any JSON value, e.g. a
+    multiset_signature triple). A stage the config switches off (sem_candidates without the semantic channel)
+    has fingerprint None, so its own fields reach no stage that reads it."""
     fp = dict(sources)
+    off = set() if config.semantic_channel else {"sem_candidates"}
     for name, (reads, cfg_fields) in STAGES.items():
-        fp[name] = _sha([name, [fp[r] for r in reads], [getattr(config, f) for f in cfg_fields]])
+        key = [name, [fp[r] for r in reads], [getattr(config, f) for f in cfg_fields]]
+        if name in REVISIONS:
+            key.append(REVISIONS[name])
+        fp[name] = None if name in off else _sha(key)
     return {name: fp[name] for name in STAGES}
 
 
@@ -337,12 +350,9 @@ def doc_state(
     the int-keyed TF-IDF map over the shared top-k vocabulary (empty for
     a doc with no vocab term) and the MinHash sig. The raw content and
     token arrays never ride a pair join (measured: full-payload joins
-    spill at multi-million-candidate scale and stop scaling).
-
-    Per-doc state is a pure function of (the doc's own postings, the
-    shared vocabulary, n_docs, the doc's prefix and sig), so the prep
-    stage (corpus-wide inputs) and the train path (inputs restricted to
-    the train docs) get bit-identical rows for the same doc.
+    spill at multi-million-candidate scale and stop scaling). The prep
+    stage builds it once for the whole corpus; train pairs and candidate
+    pairs both join that one relation.
     """
     # tfidf operators speak "doc_id" internally; map back to spec_id.
     vecs = TI.doc_vectors_indexed(postings, top_vocab, n_docs, tf_mode=tf_mode).withColumnRenamed(
@@ -426,19 +436,12 @@ def run_er_pipeline(
         fp["postings"],
     )
 
-    # ---- stage: top-k vocabulary (tiny; shared by BOTH prep paths) ---------
-    # Materialized as its own stage because the early train-prep path
-    # (see train_features) must use the BIT-IDENTICAL vocabulary rows the
-    # full corpus prep uses — term indices come from a row_number over
-    # this relation, so sharing one cached/checkpointed DataFrame removes
-    # any tie-ordering doubt and computes the corpus-wide vocab agg once.
-    vocab_k = min(max(1000, n_docs), 1_000_000) if config.vocab_k == "auto" else config.vocab_k
+    # ---- stage: top-k vocabulary (tiny) ------------------------------------
     # index_vocab folded into the stage: the dense term_idx assignment is
-    # a single-partition global sort by nature, so it must run ONCE here
-    # (cached/checkpointed) — both prep paths then reuse it instead of
-    # re-deriving the window per path (measured ~1-2 s each at bench
-    # scale, and at production vocab sizes the single-partition sort is
-    # exactly the stage to never repeat).
+    # a single-partition global sort by nature (measured ~1-2 s at bench
+    # scale), so it runs ONCE here, cached/checkpointed, and at production
+    # vocab sizes a resumed run never repeats it.
+    vocab_k = min(max(1000, n_docs), 1_000_000) if config.vocab_k == "auto" else config.vocab_k
     top_vocab = runner.run(
         "top_vocab",
         lambda: TI.index_vocab(
@@ -508,41 +511,27 @@ def run_er_pipeline(
         channels.append((sem_candidates, None))
 
     # ---- stage: label closure (reference semantics: ALL labels) ------------
+    # (spec_id, cluster_id) over the positive labels, computed once: the
+    # final clustering builds on it (final_cluster), as every later step
+    # of the reference reads its one readCSV closure (src/functs.c:539-675).
     def closure():
         cc_dir = os.path.join(workdir, f"cc_closure_{fp['closure']}") if workdir else None
-        labels, neg = C.closure_from_labeled_pairs(
-            labeled_pairs,
+        return C.connected_components(
+            labeled_pairs.filter(F.col("label") == 1).select(
+                F.col("left_spec_id").alias("a"), F.col("right_spec_id").alias("b")
+            ),
             nodes=files.select("spec_id"),
             checkpoint_dir=cc_dir,
             max_iter=config.cc_max_iter,
             checkpoint_every=config.cc_checkpoint_every,
         )
-        return labels.withColumn("_kind", F.lit("label")).unionByName(
-            neg.select(
-                F.col("cid_a").alias("spec_id"), F.col("cid_b").alias("cluster_id")
-            ).withColumn("_kind", F.lit("neg_edge"))
-        )
 
     # ---- stage: training pairs + features ----------------------------------
     # Train on the train split's labeled pairs (reference: LR trains on
-    # pairs among first-60% specs, src/main.c:296-308).
-    #
-    # The train features join doc_state built ONLY for the docs the
-    # labeled pairs touch: files and sigs restricted by one broadcast
-    # semi-join on the tiny train-doc id set, postings re-tokenized from
-    # those files. Re-tokenizing beats semi-joining the corpus-wide
-    # postings relation: postings is |corpus tokens| rows, so even a
-    # broadcast semi-join over it costs full passes (measured: the
-    # concurrent train chain spent ~2 postings-cache scans there and
-    # became the pipeline tail at 8 cores), while on a real table the
-    # files semi-join pushes into the scan (DPP/bloom). The features are
-    # bit-identical to a join against the prep stage's doc state
-    # (tests/test_pipeline.py asserts this), but the train+fit chain
-    # forks right after the postings/vocab stages and the driver-local
-    # IRLS fit runs CONCURRENTLY with the heavy docs_prep job instead of
-    # serially after it (measured: the fit added ~5 s of pure critical
-    # path at 16 cores). Training on a few thousand labeled pairs must
-    # not gate on featurizing 10^12 docs.
+    # pairs among first-60% specs, src/main.c:296-308), featurized by the
+    # one pair featurizer against the prep stage's doc state — the same
+    # relation the candidate pairs join. docs_prep carries sig, so it
+    # also serves the est-Jaccard join.
     def train_features():
         lp = labeled_pairs
         if "split" not in lp.columns:
@@ -559,29 +548,10 @@ def run_er_pipeline(
             F.greatest("left_spec_id", "right_spec_id").alias("b"),
             "label",
         ).distinct()
-        # cached (released with the stage caches): the id set feeds every
-        # semi-join of the train chain, which would otherwise recompute it
-        # and carry one copy of its plan per join through each AQE re-plan
-        # (measured on a 1,201-file corpus: 2-4 s of CPU per run)
-        ids = (
-            tp.select(F.col("a").alias("spec_id"))
-            .unionByName(tp.select(F.col("b").alias("spec_id")))
-            .distinct()
-            .cache()
-        )
-        runner.cached.append(ids)
-        files_t, sigs_t = (
-            df.join(F.broadcast(ids), "spec_id", "left_semi") for df in (files, sigs)
-        )
-        state = doc_state(
-            files_t,
-            TI.postings(files_t, id_col="spec_id", text_col="content", tokenizer=tok),
-            sigs_t, top_vocab, n_docs, config.lev_bound, config.tf_mode,
-        )
         # no prefilter: every labeled pair must be featurized; f_vocab_cov
         # rides along because the gate regions calibrated here read it
         return S.pair_features(
-            B.pairs_with_est(tp, sigs_t), state, config.lev_bound
+            B.pairs_with_est(tp, docs_prep), docs_prep, config.lev_bound
         ).select("a", "b", "label", *S.FEATURE_COLS, "f_vocab_cov")
 
     # ---- concurrent job groups ---------------------------------------------
@@ -591,17 +561,23 @@ def run_er_pipeline(
     # latency). Job-level parallelism is the reference's own design
     # (threaded jobScheduler, src/jobscheduler.c) re-expressed on Spark's
     # thread-safe scheduler. Three independent groups:
-    #   A) label-closure CC (labeled pairs only — NOT on the final-label
-    #      critical path; its output feeds the result dict and sinks)
-    #   B) prep → train features + IRLS fit (labeled pairs × docs_prep)
+    #   A) label-closure CC (labeled pairs only; joined before the final
+    #      clustering, which builds on it)
+    #   B) train features + IRLS fit (labeled pairs × docs_prep)
     #   C) candidate generation (signatures only)
     # Dependency-precise forking (r2 event-log finding: group C waited
     # behind the 20 s prep materialization it does not read — candidates
     # depend on `sigs` alone, so only the signature cache is materialized
-    # before C forks; the B chain continues on the main thread). Each
-    # shared cached stage is materialized exactly once before any
-    # dependent forks — concurrent first-touch of an unmaterialized
-    # cache would race block computation.
+    # before C forks). B forks once docs_prep is materialized and overlaps
+    # the candidate-feature join, the longer tail at sf0.1. Each shared
+    # cached stage is materialized exactly once before any dependent
+    # forks — concurrent first-touch of an unmaterialized cache would race
+    # block computation.
+    # This overlap is a cache-mode (workdir=None) schedule. With a workdir,
+    # each runner.run writes its stage where it is called, so candidates,
+    # sem_candidates, docs_prep and cand_features are already on disk when
+    # the pool opens; only A and B, which call runner.run inside the pool,
+    # still run concurrently there.
     def run_closure():
         plog("closure: start")
         out = runner.run("closure", closure, fp["closure"])
@@ -662,18 +638,9 @@ def run_er_pipeline(
         sigs.count()  # the one dependency group C reads
         plog("sigs.count: done; forking candidates")
         cand_future = pool.submit(in_pool("candidates", candidates.count))
-        # Group B's SHARED inputs (postings + top-k vocab) materialize
-        # once on the main thread, then train+fit forks IMMEDIATELY —
-        # its filtered prep reads only vocab/sigs/files (it
-        # re-tokenizes the few thousand train docs), so the
-        # driver-local IRLS fit overlaps the heavy corpus-wide
-        # docs_prep materialization instead of serially following it.
-        postings_df.count()
-        top_vocab.count()
-        plog("postings+vocab: done; forking train+fit")
+        docs_prep.count()  # read by group B and by cand_features
+        plog("docs_prep.count: done; forking train+fit")
         fit_future = pool.submit(in_pool("train", run_train_and_fit))
-        docs_prep.count()  # the final-labeling path's heavy dependency
-        plog("docs_prep.count: done")
         cand_future.result()  # candidates cache materialized (no
         plog("candidates.count: joined")  # first-touch race below)
         candfeat_future = pool.submit(
@@ -683,14 +650,8 @@ def run_er_pipeline(
         plog("train+fit: joined")
         candfeat_future.result()
         plog("cand_features: materialized")
-        closure_raw = closure_future.result()
+        label_clusters = closure_future.result()
         plog("closure: joined")
-
-    closure_df = closure_raw.cache()
-    label_clusters = closure_df.filter(F.col("_kind") == "label").drop("_kind")
-    neg_edges = closure_df.filter(F.col("_kind") == "neg_edge").select(
-        F.col("spec_id").alias("cid_a"), F.col("cluster_id").alias("cid_b")
-    )
 
     # ---- stage: scores (cand_feats materialized in the overlap block) ------
     scored = S.predict(cand_feats, model)
@@ -714,7 +675,7 @@ def run_er_pipeline(
         scored = S.predict(cand_feats, model)
 
     # ---- stage: final clustering -------------------------------------------
-    # Edges: labeled positives (must-link, ALL splits — reference closure
+    # Edges: the label closure (must-link, ALL splits — reference closure
     # covers 100% of labels) ∪ predicted matches, minus pairs explicitly
     # labeled 0 (we never add a predicted edge a human label contradicts;
     # the reference adds no predicted edges at all).
@@ -735,9 +696,11 @@ def run_er_pipeline(
     fp_cluster = _sha([fp["cluster"], thr, [(g.name, g.bar) for g in gates]])
 
     def final_cluster():
-        pos_label_edges = labeled_pairs.filter(F.col("label") == 1).select(
-            F.least("left_spec_id", "right_spec_id").alias("a"),
-            F.greatest("left_spec_id", "right_spec_id").alias("b"),
+        # a star from each member to its label component's minimum connects
+        # exactly the nodes the positive labels connect, and the components'
+        # minima (the cluster ids) are the same
+        label_edges = label_clusters.filter(F.col("spec_id") != F.col("cluster_id")).select(
+            F.col("spec_id").alias("a"), F.col("cluster_id").alias("b")
         )
         neg_label_pairs = labeled_pairs.filter(F.col("label") == 0).select(
             F.least("left_spec_id", "right_spec_id").alias("a"),
@@ -749,7 +712,7 @@ def run_er_pipeline(
         pred_edges = accepted.select("a", "b").join(
             neg_label_pairs, ["a", "b"], "left_anti"
         )
-        edges = pos_label_edges.unionByName(pred_edges)
+        edges = label_edges.unionByName(pred_edges)
         cc_dir = os.path.join(workdir, f"cc_final_{fp_cluster}") if workdir else None
         return C.connected_components(
             edges,
@@ -778,7 +741,6 @@ def run_er_pipeline(
         "sem_candidates": sem_candidates,
         "candidates_all": candidates_all,
         "label_clusters": label_clusters,
-        "neg_edges": neg_edges,
         "train_pairs": train_pairs,
         "model": model,
         "scored": scored,

@@ -28,15 +28,19 @@ def test_f1_vs_ground_truth(pipeline_result, tiny_tables):
 
 def test_f1_vs_reference_label_closure(spark, pipeline_result, tiny_tables):
     """north_rule parity: the reference's clusters ARE the transitive
-    closure of labeled positives (src/main.c steps 4-6). Our final
-    clusters must agree with that closure on labeled pairs: every
-    closure pair predicted same-cluster (recall 1.0 by construction —
-    label edges are must-link), and explicitly-negative pairs must not
-    be merged unless the ground truth says otherwise."""
+    closure of labeled positives (src/main.c steps 4-6). The closure
+    stage's output (result["label_clusters"]) must be that closure row
+    for row, and our final clusters must agree with it on labeled pairs:
+    every closure pair predicted same-cluster (recall 1.0 by
+    construction — label edges are must-link), and explicitly-negative
+    pairs must not be merged unless the ground truth says otherwise."""
     files_df, truth_df, pairs_df = tiny_tables
     ref_labels, _ = C.closure_from_labeled_pairs(
         pairs_df, nodes=files_df.select("spec_id")
     )
+    label_clusters = pipeline_result["label_clusters"]
+    assert label_clusters.exceptAll(ref_labels).count() == 0
+    assert ref_labels.exceptAll(label_clusters).count() == 0
     # all reference within-cluster pairs must be within-cluster for us
     ref_pairs = C.extract_matches(ref_labels).select("a", "b")
     our_pairs = C.extract_matches(pipeline_result["labels"]).select("a", "b")
@@ -104,21 +108,42 @@ def test_stage_fingerprint_cascade():
     """A change of one input changes the fingerprints of exactly the
     stages that read it and their descendants (pure Python, no Spark)."""
     sources = {"files": [100, 7, 9], "labels": [40, 3, 5]}
-    base = P.stage_fingerprints(P.ERConfig(), sources)
-    assert len(base) == 11 and len(set(base.values())) == 11
+    default = P.stage_fingerprints(P.ERConfig(), sources)
+    assert len(default) == 11 and len(set(default.values())) == 11
     everything = set(P.STAGES)
+    sem_off = {"semantic_channel": False}
+    # (base config fields, changed fields, changed source, changed stages)
     cases = [
-        ({"edge_cosine_floor": 0.55}, {}, {"cluster"}),
-        ({"per_block_cap": 32}, {}, {"candidates", "cand_features", "cluster"}),
-        ({"semantic_topk": 3}, {}, {"sem_candidates", "cand_features", "cluster"}),
-        ({"cc_max_iter": 20}, {}, {"closure", "cluster"}),
-        ({"shingle_n": 3}, {}, everything - {"postings", "top_vocab", "closure"}),
-        ({}, {"files": [100, 7, 10]}, everything),
-        ({}, {"labels": [40, 4, 5]}, {"closure", "train_features", "cluster"}),
+        ({}, {"edge_cosine_floor": 0.55}, {}, {"cluster"}),
+        ({}, {"per_block_cap": 32}, {}, {"candidates", "cand_features", "cluster"}),
+        ({}, {"semantic_topk": 3}, {}, {"sem_candidates", "cand_features", "cluster"}),
+        # with the channel off no semantic pair exists: its settings must
+        # not rerun cand_features (cluster reads every field)
+        (sem_off, {"semantic_topk": 3}, {}, {"cluster"}),
+        (sem_off, {"semantic_block_cap": 16}, {}, {"cluster"}),
+        ({}, {"cc_max_iter": 20}, {}, {"closure", "cluster"}),
+        ({}, {"shingle_n": 3}, {}, everything - {"postings", "top_vocab", "closure"}),
+        ({}, {}, {"files": [100, 7, 10]}, everything),
+        ({}, {}, {"labels": [40, 4, 5]}, {"closure", "train_features", "cluster"}),
     ]
-    for fields, source, expected in cases:
-        got = P.stage_fingerprints(P.ERConfig(**fields), {**sources, **source})
-        assert {s for s in base if got[s] != base[s]} == expected, (fields, source)
+    for base_fields, fields, source, expected in cases:
+        base = P.stage_fingerprints(P.ERConfig(**base_fields), sources)
+        got = P.stage_fingerprints(
+            P.ERConfig(**base_fields, **fields), {**sources, **source}
+        )
+        assert {s for s in base if got[s] != base[s]} == expected, (base_fields, fields, source)
+
+
+def test_closure_fingerprint_skips_packed_format():
+    """The closure stage once stored its labels and the negative cluster
+    edges packed in one relation, under the fingerprint of the bare
+    [name, reads, fields]. A workdir written then must not resume it:
+    cluster would read the packed negative edges as must-link edges."""
+    sources = {"files": [100, 7, 9], "labels": [40, 3, 5]}
+    cfg = P.ERConfig()
+    packed = P._sha(["closure", [sources["files"], sources["labels"]],
+                     [cfg.cc_max_iter, cfg.cc_checkpoint_every]])
+    assert P.stage_fingerprints(cfg, sources)["closure"] != packed
 
 
 RESUME_CFG = P.ERConfig(self_train=False, newton_rounds=2)
@@ -186,28 +211,6 @@ def test_resume_follows_input(spark, tiny_tables, base_workdir, tmp_path):
     r2 = P.run_er_pipeline(spark, tampered, pairs_df, workdir=wd2, config=RESUME_CFG)
     assert _resumed(r2) == set()
     assert set(r2["runner"].manifests) == set(P.STAGES)
-
-
-def test_filtered_train_prep_feature_parity(pipeline_result):
-    """The train path featurizes against doc state restricted to the
-    docs the labeled pairs touch (re-tokenized). Per-doc state is a pure
-    function of the doc, so featurizing the pipeline's own train pairs
-    against its own corpus-wide prep (result["docs_prep"]) must give
-    BIT-identical rows: any divergence between the two paths fails."""
-    from bigdataentityresolution_spark.operators import blocking as B
-    from bigdataentityresolution_spark.operators import scoring as S
-
-    cfg = P.ERConfig()
-    docs_prep = pipeline_result["docs_prep"]
-    train = pipeline_result["train_pairs"]
-    cols = ["a", "b", "label", *S.FEATURE_COLS, "f_vocab_cov"]
-
-    with_est = B.pairs_with_est(train.select("a", "b", "label"), docs_prep)
-    again = S.pair_features(with_est, docs_prep, cfg.lev_bound).select(*cols)
-    assert train.count() > 0
-    assert again.count() == train.count()
-    assert again.exceptAll(train.select(*cols)).count() == 0
-    assert train.select(*cols).exceptAll(again).count() == 0
 
 
 def _degenerate_inputs(case, files_df, pairs_df):

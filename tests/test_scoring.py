@@ -102,14 +102,26 @@ def test_fit_lr_newton_distributed_matches_driver_local(spark, separable):
     """The n > driver_fit_max branch (distributed per-batch gradient +
     Hessian partials, scoring.py) must produce the same fit as the
     driver-local toPandas path — same math, different summation route
-    (VERDICT.md r2 #7: this branch previously had no CI coverage)."""
-    df, x, y = separable
-    m_local = S.fit_lr_newton(df, max_rounds=6)
-    m_dist = S.fit_lr_newton(df, max_rounds=6, driver_fit_max=100)  # 600 rows > 100
-    assert np.allclose(m_local.w(), m_dist.w(), atol=1e-6)
-    assert abs(m_local.bias - m_dist.bias) < 1e-6
-    assert m_local.threshold == pytest.approx(m_dist.threshold, abs=1e-9)
-    assert m_dist.rounds_trained > 0
+    (VERDICT.md r2 #7: this branch previously had no CI coverage). Both
+    take the same rounds and reach the same threshold and counters, with
+    bias and weights equal up to summation-order noise: on the separable
+    fixture and on noisy rows spread over 5 partitions, at 2, 5 and 8
+    rounds."""
+    rng = np.random.default_rng(7)
+    x = rng.random((3000, 3))
+    logit = 4.0 * x[:, 0] + 2.0 * x[:, 1] - 3.0 * x[:, 2] - 1.0
+    y = (rng.random(len(x)) < 1 / (1 + np.exp(-logit))).astype(int)
+    noisy = spark.createDataFrame(
+        [(float(a), float(b), float(c), int(l)) for (a, b, c), l in zip(x, y)],
+        "f_cosine double, f_jaccard double, f_lev double, label int",
+    ).repartition(5)
+    for df, rounds in ((separable[0], 6), (noisy, 2), (noisy, 5), (noisy, 8)):
+        local = S.fit_lr_newton(df, max_rounds=rounds)
+        dist = S.fit_lr_newton(df, max_rounds=rounds, driver_fit_max=0)
+        assert dist.rounds_trained == local.rounds_trained > 0
+        assert (dist.threshold, dist.fit1, dist.fit0) == (local.threshold, local.fit1, local.fit0)
+        assert dist.bias == pytest.approx(local.bias, rel=1e-9, abs=0)
+        assert np.allclose(dist.w(), local.w(), rtol=1e-9, atol=0), (rounds, dist, local)
 
 
 def np_irls(x, y, rounds=5, ridge=1e-3, tol=1e-4):
