@@ -348,7 +348,11 @@ def bench_er_pipeline(spark, self_train: bool = True) -> dict:
     # 1.3 s warm). On a real cluster executors are long-lived and
     # amortize this across hours; in a <2-minute sandbox run the warm-up
     # is ~half the wall and masks the engine's scaling. Rep 0 (cold) is
-    # also reported in rep_secs.
+    # also reported in rep_secs. The warm rep is warm only because the
+    # codegen cache holds every generated class of a run
+    # (session.CODEGEN_CACHE_ENTRIES): while it kept Spark's default 100
+    # of the ~270 a run generates, the warm rep recompiled every class
+    # evicted from it, and C2 JIT-compiled them again.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
     # The r3 alternative — one UNTIMED pass over a miniature corpus
     # (~1.5k files) before a single timed rep — is DEPRECATED to opt-in

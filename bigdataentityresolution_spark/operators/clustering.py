@@ -160,6 +160,12 @@ def connected_components(
     import json
     import os
 
+    # below 1, the loop either never runs a round (labels that never
+    # converged) or never advances (an empty batch, looped forever)
+    if max_iter < 1 or checkpoint_every < 1:
+        raise ValueError(
+            f"max_iter={max_iter} and checkpoint_every={checkpoint_every} must be at least 1"
+        )
     spark = edges.sparkSession
     e = _canonical_edges(edges)
     rounds_done = 0

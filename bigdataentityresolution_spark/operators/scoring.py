@@ -540,6 +540,13 @@ def fit_lr_newton(
     return model
 
 
+def _check_driver_max(n: int, driver_max: int, what: str) -> None:
+    """Calibration reads all of its rows on the driver or none: past
+    ``driver_max`` a limit would keep an arbitrary subset of them."""
+    if n > driver_max:
+        raise ValueError(f"more than driver_max={driver_max} {what} to calibrate on")
+
+
 def calibrate_edge_threshold(
     labeled_pairs: DataFrame,
     model: LRModel,
@@ -563,15 +570,17 @@ def calibrate_edge_threshold(
     edge floors).
 
     Driver-local by design: labeled pairs are the small relation of the
-    problem (same size gate as the IRLS driver path). Falls back to
+    problem (same size gate as the IRLS driver path); more than
+    ``driver_max`` of them raise ValueError. Falls back to
     model.threshold when the labels are single-class.
     """
     pdf = (
         predict(labeled_pairs, model, feature_cols)
         .select(F.col("proba"), F.col(label_col).cast("double").alias("label"))
-        .limit(driver_max)
+        .limit(driver_max + 1)
         .toPandas()
     )
+    _check_driver_max(len(pdf), driver_max, "labeled pairs")
     y = pdf["label"].to_numpy(dtype=np.float64)
     p = pdf["proba"].to_numpy(dtype=np.float64)
     n_pos = float((y == 1.0).sum())
@@ -648,7 +657,8 @@ def calibrate_override_bar(
     shapes.
 
     Driver-local like calibrate_edge_threshold: labeled pairs are the
-    problem's small relation.
+    problem's small relation; more than ``driver_max`` in-region labeled
+    negatives raise ValueError.
 
     ``region`` is the acceptance gate's own region predicate over the
     feature columns (plans.pipeline.edge_gates), so the evidence that
@@ -661,9 +671,10 @@ def calibrate_override_bar(
         predict(labeled_pairs, model, feature_cols)
         .filter((F.col(label_col) == 0) & region)
         .select("proba")
-        .limit(driver_max)
+        .limit(driver_max + 1)
         .toPandas()
     )
+    _check_driver_max(len(pdf), driver_max, "in-region labeled negatives")
     if len(pdf) < int(min_n):
         return float(cap)
     worst = float(pdf["proba"].max())

@@ -132,8 +132,11 @@ def er_vocab(
         pruned = vocab_df.filter(
             F.col("df") <= F.lit(float(max_df_ratio) * float(n_docs))
         )
-        # cheap driver-side guard: the pruned vocab is tiny by definition
-        if pruned.limit(min_vocab_after_prune).count() >= min_vocab_after_prune:
+        # cheap driver-side guard: the pruned vocab is tiny by definition.
+        # A full count, not limit(n).count(): a limit inside a codegen stage
+        # names its counter from a JVM-wide sequence, so its generated class
+        # is new on every run and never hits the codegen cache.
+        if pruned.count() >= min_vocab_after_prune:
             vocab_df = pruned
     return top_k_vocab(vocab_df, k)
 

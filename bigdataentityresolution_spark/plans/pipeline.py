@@ -206,6 +206,9 @@ class ERConfig:
     def __post_init__(self) -> None:
         if self.bands <= 0 or self.num_perm % self.bands != 0:
             raise ValueError(f"bands={self.bands} must be positive and divide num_perm")
+        for name in ("cc_max_iter", "cc_checkpoint_every"):
+            if getattr(self, name) < 1:
+                raise ValueError(f"{name} must be at least 1, got {getattr(self, name)!r}")
         if self.tf_mode not in ("log", "raw"):
             raise ValueError(f"tf_mode must be 'log' or 'raw', got {self.tf_mode!r}")
         k = self.vocab_k
@@ -221,8 +224,10 @@ class ERConfig:
 # "files"/"labels" and upstream stages; the ERConfig fields it reads).
 # Every checkpoint fingerprint derives from it (stage_fingerprints), so a
 # change reruns only the stages that read it and their descendants.
-# cluster reads every field: each reaches it anyway, through an upstream
-# stage or its own edge/CC settings, so it has no list to fall out of sync.
+# cluster reads every field (ALL_FIELDS): each reaches it anyway, through an
+# upstream stage or its own edge/CC settings, so it has no list to fall out
+# of sync.
+ALL_FIELDS = tuple(f.name for f in fields(ERConfig))
 STAGES: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
     "signatures": (("files",), ("shingle_n", "num_perm", "seed")),
     "postings": (("files",), ()),
@@ -236,7 +241,7 @@ STAGES: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
     "cand_features": (("candidates", "sem_candidates", "prep"),
                       ("sig_prefilter", "semantic_channel", "lev_bound")),
     "cluster": (("files", "labels", "closure", "train_features", "cand_features"),
-                tuple(f.name for f in fields(ERConfig))),
+                ALL_FIELDS),
 }
 
 
@@ -257,12 +262,18 @@ def stage_fingerprints(config: ERConfig, sources: dict) -> dict[str, str | None]
     [name, [fingerprint of each read], [value of each field]] (plus its
     REVISIONS entry, if any), where a source's fingerprint is its
     identity in ``sources`` ("files", "labels"; any JSON value, e.g. a
-    multiset_signature triple). A stage the config switches off (sem_candidates without the semantic channel)
-    has fingerprint None, so its own fields reach no stage that reads it."""
+    multiset_signature triple). A stage the config switches off
+    (sem_candidates without the semantic channel) has fingerprint None,
+    and a field that only switched-off stages name goes into no key, not
+    even through ALL_FIELDS."""
     fp = dict(sources)
     off = set() if config.semantic_channel else {"sem_candidates"}
+    named_on = {f for s, (_, fs) in STAGES.items() if s not in off and fs is not ALL_FIELDS
+                for f in fs}
+    dead = {f for s in off for f in STAGES[s][1]} - named_on
     for name, (reads, cfg_fields) in STAGES.items():
-        key = [name, [fp[r] for r in reads], [getattr(config, f) for f in cfg_fields]]
+        values = [getattr(config, f) for f in cfg_fields if f not in dead]
+        key = [name, [fp[r] for r in reads], values]
         if name in REVISIONS:
             key.append(REVISIONS[name])
         fp[name] = None if name in off else _sha(key)

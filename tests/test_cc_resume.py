@@ -57,3 +57,15 @@ def test_cc_completed_dir_short_circuits(spark, chain_edges, tmp_path):
     second = _labels(connected_components(chain_edges, checkpoint_dir=ckpt))
     assert second == first
     assert json.load(open(os.path.join(ckpt, "_cc_manifest.json")))["round"] >= done_round
+
+
+@pytest.mark.parametrize("kwargs", [{"checkpoint_every": 0}, {"max_iter": 0}])
+def test_cc_rejects_loop_settings_below_one(spark, chain_edges, tmp_path, kwargs):
+    """checkpoint_every=0 never advances the round count (cache mode
+    loops forever) and max_iter=0 returns unconverged labels: both raise
+    before any job runs, with or without a checkpoint dir."""
+    with pytest.raises(ValueError):
+        connected_components(chain_edges, **kwargs)
+    with pytest.raises(ValueError):
+        connected_components(chain_edges, checkpoint_dir=str(tmp_path / "cc"), **kwargs)
+    assert not os.path.exists(tmp_path / "cc")

@@ -104,6 +104,26 @@ def test_checkpoint_resume_equivalence(spark, tiny_tables, tmp_path_factory):
     assert m["rows"] == sum(p["rows"] for p in m["partitions"])
 
 
+def test_identical_second_run_compiles_no_class(spark, tiny_tables, tmp_path):
+    """Spark's generated-class cache (session.CODEGEN_CACHE_ENTRIES) holds
+    every class one pipeline run generates, so an identical second run in
+    the same JVM compiles none. Plan shapes added past the cache size, or
+    code that differs on every run (a limit inside a codegen stage), fail
+    here instead of silently recompiling each run."""
+    files_df, _, pairs_df = tiny_tables
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = []
+    for run in ("first", "second"):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        r = P.run_er_pipeline(
+            spark, files_df, pairs_df, workdir=str(tmp_path / run), config=P.ERConfig()
+        )
+        r["labels"].count()
+        compiles.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+        r["train_pairs"].unpersist()
+    assert compiles[1] == 0, compiles
+
+
 def test_stage_fingerprint_cascade():
     """A change of one input changes the fingerprints of exactly the
     stages that read it and their descendants (pure Python, no Spark)."""
@@ -118,9 +138,9 @@ def test_stage_fingerprint_cascade():
         ({}, {"per_block_cap": 32}, {}, {"candidates", "cand_features", "cluster"}),
         ({}, {"semantic_topk": 3}, {}, {"sem_candidates", "cand_features", "cluster"}),
         # with the channel off no semantic pair exists: its settings must
-        # not rerun cand_features (cluster reads every field)
-        (sem_off, {"semantic_topk": 3}, {}, {"cluster"}),
-        (sem_off, {"semantic_block_cap": 16}, {}, {"cluster"}),
+        # rerun nothing, not even cluster (which reads every other field)
+        (sem_off, {"semantic_topk": 3}, {}, set()),
+        (sem_off, {"semantic_block_cap": 16}, {}, set()),
         ({}, {"cc_max_iter": 20}, {}, {"closure", "cluster"}),
         ({}, {"shingle_n": 3}, {}, everything - {"postings", "top_vocab", "closure"}),
         ({}, {}, {"files": [100, 7, 10]}, everything),
@@ -274,6 +294,9 @@ def test_semantic_channel_without_prefilter(spark, tiny_tables):
         {"edge_threshold": "calibrated"},
         {"edge_high_conf_override": "on"},
         {"edge_semantic_override": "yes"},
+        {"cc_max_iter": 0},
+        {"cc_checkpoint_every": 0},
+        {"cc_checkpoint_every": -1},
     ],
 )
 def test_erconfig_rejects_invalid(kwargs):

@@ -380,3 +380,17 @@ def test_calibrate_override_bar_with_evidence(spark):
     worst = 1 / (1 + np.exp(-(4.0 * 0.5 + 4.0 * 0.3)))
     headroom = max(0.02, 0.5 * (1.0 - worst))
     assert abs(bar - min(max(worst + headroom, 0.8), 0.99)) < 1e-9
+
+
+def test_calibration_rejects_more_rows_than_driver_max(spark):
+    """Past driver_max a limit would calibrate on an arbitrary subset of
+    the labeled pairs; both calibrations raise instead, and accept
+    exactly driver_max rows."""
+    m = S.LRModel(weights=(-8.0, -8.0, 0.0), bias=-4.0)
+    df = _pairs_df(spark, [(0, 0.5, 0.3, 0.5)] * 160 + [(1, 0.9, 0.8, 0.1)] * 10)
+    with pytest.raises(ValueError, match="driver_max=169"):
+        S.calibrate_edge_threshold(df, m, driver_max=169)
+    with pytest.raises(ValueError, match="driver_max=159"):
+        S.calibrate_override_bar(df, m, _region(), driver_max=159)
+    assert S.calibrate_edge_threshold(df, m, driver_max=170) == S.calibrate_edge_threshold(df, m)
+    assert S.calibrate_override_bar(df, m, _region(), driver_max=160) == 0.8

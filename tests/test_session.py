@@ -1,9 +1,8 @@
-"""Unit tests for the SparkSession factory's JVM flag derivation.
+"""Unit tests for the SparkSession factory: its JVM flag derivation
+(pure string logic) and the confs the shared session reports (the
+measured rationale for each setting lives in session.py's comments)."""
 
-Pure string logic — no SparkSession is started here (the measured GC
-rationale for each flag lives in session.py's comment block)."""
-
-from bigdataentityresolution_spark.session import _jvm_opts
+from bigdataentityresolution_spark.session import CODEGEN_CACHE_ENTRIES, _jvm_opts
 
 
 def test_jvm_opts_standard_heap():
@@ -24,3 +23,10 @@ def test_jvm_opts_non_gig_spec_passthrough():
     opts = _jvm_opts("4096m")
     assert "-Xms4096m" in opts
     assert "-Xmn" not in opts
+
+
+def test_session_sizes_codegen_cache(spark):
+    # a static conf: only the JVM's first session sets it, so get_spark
+    # puts it in the builder itself
+    conf = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    assert int(conf) == CODEGEN_CACHE_ENTRIES
