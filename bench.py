@@ -144,7 +144,6 @@ def bench_er_hard(spark) -> dict:
         rep_secs.append(time.time() - t0)
         if len(rep_secs) < max(1, reps):
             result["runner"].release()
-            result["train_pairs"].unpersist()
             spark.sparkContext._jvm.System.gc()
             time.sleep(1.0)
     elapsed = min(rep_secs)
@@ -158,7 +157,6 @@ def bench_er_hard(spark) -> dict:
     by_kind = _hard_recall_by_kind(result["labels"], truth)
     lm = labeled_pair_f1(result["labels"], pairs)
     result["runner"].release()
-    result["train_pairs"].unpersist()
     files.unpersist()
     pairs.unpersist()
     return {
@@ -378,7 +376,6 @@ def bench_er_pipeline(spark, self_train: bool = True) -> dict:
         )
         wres["labels"].count()
         wres["runner"].release()
-        wres["train_pairs"].unpersist()
         spark.sparkContext._jvm.System.gc()
         time.sleep(0.5)
     rep_secs = []
@@ -402,8 +399,6 @@ def bench_er_pipeline(spark, self_train: bool = True) -> dict:
         n_candidates_lexical = result["candidates"].count()
         f1 = pairwise_f1(result["labels"], truth)
         result["runner"].release()
-        for df in (result["train_pairs"],):
-            df.unpersist()
         # Between-rep hygiene, OUTSIDE the timed window: shuffle files are
         # only deleted once the driver GCs the dead ShuffleDependency refs
         # (ContextCleaner is reference-triggered; its own periodicGC fires

@@ -10,7 +10,6 @@ clustering primitives:
                           Jaccard ≥ threshold
 - simhash_duplicate_pairs: 60-bit SimHash, banded by 4×15-bit chunks,
                           hamming ≤ k verification
-- ngram_jaccard_pairs:   exact n-gram Jaccard over blocked candidates
 - embedding_near_dup_pairs: cosine ≥ threshold over LSH-bucketed
                           random-hyperplane signs
 - dedup_keep_first:      canonical survivor selection (min id per
@@ -22,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bigdataentityresolution_spark.functions.hashes import simhash64
+from bigdataentityresolution_spark.functions.hashes import hamming64, simhash64
 from bigdataentityresolution_spark.functions.similarity import jaccard_arrays
 from bigdataentityresolution_spark.functions.text import shingles, tokenize
 from bigdataentityresolution_spark.operators.blocking import (
@@ -130,26 +129,9 @@ def simhash_duplicate_pairs(
     return (
         a.join(b, "block_key")
         .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"))
+        .select("a", "b", hamming64(F.col("sh_a"), F.col("sh_b")).alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
-    )
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    per_block_cap: int = 256,
-) -> DataFrame:
-    """Alias of minhash_duplicate_pairs with n-gram shingles and a lower
-    threshold — exact Jaccard verification is always applied, so the
-    result is exact over the blocked candidate set."""
-    return minhash_duplicate_pairs(
-        docs, id_col=id_col, text_col=text_col, shingle_n=n,
-        jaccard_threshold=threshold, per_block_cap=per_block_cap,
     )
 
 

@@ -1,4 +1,4 @@
-"""Pairwise scoring: similarity features + mini-batch logistic regression.
+"""Pairwise scoring: similarity features + logistic regression.
 
 Re-expression of the reference's classifier stage (src/logistic.c):
 
@@ -11,10 +11,13 @@ Re-expression of the reference's classifier stage (src/logistic.c):
   featurizer, :func:`pair_features`, shared by train and candidate
   pairs (cosine over top-k-pruned TF-IDF maps, MinHash-estimated
   Jaccard, bounded prefix Levenshtein — all JVM expressions,
-  functions/similarity.py) and trains the same LR loop SYNCHRONOUSLY:
-  per round, per-batch gradients computed in an Arrow-vectorized
-  applyInPandas kernel, averaged on the driver, weights broadcast back. Deterministic replacement for the
-  reference's racy Hogwild (SURVEY.md §2.10).
+  functions/similarity.py) and trains them with :func:`fit_lr_newton`:
+  one synchronous IRLS loop whose per-round sums run in local numpy
+  over one ordered driver read, or per hash batch in an applyInPandas
+  kernel past DRIVER_MAX_ROWS, folded in batch order. The fit is a
+  function of the rows' values alone — a deterministic replacement for
+  the reference's racy Hogwild (SURVEY.md §2.10). :func:`fit_lr` keeps
+  the reference's synchronous mini-batch GD for §2 parity.
 
 Deliberate deviations (SURVEY.md §7.2, documented not cargo-culted):
 - bias gradient = mean(missed), not the reference's mean(|missed|)
@@ -28,7 +31,7 @@ Deliberate deviations (SURVEY.md §7.2, documented not cargo-culted):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
@@ -397,6 +400,38 @@ def _ridge_penalty(d: int, ridge: float, n_total: int) -> np.ndarray:
     return p
 
 
+# The most rows the driver reads in one collect: the IRLS fit's driver
+# path ((d+1) float64s per row — 2M pairs ≈ 64 MB) and both calibrations.
+DRIVER_MAX_ROWS = 2_000_000
+
+
+def _driver_rows(df: DataFrame) -> pd.DataFrame | None:
+    """``df`` on the driver in ONE collect, ordered by its own column
+    values (so every sum over it is the same whatever the partitioning);
+    None when it holds more than DRIVER_MAX_ROWS rows."""
+    pdf = df.limit(DRIVER_MAX_ROWS + 1).toPandas()
+    if len(pdf) > DRIVER_MAX_ROWS:
+        return None
+    return _ordered(pdf)
+
+
+def _ordered(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Rows sorted by every column: an order their values alone fix."""
+    return pdf.sort_values(list(pdf.columns), ignore_index=True)
+
+
+def _irls_sums(pdf: pd.DataFrame, feature_cols: tuple[str, ...], beta: np.ndarray) -> np.ndarray:
+    """One IRLS round's sums over ``pdf``'s rows at coefficients ``beta``
+    (intercept first): [n, n_pos, gradient (d+1), Hessian ((d+1)², row
+    major)]. The feature count is tiny, so the Hessian is driver-solvable."""
+    x = np.column_stack([np.ones(len(pdf)), pdf[list(feature_cols)].to_numpy(dtype=np.float64)])
+    y = pdf["label"].to_numpy(dtype=np.float64)
+    p = 1.0 / (1.0 + np.exp(-(x @ beta)))
+    g = x.T @ (p - y)
+    h = x.T @ (x * (p * (1.0 - p))[:, None])
+    return np.concatenate([[len(y), (y == 1.0).sum()], g, h.ravel()])
+
+
 def fit_lr_newton(
     pairs: DataFrame,
     feature_cols: tuple[str, ...] = FEATURE_COLS,
@@ -404,24 +439,24 @@ def fit_lr_newton(
     max_rounds: int = 8,
     ridge: float = 1e-3,
     tol: float = 1e-4,
-    model: LRModel | None = None,
-    driver_fit_max: int | None = 2_000_000,
 ) -> LRModel:
     """IRLS (Newton) fit — the pipeline's production trainer.
 
-    Two execution paths, same math:
-    - n ≤ driver_fit_max (the common case: labeled pairs are tiny next
-      to the corpus): ONE Arrow toPandas collect, all Newton rounds in
-      local numpy. Removes max_rounds driver-barrier jobs — profiling
-      showed the per-round applyInPandas+collect cycle was the single
-      largest NON-scaling stage of the ER pipeline (13-30 s wall at
-      bench scale regardless of core count, pure scheduling latency).
-      The collected payload is (d+1) float64s per row — 2M pairs ≈ 64 MB.
-    - larger: distributed rounds — an applyInPandas kernel emits
-      per-batch partial gradient + Hessian sums (feature count is tiny,
-      so the Hessian is a (d+1)² matrix — driver-solvable), ONE shuffle
-      per round. Converges in ~5 rounds where the reference's lr=0.6 GD
-      (kept in fit_lr for parity) needs hundreds.
+    One Newton loop; each round's (n, n_pos, gradient, Hessian) sums come
+    from one kernel (_irls_sums), run where the rows are:
+    - up to DRIVER_MAX_ROWS rows (the common case: labeled pairs are tiny
+      next to the corpus): ONE ordered collect (_driver_rows), every
+      round in local numpy. This removes max_rounds driver-barrier jobs —
+      profiling showed the per-round applyInPandas+collect cycle was the
+      single largest NON-scaling stage of the ER pipeline (13-30 s wall
+      at bench scale regardless of core count, pure scheduling latency).
+    - more: per round, one applyInPandas job runs the kernel over each
+      of 64 hash batches (rows sorted within the batch) and the driver
+      folds the partial sums in batch-id order.
+    Both paths sum in an order fixed by the rows' values, so the fit is
+    bit-equal under any partitioning of ``pairs``. Converges in ~5
+    rounds where the reference's lr=0.6 GD (kept in fit_lr for parity)
+    needs hundreds.
 
     Threshold bookkeeping matches fit_lr. Regularization (be precise —
     r4 audit): the ridge·n·I penalty (intercept diagonal zeroed, see
@@ -442,89 +477,39 @@ def fit_lr_newton(
     conditional weight) is weakened. The damped/early-stopped fit is
     the behavior every committed quality number rests on.
     """
-    model = model or LRModel(weights=tuple(0.0 for _ in feature_cols))
     d = len(feature_cols)
     df = pairs.select(
         *[F.col(c).cast("double").alias(c) for c in feature_cols],
         F.col(label_col).cast("double").alias("label"),
-    ).cache()
-    n_total = df.count()
-    if n_total == 0:
-        return model
-
-    if driver_fit_max is not None and n_total <= driver_fit_max:
-        pdf = df.toPandas()
-        df.unpersist()
-        x = np.column_stack(
-            [np.ones(len(pdf)), pdf[list(feature_cols)].to_numpy(dtype=np.float64)]
-        )
-        y = pdf["label"].to_numpy(dtype=np.float64)
-        n_pos = int((y == 1.0).sum())
-        n_neg = int((y == 0.0).sum())
-        beta = np.concatenate([[model.bias], model.w()])
-        penalty = _ridge_penalty(d, ridge, n_total)
-        for _ in range(max_rounds):
-            p = 1.0 / (1.0 + np.exp(-(x @ beta)))
-            g = x.T @ (p - y)
-            h = x.T @ (x * (p * (1.0 - p))[:, None]) + penalty
-            step = np.linalg.solve(h, g)
-            beta = beta - step
-            model = replace(
-                model,
-                weights=tuple(float(v) for v in beta[1:]),
-                bias=float(beta[0]),
-                rounds_trained=model.rounds_trained + 1,
-            )
-            model = update_threshold(model, n_pos, n_neg)
-            if float(np.abs(step).max()) < tol:
-                break
-        return model
-
-    label_counts = {
-        int(r["label"]): r["n"]
-        for r in df.groupBy("label").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n_batch_keys = max(1, min(64, n_total // 1000 + 1))
-    batched = df.withColumn(
-        "_batch", F.pmod(F.xxhash64(*feature_cols, "label"), F.lit(n_batch_keys))
     )
+    pdf = _driver_rows(df)
+    batched = None
+    if pdf is not None:
+        def round_sums(beta: np.ndarray) -> np.ndarray:
+            return _irls_sums(pdf, feature_cols, beta)
+    else:
+        batched = df.withColumn(
+            "_batch", F.pmod(F.xxhash64(*feature_cols, "label"), F.lit(64))
+        ).cache()
+        schema = "_batch long, " + ", ".join(f"s{i} double" for i in range(2 + (d + 1) * (d + 2)))
 
-    def make_kernel(weights: np.ndarray, bias: float):
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            x = np.column_stack(
-                [np.ones(len(pdf)), pdf[list(feature_cols)].to_numpy(dtype=np.float64)]
-            )
-            y = pdf["label"].to_numpy(dtype=np.float64)
-            beta = np.concatenate([[bias], weights])
-            p = 1.0 / (1.0 + np.exp(-(x @ beta)))
-            g = x.T @ (p - y)  # (d+1,) partial gradient sum
-            wdiag = p * (1 - p)
-            h = x.T @ (x * wdiag[:, None])  # (d+1, d+1) partial Hessian sum
-            out = {"n": [len(pdf)]}
-            for i in range(d + 1):
-                out[f"g{i}"] = [g[i]]
-            for i in range(d + 1):
-                for j in range(d + 1):
-                    out[f"h{i}_{j}"] = [h[i, j]]
-            return pd.DataFrame(out)
+        def round_sums(beta: np.ndarray) -> np.ndarray:
+            def kernel(part: pd.DataFrame) -> pd.DataFrame:
+                sums = _irls_sums(_ordered(part), feature_cols, beta)
+                return pd.DataFrame([[int(part["_batch"].iat[0]), *sums]])
 
-        schema = (
-            "n long, "
-            + ", ".join(f"g{i} double" for i in range(d + 1))
-            + ", "
-            + ", ".join(f"h{i}_{j} double" for i in range(d + 1) for j in range(d + 1))
-        )
-        return kernel, schema
+            rows = sorted(batched.groupBy("_batch").applyInPandas(kernel, schema).collect())
+            return np.sum([r[1:] for r in rows], axis=0)
 
-    beta = np.concatenate([[model.bias], model.w()])
+    model = LRModel(weights=tuple(0.0 for _ in feature_cols))
+    beta = np.zeros(d + 1)
     for _ in range(max_rounds):
-        kernel, schema = make_kernel(beta[1:], beta[0])
-        stats = batched.groupBy("_batch").applyInPandas(kernel, schema).collect()
-        g = np.array([sum(r[f"g{i}"] for r in stats) for i in range(d + 1)])
-        h = np.array(
-            [[sum(r[f"h{i}_{j}"] for r in stats) for j in range(d + 1)] for i in range(d + 1)]
-        )
-        h += _ridge_penalty(d, ridge, n_total)
+        sums = round_sums(beta)
+        n, n_pos = int(sums[0]), int(sums[1])
+        if n == 0:
+            break
+        g = sums[2 : d + 3]
+        h = sums[d + 3 :].reshape(d + 1, d + 1) + _ridge_penalty(d, ridge, n)
         step = np.linalg.solve(h, g)
         beta = beta - step
         model = replace(
@@ -533,18 +518,12 @@ def fit_lr_newton(
             bias=float(beta[0]),
             rounds_trained=model.rounds_trained + 1,
         )
-        model = update_threshold(model, label_counts.get(1, 0), label_counts.get(0, 0))
+        model = update_threshold(model, n_pos, n - n_pos)
         if float(np.abs(step).max()) < tol:
             break
-    df.unpersist()
+    if batched is not None:
+        batched.unpersist()
     return model
-
-
-def _check_driver_max(n: int, driver_max: int, what: str) -> None:
-    """Calibration reads all of its rows on the driver or none: past
-    ``driver_max`` a limit would keep an arbitrary subset of them."""
-    if n > driver_max:
-        raise ValueError(f"more than driver_max={driver_max} {what} to calibrate on")
 
 
 def calibrate_edge_threshold(
@@ -552,7 +531,6 @@ def calibrate_edge_threshold(
     model: LRModel,
     feature_cols: tuple[str, ...] = FEATURE_COLS,
     label_col: str = "label",
-    driver_max: int = 2_000_000,
 ) -> float:
     """F1-maximizing decision threshold on the labeled pairs.
 
@@ -570,17 +548,17 @@ def calibrate_edge_threshold(
     edge floors).
 
     Driver-local by design: labeled pairs are the small relation of the
-    problem (same size gate as the IRLS driver path); more than
-    ``driver_max`` of them raise ValueError. Falls back to
+    problem (the IRLS driver path's ordered read); more than
+    DRIVER_MAX_ROWS of them raise ValueError. Falls back to
     model.threshold when the labels are single-class.
     """
-    pdf = (
-        predict(labeled_pairs, model, feature_cols)
-        .select(F.col("proba"), F.col(label_col).cast("double").alias("label"))
-        .limit(driver_max + 1)
-        .toPandas()
+    pdf = _driver_rows(
+        predict(labeled_pairs, model, feature_cols).select(
+            F.col("proba"), F.col(label_col).cast("double").alias("label")
+        )
     )
-    _check_driver_max(len(pdf), driver_max, "labeled pairs")
+    if pdf is None:
+        raise ValueError(f"more than DRIVER_MAX_ROWS={DRIVER_MAX_ROWS} labeled pairs to calibrate on")
     y = pdf["label"].to_numpy(dtype=np.float64)
     p = pdf["proba"].to_numpy(dtype=np.float64)
     n_pos = float((y == 1.0).sum())
@@ -610,7 +588,6 @@ def calibrate_override_bar(
     cap: float = 0.99,
     margin: float = 0.02,
     min_n: int = 150,
-    driver_max: int = 2_000_000,
 ) -> float:
     """Calibrate the high-confidence override bar on the labeled pairs.
 
@@ -657,7 +634,7 @@ def calibrate_override_bar(
     shapes.
 
     Driver-local like calibrate_edge_threshold: labeled pairs are the
-    problem's small relation; more than ``driver_max`` in-region labeled
+    problem's small relation; more than DRIVER_MAX_ROWS in-region labeled
     negatives raise ValueError.
 
     ``region`` is the acceptance gate's own region predicate over the
@@ -667,14 +644,15 @@ def calibrate_override_bar(
     (numerous, low-proba) zero-cosine labeled negatives outside it must
     not dilute the in-region evidence.
     """
-    pdf = (
+    pdf = _driver_rows(
         predict(labeled_pairs, model, feature_cols)
         .filter((F.col(label_col) == 0) & region)
         .select("proba")
-        .limit(driver_max + 1)
-        .toPandas()
     )
-    _check_driver_max(len(pdf), driver_max, "in-region labeled negatives")
+    if pdf is None:
+        raise ValueError(
+            f"more than DRIVER_MAX_ROWS={DRIVER_MAX_ROWS} in-region labeled negatives to calibrate on"
+        )
     if len(pdf) < int(min_n):
         return float(cap)
     worst = float(pdf["proba"].max())

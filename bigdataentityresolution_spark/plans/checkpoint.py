@@ -36,7 +36,7 @@ class StageRunner:
         self.workdir = workdir
         self.enabled = enabled and workdir is not None
         self.manifests: dict[str, dict] = {}
-        self.cached: list[DataFrame] = []  # cache-mode stage outputs (unpersist via release())
+        self.cached: list[DataFrame] = []  # cached stage outputs (unpersist via release())
         if self.enabled:
             os.makedirs(workdir, exist_ok=True)
 
@@ -113,9 +113,16 @@ class StageRunner:
         self.manifests[stage] = manifest
         return out
 
+    def cache(self, df: DataFrame) -> DataFrame:
+        """Keep a stage output cached until release(). A cache-mode output
+        already is (run caches it); a checkpoint-mode one is a parquet read."""
+        if self.enabled:
+            self.cached.append(df.cache())
+        return df
+
     def release(self) -> None:
-        """Unpersist every cache-mode stage output (bench reps / batch
-        callers that rebuild the pipeline in one session)."""
+        """Unpersist every cached stage output (bench reps / batch callers
+        that rebuild the pipeline in one session)."""
         for df in self.cached:
             df.unpersist()
         self.cached.clear()

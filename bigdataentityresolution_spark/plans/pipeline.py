@@ -245,6 +245,12 @@ STAGES: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
 }
 
 
+# The semantic channel's edge gate reads these (edge_gates); with the
+# channel off the gate is dropped, so, like sem_candidates' own fields,
+# they go into no fingerprint then.
+SEMANTIC_GATE_FIELDS = ("edge_semantic_cosine_min", "edge_semantic_override")
+
+
 # Stages whose output changed shape under the same reads and fields: the
 # revision joins their fingerprint, so a workdir written by older code
 # recomputes them (and, by the cascade, their readers) instead of resuming
@@ -264,13 +270,14 @@ def stage_fingerprints(config: ERConfig, sources: dict) -> dict[str, str | None]
     identity in ``sources`` ("files", "labels"; any JSON value, e.g. a
     multiset_signature triple). A stage the config switches off
     (sem_candidates without the semantic channel) has fingerprint None,
-    and a field that only switched-off stages name goes into no key, not
-    even through ALL_FIELDS."""
+    and a field that only switched-off stages or the semantic gate
+    (SEMANTIC_GATE_FIELDS) read goes into no key, not even through
+    ALL_FIELDS."""
     fp = dict(sources)
     off = set() if config.semantic_channel else {"sem_candidates"}
     named_on = {f for s, (_, fs) in STAGES.items() if s not in off and fs is not ALL_FIELDS
                 for f in fs}
-    dead = {f for s in off for f in STAGES[s][1]} - named_on
+    dead = {f for s in off for f in STAGES[s][1] + SEMANTIC_GATE_FIELDS} - named_on
     for name, (reads, cfg_fields) in STAGES.items():
         values = [getattr(config, f) for f in cfg_fields if f not in dead]
         key = [name, [fp[r] for r in reads], values]
@@ -597,7 +604,7 @@ def run_er_pipeline(
 
     def run_train_and_fit():
         plog("train_features: DAG build start")
-        tp = runner.run("train_features", train_features, fp["train_features"]).cache()
+        tp = runner.cache(runner.run("train_features", train_features, fp["train_features"]))
         plog("train_features: DAG built, materializing")
         model = S.fit_lr_newton(tp, max_rounds=config.newton_rounds)
         plog("fit: done")
@@ -641,7 +648,7 @@ def run_er_pipeline(
             "a", "b", *S.FEATURE_COLS, "f_vocab_cov"
         )
 
-    cand_feats = runner.run("cand_features", cand_features, fp["cand_features"]).cache()
+    cand_feats = runner.cache(runner.run("cand_features", cand_features, fp["cand_features"]))
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         closure_future = pool.submit(in_pool("closure", run_closure))

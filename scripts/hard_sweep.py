@@ -107,7 +107,6 @@ def main() -> None:
         }), flush=True)
         labels.unpersist()
         result["runner"].release()
-        result["train_pairs"].unpersist()
 
     spark.stop()
 

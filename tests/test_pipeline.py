@@ -5,6 +5,7 @@ checkpoint/resume equivalence, and the stage table's fingerprints
 from __future__ import annotations
 
 import dataclasses
+import hashlib
 import shutil
 
 import pytest
@@ -81,6 +82,44 @@ def test_model_quality(pipeline_result):
     assert 0.2 <= model.threshold <= 0.8
 
 
+def _decisions(result) -> tuple:
+    """Every decision a run makes, exactly: the fit, the calibrated
+    threshold and bars, and a sha of the sorted labels."""
+    model = result["model"]
+    labels = sorted(map(tuple, result["labels"].collect()))
+    return (
+        model.weights,
+        model.bias,
+        result["edge_threshold"],
+        [(g.name, g.bar) for g in result["gates"]],
+        hashlib.sha256(repr(labels).encode()).hexdigest(),
+    )
+
+
+def test_decisions_independent_of_partitioning(spark, pipeline_result, tiny_tables):
+    """The fit and both calibrations sum in an order fixed by the rows'
+    values, so repartitioned input or another shuffle width gives
+    bit-equal weights, threshold, bars and labels."""
+    files_df, _, pairs_df = tiny_tables
+    expected = _decisions(pipeline_result)
+    variants = {
+        "files_13": (files_df.repartition(13), pairs_df, None),
+        "files_1": (files_df.coalesce(1), pairs_df, None),
+        "pairs_5": (files_df, pairs_df.repartition(5), None),
+        "shuffle_3": (files_df, pairs_df, "3"),
+    }
+    for name, (files_in, pairs_in, shuffle) in variants.items():
+        prior = spark.conf.get("spark.sql.shuffle.partitions")
+        if shuffle is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+        try:
+            r = P.run_er_pipeline(spark, files_in, pairs_in, workdir=None)
+            assert _decisions(r) == expected, name
+            r["runner"].release()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+
 def _resumed(result) -> set:
     return {s for s, m in result["runner"].manifests.items() if m.get("resumed")}
 
@@ -120,8 +159,25 @@ def test_identical_second_run_compiles_no_class(spark, tiny_tables, tmp_path):
         )
         r["labels"].count()
         compiles.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
-        r["train_pairs"].unpersist()
+        r["runner"].release()
     assert compiles[1] == 0, compiles
+
+
+def test_release_unpersists_every_run_cache(spark, tiny_tables, tmp_path):
+    """In checkpoint mode the runner holds every cache a run makes (the
+    stage outputs the pipeline re-reads are parquet reads it caches), so
+    release() alone leaves only the RDDs cached before the run."""
+    files_df, _, pairs_df = tiny_tables
+    files_df.count(), pairs_df.count()
+
+    def cached_rdds() -> set:
+        return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_rdds()
+    r = P.run_er_pipeline(spark, files_df, pairs_df, workdir=str(tmp_path), config=P.ERConfig())
+    r["labels"].count()
+    r["runner"].release()
+    assert cached_rdds() <= before
 
 
 def test_stage_fingerprint_cascade():
@@ -137,10 +193,13 @@ def test_stage_fingerprint_cascade():
         ({}, {"edge_cosine_floor": 0.55}, {}, {"cluster"}),
         ({}, {"per_block_cap": 32}, {}, {"candidates", "cand_features", "cluster"}),
         ({}, {"semantic_topk": 3}, {}, {"sem_candidates", "cand_features", "cluster"}),
-        # with the channel off no semantic pair exists: its settings must
-        # rerun nothing, not even cluster (which reads every other field)
+        # with the channel off no semantic pair exists: its settings and
+        # its gate's must rerun nothing, not even cluster (which reads
+        # every other field)
         (sem_off, {"semantic_topk": 3}, {}, set()),
         (sem_off, {"semantic_block_cap": 16}, {}, set()),
+        (sem_off, {"edge_semantic_cosine_min": 0.4}, {}, set()),
+        (sem_off, {"edge_semantic_override": 0.9}, {}, set()),
         ({}, {"cc_max_iter": 20}, {}, {"closure", "cluster"}),
         ({}, {"shingle_n": 3}, {}, everything - {"postings", "top_vocab", "closure"}),
         ({}, {}, {"files": [100, 7, 10]}, everything),

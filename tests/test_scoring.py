@@ -98,15 +98,16 @@ def test_threshold_clamp_bounds():
     assert m4.threshold == pytest.approx(0.5 + (0.5 / -1.0) * 0.5)
 
 
-def test_fit_lr_newton_distributed_matches_driver_local(spark, separable):
-    """The n > driver_fit_max branch (distributed per-batch gradient +
-    Hessian partials, scoring.py) must produce the same fit as the
-    driver-local toPandas path — same math, different summation route
+def test_fit_lr_newton_distributed_matches_driver_local(spark, separable, monkeypatch):
+    """Past DRIVER_MAX_ROWS (distributed per-batch gradient + Hessian
+    partials, scoring.py) the fit must equal the driver-local ordered
+    read's — same loop, same kernel, different summation route
     (VERDICT.md r2 #7: this branch previously had no CI coverage). Both
     take the same rounds and reach the same threshold and counters, with
     bias and weights equal up to summation-order noise: on the separable
     fixture and on noisy rows spread over 5 partitions, at 2, 5 and 8
-    rounds."""
+    rounds. Each path is bit-equal with its input in 1 and in 5
+    partitions."""
     rng = np.random.default_rng(7)
     x = rng.random((3000, 3))
     logit = 4.0 * x[:, 0] + 2.0 * x[:, 1] - 3.0 * x[:, 2] - 1.0
@@ -115,9 +116,14 @@ def test_fit_lr_newton_distributed_matches_driver_local(spark, separable):
         [(float(a), float(b), float(c), int(l)) for (a, b, c), l in zip(x, y)],
         "f_cosine double, f_jaccard double, f_lev double, label int",
     ).repartition(5)
-    for df, rounds in ((separable[0], 6), (noisy, 2), (noisy, 5), (noisy, 8)):
-        local = S.fit_lr_newton(df, max_rounds=rounds)
-        dist = S.fit_lr_newton(df, max_rounds=rounds, driver_fit_max=0)
+    cases = ((separable[0], 6), (noisy, 2), (noisy, 5), (noisy, 8))
+    fits_local = [S.fit_lr_newton(df, max_rounds=rounds) for df, rounds in cases]
+    assert S.fit_lr_newton(noisy.coalesce(1), max_rounds=5) == fits_local[2]
+    with monkeypatch.context() as m:
+        m.setattr(S, "DRIVER_MAX_ROWS", 0)
+        fits_dist = [S.fit_lr_newton(df, max_rounds=rounds) for df, rounds in cases]
+        assert S.fit_lr_newton(noisy.coalesce(1), max_rounds=5) == fits_dist[2]
+    for (_, rounds), local, dist in zip(cases, fits_local, fits_dist):
         assert dist.rounds_trained == local.rounds_trained > 0
         assert (dist.threshold, dist.fit1, dist.fit0) == (local.threshold, local.fit1, local.fit0)
         assert dist.bias == pytest.approx(local.bias, rel=1e-9, abs=0)
@@ -382,15 +388,20 @@ def test_calibrate_override_bar_with_evidence(spark):
     assert abs(bar - min(max(worst + headroom, 0.8), 0.99)) < 1e-9
 
 
-def test_calibration_rejects_more_rows_than_driver_max(spark):
-    """Past driver_max a limit would calibrate on an arbitrary subset of
-    the labeled pairs; both calibrations raise instead, and accept
-    exactly driver_max rows."""
+def test_calibration_rejects_more_rows_than_driver_max(spark, monkeypatch):
+    """Past DRIVER_MAX_ROWS a limit would calibrate on an arbitrary subset
+    of the labeled pairs; both calibrations raise instead, and accept
+    exactly DRIVER_MAX_ROWS rows."""
     m = S.LRModel(weights=(-8.0, -8.0, 0.0), bias=-4.0)
     df = _pairs_df(spark, [(0, 0.5, 0.3, 0.5)] * 160 + [(1, 0.9, 0.8, 0.1)] * 10)
-    with pytest.raises(ValueError, match="driver_max=169"):
-        S.calibrate_edge_threshold(df, m, driver_max=169)
-    with pytest.raises(ValueError, match="driver_max=159"):
-        S.calibrate_override_bar(df, m, _region(), driver_max=159)
-    assert S.calibrate_edge_threshold(df, m, driver_max=170) == S.calibrate_edge_threshold(df, m)
-    assert S.calibrate_override_bar(df, m, _region(), driver_max=160) == 0.8
+    thr = S.calibrate_edge_threshold(df, m)
+    monkeypatch.setattr(S, "DRIVER_MAX_ROWS", 169)
+    with pytest.raises(ValueError, match="DRIVER_MAX_ROWS=169"):
+        S.calibrate_edge_threshold(df, m)
+    monkeypatch.setattr(S, "DRIVER_MAX_ROWS", 159)
+    with pytest.raises(ValueError, match="DRIVER_MAX_ROWS=159"):
+        S.calibrate_override_bar(df, m, _region())
+    monkeypatch.setattr(S, "DRIVER_MAX_ROWS", 170)
+    assert S.calibrate_edge_threshold(df, m) == thr
+    monkeypatch.setattr(S, "DRIVER_MAX_ROWS", 160)
+    assert S.calibrate_override_bar(df, m, _region()) == 0.8
