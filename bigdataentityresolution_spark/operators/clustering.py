@@ -122,6 +122,7 @@ def connected_components(
     max_iter: int = 50,
     checkpoint_every: int = 2,
     checkpoint_dir: str | None = None,
+    cached: list | None = None,
 ) -> DataFrame:
     """(spec_id, cluster_id) — component labels; cluster_id = min member id.
 
@@ -156,6 +157,11 @@ def connected_components(
     executor loss kills a multi-hour closure (VERDICT.md 'What's wrong'
     #4). The caller owns dir lifecycle (pass a per-input-fingerprint
     path; stale state for different edges is the caller's bug).
+
+    cached: without a checkpoint_dir, the labels read the last round's
+    localCheckpoint, whose blocks stay until its RDD is unpersisted;
+    when a list is given, that RDD is appended to it (the pipeline
+    passes its StageRunner.cached, so runner.release() frees it).
     """
     import json
     import os
@@ -231,6 +237,9 @@ def connected_components(
             with open(tmp, "w") as f:
                 json.dump({"round": rounds_done, "sig": list(prev_sig)}, f)
             os.replace(tmp, manifest_path)  # atomic: kill-safe
+
+    if cached is not None and not checkpoint_dir:
+        cached.append(e._jdf.queryExecution().analyzed().rdd().toJavaRDD())
 
     # At fixpoint the edges form stars; canonical orientation (a < b)
     # puts the component-min root at `a`, members at `b`.

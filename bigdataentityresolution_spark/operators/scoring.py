@@ -367,7 +367,14 @@ def fit_lr(
 
     for _ in range(max_rounds):
         kernel, schema = _batch_gradient_kernel(feature_cols, model.w(), model.bias)
-        stats = batched.groupBy("_batch").applyInPandas(kernel, schema).collect()
+
+        def with_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+            return kernel(_ordered(pdf)).assign(_batch=pdf["_batch"].iat[0])
+
+        # each batch's rows sorted, the partials folded in batch-id order:
+        # the same fit under any partitioning of ``pairs``
+        rows = batched.groupBy("_batch").applyInPandas(with_batch, schema + ", _batch long")
+        stats = sorted(rows.collect(), key=lambda r: r["_batch"])
         n = sum(r["n_pairs"] for r in stats)
         b_grad = sum(r["b_grad"] * r["n_pairs"] for r in stats) / n
         grad = np.array(

@@ -26,7 +26,9 @@ Every stage checkpoints through plans.checkpoint.StageRunner under a
 fingerprint derived from the STAGES table (the sources, config fields
 and upstream stages it reads); a killed run resumes every stage whose
 manifest is complete under its fingerprint, and a changed input reruns
-exactly the stages that read it and their descendants.
+exactly the stages that read it and their descendants. The same table
+schedules the stages (run_stages): each starts, as a concurrent Spark
+job, once what it reads is materialized.
 """
 
 from __future__ import annotations
@@ -34,9 +36,8 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import sys
 import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, fields
 from functools import reduce
 from typing import NamedTuple
@@ -160,15 +161,15 @@ class ERConfig:
     # recall 0.517 at r4) — yet those same pairs keep their rare
     # discriminative identifiers, so their vocab-pruned TF-IDF cosine
     # stays HIGH (measured p10/p50/p90 = 0.63/0.79/0.91,
-    # scripts/orphan_channel_diag.py). The second channel blocks on each
-    # doc's top-k TF-IDF terms (prefix filtering, PPJoin family —
-    # measured 99.8% orphan-pair coverage at ~1x the lexical channel's
-    # candidate volume vs 71% at 11x for SimHash-over-TF-IDF bands,
-    # scripts/semantic_blocking_probe.py, last at fd3f363). Candidates
-    # from this channel bypass the est-Jaccard prefilter (they are chosen
-    # BECAUSE they sit below it); their acceptance gate is the exact
-    # TF-IDF cosine + a separately calibrated high-confidence bar (see
-    # edge_semantic_override below).
+    # scripts/orphan_channel_diag.py, last at 91c6baf). The second
+    # channel blocks on each doc's top-k TF-IDF terms (prefix filtering,
+    # PPJoin family — measured 99.8% orphan-pair coverage at ~1x the
+    # lexical channel's candidate volume vs 71% at 11x for
+    # SimHash-over-TF-IDF bands, scripts/semantic_blocking_probe.py,
+    # last at fd3f363). Candidates from this channel bypass the
+    # est-Jaccard prefilter (they are chosen BECAUSE they sit below it);
+    # their acceptance gate is the exact TF-IDF cosine + a separately
+    # calibrated high-confidence bar (see edge_semantic_override below).
     semantic_channel: bool = True
     semantic_topk: int = 5
     # Hot top-terms are capped like every other channel; 32 (vs the
@@ -204,29 +205,42 @@ class ERConfig:
     seed: int = 42
 
     def __post_init__(self) -> None:
-        if self.bands <= 0 or self.num_perm % self.bands != 0:
-            raise ValueError(f"bands={self.bands} must be positive and divide num_perm")
-        for name in ("cc_max_iter", "cc_checkpoint_every"):
-            if getattr(self, name) < 1:
-                raise ValueError(f"{name} must be at least 1, got {getattr(self, name)!r}")
+        for f in fields(self):
+            v = getattr(self, f.name)
+            # every count, size and bound (the int fields but seed) is at least 1
+            if f.type == "int" and f.name != "seed" and v < 1:
+                raise ValueError(f"{f.name} must be at least 1, got {v!r}")
+            # floors, ratios and bars (the float fields): None (off), "auto"
+            # where a str is allowed, or a number in [0, 1]; NaN fails both
+            if "float" in f.type and v is not None and not (v == "auto" and "str" in f.type):
+                if not (isinstance(v, (int, float)) and 0 <= v <= 1):
+                    raise ValueError(f"{f.name} must be None, 'auto' or in [0, 1], got {v!r}")
+        if self.num_perm % self.bands != 0:
+            raise ValueError(f"bands={self.bands} must divide num_perm={self.num_perm}")
         if self.tf_mode not in ("log", "raw"):
             raise ValueError(f"tf_mode must be 'log' or 'raw', got {self.tf_mode!r}")
         k = self.vocab_k
         if k != "auto" and not (isinstance(k, int) and not isinstance(k, bool) and k > 0):
             raise ValueError(f"vocab_k must be 'auto' or a positive int, got {k!r}")
-        for name in ("edge_threshold", "edge_high_conf_override", "edge_semantic_override"):
-            v = getattr(self, name)
-            if isinstance(v, str) and v != "auto":
-                raise ValueError(f"{name} must be 'auto', a float or None, got {v!r}")
 
 
 # The stage graph, declared once: stage -> (what it reads: the sources
 # "files"/"labels" and upstream stages; the ERConfig fields it reads).
 # Every checkpoint fingerprint derives from it (stage_fingerprints), so a
-# change reruns only the stages that read it and their descendants.
+# change reruns only the stages that read it and their descendants, and
+# so does the schedule (run_stages): a stage starts once every stage it
+# reads is materialized, in table order among those ready.
 # cluster reads every field (ALL_FIELDS): each reaches it anyway, through an
 # upstream stage or its own edge/CC settings, so it has no list to fall out
 # of sync.
+# No stage reads blocking (the band membership; candidates re-derives its
+# band keys with the sketches attached, which saves a join back to them).
+# It stays a stage because it is the pipeline's membership output
+# (result["membership"]) and a resumable layer the benchmark counts: the
+# partial-resume check expects it among the 7 reused stages and the
+# per-layer metrics name blocking.blocking.*. Being read by none, it is
+# never counted in cache mode (it stays lazy), and in checkpoint mode its
+# write overlaps candidates.
 ALL_FIELDS = tuple(f.name for f in fields(ERConfig))
 STAGES: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
     "signatures": (("files",), ("shingle_n", "num_perm", "seed")),
@@ -390,19 +404,66 @@ def doc_state(
     )
 
 
-def _phase_logger():
-    """SPARK_GRAFT_PHASE_LOG=1 → timestamped phase lines on stderr.
-    The decomposition tool behind the scaling work: wall attribution of
-    driver-side DAG-build/plan time vs cluster-side job time (event logs
-    only show the latter — the gaps between jobs are invisible there)."""
-    if os.environ.get("SPARK_GRAFT_PHASE_LOG") != "1":
-        return lambda msg: None
-    t0 = time.time()
+# A stage's jobs run in the FAIR scheduler pool of its own name (session
+# sets spark.scheduler.mode=FAIR; fairness is between pools, so a short
+# job gets task slots at once instead of queueing behind every wave of a
+# long one), except these: perfbench's tracer (tracing.POOL_STAGE) maps
+# the pools train (train_features and the fit) and candfeat to stages.
+POOLS = {"train_features": "train", "cand_features": "candfeat"}
 
-    def log(msg: str) -> None:
-        print(f"[er-phase +{time.time() - t0:7.2f}s] {msg}", file=sys.stderr, flush=True)
 
-    return log
+def run_stages(
+    runner: StageRunner, builders: dict, fingerprints: dict, then: dict | None = None
+) -> tuple[dict[str, DataFrame], dict]:
+    """Run the stages in ``builders`` (stage -> (outputs so far) ->
+    DataFrame) as concurrent Spark jobs, the reference's threaded job
+    scheduler (src/jobscheduler.c) on Spark's thread-safe one: a stage is
+    submitted, in STAGES order among the ready ones, once every stage it
+    reads (STAGES, restricted to ``builders``) is materialized — written
+    in checkpoint mode, counted once in cache mode, so no reader touches
+    a cache before it is filled. A cache-mode stage that no stage reads
+    is not counted. ``then[stage]`` runs on the materialized output in
+    the same thread and pool. Each stage's wall ``start``/``end`` and
+    ``pool`` join ``runner.manifests[stage]``. An exception in any stage
+    is raised once the running stages end; no later stage starts.
+
+    Returns ({stage: output}, {stage: then[stage]'s result})."""
+    then = then or {}
+    sc = runner.spark.sparkContext
+    reads = {s: {r for r in STAGES[s][0] if r in builders} for s in builders}
+    read = {r for rs, _ in STAGES.values() for r in rs}
+    outs: dict[str, DataFrame] = {}
+    results: dict = {}
+
+    def task(name: str) -> None:
+        pool = POOLS.get(name, name)
+        # local properties are per Python thread (pinned-thread mode)
+        sc.setLocalProperty("spark.scheduler.pool", pool)
+        try:
+            start = time.time()
+            df = runner.run(name, lambda: builders[name](outs), fingerprints[name])
+            if not runner.enabled and name in read:
+                df.count()
+            runner.manifests[name].update(start=start, end=time.time(), pool=pool)
+            outs[name] = df
+            if name in then:
+                results[name] = then[name](df)
+        finally:
+            sc.setLocalProperty("spark.scheduler.pool", None)
+
+    pending = [s for s in STAGES if s in builders]
+    done: set[str] = set()
+    running: dict = {}
+    with ThreadPoolExecutor(max_workers=len(pending)) as ex:
+        while pending or running:
+            for name in [s for s in pending if reads[s] <= done]:
+                pending.remove(name)
+                running[ex.submit(task, name)] = name
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for f in finished:
+                f.result()
+                done.add(running.pop(f))
+    return outs, results
 
 
 def run_er_pipeline(
@@ -417,7 +478,6 @@ def run_er_pipeline(
     files: (spec_id, repo, path, commit, lang, content[, content_sha])
     labeled_pairs: (left_spec_id, right_spec_id, label[, split])
     """
-    plog = _phase_logger()
     runner = StageRunner(spark, workdir)
     # Source identities [n, h, s], from content: per-row sha2(content, 256)
     # folded into the files multiset (n is n_docs) and, only when
@@ -432,107 +492,25 @@ def run_er_pipeline(
     fp = stage_fingerprints(config, {"files": files_id, "labels": labels_id})
     tok = tokenize("content")
 
-    # ---- stage: signatures (ONE corpus scan → 256 B sketch per record) ----
-    def signatures():
-        return B.minhash_signatures_df(
-            files, id_col="spec_id", text_col="content",
-            shingle_n=config.shingle_n, num_perm=config.num_perm,
-            seed=config.seed, tokenizer=tok,
-        )
-
-    sigs = runner.run("signatures", signatures, fp["signatures"])
-
-    # ---- stage: postings (the ONLY corpus tokenize+explode pass) -----------
-    # Materialized as its own stage: vocab, doc-lengths, and doc-vectors
-    # all re-read it. Without this checkpoint the TF-IDF chain re-scans
-    # and RE-TOKENIZES the corpus 3-4× (measured: five full corpus scans
-    # inside one prep materialization, ~60-100 core-s/run wasted at bench
-    # scale — the single largest avoidable CPU block in the event logs).
-    postings_df = runner.run(
-        "postings",
-        lambda: TI.postings(files, id_col="spec_id", text_col="content", tokenizer=tok),
-        fp["postings"],
-    )
-
     # ---- stage: top-k vocabulary (tiny) ------------------------------------
     # index_vocab folded into the stage: the dense term_idx assignment is
     # a single-partition global sort by nature (measured ~1-2 s at bench
     # scale), so it runs ONCE here, cached/checkpointed, and at production
     # vocab sizes a resumed run never repeats it.
     vocab_k = min(max(1000, n_docs), 1_000_000) if config.vocab_k == "auto" else config.vocab_k
-    top_vocab = runner.run(
-        "top_vocab",
-        lambda: TI.index_vocab(
+
+    def top_vocab(o):
+        return TI.index_vocab(
             TI.er_vocab(
-                TI.vocab(postings_df, n_docs),
-                n_docs,
-                vocab_k,
-                max_df_ratio=config.max_df_ratio,
+                TI.vocab(o["postings"], n_docs), n_docs, vocab_k, max_df_ratio=config.max_df_ratio
             )
-        ),
-        fp["top_vocab"],
-    )
-
-    # ---- stage: prep (compact per-doc state: prefix + TF-IDF map + sig) ----
-    def prep():
-        return doc_state(
-            files, postings_df, sigs, top_vocab, n_docs, config.lev_bound, config.tf_mode
         )
-
-    docs_prep = runner.run("prep", prep, fp["prep"])
-
-    # ---- stage: blocking membership (projection of the signature table) ----
-    membership = runner.run(
-        "blocking",
-        lambda: B.membership_from_signatures(sigs, bands=config.bands, num_perm=config.num_perm),
-        fp["blocking"],
-    )
-
-    # ---- stage: candidate pairs --------------------------------------------
-    # est-Jaccard is computed in-block at generation time (signatures are
-    # already co-located after the membership shuffle) so the similarity
-    # join downstream only sees prefilter survivors — see
-    # blocking.candidate_pairs_with_est for the measured rationale.
-    candidates = runner.run(
-        "candidates",
-        lambda: B.candidate_pairs_with_est(
-            sigs, bands=config.bands, num_perm=config.num_perm,
-            per_block_cap=config.per_block_cap,
-        ),
-        fp["candidates"],
-    )
-
-    # ---- stage: SEMANTIC candidates (top-k TF-IDF term blocking) -----------
-    # Depends on docs_prep (the int-keyed vectors + sigs), NOT on a new
-    # corpus scan: the top-k is an expression-side sort/slice of the map
-    # each doc already carries, so the channel costs one blocking shuffle
-    # of k rows/doc plus the capped in-block pair explosion. Both channels
-    # run blocking.candidate_pairs on a membership carrying sig, so est_j
-    # is one expression and the two union on an identical schema.
-    # `channels` holds one (candidates with est_j, est-Jaccard prefilter
-    # or None) entry per channel. The semantic channel has no prefilter:
-    # its pairs are chosen BECAUSE they sit below the sketch estimate's
-    # reach; their gate is the exact cosine computed downstream.
-    channels = [(candidates, config.sig_prefilter)]
-    sem_candidates = None
-    if config.semantic_channel:
-        sem_candidates = runner.run(
-            "sem_candidates",
-            lambda: B.candidate_pairs(
-                B.semantic_topk_membership(
-                    docs_prep, k=config.semantic_topk, carry_cols=("sig",)
-                ),
-                per_block_cap=config.semantic_block_cap,
-            ),
-            fp["sem_candidates"],
-        )
-        channels.append((sem_candidates, None))
 
     # ---- stage: label closure (reference semantics: ALL labels) ------------
     # (spec_id, cluster_id) over the positive labels, computed once: the
     # final clustering builds on it (final_cluster), as every later step
     # of the reference reads its one readCSV closure (src/functs.c:539-675).
-    def closure():
+    def closure(o):
         cc_dir = os.path.join(workdir, f"cc_closure_{fp['closure']}") if workdir else None
         return C.connected_components(
             labeled_pairs.filter(F.col("label") == 1).select(
@@ -542,15 +520,16 @@ def run_er_pipeline(
             checkpoint_dir=cc_dir,
             max_iter=config.cc_max_iter,
             checkpoint_every=config.cc_checkpoint_every,
+            cached=runner.cached,
         )
 
     # ---- stage: training pairs + features ----------------------------------
     # Train on the train split's labeled pairs (reference: LR trains on
     # pairs among first-60% specs, src/main.c:296-308), featurized by the
     # one pair featurizer against the prep stage's doc state — the same
-    # relation the candidate pairs join. docs_prep carries sig, so it
-    # also serves the est-Jaccard join.
-    def train_features():
+    # relation the candidate pairs join. The prep state carries sig, so
+    # it also serves the est-Jaccard join.
+    def train_features(o):
         lp = labeled_pairs
         if "split" not in lp.columns:
             # default split is the SCALE path: deterministic hash buckets,
@@ -569,127 +548,110 @@ def run_er_pipeline(
         # no prefilter: every labeled pair must be featurized; f_vocab_cov
         # rides along because the gate regions calibrated here read it
         return S.pair_features(
-            B.pairs_with_est(tp, docs_prep), docs_prep, config.lev_bound
+            B.pairs_with_est(tp, o["prep"]), o["prep"], config.lev_bound
         ).select("a", "b", "label", *S.FEATURE_COLS, "f_vocab_cov")
 
-    # ---- concurrent job groups ---------------------------------------------
-    # Independent stage groups run as CONCURRENT Spark jobs: the DAG's
-    # serial stage chain cannot feed a wide cluster by itself (measured
-    # at bench scale: >60% executor idle time at local[16] from barrier
-    # latency). Job-level parallelism is the reference's own design
-    # (threaded jobScheduler, src/jobscheduler.c) re-expressed on Spark's
-    # thread-safe scheduler. Three independent groups:
-    #   A) label-closure CC (labeled pairs only; joined before the final
-    #      clustering, which builds on it)
-    #   B) train features + IRLS fit (labeled pairs × docs_prep)
-    #   C) candidate generation (signatures only)
-    # Dependency-precise forking (r2 event-log finding: group C waited
-    # behind the 20 s prep materialization it does not read — candidates
-    # depend on `sigs` alone, so only the signature cache is materialized
-    # before C forks). B forks once docs_prep is materialized and overlaps
-    # the candidate-feature join, the longer tail at sf0.1. Each shared
-    # cached stage is materialized exactly once before any dependent
-    # forks — concurrent first-touch of an unmaterialized cache would race
-    # block computation.
-    # This overlap is a cache-mode (workdir=None) schedule. With a workdir,
-    # each runner.run writes its stage where it is called, so candidates,
-    # sem_candidates, docs_prep and cand_features are already on disk when
-    # the pool opens; only A and B, which call runner.run inside the pool,
-    # still run concurrently there.
-    def run_closure():
-        plog("closure: start")
-        out = runner.run("closure", closure, fp["closure"])
-        plog("closure: done")
-        return out
+    # `channels` holds one (candidates with est_j, est-Jaccard prefilter or
+    # None) entry per channel. The semantic channel has no prefilter: its
+    # pairs are chosen BECAUSE they sit below the sketch estimate's reach;
+    # their gate is the exact cosine computed downstream.
+    def channels(o):
+        return [(o["candidates"], config.sig_prefilter)] + [
+            (o[s], None) for s in ("sem_candidates",) if s in o
+        ]
 
-    def run_train_and_fit():
-        plog("train_features: DAG build start")
-        tp = runner.cache(runner.run("train_features", train_features, fp["train_features"]))
-        plog("train_features: DAG built, materializing")
-        model = S.fit_lr_newton(tp, max_rounds=config.newton_rounds)
-        plog("fit: done")
-        return tp, model
-
-    def in_pool(name: str, fn):
-        """Tag a job group's thread with its own FAIR scheduler pool
-        (session sets spark.scheduler.mode=FAIR; fairness is BETWEEN
-        pools, so each concurrent group gets one — a short job then gets
-        task slots immediately instead of queueing behind every wave of
-        a long one). Local properties are per-Python-thread under
-        pinned-thread mode (PySpark default)."""
-
-        def wrapped():
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
-            try:
-                return fn()
-            finally:
-                spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
-
-        return wrapped
-
-    # ---- stage: candidate features (declared here so the overlap block
-    # can materialize it concurrently with the train+fit join — the
-    # features don't read the model; only the cheap predict projection
-    # does, so the two tails overlap instead of stacking) ----------------
-    # Prefiltering each channel BEFORE the union keeps ~10% of the
+    # ---- stage: candidate features -----------------------------------------
+    # The features don't read the model (only the cheap predict projection
+    # does), so this stage overlaps the train+fit unit instead of stacking
+    # after it. Prefiltering each channel BEFORE the union keeps ~10% of the
     # lexical side, so the dedup shuffle sees ~0.4M rows at bench scale
     # instead of the 4M raw union (measured: filtering after the union
     # cost ~1 full pair shuffle of mostly-dead rows). est_j is a pure
     # function of the pair, so max() is a no-op on duplicates; one
     # channel needs no dedup.
-    def cand_features():
+    def cand_features(o):
+        chans = channels(o)
         cand = reduce(DataFrame.unionByName, [
-            c if p is None else c.filter(F.col("est_j") >= F.lit(float(p)))
-            for c, p in channels
+            c if p is None else c.filter(F.col("est_j") >= F.lit(float(p))) for c, p in chans
         ])
-        if len(channels) > 1:
+        if len(chans) > 1:
             cand = cand.groupBy("a", "b").agg(F.max("est_j").alias("est_j"))
-        return S.pair_features(cand, docs_prep, config.lev_bound).select(
+        return S.pair_features(cand, o["prep"], config.lev_bound).select(
             "a", "b", *S.FEATURE_COLS, "f_vocab_cov"
         )
 
-    cand_feats = runner.cache(runner.run("cand_features", cand_features, fp["cand_features"]))
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        closure_future = pool.submit(in_pool("closure", run_closure))
-        plog("sigs.count: start")
-        sigs.count()  # the one dependency group C reads
-        plog("sigs.count: done; forking candidates")
-        cand_future = pool.submit(in_pool("candidates", candidates.count))
-        docs_prep.count()  # read by group B and by cand_features
-        plog("docs_prep.count: done; forking train+fit")
-        fit_future = pool.submit(in_pool("train", run_train_and_fit))
-        cand_future.result()  # candidates cache materialized (no
-        plog("candidates.count: joined")  # first-touch race below)
-        candfeat_future = pool.submit(
-            in_pool("candfeat", cand_feats.count)
-        )
-        train_pairs, model = fit_future.result()
-        plog("train+fit: joined")
-        candfeat_future.result()
-        plog("cand_features: materialized")
-        label_clusters = closure_future.result()
-        plog("closure: joined")
-
-    # ---- stage: scores (cand_feats materialized in the overlap block) ------
+    builders = {
+        # ONE corpus scan → 256 B sketch per record
+        "signatures": lambda o: B.minhash_signatures_df(
+            files, id_col="spec_id", text_col="content",
+            shingle_n=config.shingle_n, num_perm=config.num_perm,
+            seed=config.seed, tokenizer=tok,
+        ),
+        # The ONLY corpus tokenize+explode pass, materialized as its own
+        # stage: vocab, doc-lengths, and doc-vectors all re-read it.
+        # Without it the TF-IDF chain re-scans and RE-TOKENIZES the corpus
+        # 3-4× (measured: five full corpus scans inside one prep
+        # materialization, ~60-100 core-s/run wasted at bench scale).
+        "postings": lambda o: TI.postings(
+            files, id_col="spec_id", text_col="content", tokenizer=tok
+        ),
+        "top_vocab": top_vocab,
+        # compact per-doc state: prefix + TF-IDF map + sig
+        "prep": lambda o: doc_state(
+            files, o["postings"], o["signatures"], o["top_vocab"], n_docs,
+            config.lev_bound, config.tf_mode,
+        ),
+        "blocking": lambda o: B.membership_from_signatures(
+            o["signatures"], bands=config.bands, num_perm=config.num_perm
+        ),
+        # est-Jaccard is computed in-block at generation time (signatures
+        # are already co-located after the membership shuffle), so the
+        # similarity join downstream only sees prefilter survivors — see
+        # blocking.candidate_pairs_with_est for the measured rationale.
+        "candidates": lambda o: B.candidate_pairs_with_est(
+            o["signatures"], bands=config.bands, num_perm=config.num_perm,
+            per_block_cap=config.per_block_cap,
+        ),
+        # SEMANTIC candidates (top-k TF-IDF term blocking) read the prep
+        # state, NOT a new corpus scan: the top-k is an expression-side
+        # sort/slice of the map each doc already carries, so the channel
+        # costs one blocking shuffle of k rows/doc plus the capped in-block
+        # pair explosion. Both channels run blocking.candidate_pairs on a
+        # membership carrying sig, so est_j is one expression and the two
+        # union on an identical schema.
+        "sem_candidates": lambda o: B.candidate_pairs(
+            B.semantic_topk_membership(o["prep"], k=config.semantic_topk, carry_cols=("sig",)),
+            per_block_cap=config.semantic_block_cap,
+        ),
+        "closure": closure,
+        "train_features": train_features,
+        "cand_features": cand_features,
+    }
+    # train+fit is one unit in the train pool: the model is not a stage
+    outs, fitted = run_stages(
+        runner,
+        {s: b for s, b in builders.items() if fp[s] is not None},
+        fp,
+        then={"train_features": lambda tp: S.fit_lr_newton(
+            runner.cache(tp), max_rounds=config.newton_rounds
+        )},
+    )
+    train_pairs, model = outs["train_features"], fitted["train_features"]
+    cand_feats = runner.cache(outs["cand_features"])
     scored = S.predict(cand_feats, model)
-    plog("predict: DAG built")
 
-    # ---- stage: one self-training round (count_retrain < 1, src/functs.c:1717)
+    # ---- one self-training round (count_retrain < 1, src/functs.c:1717) ---
     if config.self_train:
         train_size = train_pairs.count()
-        plog("self_train: train_size counted")
         pseudo = S.self_training_pseudo_labels(
             scored,
             known_pairs=train_pairs.select("a", "b"),
             limit=config.self_train_limit_factor * max(train_size, 1),
         ).select("a", "b", "label", *S.FEATURE_COLS)
-        plog("self_train: pseudo DAG built")
         refit_input = train_pairs.select("a", "b", "label", *S.FEATURE_COLS).unionByName(
             pseudo
         )
         model = S.fit_lr_newton(refit_input, max_rounds=config.newton_rounds)
-        plog("self_train: refit done")
         scored = S.predict(cand_feats, model)
 
     # ---- stage: final clustering -------------------------------------------
@@ -703,17 +665,16 @@ def run_er_pipeline(
         thr = S.calibrate_edge_threshold(
             train_pairs.select("label", *S.FEATURE_COLS), model
         )
-        plog(f"edge threshold calibrated: {thr:.4f} (model.threshold {model.threshold:.4f})")
     elif config.edge_threshold is not None:
         thr = float(config.edge_threshold)
     else:
         thr = model.threshold
 
     gates = edge_gates(config, train_pairs, model)
-    plog("edge gates: " + ", ".join(f"{g.name}={g.bar}" for g in gates))
     fp_cluster = _sha([fp["cluster"], thr, [(g.name, g.bar) for g in gates]])
+    label_clusters = outs["closure"]
 
-    def final_cluster():
+    def final_cluster(o):
         # a star from each member to its label component's minimum connects
         # exactly the nodes the positive labels connect, and the components'
         # minima (the cluster ids) are the same
@@ -738,25 +699,19 @@ def run_er_pipeline(
             checkpoint_dir=cc_dir,
             max_iter=config.cc_max_iter,
             checkpoint_every=config.cc_checkpoint_every,
+            cached=runner.cached,
         )
 
-    plog("final_cluster: start")
-    final_labels = runner.run("cluster", final_cluster, fp_cluster)
-    plog("final_cluster: done")
-
-    matches = C.extract_matches(final_labels)
-
-    candidates_all = candidates
-    if len(channels) > 1:
-        candidates_all = reduce(
-            DataFrame.unionByName, [c.select("a", "b") for c, _ in channels]
-        ).distinct()
-
+    outs.update(run_stages(runner, {"cluster": final_cluster}, {"cluster": fp_cluster})[0])
+    pairs = [c.select("a", "b") for c, _ in channels(outs)]
+    candidates_all = (
+        reduce(DataFrame.unionByName, pairs).distinct() if len(pairs) > 1 else outs["candidates"]
+    )
     return {
-        "docs_prep": docs_prep,
-        "membership": membership,
-        "candidates": candidates,
-        "sem_candidates": sem_candidates,
+        "docs_prep": outs["prep"],
+        "membership": outs["blocking"],
+        "candidates": outs["candidates"],
+        "sem_candidates": outs.get("sem_candidates"),
         "candidates_all": candidates_all,
         "label_clusters": label_clusters,
         "train_pairs": train_pairs,
@@ -764,8 +719,8 @@ def run_er_pipeline(
         "scored": scored,
         "edge_threshold": thr,
         "gates": gates,
-        "labels": final_labels,
-        "matches": matches,
+        "labels": outs["cluster"],
+        "matches": C.extract_matches(outs["cluster"]),
         "runner": runner,
     }
 

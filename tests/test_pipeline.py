@@ -163,10 +163,13 @@ def test_identical_second_run_compiles_no_class(spark, tiny_tables, tmp_path):
     assert compiles[1] == 0, compiles
 
 
-def test_release_unpersists_every_run_cache(spark, tiny_tables, tmp_path):
-    """In checkpoint mode the runner holds every cache a run makes (the
-    stage outputs the pipeline re-reads are parquet reads it caches), so
-    release() alone leaves only the RDDs cached before the run."""
+@pytest.mark.parametrize("mode", ["cache", "checkpoint"])
+def test_release_unpersists_every_run_cache(spark, tiny_tables, tmp_path, mode):
+    """The runner holds every cache a run makes: in checkpoint mode the
+    stage outputs the pipeline re-reads are parquet reads it caches, in
+    cache mode the connected components' last localCheckpoint (closure
+    and final) joins the stage caches. So release() alone leaves only the
+    RDDs cached before the run."""
     files_df, _, pairs_df = tiny_tables
     files_df.count(), pairs_df.count()
 
@@ -174,10 +177,69 @@ def test_release_unpersists_every_run_cache(spark, tiny_tables, tmp_path):
         return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
     before = cached_rdds()
-    r = P.run_er_pipeline(spark, files_df, pairs_df, workdir=str(tmp_path), config=P.ERConfig())
+    workdir = str(tmp_path) if mode == "checkpoint" else None
+    r = P.run_er_pipeline(spark, files_df, pairs_df, workdir=workdir, config=P.ERConfig())
     r["labels"].count()
     r["runner"].release()
     assert cached_rdds() <= before
+
+
+@pytest.mark.parametrize("mode", ["cache", "checkpoint"])
+def test_schedule_follows_stage_table(spark, pipeline_result, tiny_tables, tmp_path, mode):
+    """Every stage's wall start/end, pool and resumed flag are in
+    runner.manifests in both modes, and the schedule is the one STAGES
+    implies: each stage starts after every stage it reads has ended, and
+    with a workdir too the closure overlaps the corpus stages (it reads
+    only the sources)."""
+    files_df, _, pairs_df = tiny_tables
+    if mode == "cache":
+        r = pipeline_result
+    else:
+        cfg = P.ERConfig(self_train=False, newton_rounds=2)
+        r = P.run_er_pipeline(spark, files_df, pairs_df, workdir=str(tmp_path), config=cfg)
+    m = r["runner"].manifests
+    assert set(m) == set(P.STAGES)
+    for stage, (reads, _) in P.STAGES.items():
+        assert {"start", "end", "pool", "resumed"} <= set(m[stage]), stage
+        assert m[stage]["resumed"] is False
+        assert m[stage]["start"] <= m[stage]["end"]
+        assert m[stage]["pool"] == P.POOLS.get(stage, stage)
+        for read in set(reads) & set(P.STAGES):
+            assert m[stage]["start"] >= m[read]["end"], (stage, read)
+    assert m["closure"]["start"] < m["prep"]["end"]
+    if mode == "checkpoint":
+        r["runner"].release()
+
+
+def test_stage_failure_stops_the_schedule(spark):
+    """An exception in one stage propagates out of run_stages once the
+    running stages end: no stage that reads the failed one starts, and no
+    worker thread is left behind."""
+    import threading
+
+    from bigdataentityresolution_spark.plans.checkpoint import StageRunner
+
+    started = []
+
+    def stage(name):
+        def build(outs):
+            started.append(name)
+            return spark.range(3)
+
+        return build
+
+    def failing(outs):
+        raise RuntimeError("postings failed")
+
+    builders = {s: stage(s) for s in ("signatures", "top_vocab", "prep", "closure")}
+    builders["postings"] = failing
+    runner = StageRunner(spark, None)
+    with pytest.raises(RuntimeError, match="postings failed"):
+        P.run_stages(runner, builders, dict.fromkeys(builders, ""))
+    runner.release()
+    assert "top_vocab" not in started and "prep" not in started
+    assert {"signatures", "closure"} <= set(started)
+    assert not [t for t in threading.enumerate() if t.name.startswith("ThreadPoolExecutor")]
 
 
 def test_stage_fingerprint_cascade():
@@ -356,6 +418,24 @@ def test_semantic_channel_without_prefilter(spark, tiny_tables):
         {"cc_max_iter": 0},
         {"cc_checkpoint_every": 0},
         {"cc_checkpoint_every": -1},
+        {"num_perm": 0},
+        {"shingle_n": 0},
+        {"per_block_cap": 0},
+        {"lev_bound": -1},
+        {"newton_rounds": 0},
+        {"self_train_limit_factor": 0},
+        {"semantic_topk": 0},
+        {"semantic_block_cap": 0},
+        {"max_df_ratio": 1.5},
+        {"sig_prefilter": float("nan")},
+        {"edge_cosine_floor": -0.1},
+        {"edge_jaccard_floor": float("nan")},
+        {"edge_override_jaccard_min": 2.0},
+        {"edge_override_cosine_min": float("nan")},
+        {"edge_semantic_cosine_min": 1.01},
+        {"edge_threshold": float("nan")},
+        {"edge_high_conf_override": 1.2},
+        {"edge_semantic_override": -0.5},
     ],
 )
 def test_erconfig_rejects_invalid(kwargs):

@@ -74,6 +74,25 @@ def test_fit_lr_batched_equals_full_batch(spark, separable):
     assert abs(m_full.bias - m_batched.bias) < 1e-9
 
 
+def test_fit_lr_independent_of_partitioning(spark):
+    """Each batch's rows are sorted and the per-batch stats fold in
+    batch-id order, so the reference GD gives bit-equal weights with its
+    input in 1 and in 5 partitions."""
+    rng = np.random.default_rng(7)
+    x = rng.random((3000, 3))
+    logit = 4.0 * x[:, 0] + 2.0 * x[:, 1] - 3.0 * x[:, 2] - 1.0
+    y = (rng.random(len(x)) < 1 / (1 + np.exp(-logit))).astype(int)
+    noisy = spark.createDataFrame(
+        [(float(a), float(b), float(c), int(l)) for (a, b, c), l in zip(x, y)],
+        "f_cosine double, f_jaccard double, f_lev double, label int",
+    )
+    fits = [
+        S.fit_lr(df, max_rounds=2, batch_size=100)
+        for df in (noisy.coalesce(1), noisy.repartition(5))
+    ]
+    assert (fits[0].weights, fits[0].bias) == (fits[1].weights, fits[1].bias)
+
+
 def test_trained_model_separates(spark, separable):
     """Newton/IRLS (the pipeline trainer) must nail a separable problem."""
     df, x, y = separable
