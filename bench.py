@@ -194,6 +194,8 @@ def _hard_recall_by_kind(predicted_labels, truth) -> dict:
     recall_orphan ≈ 0 is the corpus doing its job."""
     from pyspark.sql import functions as F
 
+    from bigdataentityresolution_spark.operators.clustering import extract_matches
+
     kind = F.regexp_extract("spec_id", r"src/(hard|orphan)", 1)
     t = truth.withColumn("kind", kind)
     # Kind-homogeneity guard (ADVICE r4): the decomposition takes kind
@@ -218,13 +220,7 @@ def _hard_recall_by_kind(predicted_labels, truth) -> dict:
         .filter(F.col("a") < F.col("b"))
         .select("a", "b", "kind")
     )
-    p1 = predicted_labels.select(F.col("spec_id").alias("a"), "cluster_id")
-    p2 = predicted_labels.select(F.col("spec_id").alias("b"), "cluster_id")
-    pred_pairs = (
-        p1.join(p2, "cluster_id")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.lit(1).alias("hit"))
-    )
+    pred_pairs = extract_matches(predicted_labels).select("a", "b", F.lit(1).alias("hit"))
     rows = (
         tp_pairs.join(pred_pairs, ["a", "b"], "left")
         .groupBy("kind")
@@ -352,32 +348,11 @@ def bench_er_pipeline(spark, self_train: bool = True) -> dict:
     # of the ~270 a run generates, the warm rep recompiled every class
     # evicted from it, and C2 JIT-compiled them again.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    # The r3 alternative — one UNTIMED pass over a miniature corpus
-    # (~1.5k files) before a single timed rep — is DEPRECATED to opt-in
-    # (SPARK_GRAFT_BENCH_WARMUP=1 with REPS=1): validated at bench scale
-    # in r4 (ADVICE r3 #2) it recovers only ~HALF the JIT delta
-    # (measured sf0.1, same session: 40.8 s cold / 32.2 s mini-warmup /
-    # 23.3 s true in-JVM warm rep) because the miniature corpus compiles
-    # different AQE/join plan shapes than the bench-scale run. The
-    # committed r3 local JSON's er_pipeline_noselftrain 28.2 s (vs the
-    # driver's 19.1 s) was this half-warm mode plus a busy host window.
-    # An in-JVM second rep is the honest warm number; it is the default.
-    if reps <= 1 and os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "0") == "1":
-        from bigdataentityresolution_spark.sources.synthetic import (
-            corpus_to_spark,
-            generate_corpus,
-        )
-
-        wfiles, _, wpairs = corpus_to_spark(
-            spark, generate_corpus(n_clusters=250, n_unrelated=500, n_repos=10, seed=7)
-        )
-        wres = run_er_pipeline(
-            spark, wfiles, wpairs, workdir=None, config=ERConfig(self_train=self_train)
-        )
-        wres["labels"].count()
-        wres["runner"].release()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(0.5)
+    # An untimed pass over a miniature corpus instead recovered only ~HALF
+    # the JIT delta (measured r4, sf0.1, same session: 40.8 s cold / 32.2 s
+    # mini-warmup / 23.3 s in-JVM warm rep): the miniature corpus compiles
+    # different AQE/join plan shapes than the bench-scale run. An in-JVM
+    # second rep is the honest warm number.
     rep_secs = []
     for _ in range(max(1, reps)):
         t0 = time.time()
@@ -588,7 +563,6 @@ def main() -> None:
         queries["tpch_q1"] = round(bench_tpch_q1(spark), 3)
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    warmup = reps <= 1 and os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "0") == "1"
     out = {
         "metric": "candidate_pairs_per_sec",
         "value": round(er["candidate_pairs_per_sec"], 1),
@@ -612,12 +586,13 @@ def main() -> None:
         "cpus": CPUS,
         # ADVICE r3 #2: round-over-round comparisons must not mix timing
         # modes. "warm" = JIT/codegen compiled before the timed window
-        # (multi-rep min, or the untimed miniature warmup pass); r1/r2
-        # numbers were cold-timed. BENCH_r03 onward are warm-timed.
+        # (multi-rep min); r1/r2 numbers were cold-timed. BENCH_r03
+        # onward are warm-timed. warmup_pass (the untimed miniature-corpus
+        # pass, removed) stays false so readers keep the key.
         "timing": {
-            "mode": "warm" if (reps > 1 or warmup) else "cold",
+            "mode": "warm" if reps > 1 else "cold",
             "reps": reps,
-            "warmup_pass": warmup,
+            "warmup_pass": False,
         },
         "er": {k: (round(v, 3) if isinstance(v, float) else v) for k, v in er.items()},
         "total_sec": round(sum(queries.values()), 3),

@@ -23,7 +23,7 @@ mapped in SURVEY.md §3.1), re-architected:
   sinks        extractMatches/extractNegatives      same, as DataFrames
 
 Every stage checkpoints through plans.checkpoint.StageRunner under a
-fingerprint derived from the STAGES table (the sources, config fields
+fingerprint derived from the STAGES table (the sources, config settings
 and upstream stages it reads); a killed run resumes every stage whose
 manifest is complete under its fingerprint, and a changed input reruns
 exactly the stages that read it and their descendants. The same table
@@ -40,7 +40,7 @@ import time
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, fields
 from functools import reduce
-from typing import NamedTuple
+from typing import ClassVar, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,7 +56,16 @@ from bigdataentityresolution_spark.plans.checkpoint import StageRunner
 
 @dataclass(frozen=True)
 class ERConfig:
-    shingle_n: int = 2
+    """The pipeline's settings. The six dataclass fields are what a caller
+    varies (the banding and the lexical-recall levers scripts/hard_sweep.py
+    sweeps, self-training, the semantic channel); each is type- and
+    range-checked at construction and raises ValueError there. The
+    ClassVar constants are fixed, like the reference's compile-time
+    MOST_SIGN=1000 (src/boWords.c) and ×12 pairs_limit (src/functs.c:23):
+    read them as ``config.x``, set none. Every one of them, field or
+    constant, joins the checkpoint fingerprints (STAGES)."""
+
+    shingle_n: ClassVar[int] = 2
     # MinHash sketch width / LSH banding. 64 perms in 32 bands × 2 rows
     # (r4; was 32/16): candidate probability at exact-shingle-J
     # 0.15/0.20/0.25 rises 30/48/64% → 52/73/87%, which on the HARD tier
@@ -67,9 +76,9 @@ class ERConfig:
     # default. Measured: scripts/hard_sweep.py.
     num_perm: int = 64
     bands: int = 32
-    per_block_cap: int = 64
-    # Vocabulary size for the pair-join TF-IDF vectors. "auto" (default)
-    # scales with the corpus: min(max(1000, n_docs), 1_000_000). The
+    per_block_cap: ClassVar[int] = 64
+    # Vocabulary size for the pair-join TF-IDF vectors. "auto" scales with
+    # the corpus: min(max(1000, n_docs), 1_000_000). The
     # reference's fixed MOST_SIGN=1000 (src/boWords.c) is correct for its
     # ~30k-record camera-spec corpus whose natural vocabulary is small,
     # but significance (tfidf_sum_mean) GROWS with document frequency, so
@@ -78,12 +87,12 @@ class ERConfig:
     # the HARD tier (40k files): cross-template non-clone cosine 0.6-0.78,
     # precision 0.005. The 1M cap bounds the vocab-index broadcast
     # (~24 MB); past it, move to feature hashing, not a bigger k.
-    vocab_k: int | str = "auto"
+    vocab_k: ClassVar[str] = "auto"
     # Drop terms appearing in > this fraction of docs from the ER vocab
     # (boilerplate carries no pairwise discrimination; see tfidf.er_vocab).
-    # None disables; the prune auto-falls-back on tiny/common-vocab corpora.
-    max_df_ratio: float | None = 0.35
-    lev_bound: int = 128
+    # The prune auto-falls-back on tiny/common-vocab corpora.
+    max_df_ratio: ClassVar[float] = 0.35
+    lev_bound: ClassVar[int] = 128
     # Drop candidates with est-Jaccard below this before featurization.
     # 0.12 (r4; was 0.2): at 32 perms the estimator's sampling noise
     # pushed true J≈0.25 pairs under 0.2 (~8% of them); with 64 perms
@@ -94,17 +103,16 @@ class ERConfig:
     # override bar, not this filter, is the precision defense. None
     # featurizes every lexical candidate.
     sig_prefilter: float | None = 0.12
-    newton_rounds: int = 5  # IRLS is quadratic — 5 rounds reach |step| < 1e-4
+    newton_rounds: ClassVar[int] = 5  # IRLS is quadratic — 5 rounds reach |step| < 1e-4
     self_train: bool = True
-    self_train_limit_factor: int = 12  # pairs_limit = train_size × 12 (src/functs.c:23)
-    # Edge decision threshold: "auto" (default) calibrates the
-    # F1-maximizing threshold on the labeled train pairs
+    self_train_limit_factor: ClassVar[int] = 12  # pairs_limit = train_size × 12 (src/functs.c:23)
+    # Edge decision threshold: "auto" calibrates the F1-maximizing
+    # threshold on the labeled train pairs
     # (scoring.calibrate_edge_threshold — the reference's moving
     # threshold climbs to its 0.8 clamp whenever positives outnumber
     # negatives, which zeroes discovery on corpora where the compact
-    # model's probabilities don't saturate); a float pins it; None uses
-    # model.threshold (reference semantics, pre-r4 default).
-    edge_threshold: float | str | None = "auto"
+    # model's probabilities don't saturate).
+    edge_threshold: ClassVar[str] = "auto"
     # Precision-first link policy: a PREDICTED edge must clear BOTH an
     # exact TF-IDF cosine floor and a MinHash est-Jaccard floor, not just
     # the model threshold. Rationale: one false edge chains two clusters
@@ -118,8 +126,8 @@ class ERConfig:
     # those can't also beat the est-Jaccard floor. Measured on the bench
     # corpus: either floor alone leaves 361/682 false edges, both
     # together leave 0.
-    edge_cosine_floor: float | None = 0.5
-    edge_jaccard_floor: float | None = 0.45
+    edge_cosine_floor: ClassVar[float] = 0.5
+    edge_jaccard_floor: ClassVar[float] = 0.45
     # High-confidence override: an edge whose model probability clears
     # this bar is accepted under RELAXED floors (the *_override_* minima
     # below) instead of the full floors. Motivated by the HARD corpus
@@ -136,7 +144,7 @@ class ERConfig:
     # override then merged 4.3k unrelated files into one cluster).
     # The relaxed minima are a structural sanity bar the model cannot
     # override: no edge below them is accepted no matter the score.
-    # "auto" (default) calibrates the bar on the labeled pairs inside
+    # "auto" calibrates the bar on the labeled pairs inside
     # the relaxed region (scoring.calibrate_override_bar, which records
     # the evidence rules and their measurements), clamped to [0.8, 0.99]
     # — 0.8 is the reference's own confidence clamp (src/logistic.c:734)
@@ -146,7 +154,7 @@ class ERConfig:
     # 0.69 measured; 0.84 calibrated at the r4 32/16 banding, 0.971
     # hard-kind at the shipped 64/32 banding — precision 0.9997
     # throughout).
-    edge_high_conf_override: float | str | None = "auto"
+    edge_high_conf_override: ClassVar[str] = "auto"
     # 0.12 in lockstep with sig_prefilter (r4; was 0.2): an edge the
     # prefilter admits must also be ACCEPTABLE, else the featurization
     # was wasted — and the 64-perm estimate at 0.12 is as reliable as
@@ -154,7 +162,7 @@ class ERConfig:
     # because the calibrated bar re-learns over whatever labeled
     # negatives enter the widened relaxed region.
     edge_override_jaccard_min: float = 0.12
-    edge_override_cosine_min: float = 0.35
+    edge_override_cosine_min: ClassVar[float] = 0.35
     # --- SEMANTIC candidate channel (r5; VERDICT r4 'Next' #1) ---------
     # The lexical MinHash channel's measured ceiling is pairs whose
     # shingle Jaccard sits below band reach (hard-tier orphan kind:
@@ -171,11 +179,11 @@ class ERConfig:
     # their acceptance gate is the exact TF-IDF cosine + a separately
     # calibrated high-confidence bar (see edge_semantic_override below).
     semantic_channel: bool = True
-    semantic_topk: int = 5
+    semantic_topk: ClassVar[int] = 5
     # Hot top-terms are capped like every other channel; 32 (vs the
     # lexical 64) because a term-block's members are ALL mutually
     # candidate — the quadratic term is the whole cost here.
-    semantic_block_cap: int = 32
+    semantic_block_cap: ClassVar[int] = 32
     # A semantic edge must clear this exact-cosine floor AND the
     # calibrated semantic bar. 0.35 aligns with edge_override_cosine_min
     # — deliberately: the labeled negatives that anchor the semantic
@@ -184,55 +192,60 @@ class ERConfig:
     # region and the bar would stay at its cap (no semantic edges). Those
     # negatives score proba <= 0.22, so the bar lands at its 0.8
     # structural floor there while orphan true pairs score 0.84+.
-    edge_semantic_cosine_min: float = 0.35
+    edge_semantic_cosine_min: ClassVar[float] = 0.35
     # "auto" calibrates on the labeled pairs inside the semantic gate's
-    # region (see edge_gates); float pins it; None disables the semantic
-    # accept path (the channel then only feeds pairs that some other
-    # gate accepts).
-    edge_semantic_override: float | str | None = "auto"
+    # region (see edge_gates); with the channel off the gate is dropped.
+    edge_semantic_override: ClassVar[str] = "auto"
     # Connected-components loop controls: round bound and reliable-
     # checkpoint cadence. Each `cc_checkpoint_every` rounds the frontier
     # is persisted (parquet when a workdir/checkpoint_dir is set) —
     # amortize by raising the cadence when the checkpoint dir lives on
     # slow object storage; lower it when rounds are huge and lineage
     # re-computation on executor loss would be costlier than the write.
-    cc_max_iter: int = 50
-    cc_checkpoint_every: int = 2
+    cc_max_iter: ClassVar[int] = 50
+    cc_checkpoint_every: ClassVar[int] = 2
     # TF weighting for the pair-join TF-IDF vectors: "log" (sublinear
-    # damping — the boilerplate defense, see tfidf.doc_vectors_indexed)
-    # or "raw" (reference-exact tf/n_tokens).
-    tf_mode: str = "log"
-    seed: int = 42
+    # damping — the boilerplate defense, see tfidf.doc_vectors_indexed);
+    # the operator also takes "raw" (reference-exact tf/n_tokens).
+    tf_mode: ClassVar[str] = "log"
+    seed: ClassVar[int] = 42
 
     def __post_init__(self) -> None:
         for f in fields(self):
             v = getattr(self, f.name)
-            # every count, size and bound (the int fields but seed) is at least 1
-            if f.type == "int" and f.name != "seed" and v < 1:
-                raise ValueError(f"{f.name} must be at least 1, got {v!r}")
-            # floors, ratios and bars (the float fields): None (off), "auto"
-            # where a str is allowed, or a number in [0, 1]; NaN fails both
-            if "float" in f.type and v is not None and not (v == "auto" and "str" in f.type):
-                if not (isinstance(v, (int, float)) and 0 <= v <= 1):
-                    raise ValueError(f"{f.name} must be None, 'auto' or in [0, 1], got {v!r}")
+            admits, what = _ADMITS[f.type]
+            if not admits(v):
+                raise ValueError(f"{f.name} must be {what}, got {v!r}")
         if self.num_perm % self.bands != 0:
             raise ValueError(f"bands={self.bands} must divide num_perm={self.num_perm}")
-        if self.tf_mode not in ("log", "raw"):
-            raise ValueError(f"tf_mode must be 'log' or 'raw', got {self.tf_mode!r}")
-        k = self.vocab_k
-        if k != "auto" and not (isinstance(k, int) and not isinstance(k, bool) and k > 0):
-            raise ValueError(f"vocab_k must be 'auto' or a positive int, got {k!r}")
+
+
+def _number(v) -> bool:
+    return isinstance(v, (int, float)) and not isinstance(v, bool)
+
+
+# What each declared ERConfig field type admits: counts are ints of at
+# least 1, switches are bools, and floors and ratios are numbers in
+# [0, 1] (NaN fails the range), or None where the type allows it (off).
+_ADMITS = {
+    "int": (lambda v: _number(v) and isinstance(v, int) and v >= 1, "an int of at least 1"),
+    "bool": (lambda v: isinstance(v, bool), "a bool"),
+    "float": (lambda v: _number(v) and 0 <= v <= 1, "a number in [0, 1]"),
+    "float | None": (lambda v: v is None or _number(v) and 0 <= v <= 1,
+                     "None or a number in [0, 1]"),
+}
 
 
 # The stage graph, declared once: stage -> (what it reads: the sources
-# "files"/"labels" and upstream stages; the ERConfig fields it reads).
+# "files"/"labels" and upstream stages; the ERConfig settings, fields or
+# constants, it reads).
 # Every checkpoint fingerprint derives from it (stage_fingerprints), so a
 # change reruns only the stages that read it and their descendants, and
 # so does the schedule (run_stages): a stage starts once every stage it
 # reads is materialized, in table order among those ready.
-# cluster reads every field (ALL_FIELDS): each reaches it anyway, through an
-# upstream stage or its own edge/CC settings, so it has no list to fall out
-# of sync.
+# cluster reads every setting (ALL_FIELDS): each reaches it anyway, through
+# an upstream stage or its own edge/CC settings, so it has no list to fall
+# out of sync.
 # No stage reads blocking (the band membership; candidates re-derives its
 # band keys with the sketches attached, which saves a join back to them).
 # It stays a stage because it is the pipeline's membership output
@@ -241,7 +254,7 @@ class ERConfig:
 # per-layer metrics name blocking.blocking.*. Being read by none, it is
 # never counted in cache mode (it stays lazy), and in checkpoint mode its
 # write overlaps candidates.
-ALL_FIELDS = tuple(f.name for f in fields(ERConfig))
+ALL_FIELDS = tuple(ERConfig.__annotations__)
 STAGES: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
     "signatures": (("files",), ("shingle_n", "num_perm", "seed")),
     "postings": (("files",), ()),
@@ -257,12 +270,6 @@ STAGES: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
     "cluster": (("files", "labels", "closure", "train_features", "cand_features"),
                 ALL_FIELDS),
 }
-
-
-# The semantic channel's edge gate reads these (edge_gates); with the
-# channel off the gate is dropped, so, like sem_candidates' own fields,
-# they go into no fingerprint then.
-SEMANTIC_GATE_FIELDS = ("edge_semantic_cosine_min", "edge_semantic_override")
 
 
 # Stages whose output changed shape under the same reads and fields: the
@@ -283,18 +290,11 @@ def stage_fingerprints(config: ERConfig, sources: dict) -> dict[str, str | None]
     REVISIONS entry, if any), where a source's fingerprint is its
     identity in ``sources`` ("files", "labels"; any JSON value, e.g. a
     multiset_signature triple). A stage the config switches off
-    (sem_candidates without the semantic channel) has fingerprint None,
-    and a field that only switched-off stages or the semantic gate
-    (SEMANTIC_GATE_FIELDS) read goes into no key, not even through
-    ALL_FIELDS."""
+    (sem_candidates without the semantic channel) has fingerprint None."""
     fp = dict(sources)
     off = set() if config.semantic_channel else {"sem_candidates"}
-    named_on = {f for s, (_, fs) in STAGES.items() if s not in off and fs is not ALL_FIELDS
-                for f in fs}
-    dead = {f for s in off for f in STAGES[s][1] + SEMANTIC_GATE_FIELDS} - named_on
     for name, (reads, cfg_fields) in STAGES.items():
-        values = [getattr(config, f) for f in cfg_fields if f not in dead]
-        key = [name, [fp[r] for r in reads], values]
+        key = [name, [fp[r] for r in reads], [getattr(config, f) for f in cfg_fields]]
         if name in REVISIONS:
             key.append(REVISIONS[name])
         fp[name] = None if name in off else _sha(key)
@@ -310,19 +310,16 @@ class Gate(NamedTuple):
     bar: float | None
 
 
-def edge_gates(
-    config: ERConfig, labeled: DataFrame | None = None, model: S.LRModel | None = None
-) -> list[Gate]:
+def edge_gates(config: ERConfig, labeled: DataFrame, model: S.LRModel) -> list[Gate]:
     """The ordered edge-acceptance table derived from ``config``:
 
       floors    full cosine + est-Jaccard floors, no bar beyond the threshold
       override  relaxed floors + the high-confidence bar
       semantic  exact-cosine floor + its own bar (semantic channel only)
 
-    A bar of "auto" is calibrated on ``labeled`` (label + feature columns
-    + f_vocab_cov) under ``model`` over the gate's own region, so the
-    region that grants the bar is exactly the region it admits; a gate
-    whose bar is None in the config is dropped.
+    Each bar is calibrated on ``labeled`` (label + feature columns +
+    f_vocab_cov) under ``model`` over the gate's own region, so the
+    region that grants the bar is exactly the region it admits.
 
     A cosine floor exempts pairs where either doc has an EMPTY vocab
     projection (f_vocab_cov == 0, so f_cosine is identically 0): they
@@ -337,25 +334,19 @@ def edge_gates(
     jac, cos = F.col("f_jaccard"), F.col("f_cosine")
     vocab_empty = F.col("f_vocab_cov") == 0
 
-    floors = F.lit(True)
-    if config.edge_cosine_floor is not None:
-        floors = floors & ((cos >= F.lit(float(config.edge_cosine_floor))) | vocab_empty)
-    if config.edge_jaccard_floor is not None:
-        floors = floors & (jac >= F.lit(float(config.edge_jaccard_floor)))
-    override = (jac >= F.lit(float(config.edge_override_jaccard_min))) & (
-        (cos >= F.lit(float(config.edge_override_cosine_min))) | vocab_empty
+    floors = ((cos >= F.lit(config.edge_cosine_floor)) | vocab_empty) & (
+        jac >= F.lit(config.edge_jaccard_floor)
     )
-    semantic = cos >= F.lit(float(config.edge_semantic_cosine_min))
-    gates = [Gate("floors", floors, None)]
-    for name, region, bar in (
-        ("override", override, config.edge_high_conf_override),
-        ("semantic", semantic, config.edge_semantic_override if config.semantic_channel else None),
-    ):
-        if bar == "auto":
-            bar = S.calibrate_override_bar(labeled, model, region)
-        if bar is not None:
-            gates.append(Gate(name, region, float(bar)))
-    return gates
+    regions = {
+        "override": (jac >= F.lit(float(config.edge_override_jaccard_min)))
+        & ((cos >= F.lit(config.edge_override_cosine_min)) | vocab_empty),
+    }
+    if config.semantic_channel:
+        regions["semantic"] = cos >= F.lit(config.edge_semantic_cosine_min)
+    return [Gate("floors", floors, None)] + [
+        Gate(name, region, S.calibrate_override_bar(labeled, model, region))
+        for name, region in regions.items()
+    ]
 
 
 def accept_path(gates: list[Gate]) -> Column:
@@ -496,8 +487,9 @@ def run_er_pipeline(
     # index_vocab folded into the stage: the dense term_idx assignment is
     # a single-partition global sort by nature (measured ~1-2 s at bench
     # scale), so it runs ONCE here, cached/checkpointed, and at production
-    # vocab sizes a resumed run never repeats it.
-    vocab_k = min(max(1000, n_docs), 1_000_000) if config.vocab_k == "auto" else config.vocab_k
+    # vocab sizes a resumed run never repeats it. k is ERConfig.vocab_k's
+    # "auto" size.
+    vocab_k = min(max(1000, n_docs), 1_000_000)
 
     def top_vocab(o):
         return TI.index_vocab(
@@ -659,16 +651,9 @@ def run_er_pipeline(
     # covers 100% of labels) ∪ predicted matches, minus pairs explicitly
     # labeled 0 (we never add a predicted edge a human label contradicts;
     # the reference adds no predicted edges at all).
-    if config.edge_threshold == "auto":
-        # calibrated on the TRUE labeled pairs (never on pseudo-labels),
-        # after the self-train refit if one ran
-        thr = S.calibrate_edge_threshold(
-            train_pairs.select("label", *S.FEATURE_COLS), model
-        )
-    elif config.edge_threshold is not None:
-        thr = float(config.edge_threshold)
-    else:
-        thr = model.threshold
+    # calibrated on the TRUE labeled pairs (never on pseudo-labels), after
+    # the self-train refit if one ran
+    thr = S.calibrate_edge_threshold(train_pairs.select("label", *S.FEATURE_COLS), model)
 
     gates = edge_gates(config, train_pairs, model)
     fp_cluster = _sha([fp["cluster"], thr, [(g.name, g.bar) for g in gates]])
@@ -765,15 +750,10 @@ def pairwise_f1(predicted_labels: DataFrame, truth_labels: DataFrame) -> dict:
     """Pairwise precision/recall/F1 of predicted clustering vs truth.
 
     Both inputs: (spec_id, cluster_id). Pairs = within-cluster pairs
-    (a < b). Computed distributed (no collect of pair sets)."""
-
-    def pairs_of(labels: DataFrame) -> DataFrame:
-        l1 = labels.select(F.col("spec_id").alias("a"), "cluster_id")
-        l2 = labels.select(F.col("spec_id").alias("b"), "cluster_id")
-        return l1.join(l2, "cluster_id").filter(F.col("a") < F.col("b")).select("a", "b")
-
-    pred = pairs_of(predicted_labels).cache()
-    true = pairs_of(truth_labels).cache()
+    (a < b, clustering.extract_matches). Computed distributed (no collect
+    of pair sets)."""
+    pred = C.extract_matches(predicted_labels).select("a", "b").cache()
+    true = C.extract_matches(truth_labels).select("a", "b").cache()
     tp = pred.join(true, ["a", "b"], "left_semi").count()
     n_pred = pred.count()
     n_true = true.count()

@@ -49,6 +49,7 @@ def main() -> None:
     bench.HARD_CORPUS_DIR = os.environ["SPARK_GRAFT_HARD_CORPUS"]
     from pyspark.sql import functions as F
 
+    from bigdataentityresolution_spark.operators.clustering import extract_matches
     from bigdataentityresolution_spark.session import get_spark
     from bigdataentityresolution_spark.plans.pipeline import (
         ERConfig,
@@ -76,12 +77,7 @@ def main() -> None:
         .filter(F.col("a") < F.col("b"))
         .select("a", "b", "kind")
     ).cache()
-    pred_pairs = (
-        labels.select(F.col("spec_id").alias("a"), "cluster_id")
-        .join(labels.select(F.col("spec_id").alias("b"), "cluster_id"), "cluster_id")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-    )
+    pred_pairs = extract_matches(labels).select("a", "b")
     missed = true_pairs.join(pred_pairs, ["a", "b"], "left_anti").cache()
 
     # candidates_all (r5+): both channels — attributing against the

@@ -9,6 +9,8 @@ import hashlib
 import shutil
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bigdataentityresolution_spark.operators import clustering as C
@@ -133,7 +135,7 @@ def test_checkpoint_resume_equivalence(spark, tiny_tables, tmp_path_factory):
     every stage (manifest hit) and produce identical clusters."""
     files_df, truth_df, pairs_df = tiny_tables
     wd = str(tmp_path_factory.mktemp("ckpt"))
-    cfg = P.ERConfig(self_train=False, newton_rounds=4)
+    cfg = P.ERConfig(self_train=False)
     r1 = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=cfg)
     r2 = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=cfg)
     assert _sorted_labels(r1) == _sorted_labels(r2)
@@ -195,7 +197,7 @@ def test_schedule_follows_stage_table(spark, pipeline_result, tiny_tables, tmp_p
     if mode == "cache":
         r = pipeline_result
     else:
-        cfg = P.ERConfig(self_train=False, newton_rounds=2)
+        cfg = P.ERConfig(self_train=False)
         r = P.run_er_pipeline(spark, files_df, pairs_df, workdir=str(tmp_path), config=cfg)
     m = r["runner"].manifests
     assert set(m) == set(P.STAGES)
@@ -252,18 +254,14 @@ def test_stage_fingerprint_cascade():
     sem_off = {"semantic_channel": False}
     # (base config fields, changed fields, changed source, changed stages)
     cases = [
-        ({}, {"edge_cosine_floor": 0.55}, {}, {"cluster"}),
-        ({}, {"per_block_cap": 32}, {}, {"candidates", "cand_features", "cluster"}),
-        ({}, {"semantic_topk": 3}, {}, {"sem_candidates", "cand_features", "cluster"}),
-        # with the channel off no semantic pair exists: its settings and
-        # its gate's must rerun nothing, not even cluster (which reads
-        # every other field)
-        (sem_off, {"semantic_topk": 3}, {}, set()),
-        (sem_off, {"semantic_block_cap": 16}, {}, set()),
-        (sem_off, {"edge_semantic_cosine_min": 0.4}, {}, set()),
-        (sem_off, {"edge_semantic_override": 0.9}, {}, set()),
-        ({}, {"cc_max_iter": 20}, {}, {"closure", "cluster"}),
-        ({}, {"shingle_n": 3}, {}, everything - {"postings", "top_vocab", "closure"}),
+        ({}, {"edge_override_jaccard_min": 0.2}, {}, {"cluster"}),
+        ({}, {"self_train": False}, {}, {"cluster"}),
+        ({}, {"sig_prefilter": 0.2}, {}, {"cand_features", "cluster"}),
+        ({}, {"sig_prefilter": None}, {}, {"cand_features", "cluster"}),
+        (sem_off, {"sig_prefilter": 0.2}, {}, {"cand_features", "cluster"}),
+        ({}, sem_off, {}, {"sem_candidates", "cand_features", "cluster"}),
+        ({}, {"bands": 16}, {}, {"blocking", "candidates", "cand_features", "cluster"}),
+        ({}, {"num_perm": 32, "bands": 16}, {}, everything - {"postings", "top_vocab", "closure"}),
         ({}, {}, {"files": [100, 7, 10]}, everything),
         ({}, {}, {"labels": [40, 4, 5]}, {"closure", "train_features", "cluster"}),
     ]
@@ -287,7 +285,7 @@ def test_closure_fingerprint_skips_packed_format():
     assert P.stage_fingerprints(cfg, sources)["closure"] != packed
 
 
-RESUME_CFG = P.ERConfig(self_train=False, newton_rounds=2)
+RESUME_CFG = P.ERConfig(self_train=False)
 
 
 @pytest.fixture(scope="module")
@@ -309,10 +307,10 @@ def _copy_workdir(base, tmp_path) -> str:
 @pytest.mark.parametrize(
     "change, rerun",
     [
-        ({"per_block_cap": 32}, {"candidates", "cand_features", "cluster"}),
-        ({"edge_cosine_floor": 0.55}, {"cluster"}),
+        ({"sig_prefilter": 0.2}, {"cand_features", "cluster"}),
+        ({"edge_override_jaccard_min": 0.2}, {"cluster"}),
     ],
-    ids=["per_block_cap", "edge_cosine_floor"],
+    ids=["sig_prefilter", "edge_override_jaccard_min"],
 )
 def test_resume_invalidates_on_config_change(
     spark, tiny_tables, base_workdir, tmp_path, change, rerun
@@ -322,7 +320,7 @@ def test_resume_invalidates_on_config_change(
     cfg = dataclasses.replace(RESUME_CFG, **change)
     r = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=cfg)
     assert _resumed(r) == set(P.STAGES) - rerun
-    if "edge_cosine_floor" in change:
+    if "edge_override_jaccard_min" in change:
         fresh = P.run_er_pipeline(spark, files_df, pairs_df, workdir=None, config=cfg)
         assert _sorted_labels(r) == _sorted_labels(fresh)
         fresh["runner"].release()
@@ -374,7 +372,7 @@ def test_degenerate_inputs(spark, tiny_tables, case):
     """Degenerate inputs give defined results, not a failure deep in a plan."""
     files_df, _, pairs_df = tiny_tables
     files_in, pairs_in = _degenerate_inputs(case, files_df, pairs_df)
-    cfg = P.ERConfig(self_train=False, newton_rounds=2)
+    cfg = P.ERConfig(self_train=False)
     r = P.run_er_pipeline(spark, files_in, pairs_in, workdir=None, config=cfg)
     bars = {g.name: g.bar for g in r["gates"]}
     n_labels = r["labels"].count()
@@ -397,7 +395,7 @@ def test_semantic_channel_without_prefilter(spark, tiny_tables):
     """sig_prefilter=None with the semantic channel on: every lexical
     candidate is featurized and the run still reaches labels."""
     files_df, _, pairs_df = tiny_tables
-    cfg = P.ERConfig(sig_prefilter=None, self_train=False, newton_rounds=2)
+    cfg = P.ERConfig(sig_prefilter=None, self_train=False)
     r = P.run_er_pipeline(spark, files_df, pairs_df, workdir=None, config=cfg)
     assert r["labels"].count() == files_df.count()
     r["runner"].release()
@@ -406,36 +404,40 @@ def test_semantic_channel_without_prefilter(spark, tiny_tables):
 @pytest.mark.parametrize(
     "kwargs",
     [
+        # num_perm and bands: ints of at least 1, and bands divides num_perm
         {"num_perm": 64, "bands": 30},
         {"bands": 0},
-        {"tf_mode": "sqrt"},
-        {"vocab_k": "big"},
-        {"vocab_k": 0},
-        {"vocab_k": True},
-        {"edge_threshold": "calibrated"},
-        {"edge_high_conf_override": "on"},
-        {"edge_semantic_override": "yes"},
-        {"cc_max_iter": 0},
-        {"cc_checkpoint_every": 0},
-        {"cc_checkpoint_every": -1},
         {"num_perm": 0},
-        {"shingle_n": 0},
-        {"per_block_cap": 0},
-        {"lev_bound": -1},
-        {"newton_rounds": 0},
-        {"self_train_limit_factor": 0},
-        {"semantic_topk": 0},
-        {"semantic_block_cap": 0},
-        {"max_df_ratio": 1.5},
+        {"bands": "4"},
+        {"num_perm": 64.0, "bands": 32.0},
+        {"num_perm": 64.0},
+        {"bands": 32.0},
+        {"bands": True},
+        {"num_perm": "64"},
+        {"num_perm": None},
+        # sig_prefilter: None (off) or a number in [0, 1]
         {"sig_prefilter": float("nan")},
-        {"edge_cosine_floor": -0.1},
-        {"edge_jaccard_floor": float("nan")},
+        {"sig_prefilter": True},
+        {"sig_prefilter": False},
+        {"sig_prefilter": "auto"},
+        {"sig_prefilter": "0.12"},
+        {"sig_prefilter": float("inf")},
+        # edge_override_jaccard_min: a number in [0, 1], never None
         {"edge_override_jaccard_min": 2.0},
-        {"edge_override_cosine_min": float("nan")},
-        {"edge_semantic_cosine_min": 1.01},
-        {"edge_threshold": float("nan")},
-        {"edge_high_conf_override": 1.2},
-        {"edge_semantic_override": -0.5},
+        {"edge_override_jaccard_min": None},
+        {"edge_override_jaccard_min": "auto"},
+        {"edge_override_jaccard_min": True},
+        {"edge_override_jaccard_min": float("-inf")},
+        # the switches: bools only
+        {"self_train": "no"},
+        {"self_train": 1},
+        {"self_train": 0},
+        {"self_train": None},
+        {"self_train": "auto"},
+        {"semantic_channel": None},
+        {"semantic_channel": 1},
+        {"semantic_channel": "yes"},
+        {"semantic_channel": 0.0},
     ],
 )
 def test_erconfig_rejects_invalid(kwargs):
@@ -443,11 +445,89 @@ def test_erconfig_rejects_invalid(kwargs):
         P.ERConfig(**kwargs)
 
 
+def test_erconfig_settable_fields():
+    """ERConfig holds the six settings a caller varies; the rest are
+    constants, read as config.x and named in the stage table."""
+    assert [f.name for f in dataclasses.fields(P.ERConfig)] == [
+        "num_perm", "bands", "sig_prefilter", "self_train",
+        "edge_override_jaccard_min", "semantic_channel",
+    ]
+    cfg = P.ERConfig()
+    assert (cfg.shingle_n, cfg.seed, cfg.per_block_cap) == (2, 42, 64)
+    # cluster's fingerprint reads the constants too
+    assert len(P.STAGES["cluster"][1]) == 26
+    with pytest.raises(TypeError):
+        P.ERConfig(per_block_cap=32)
+
+
+# Values a caller may pass by mistake: out of range, NaN, ±inf, None,
+# strings, bools, and floats where an int belongs.
+_ODD = st.sampled_from(
+    [0, -1, 2, 2.5, 64.0, float("nan"), float("inf"), float("-inf"), None,
+     "auto", "4", "", True, False]
+)
+_DECLARED = {
+    "int": st.sampled_from([1, 2, 16, 32, 64, 96]) | st.integers(1, 200),
+    "bool": st.booleans(),
+    "float": st.floats(0, 1),
+    "float | None": st.none() | st.floats(0, 1),
+}
+
+
+def test_config_space():
+    """Every ERConfig either raises ValueError at construction or is
+    accepted, and an accepted one gives all 11 stage fingerprints, None
+    exactly for sem_candidates when the channel is off (no Spark)."""
+    sources = {"files": [100, 7, 9], "labels": [40, 3, 5]}
+    seen = {"accepted": 0, "rejected": 0}
+
+    names = [f.name for f in dataclasses.fields(P.ERConfig)]
+
+    # each field from its declared type, then up to two of them odd
+    @settings(max_examples=600, derandomize=True, database=None, deadline=None)
+    @given(
+        st.fixed_dictionaries({f.name: _DECLARED[f.type] for f in dataclasses.fields(P.ERConfig)}),
+        st.dictionaries(st.sampled_from(names), _ODD, max_size=2),
+    )
+    def check(declared, odd):
+        kwargs = {**declared, **odd}
+        try:
+            cfg = P.ERConfig(**kwargs)
+        except ValueError:
+            seen["rejected"] += 1
+            return
+        seen["accepted"] += 1
+        fps = P.stage_fingerprints(cfg, sources)
+        assert set(fps) == set(P.STAGES)
+        off = set() if cfg.semantic_channel else {"sem_candidates"}
+        assert {s for s, v in fps.items() if v is None} == off
+        assert all(isinstance(v, str) and len(v) == 16 for s, v in fps.items() if s not in off)
+
+    check()
+    assert seen["accepted"] > 100 and seen["rejected"] > 100, seen
+
+
+def _gate_table(spark, config, bars):
+    """edge_gates(config) with each bar pinned (no calibration evidence
+    needed): the regions come from the config, the bars from ``bars``."""
+    from bigdataentityresolution_spark.operators import scoring as S
+
+    labeled = spark.createDataFrame(
+        [], "label int, f_cosine double, f_jaccard double, f_lev double, f_vocab_cov int"
+    )
+    gates = P.edge_gates(config, labeled, S.LRModel(weights=(0.0, 0.0, 0.0), bias=0.0))
+    return [g._replace(bar=bars[g.name]) for g in gates]
+
+
 def test_accept_path_gate_table(spark):
-    # Fixed bars, so the table needs no calibration: floors cos 0.5 / jacc
-    # 0.45; override jacc 0.12, cos 0.35, bar 0.9; semantic cos 0.35, bar 0.85.
-    with_sem = P.ERConfig(edge_high_conf_override=0.9, edge_semantic_override=0.85)
-    no_sem = P.ERConfig(edge_high_conf_override=0.9, edge_semantic_override=None)
+    # Pinned bars, so the table reads only the regions: floors cos 0.5 /
+    # jacc 0.45; override jacc 0.12, cos 0.35, bar 0.9; semantic cos 0.35,
+    # bar 0.85 (dropped with the channel off).
+    bars = {"floors": None, "override": 0.9, "semantic": 0.85}
+    with_sem = _gate_table(spark, P.ERConfig(), bars)
+    no_sem = _gate_table(spark, P.ERConfig(semantic_channel=False), bars)
+    assert [g.name for g in with_sem] == ["floors", "override", "semantic"]
+    assert [g.name for g in no_sem] == ["floors", "override"]
     # (f_cosine, f_jaccard, f_vocab_cov, proba, path, path without semantic)
     rows = [
         (0.6, 0.5, 5, 0.5, "floors", "floors"),          # inside floors
@@ -469,13 +549,9 @@ def test_accept_path_gate_table(spark):
         [r[:4] for r in rows],
         "f_cosine double, f_jaccard double, f_vocab_cov int, proba double",
     )
-    for cfg, col in ((with_sem, 4), (no_sem, 5)):
-        gates = P.edge_gates(cfg)
+    for gates, col in ((with_sem, 4), (no_sem, 5)):
         got = [r["path"] for r in df.select(P.accept_path(gates).alias("path")).collect()]
         assert got == [r[col] for r in rows]
-    assert [g.name for g in P.edge_gates(no_sem)] == ["floors", "override"]
-    no_channel = P.ERConfig(edge_high_conf_override=0.9, semantic_channel=False)
-    assert [g.name for g in P.edge_gates(no_channel)] == ["floors", "override"]
 
 
 def test_gate_calibration_uses_acceptance_region(spark):
@@ -487,7 +563,7 @@ def test_gate_calibration_uses_acceptance_region(spark):
 
     m_low = S.LRModel(weights=(-8.0, -8.0, 0.0), bias=-4.0)
     schema = "label int, f_cosine double, f_jaccard double, f_lev double, f_vocab_cov int"
-    cfg = P.ERConfig(edge_semantic_override=None)
+    cfg = P.ERConfig(semantic_channel=False)
     pos = [(1, 0.9, 0.8, 0.1, 5)] * 10
 
     def override_bar(vocab_cov):
