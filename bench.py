@@ -183,28 +183,23 @@ def bench_er_hard(spark) -> dict:
     }
 
 
-def _hard_recall_by_kind(predicted_labels, truth) -> dict:
-    """Attribute the hard tier's recall gap: attainable vs by-construction.
-
-    True pairs come only from hard_* (medium mutation — findable) and
-    orphan_* (heavy mutation — clone↔seed shingle Jaccard below the
-    candidate prefilter, unreachable by design) clusters; the kind is
-    encoded in the synthetic path (src/<kind>/...) carried inside
-    spec_id. recall_hard is the number that reflects engine quality;
-    recall_orphan ≈ 0 is the corpus doing its job."""
+def truth_pairs_by_kind(truth):
+    """(a, b, kind): every true pair of the hard tier, a < b, with its
+    kind — "hard" or "orphan", encoded in the synthetic path
+    (src/<kind>/...) carried inside spec_id; "" for neither."""
     from pyspark.sql import functions as F
 
     from bigdataentityresolution_spark.operators.clustering import extract_matches
 
-    kind = F.regexp_extract("spec_id", r"src/(hard|orphan)", 1)
-    t = truth.withColumn("kind", kind)
-    # Kind-homogeneity guard (ADVICE r4): the decomposition takes kind
-    # from side 'a' only, which is correct ONLY while every truth cluster
-    # is kind-homogeneous (true for generate_hard_corpus today). A future
+    kind = truth.select("spec_id", "cluster_id",
+                        F.regexp_extract("spec_id", r"src/(hard|orphan)", 1).alias("kind"))
+    # Kind-homogeneity guard (ADVICE r4): a pair takes its kind from side
+    # 'a' only, which is correct ONLY while every truth cluster is
+    # kind-homogeneous (true for generate_hard_corpus today). A future
     # corpus with mixed-kind clusters would silently skew the attribution;
     # fail loudly instead.
     n_mixed = (
-        t.groupBy("cluster_id")
+        kind.groupBy("cluster_id")
         .agg(F.count_distinct("kind").alias("nk"))
         .filter(F.col("nk") > 1)
         .count()
@@ -212,14 +207,26 @@ def _hard_recall_by_kind(predicted_labels, truth) -> dict:
     if n_mixed:
         raise RuntimeError(
             f"hard-corpus truth has {n_mixed} mixed-kind clusters; "
-            "_hard_recall_by_kind's side-a attribution no longer holds"
+            "the side-a kind attribution no longer holds"
         )
-    tp_pairs = (
-        t.select(F.col("spec_id").alias("a"), "cluster_id", "kind")
-        .join(t.select(F.col("spec_id").alias("b"), "cluster_id"), "cluster_id")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "kind")
-    )
+    return extract_matches(truth).join(
+        kind.select(F.col("spec_id").alias("a"), "kind"), "a"
+    ).select("a", "b", "kind")
+
+
+def _hard_recall_by_kind(predicted_labels, truth) -> dict:
+    """Attribute the hard tier's recall gap: attainable vs by-construction.
+
+    True pairs come only from hard_* (medium mutation — findable) and
+    orphan_* (heavy mutation — clone↔seed shingle Jaccard below the
+    candidate prefilter, unreachable by design) clusters
+    (truth_pairs_by_kind). recall_hard is the number that reflects
+    engine quality; recall_orphan ≈ 0 is the corpus doing its job."""
+    from pyspark.sql import functions as F
+
+    from bigdataentityresolution_spark.operators.clustering import extract_matches
+
+    tp_pairs = truth_pairs_by_kind(truth)
     pred_pairs = extract_matches(predicted_labels).select("a", "b", F.lit(1).alias("hit"))
     rows = (
         tp_pairs.join(pred_pairs, ["a", "b"], "left")

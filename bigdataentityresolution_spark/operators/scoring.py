@@ -408,7 +408,8 @@ def _ridge_penalty(d: int, ridge: float, n_total: int) -> np.ndarray:
 
 
 # The most rows the driver reads in one collect: the IRLS fit's driver
-# path ((d+1) float64s per row — 2M pairs ≈ 64 MB) and both calibrations.
+# path ((d+1) float64s per row — 2M pairs ≈ 64 MB) and the calibration
+# read (plans.pipeline.edge_gates).
 DRIVER_MAX_ROWS = 2_000_000
 
 
@@ -533,13 +534,9 @@ def fit_lr_newton(
     return model
 
 
-def calibrate_edge_threshold(
-    labeled_pairs: DataFrame,
-    model: LRModel,
-    feature_cols: tuple[str, ...] = FEATURE_COLS,
-    label_col: str = "label",
-) -> float:
-    """F1-maximizing decision threshold on the labeled pairs.
+def calibrate_edge_threshold(label: np.ndarray, proba: np.ndarray, fallback: float) -> float:
+    """F1-maximizing decision threshold over labeled pairs' ``label``
+    (0/1) and ``proba`` arrays.
 
     Why this exists: the reference's moving threshold
     (logistic_overfit_dataList, src/logistic.c:693-734 — kept verbatim in
@@ -555,22 +552,16 @@ def calibrate_edge_threshold(
     edge floors).
 
     Driver-local by design: labeled pairs are the small relation of the
-    problem (the IRLS driver path's ordered read); more than
-    DRIVER_MAX_ROWS of them raise ValueError. Falls back to
-    model.threshold when the labels are single-class.
+    problem, read once for every calibration (plans.pipeline.edge_gates).
+    The result does not depend on the rows' order. Falls back to
+    ``fallback`` (the model's own threshold) when the labels are
+    single-class.
     """
-    pdf = _driver_rows(
-        predict(labeled_pairs, model, feature_cols).select(
-            F.col("proba"), F.col(label_col).cast("double").alias("label")
-        )
-    )
-    if pdf is None:
-        raise ValueError(f"more than DRIVER_MAX_ROWS={DRIVER_MAX_ROWS} labeled pairs to calibrate on")
-    y = pdf["label"].to_numpy(dtype=np.float64)
-    p = pdf["proba"].to_numpy(dtype=np.float64)
+    y = np.asarray(label, dtype=np.float64)
+    p = np.asarray(proba, dtype=np.float64)
     n_pos = float((y == 1.0).sum())
     if n_pos == 0 or n_pos == len(y):
-        return model.threshold
+        return fallback
     order = np.argsort(-p)
     p_sorted, y_sorted = p[order], y[order]
     tp = np.cumsum(y_sorted)
@@ -585,18 +576,17 @@ def calibrate_edge_threshold(
     return float(min((hi + lo) / 2.0, hi - 1e-12))
 
 
-def calibrate_override_bar(
-    labeled_pairs: DataFrame,
-    model: LRModel,
-    region: Column,
-    feature_cols: tuple[str, ...] = FEATURE_COLS,
-    label_col: str = "label",
-    floor: float = 0.8,
-    cap: float = 0.99,
-    margin: float = 0.02,
-    min_n: int = 150,
-) -> float:
-    """Calibrate the high-confidence override bar on the labeled pairs.
+# The override bar's clamp [BAR_FLOOR, BAR_CAP], its least headroom and
+# its evidence gate (calibrate_override_bar gives each value's reason).
+BAR_FLOOR = 0.8
+BAR_CAP = 0.99
+BAR_MARGIN = 0.02
+BAR_MIN_N = 150
+
+
+def calibrate_override_bar(neg_proba: np.ndarray) -> float:
+    """Calibrate a high-confidence override bar on ``neg_proba``: the
+    probas of the labeled NEGATIVE pairs inside the bar's gate region.
 
     The override accepts an edge under RELAXED similarity floors when the
     model is sufficiently confident; the question is what "sufficiently"
@@ -604,24 +594,24 @@ def calibrate_override_bar(
     adversarial clones score proba 0.95-0.98 and a 0.98 bar rejects all
     of them — recall 0.69) or unsafe on a corpus whose negatives the
     model scores high. Calibration answers it directly: the bar is the
-    max proba any LABELED NEGATIVE inside the gate's ``region`` achieves,
+    max proba any LABELED NEGATIVE inside the gate's region achieves,
     plus a margin — i.e. the smallest bar the evidence says no
-    known-negative clears — clamped to [floor, cap].
+    known-negative clears — clamped to [BAR_FLOOR, BAR_CAP].
 
-    **Lowering the bar below ``cap`` requires POSITIVE evidence.** If
-    fewer than ``min_n`` labeled negatives fall inside the region, the
+    **Lowering the bar below BAR_CAP requires POSITIVE evidence.** If
+    fewer than BAR_MIN_N labeled negatives fall inside the region, the
     sample says nothing about the high-proba tail of the corpus's
-    in-region negatives, and the bar stays at ``cap``. Absence of
+    in-region negatives, and the bar stays at the cap. Absence of
     evidence is not favorable evidence — measured r4: on the standard
     bench corpus ZERO labeled negatives pass the relaxed floors, and an
-    earlier draft that fell back to ``floor`` admitted 117 cross-cluster
+    earlier draft that fell back to the floor admitted 117 cross-cluster
     false edges scoring 0.80-0.898 (pairwise precision 1.0 -> 0.970),
     none of which any labeled pair foreshadowed. On the hard tier 381
     labeled negatives pass (max proba 0.177) — there the evidence is
     real, the floor bar is granted, and it admits 11.7k true low-overlap
     clone edges with zero false ones.
 
-    ``min_n=150`` is the rule of three: n all-clean negative samples in
+    BAR_MIN_N = 150 is the rule of three: n all-clean negative samples in
     the region bound the region's true high-proba negative rate below
     ~3/n at 95% confidence, so n=150 certifies ≲2%; the r4 value of 30
     certified only ≲10%, and the tiny hard corpus (46 in-region
@@ -633,51 +623,38 @@ def calibrate_override_bar(
     lower lev ⇒ clone not boilerplate) is genuine generalizing signal,
     not pathology.
 
-    ``floor`` defaults to 0.8, the reference's own confidence clamp
+    BAR_FLOOR = 0.8 is the reference's own confidence clamp
     (logistic_overfit_dataList's threshold ceiling, src/logistic.c:734):
     no matter how clean the labeled negatives look, an override below
     that structural minimum is never granted, because a finite labeled
     negative sample can still under-represent the corpus's negative
     shapes.
 
-    Driver-local like calibrate_edge_threshold: labeled pairs are the
-    problem's small relation; more than DRIVER_MAX_ROWS in-region labeled
-    negatives raise ValueError.
-
-    ``region`` is the acceptance gate's own region predicate over the
-    feature columns (plans.pipeline.edge_gates), so the evidence that
-    grants a bar is drawn from exactly the pairs the bar admits — e.g.
-    the SEMANTIC gate's region IS "cosine at least cmin", and the
-    (numerous, low-proba) zero-cosine labeled negatives outside it must
-    not dilute the in-region evidence.
+    The region is the acceptance gate's own (plans.pipeline.edge_gates
+    selects ``neg_proba`` by it), so the evidence that grants a bar is
+    drawn from exactly the pairs the bar admits — e.g. the SEMANTIC
+    gate's region IS "cosine at least cmin", and the (numerous,
+    low-proba) zero-cosine labeled negatives outside it must not dilute
+    the in-region evidence.
     """
-    pdf = _driver_rows(
-        predict(labeled_pairs, model, feature_cols)
-        .filter((F.col(label_col) == 0) & region)
-        .select("proba")
-    )
-    if pdf is None:
-        raise ValueError(
-            f"more than DRIVER_MAX_ROWS={DRIVER_MAX_ROWS} in-region labeled negatives to calibrate on"
-        )
-    if len(pdf) < int(min_n):
-        return float(cap)
-    worst = float(pdf["proba"].max())
+    if len(neg_proba) < BAR_MIN_N:
+        return BAR_CAP
+    worst = float(np.max(neg_proba))
     # Headroom rule (r4): the bar must stand clear of the worst labeled
     # negative by at least half its remaining distance to certainty, not
-    # a flat 0.02. A labeled-negative max is an n-sample extreme — the
-    # corpus's unlabeled negative tail WILL exceed it — so a worst near
-    # the floor (say 0.78) must not be granted a bar of 0.80 with only
-    # 0.02 of room; it gets 0.89. When the model separates sharply
+    # a flat BAR_MARGIN. A labeled-negative max is an n-sample extreme —
+    # the corpus's unlabeled negative tail WILL exceed it — so a worst
+    # near the floor (say 0.78) must not be granted a bar of 0.80 with
+    # only 0.02 of room; it gets 0.89. When the model separates sharply
     # (bench-scale hard tier: worst 0.177), the rule is inactive — the
     # floor clamp binds and the grant is unchanged. Note this rule is a
     # BACKSTOP for moderate worsts; the tiny-corpus failure mode (all
     # labeled negatives ≤ 0.6 yet an unlabeled pocket at 0.80-0.86,
     # because the thin-sample fit's geometry differs from the tail's) is
-    # caught by the min_n evidence gate above, not by any margin on the
-    # max.
-    headroom = max(margin, 0.5 * (1.0 - worst))
-    return float(min(max(worst + headroom, floor), cap))
+    # caught by the BAR_MIN_N evidence gate above, not by any margin on
+    # the max.
+    headroom = max(BAR_MARGIN, 0.5 * (1.0 - worst))
+    return float(min(max(worst + headroom, BAR_FLOOR), BAR_CAP))
 
 
 def accuracy(scored: DataFrame, label_col: str = "label") -> float:

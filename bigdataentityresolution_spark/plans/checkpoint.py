@@ -31,10 +31,10 @@ MANIFEST = "_manifest.json"
 class StageRunner:
     """Runs named stages with parquet checkpoints and manifest-gated resume."""
 
-    def __init__(self, spark: SparkSession, workdir: str | None, enabled: bool = True):
+    def __init__(self, spark: SparkSession, workdir: str | None):
         self.spark = spark
         self.workdir = workdir
-        self.enabled = enabled and workdir is not None
+        self.enabled = workdir is not None
         self.manifests: dict[str, dict] = {}
         self.cached: list[DataFrame] = []  # cached stage outputs (unpersist via release())
         if self.enabled:

@@ -248,12 +248,11 @@ _ADMITS = {
 # out of sync.
 # No stage reads blocking (the band membership; candidates re-derives its
 # band keys with the sketches attached, which saves a join back to them).
-# It stays a stage because it is the pipeline's membership output
-# (result["membership"]) and a resumable layer the benchmark counts: the
-# partial-resume check expects it among the 7 reused stages and the
-# per-layer metrics name blocking.blocking.*. Being read by none, it is
-# never counted in cache mode (it stays lazy), and in checkpoint mode its
-# write overlaps candidates.
+# It stays a stage only because the benchmark counts it: the partial-resume
+# check expects it among the 7 reused stages and the per-layer metrics name
+# blocking.blocking.*. Being read by none, it is never counted in cache
+# mode (it stays lazy), and in checkpoint mode its write overlaps
+# candidates.
 ALL_FIELDS = tuple(ERConfig.__annotations__)
 STAGES: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
     "signatures": (("files",), ("shingle_n", "num_perm", "seed")),
@@ -310,16 +309,20 @@ class Gate(NamedTuple):
     bar: float | None
 
 
-def edge_gates(config: ERConfig, labeled: DataFrame, model: S.LRModel) -> list[Gate]:
-    """The ordered edge-acceptance table derived from ``config``:
+def edge_gates(config: ERConfig, labeled: DataFrame, model: S.LRModel) -> tuple[float, list[Gate]]:
+    """The edge threshold and the ordered edge-acceptance table derived
+    from ``config``:
 
       floors    full cosine + est-Jaccard floors, no bar beyond the threshold
       override  relaxed floors + the high-confidence bar
       semantic  exact-cosine floor + its own bar (semantic channel only)
 
-    Each bar is calibrated on ``labeled`` (label + feature columns +
-    f_vocab_cov) under ``model`` over the gate's own region, so the
-    region that grants the bar is exactly the region it admits.
+    The threshold and every bar are calibrated on ``labeled`` (label +
+    feature columns + f_vocab_cov) under ``model`` from ONE ordered driver
+    read (label, proba, and an in-region flag per barred gate); each bar
+    over its gate's own region, so the region that grants the bar is
+    exactly the region it admits. Past DRIVER_MAX_ROWS it raises
+    ValueError rather than calibrate on an arbitrary subset.
 
     A cosine floor exempts pairs where either doc has an EMPTY vocab
     projection (f_vocab_cov == 0, so f_cosine is identically 0): they
@@ -343,8 +346,16 @@ def edge_gates(config: ERConfig, labeled: DataFrame, model: S.LRModel) -> list[G
     }
     if config.semantic_channel:
         regions["semantic"] = cos >= F.lit(config.edge_semantic_cosine_min)
-    return [Gate("floors", floors, None)] + [
-        Gate(name, region, S.calibrate_override_bar(labeled, model, region))
+    pdf = S._driver_rows(labeled.select(
+        F.col("label").cast("double").alias("label"), S.proba_expr(model).alias("proba"),
+        *[F.coalesce(r, F.lit(False)).alias(name) for name, r in regions.items()],
+    ))
+    if pdf is None:
+        raise ValueError(f"more than DRIVER_MAX_ROWS={S.DRIVER_MAX_ROWS} labeled pairs to calibrate on")
+    thr = S.calibrate_edge_threshold(pdf["label"].to_numpy(), pdf["proba"].to_numpy(), model.threshold)
+    neg = pdf[pdf["label"] == 0.0]
+    return thr, [Gate("floors", floors, None)] + [
+        Gate(name, region, S.calibrate_override_bar(neg["proba"][neg[name]].to_numpy()))
         for name, region in regions.items()
     ]
 
@@ -357,6 +368,14 @@ def accept_path(gates: list[Gate]) -> Column:
         ok = g.region if g.bar is None else g.region & (F.col("proba") >= F.lit(g.bar))
         path = F.when(ok, g.name) if path is None else path.when(ok, g.name)
     return path
+
+
+def union_pairs(channels: list[DataFrame]) -> DataFrame:
+    """The (a, b, est_j) pairs of every candidate channel, each pair once.
+    est_j is a pure function of the pair, so max() keeps its one value;
+    one channel needs no dedup."""
+    pairs = reduce(DataFrame.unionByName, channels)
+    return pairs if len(channels) == 1 else pairs.groupBy("a", "b").agg(F.max("est_j").alias("est_j"))
 
 
 def doc_state(
@@ -558,16 +577,11 @@ def run_er_pipeline(
     # after it. Prefiltering each channel BEFORE the union keeps ~10% of the
     # lexical side, so the dedup shuffle sees ~0.4M rows at bench scale
     # instead of the 4M raw union (measured: filtering after the union
-    # cost ~1 full pair shuffle of mostly-dead rows). est_j is a pure
-    # function of the pair, so max() is a no-op on duplicates; one
-    # channel needs no dedup.
+    # cost ~1 full pair shuffle of mostly-dead rows).
     def cand_features(o):
-        chans = channels(o)
-        cand = reduce(DataFrame.unionByName, [
-            c if p is None else c.filter(F.col("est_j") >= F.lit(float(p))) for c, p in chans
+        cand = union_pairs([
+            c if p is None else c.filter(F.col("est_j") >= F.lit(float(p))) for c, p in channels(o)
         ])
-        if len(chans) > 1:
-            cand = cand.groupBy("a", "b").agg(F.max("est_j").alias("est_j"))
         return S.pair_features(cand, o["prep"], config.lev_bound).select(
             "a", "b", *S.FEATURE_COLS, "f_vocab_cov"
         )
@@ -653,9 +667,7 @@ def run_er_pipeline(
     # the reference adds no predicted edges at all).
     # calibrated on the TRUE labeled pairs (never on pseudo-labels), after
     # the self-train refit if one ran
-    thr = S.calibrate_edge_threshold(train_pairs.select("label", *S.FEATURE_COLS), model)
-
-    gates = edge_gates(config, train_pairs, model)
+    thr, gates = edge_gates(config, train_pairs, model)
     fp_cluster = _sha([fp["cluster"], thr, [(g.name, g.bar) for g in gates]])
     label_clusters = outs["closure"]
 
@@ -688,16 +700,10 @@ def run_er_pipeline(
         )
 
     outs.update(run_stages(runner, {"cluster": final_cluster}, {"cluster": fp_cluster})[0])
-    pairs = [c.select("a", "b") for c, _ in channels(outs)]
-    candidates_all = (
-        reduce(DataFrame.unionByName, pairs).distinct() if len(pairs) > 1 else outs["candidates"]
-    )
     return {
-        "docs_prep": outs["prep"],
-        "membership": outs["blocking"],
         "candidates": outs["candidates"],
         "sem_candidates": outs.get("sem_candidates"),
-        "candidates_all": candidates_all,
+        "candidates_all": union_pairs([c for c, _ in channels(outs)]),
         "label_clusters": label_clusters,
         "train_pairs": train_pairs,
         "model": model,
@@ -757,6 +763,8 @@ def pairwise_f1(predicted_labels: DataFrame, truth_labels: DataFrame) -> dict:
     tp = pred.join(true, ["a", "b"], "left_semi").count()
     n_pred = pred.count()
     n_true = true.count()
+    pred.unpersist()
+    true.unpersist()
     precision = tp / n_pred if n_pred else 1.0
     recall = tp / n_true if n_true else 1.0
     f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0

@@ -1,19 +1,22 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans for headline operators.
+"""Regenerate PLANS.md's formatted physical plans for headline operators.
 
 Plan-only (no jobs run). Each section demonstrates a property the engine
 is designed around: parquet pushdown/pruning, map-side partial
-aggregation, broadcast pruning joins, whole-stage codegen spans.
+aggregation, broadcast pruning joins, whole-stage codegen spans. Every
+other section of PLANS.md is kept byte-for-byte.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 SF = "/root/testdata/sf0.01"
 
@@ -23,6 +26,17 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue().strip()
+
+
+def merge_sections(text: str, generated: dict[str, str]) -> str:
+    """``text`` (a markdown file of ``## `` sections) with each section
+    whose title is a key of ``generated`` replaced by that value, in
+    place; the generated sections it lacks are appended. Everything else
+    is kept as it is."""
+    head, *sections = re.split(r"(?m)^(?=## )", text)
+    generated = dict(generated)
+    kept = [generated.pop(s.split("\n", 1)[0][3:], s) for s in sections]
+    return head + "".join(kept + list(generated.values()))
 
 
 def main() -> None:
@@ -117,14 +131,10 @@ def main() -> None:
         plan_of(q1),
     ))
 
-    out = ["# PLANS — physical plans of headline operators",
-           "",
-           "Regenerate with `python scripts/explain_plans.py`. Each section",
-           "names the plan property the engine is designed around.",
-           ""]
-    for title, why, plan in sections:
-        out += [f"## {title}", "", why, "", "```", plan, "```", ""]
-    Path("/root/repo/PLANS.md").write_text("\n".join(out))
+    path = REPO / "PLANS.md"
+    path.write_text(merge_sections(path.read_text(), {
+        title: f"## {title}\n\n{why}\n\n```\n{plan}\n```\n\n" for title, why, plan in sections
+    }))
     print("wrote PLANS.md", sum(len(s[2]) for s in sections), "chars of plans")
     spark.stop()
 

@@ -69,14 +69,7 @@ def main() -> None:
     print(f"pipeline: {time.time() - t0:.1f}s  thr={result['edge_threshold']:.4f} "
           f"gates={ {g.name: g.bar for g in gates} }")
 
-    kind = F.regexp_extract("spec_id", r"src/(hard|orphan)", 1)
-    t = truth.withColumn("kind", kind)
-    true_pairs = (
-        t.select(F.col("spec_id").alias("a"), "cluster_id", "kind")
-        .join(t.select(F.col("spec_id").alias("b"), "cluster_id"), "cluster_id")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "kind")
-    ).cache()
+    true_pairs = bench.truth_pairs_by_kind(truth).cache()
     pred_pairs = extract_matches(labels).select("a", "b")
     missed = true_pairs.join(pred_pairs, ["a", "b"], "left_anti").cache()
 

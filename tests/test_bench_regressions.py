@@ -73,3 +73,21 @@ def test_latest_committed_bench_carries_quality_keys():
     assert {"er_hard", "hotkey_capped", "hotkey_salted"} <= set(prior), (
         f"latest BENCH_r*.json queries missing quality keys: {sorted(prior)}"
     )
+
+
+def test_explain_plans_replaces_only_its_sections():
+    """scripts/explain_plans.py rewrites the PLANS.md sections it
+    generates, in place, appends the ones missing, and keeps every other
+    section byte-for-byte."""
+    from scripts.explain_plans import merge_sections
+
+    text = (Path(__file__).resolve().parent.parent / "PLANS.md").read_text()
+    assert merge_sections(text, {}) == text
+    title = "TF counting: map-side partial aggregation"
+    start = text.index(f"## {title}\n")
+    old = text[start:text.index("\n## ", start) + 1]
+    new = f"## {title}\n\nregenerated\n\n"
+    added = "## Brand new\n\nplan\n\n"
+    out = merge_sections(text, {title: new, "Brand new": added})
+    assert out == text.replace(old, new) + added
+    assert merge_sections("", {title: new}).endswith(new)

@@ -122,6 +122,37 @@ def test_decisions_independent_of_partitioning(spark, pipeline_result, tiny_tabl
             spark.conf.set("spark.sql.shuffle.partitions", prior)
 
 
+def test_one_calibration_read(spark, pipeline_result, tiny_tables, monkeypatch):
+    """A run reads the driver three times: the fit, the self-train refit,
+    and one calibration read for the threshold and every gate bar
+    (pipeline.edge_gates), with the same decisions."""
+    from bigdataentityresolution_spark.operators import scoring as S
+
+    files_df, _, pairs_df = tiny_tables
+    reads = []
+    driver_rows = S._driver_rows
+    monkeypatch.setattr(S, "_driver_rows", lambda df: reads.append(df.columns) or driver_rows(df))
+    r = P.run_er_pipeline(spark, files_df, pairs_df, workdir=None)
+    assert _decisions(r) == _decisions(pipeline_result)
+    r["runner"].release()
+    features = [*S.FEATURE_COLS, "label"]
+    assert reads == [features, features, ["label", "proba", "override", "semantic"]]
+
+
+def test_pairwise_f1_leaves_no_cache(spark, tiny_tables):
+    """pairwise_f1 unpersists the pair relations it caches."""
+    _, truth_df, _ = tiny_tables
+    truth_df.count()
+
+    def cached_rdds() -> set:
+        return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_rdds()
+    for _ in range(2):
+        assert P.pairwise_f1(truth_df, truth_df)["f1"] == 1.0
+    assert cached_rdds() == before
+
+
 def _resumed(result) -> set:
     return {s for s, m in result["runner"].manifests.items() if m.get("resumed")}
 
@@ -515,7 +546,7 @@ def _gate_table(spark, config, bars):
     labeled = spark.createDataFrame(
         [], "label int, f_cosine double, f_jaccard double, f_lev double, f_vocab_cov int"
     )
-    gates = P.edge_gates(config, labeled, S.LRModel(weights=(0.0, 0.0, 0.0), bias=0.0))
+    _, gates = P.edge_gates(config, labeled, S.LRModel(weights=(0.0, 0.0, 0.0), bias=0.0))
     return [g._replace(bar=bars[g.name]) for g in gates]
 
 
@@ -568,7 +599,7 @@ def test_gate_calibration_uses_acceptance_region(spark):
 
     def override_bar(vocab_cov):
         df = spark.createDataFrame([(0, 0.0, 0.3, 0.5, vocab_cov)] * 160 + pos, schema)
-        return {g.name: g.bar for g in P.edge_gates(cfg, df, m_low)}["override"]
+        return {g.name: g.bar for g in P.edge_gates(cfg, df, m_low)[1]}["override"]
 
     assert override_bar(3) == 0.99
     assert override_bar(0) == 0.8

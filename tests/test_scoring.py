@@ -343,84 +343,99 @@ def test_prune_weak_examples_boundaries(spark):
     assert kept == {1, 4, 5, 7}
 
 
-def _region():
-    """The relaxed region the tests calibrate over."""
-    return (F.col("f_jaccard") >= 0.2) & (F.col("f_cosine") >= 0.35)
+def _neg_in_region(rows, m):
+    """The probas under ``m`` of the labeled negatives among ``rows``
+    ((label, f_cosine, f_jaccard, f_lev)) inside the relaxed region
+    est-J >= 0.2, cos >= 0.35: what pipeline.edge_gates hands
+    calibrate_override_bar."""
+    x = np.asarray(rows, dtype=np.float64)
+    proba = 1 / (1 + np.exp(-(m.bias + x[:, 1:] @ np.asarray(m.weights))))
+    region = (x[:, 2] >= 0.2) & (x[:, 1] >= 0.35)
+    return proba[(x[:, 0] == 0) & region]
 
 
-def _pairs_df(spark, rows):
-    """rows: (label, f_cosine, f_jaccard, f_lev)"""
-    return spark.createDataFrame(
-        rows, "label int, f_cosine double, f_jaccard double, f_lev double"
-    )
-
-
-def test_calibrate_override_bar_requires_evidence(spark):
-    """Lowering the bar below cap needs >= min_n labeled negatives IN the
-    relaxed region (r4 measured failure: the standard bench corpus has
-    ZERO such negatives, yet holds 117 cross-cluster pairs scoring
+def test_calibrate_override_bar_requires_evidence():
+    """Lowering the bar below cap needs >= BAR_MIN_N labeled negatives IN
+    the relaxed region (r4 measured failure: the standard bench corpus
+    has ZERO such negatives, yet holds 117 cross-cluster pairs scoring
     0.80-0.898 there — an empty sample must yield cap, not floor)."""
     m = S.LRModel(weights=(1.0, 1.0, 0.0), bias=0.0)
     # all negatives BELOW the relaxed floors -> empty evidence -> cap
-    df = _pairs_df(
-        spark,
-        [(0, 0.1, 0.05, 0.9), (0, 0.2, 0.1, 0.8), (1, 0.9, 0.8, 0.1)] * 20,
-    )
-    bar = S.calibrate_override_bar(df, m, _region())
-    assert bar == 0.99
+    rows = [(0, 0.1, 0.05, 0.9), (0, 0.2, 0.1, 0.8), (1, 0.9, 0.8, 0.1)] * 20
+    assert len(_neg_in_region(rows, m)) == 0
+    assert S.calibrate_override_bar(_neg_in_region(rows, m)) == 0.99
 
     # negatives in the region but fewer than min_n -> still cap
-    few = _pairs_df(spark, [(0, 0.5, 0.3, 0.5)] * 5 + [(1, 0.9, 0.8, 0.1)] * 5)
-    bar = S.calibrate_override_bar(few, m, _region())
-    assert bar == 0.99
+    few = [(0, 0.5, 0.3, 0.5)] * 5 + [(1, 0.9, 0.8, 0.1)] * 5
+    assert S.calibrate_override_bar(_neg_in_region(few, m)) == 0.99
 
 
-def test_calibrate_override_bar_with_evidence(spark):
-    """With a real in-region negative sample (>= min_n=150, the
+def test_calibrate_override_bar_with_evidence():
+    """With a real in-region negative sample (>= BAR_MIN_N=150, the
     rule-of-three evidence gate) the bar is max(neg proba) + headroom,
     clamped to [floor, cap] — low-scoring negatives grant the floor
     (hard-tier shape: 381 negatives, max proba 0.177 -> bar 0.8)."""
     # strongly negative weights -> all probas tiny -> floor clamp
     m_low = S.LRModel(weights=(-8.0, -8.0, 0.0), bias=-4.0)
-    df = _pairs_df(
-        spark, [(0, 0.5, 0.3, 0.5)] * 160 + [(1, 0.9, 0.8, 0.1)] * 10
-    )
-    assert S.calibrate_override_bar(df, m_low, _region()) == 0.8
+    rows = [(0, 0.5, 0.3, 0.5)] * 160 + [(1, 0.9, 0.8, 0.1)] * 10
+    assert S.calibrate_override_bar(_neg_in_region(rows, m_low)) == 0.8
 
     # below min_n in-region negatives: no grant, bar stays at cap —
     # 46 negatives walked 120 false cluster pairs through the r4
     # min_n=30 gate on the tiny hard corpus
-    df_thin = _pairs_df(
-        spark, [(0, 0.5, 0.3, 0.5)] * 40 + [(1, 0.9, 0.8, 0.1)] * 10
-    )
-    assert S.calibrate_override_bar(df_thin, m_low, _region()) == 0.99
+    thin = [(0, 0.5, 0.3, 0.5)] * 40 + [(1, 0.9, 0.8, 0.1)] * 10
+    assert S.calibrate_override_bar(_neg_in_region(thin, m_low)) == 0.99
 
     # a high-scoring in-region negative pushes the bar to worst +
     # headroom, where headroom = max(margin, half the distance to
     # certainty) — a near-1 worst negative demands proportional room
     m_hi = S.LRModel(weights=(4.0, 4.0, 0.0), bias=0.0)
-    bar = S.calibrate_override_bar(df, m_hi, _region())
-    import numpy as np
-
+    bar = S.calibrate_override_bar(_neg_in_region(rows, m_hi))
     worst = 1 / (1 + np.exp(-(4.0 * 0.5 + 4.0 * 0.3)))
     headroom = max(0.02, 0.5 * (1.0 - worst))
     assert abs(bar - min(max(worst + headroom, 0.8), 0.99)) < 1e-9
 
 
+def test_calibrate_edge_threshold():
+    """The F1-argmax cut between two distinct probas, never between equal
+    ones, tie-broken toward the higher threshold; the rows' order does not
+    matter, and single-class labels give the fallback."""
+    y = np.array([1, 1, 0, 0, 1, 0], dtype=np.float64)
+    p = np.array([0.9, 0.8, 0.3, 0.1, 0.8, 0.8])
+    # accepting the three 0.8s with the 0.9 (3 tp, 1 fp) beats 0.9 alone
+    # (1 tp): F1 6/7 vs 1/2; the cut sits midway to 0.3
+    assert S.calibrate_edge_threshold(y, p, 0.5) == (0.8 + 0.3) / 2
+    rev = np.arange(len(y))[::-1]
+    assert S.calibrate_edge_threshold(y[rev], p[rev], 0.5) == (0.8 + 0.3) / 2
+    # F1 ties (0.9 alone, or every pair: both 2/3): the higher cut wins
+    assert S.calibrate_edge_threshold(
+        np.array([1, 0, 0, 1.0]), np.array([0.9, 0.2, 0.2, 0.1]), 0.5
+    ) == (0.9 + 0.2) / 2
+    assert S.calibrate_edge_threshold(np.ones(4), p[:4], 0.61) == 0.61
+    assert S.calibrate_edge_threshold(np.zeros(0), np.zeros(0), 0.5) == 0.5
+
+
 def test_calibration_rejects_more_rows_than_driver_max(spark, monkeypatch):
     """Past DRIVER_MAX_ROWS a limit would calibrate on an arbitrary subset
-    of the labeled pairs; both calibrations raise instead, and accept
-    exactly DRIVER_MAX_ROWS rows."""
+    of the labeled pairs; the one calibration read (pipeline.edge_gates)
+    raises instead, and accepts exactly DRIVER_MAX_ROWS rows with the
+    same threshold and bars."""
+    from bigdataentityresolution_spark.plans import pipeline as P
+
     m = S.LRModel(weights=(-8.0, -8.0, 0.0), bias=-4.0)
-    df = _pairs_df(spark, [(0, 0.5, 0.3, 0.5)] * 160 + [(1, 0.9, 0.8, 0.1)] * 10)
-    thr = S.calibrate_edge_threshold(df, m)
+    df = spark.createDataFrame(
+        [(0, 0.5, 0.3, 0.5, 5)] * 160 + [(1, 0.9, 0.8, 0.1, 5)] * 10,
+        "label int, f_cosine double, f_jaccard double, f_lev double, f_vocab_cov int",
+    )
+
+    def decisions():
+        thr, gates = P.edge_gates(P.ERConfig(), df, m)
+        return thr, [(g.name, g.bar) for g in gates]
+
+    expected = decisions()
+    assert expected[1] == [("floors", None), ("override", 0.8), ("semantic", 0.8)]
     monkeypatch.setattr(S, "DRIVER_MAX_ROWS", 169)
     with pytest.raises(ValueError, match="DRIVER_MAX_ROWS=169"):
-        S.calibrate_edge_threshold(df, m)
-    monkeypatch.setattr(S, "DRIVER_MAX_ROWS", 159)
-    with pytest.raises(ValueError, match="DRIVER_MAX_ROWS=159"):
-        S.calibrate_override_bar(df, m, _region())
+        decisions()
     monkeypatch.setattr(S, "DRIVER_MAX_ROWS", 170)
-    assert S.calibrate_edge_threshold(df, m) == thr
-    monkeypatch.setattr(S, "DRIVER_MAX_ROWS", 160)
-    assert S.calibrate_override_bar(df, m, _region()) == 0.8
+    assert decisions() == expected
