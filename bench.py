@@ -36,29 +36,28 @@ CORPUS_DIR = os.environ.get(
 )
 
 
-def ensure_corpus(spark):
-    """Materialize the synthetic corpus as parquet (once; deterministic)."""
-    files_path = os.path.join(CORPUS_DIR, "files")
-    pairs_path = os.path.join(CORPUS_DIR, "pairs")
-    truth_path = os.path.join(CORPUS_DIR, "truth")
-    if not os.path.exists(os.path.join(files_path, "_SUCCESS")):
-        from bigdataentityresolution_spark.sources.synthetic import (
-            corpus_to_spark,
-            generate_corpus,
-        )
+def materialize(spark, corpus_dir, make, tables=("files", "truth", "pairs")):
+    """The first ``tables`` of the synthetic corpus ``make()`` builds
+    (corpus_to_spark order: files, truth, pairs), written as parquet
+    under ``corpus_dir`` once (deterministic) and read back."""
+    paths = [os.path.join(corpus_dir, t) for t in tables]
+    if not os.path.exists(os.path.join(paths[0], "_SUCCESS")):
+        from bigdataentityresolution_spark.sources.synthetic import corpus_to_spark
 
-        corpus = generate_corpus(
-            n_clusters=BENCH_CLUSTERS, n_unrelated=BENCH_UNRELATED, n_repos=100, seed=42
-        )
-        files_df, truth_df, pairs_df = corpus_to_spark(spark, corpus)
-        files_df.repartition(CPUS).write.mode("overwrite").parquet(files_path)
-        truth_df.write.mode("overwrite").parquet(truth_path)
-        pairs_df.write.mode("overwrite").parquet(pairs_path)
-    return (
-        spark.read.parquet(files_path),
-        spark.read.parquet(truth_path),
-        spark.read.parquet(pairs_path),
-    )
+        files_df, *rest = corpus_to_spark(spark, make())
+        files_df.repartition(CPUS).write.mode("overwrite").parquet(paths[0])
+        for df, path in zip(rest, paths[1:]):
+            df.write.mode("overwrite").parquet(path)
+    return tuple(spark.read.parquet(p) for p in paths)
+
+
+def ensure_corpus(spark):
+    """(files, truth, pairs) of the standard bench corpus."""
+    from bigdataentityresolution_spark.sources.synthetic import generate_corpus
+
+    return materialize(spark, CORPUS_DIR, lambda: generate_corpus(
+        n_clusters=BENCH_CLUSTERS, n_unrelated=BENCH_UNRELATED, n_repos=100, seed=42
+    ))
 
 
 HARD_SCALE = float(os.environ.get("SPARK_GRAFT_HARD_SCALE", "1.0"))
@@ -68,7 +67,7 @@ HARD_CORPUS_DIR = os.environ.get(
 
 
 def ensure_hard_corpus(spark):
-    """Materialize the HARD adversarial tier as parquet (once).
+    """(files, truth, pairs) of the HARD adversarial tier.
 
     Sized ~40k files at the default scale — comparable to the easy bench
     corpus — with every adversarial component scaled up: see
@@ -76,35 +75,50 @@ def ensure_hard_corpus(spark):
     unattainable by construction, so this corpus is the one whose P/R/F1
     numbers can MOVE when the scorer or floors regress (VERDICT r3 #1).
     """
-    files_path = os.path.join(HARD_CORPUS_DIR, "files")
-    truth_path = os.path.join(HARD_CORPUS_DIR, "truth")
-    pairs_path = os.path.join(HARD_CORPUS_DIR, "pairs")
-    if not os.path.exists(os.path.join(files_path, "_SUCCESS")):
-        from bigdataentityresolution_spark.sources.synthetic import (
-            corpus_to_spark,
-            generate_hard_corpus,
-        )
+    from bigdataentityresolution_spark.sources.synthetic import generate_hard_corpus
 
-        corpus = generate_hard_corpus(
-            n_hard_clusters=int(5000 * HARD_SCALE),
-            n_orphan_clusters=int(1200 * HARD_SCALE),
-            n_template_groups=int(1200 * HARD_SCALE),
-            template_group_size=6,
-            n_unique_header_groups=int(200 * HARD_SCALE),
-            hot_block_size=int(2000 * HARD_SCALE),
-            n_unrelated=int(8000 * HARD_SCALE),
-            n_repos=100,
-            seed=1337,
-        )
-        files_df, truth_df, pairs_df = corpus_to_spark(spark, corpus)
-        files_df.repartition(CPUS).write.mode("overwrite").parquet(files_path)
-        truth_df.write.mode("overwrite").parquet(truth_path)
-        pairs_df.write.mode("overwrite").parquet(pairs_path)
-    return (
-        spark.read.parquet(files_path),
-        spark.read.parquet(truth_path),
-        spark.read.parquet(pairs_path),
-    )
+    return materialize(spark, HARD_CORPUS_DIR, lambda: generate_hard_corpus(
+        n_hard_clusters=int(5000 * HARD_SCALE),
+        n_orphan_clusters=int(1200 * HARD_SCALE),
+        n_template_groups=int(1200 * HARD_SCALE),
+        template_group_size=6,
+        n_unique_header_groups=int(200 * HARD_SCALE),
+        hot_block_size=int(2000 * HARD_SCALE),
+        n_unrelated=int(8000 * HARD_SCALE),
+        n_repos=100,
+        seed=1337,
+    ))
+
+
+def release(spark, result) -> None:
+    """Drop a pipeline run's stage caches, outside any timed window.
+    Shuffle files are only deleted once the driver GCs the dead
+    ShuffleDependency refs (ContextCleaner is reference-triggered; its
+    own periodicGC fires every 30 min by default) — without the nudge,
+    rep K+1 runs on top of rep K's accumulated tmpfs shuffle files +
+    un-collected driver garbage, and measured warm reps were
+    consistently SLOWER than cold (e.g. 73 s → 129 s at 16 cores). A
+    long-lived cluster reaches this steady state on its own."""
+    result["runner"].release()
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(1.0)
+
+
+def warm_reps(spark, reps, run):
+    """Call ``run()`` (a run_er_pipeline result) ``reps`` times in this
+    JVM, forcing each run's labels (the distinct cluster count) inside
+    its timed window and releasing the previous run between reps.
+    Returns (the last result, its cluster count, every rep's wall); the
+    caller releases the last result after its accounting."""
+    rep_secs = []
+    for _ in range(max(1, reps)):
+        if rep_secs:
+            release(spark, result)
+        t0 = time.time()
+        result = run()
+        n_clusters = result["labels"].select("cluster_id").distinct().count()
+        rep_secs.append(time.time() - t0)
+    return result, n_clusters, rep_secs
 
 
 def bench_er_hard(spark) -> dict:
@@ -136,16 +150,9 @@ def bench_er_hard(spark) -> dict:
     # makes the protocol explicit; _regressions reports a changed tag as
     # a protocol break instead of comparing walls across it.
     reps = int(os.environ.get("SPARK_GRAFT_HARD_REPS", "2"))
-    rep_secs = []
-    for _ in range(max(1, reps)):
-        t0 = time.time()
-        result = run_er_pipeline(spark, files, pairs, workdir=None, config=ERConfig())
-        result["labels"].select("cluster_id").distinct().count()
-        rep_secs.append(time.time() - t0)
-        if len(rep_secs) < max(1, reps):
-            result["runner"].release()
-            spark.sparkContext._jvm.System.gc()
-            time.sleep(1.0)
+    result, _, rep_secs = warm_reps(
+        spark, reps, lambda: run_er_pipeline(spark, files, pairs, workdir=None, config=ERConfig())
+    )
     elapsed = min(rep_secs)
     # accounting outside the timed window, once on the final rep (same
     # protocol as bench_er_pipeline): the cross-channel distinct union is
@@ -156,7 +163,7 @@ def bench_er_hard(spark) -> dict:
     m = pairwise_f1(result["labels"], truth)
     by_kind = _hard_recall_by_kind(result["labels"], truth)
     lm = labeled_pair_f1(result["labels"], pairs)
-    result["runner"].release()
+    release(spark, result)
     files.unpersist()
     pairs.unpersist()
     return {
@@ -259,17 +266,12 @@ def bench_hotkey(spark) -> dict:
 
     from bigdataentityresolution_spark.operators import blocking as B
 
-    files_path = os.path.join(HOTKEY_CORPUS_DIR, "files")
-    if not os.path.exists(os.path.join(files_path, "_SUCCESS")):
-        from bigdataentityresolution_spark.sources.synthetic import (
-            corpus_to_spark,
-            generate_hotkey_corpus,
-        )
+    from bigdataentityresolution_spark.sources.synthetic import generate_hotkey_corpus
 
-        corpus = generate_hotkey_corpus(n_hot=12000, n_background=12000, seed=7)
-        files_df, _, _ = corpus_to_spark(spark, corpus)
-        files_df.repartition(CPUS).write.mode("overwrite").parquet(files_path)
-    files = spark.read.parquet(files_path)
+    (files,) = materialize(
+        spark, HOTKEY_CORPUS_DIR,
+        lambda: generate_hotkey_corpus(n_hot=12000, n_background=12000, seed=7), ("files",),
+    )
 
     sigs = B.minhash_signatures_df(files, id_col="spec_id", text_col="content").cache()
     sigs.count()
@@ -309,8 +311,6 @@ def bench_hotkey(spark) -> dict:
 
 
 def bench_er_pipeline(spark, self_train: bool = True) -> dict:
-    from pyspark.sql import functions as F
-
     from bigdataentityresolution_spark.plans.pipeline import (
         ERConfig,
         pairwise_f1,
@@ -360,39 +360,23 @@ def bench_er_pipeline(spark, self_train: bool = True) -> dict:
     # mini-warmup / 23.3 s in-JVM warm rep): the miniature corpus compiles
     # different AQE/join plan shapes than the bench-scale run. An in-JVM
     # second rep is the honest warm number.
-    rep_secs = []
-    for _ in range(max(1, reps)):
-        t0 = time.time()
-        result = run_er_pipeline(
-            spark, files, pairs, workdir=None, config=ERConfig(self_train=self_train)
-        )
-        n_clusters = result["labels"].select("cluster_id").distinct().count()
-        rep_secs.append(time.time() - t0)
-        # Candidate ACCOUNTING runs outside the timed window: the pipeline
-        # itself never materializes the cross-channel distinct union (its
-        # featurization reads per-channel survivors), so the union count
-        # is bookkeeping for the pairs/sec metric, not engine work — and
-        # measured ~2-3 s of pure counting inflated the r5 wall before
-        # this moved. n_clusters stays inside (it forces the final labels
-        # like every round). Both channels (r5+): the union IS the
-        # engine's candidate set; lexical-only rides alongside for r4
-        # comparability.
-        n_candidates = result["candidates_all"].count()
-        n_candidates_lexical = result["candidates"].count()
-        f1 = pairwise_f1(result["labels"], truth)
-        result["runner"].release()
-        # Between-rep hygiene, OUTSIDE the timed window: shuffle files are
-        # only deleted once the driver GCs the dead ShuffleDependency refs
-        # (ContextCleaner is reference-triggered; its own periodicGC fires
-        # every 30 min by default) — without this, rep K+1 runs on top of
-        # rep K's accumulated tmpfs shuffle files + un-collected driver
-        # garbage, and measured warm reps were consistently SLOWER than
-        # cold (e.g. 73 s → 129 s at 16 cores). A long-lived cluster
-        # reaches this steady state on its own; a 2-rep sandbox run needs
-        # the nudge.
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(1.0)
+    result, n_clusters, rep_secs = warm_reps(spark, reps, lambda: run_er_pipeline(
+        spark, files, pairs, workdir=None, config=ERConfig(self_train=self_train)
+    ))
     elapsed = min(rep_secs)
+    # Candidate ACCOUNTING runs outside the timed window, once on the
+    # final rep (its values are deterministic across reps): the pipeline
+    # itself never materializes the cross-channel distinct union (its
+    # featurization reads per-channel survivors), so the union count is
+    # bookkeeping for the pairs/sec metric, not engine work — and
+    # measured ~2-3 s of pure counting inflated the r5 wall before this
+    # moved. n_clusters stays inside (it forces the final labels like
+    # every round). Both channels (r5+): the union IS the engine's
+    # candidate set; lexical-only rides alongside for r4 comparability.
+    n_candidates = result["candidates_all"].count()
+    n_candidates_lexical = result["candidates"].count()
+    f1 = pairwise_f1(result["labels"], truth)
+    release(spark, result)
 
     return {
         "sec": elapsed,

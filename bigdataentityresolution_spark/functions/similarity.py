@@ -28,6 +28,18 @@ def cosine_maps(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
+def dot_arrays(a: Column, b: Column) -> Column:
+    """Dot product of two equal-length dense ARRAY<DOUBLE> columns."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
+
+
+def cosine_arrays(a: Column, b: Column) -> Column:
+    """Cosine of two dense ARRAY<DOUBLE> vectors, rounded to 6 places so
+    rank ties and the DuckDB oracle's value hashes agree. Callers cast
+    to DOUBLE first: float products diverge in the last ulp."""
+    return F.round(dot_arrays(a, b) / (F.sqrt(dot_arrays(a, a)) * F.sqrt(dot_arrays(b, b))), 6)
+
+
 def jaccard_arrays(a: Column, b: Column) -> Column:
     """Exact Jaccard over two ARRAY<STRING> token/shingle sets."""
     inter = F.size(F.array_intersect(a, b)).cast("double")

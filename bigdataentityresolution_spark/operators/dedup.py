@@ -18,12 +18,13 @@ clustering primitives:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdataentityresolution_spark.functions.hashes import hamming64, simhash64
-from bigdataentityresolution_spark.functions.similarity import jaccard_arrays
+from bigdataentityresolution_spark.functions.hashes import hamming64, lsh_band_keys, simhash64
+from bigdataentityresolution_spark.functions.similarity import cosine_arrays, jaccard_arrays
 from bigdataentityresolution_spark.functions.text import shingles, tokenize
+from bigdataentityresolution_spark.operators.ann import as_doubles, hyperplane_band_keys
 from bigdataentityresolution_spark.operators.blocking import (
     cap_per_block,
     candidate_pairs,
@@ -97,8 +98,8 @@ def simhash_duplicate_pairs(
     exact chunk, so max_hamming ≤ n_chunks - 1 gives GUARANTEED recall
     (the r1 default max_hamming=8 with 4 chunks silently traded recall —
     hamming 4..8 errors can spread 1-per-chunk and be missed). Each
-    chunk value is a blocking key → equi-join, then exact popcount
-    verify.
+    chunk is a one-row LSH band (hashes.lsh_band_keys) → equi-join on
+    the band key, then exact popcount verify.
 
     per_block_cap bounds the quadratic blow-up of a hot chunk (blank /
     templated docs share whole fingerprints): a window keeps the first
@@ -115,13 +116,9 @@ def simhash_duplicate_pairs(
         F.col(id_col).cast("string").alias("spec_id"),
         simhash64(tokenize(text_col)).alias("sh"),
     )
-    chunks = [
-        F.concat_ws(
-            ":", F.lit(str(i)), (F.shiftright("sh", chunk_bits * i) % F.lit(1 << chunk_bits))
-        )
-        for i in range(n_chunks)
-    ]
-    mem = d.select("spec_id", F.col("sh"), F.explode(F.array(*chunks)).alias("block_key"))
+    chunks = [F.shiftright("sh", chunk_bits * i) % F.lit(1 << chunk_bits) for i in range(n_chunks)]
+    keys = lsh_band_keys(F.array(*chunks), n_chunks, 1)
+    mem = d.select("spec_id", F.col("sh"), F.explode(keys).alias("block_key"))
     if per_block_cap is not None:
         mem = cap_per_block(mem, per_block_cap)
     a = mem.select(F.col("spec_id").alias("a"), F.col("sh").alias("sh_a"), "block_key")
@@ -142,64 +139,25 @@ def embedding_near_dup_pairs(
     cosine_threshold: float = 0.95,
     n_planes: int = 16,
     bands: int = 8,
-    rows_per_band: int = 2,
     seed: int = 42,
     dim: int | None = None,
 ) -> DataFrame:
-    """(a, b, cosine) near-dup embedding pairs via random-hyperplane LSH.
-
-    sign(v · r_i) bits → band keys → candidates → exact cosine verify
-    in DOUBLE precision (float dot products diverge from the DuckDB /
-    numpy oracle in the last ulp). Hyperplanes are deterministic
-    pseudo-random expressions derived from dimension index and seed (no
-    Python in the plan). Pass ``dim`` to avoid the driver-side probe
-    (a plan break per call at scale)."""
-    import numpy as np
-
-    if dim is None:
-        dim = embeddings.select(F.size(vec_col).alias("d")).first()["d"]
-    embeddings = embeddings.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-
-    def sign_bit(i: int) -> Column:
-        dot = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                F.array(*[F.lit(float(x)) for x in planes[i]]),
-                lambda v, p: v * p,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return (dot >= 0).cast("int")
-
-    bits = F.array(*[sign_bit(i) for i in range(n_planes)])
-    keys = [
-        F.concat_ws(
-            ":",
-            F.lit(str(b)),
-            F.concat_ws(
-                "_",
-                *[F.element_at(bits, b * rows_per_band + r + 1) for r in range(rows_per_band)],
-            ),
-        )
-        for b in range(bands)
-    ]
+    """(a, b, cosine) near-dup embedding pairs via random-hyperplane LSH:
+    ann.hyperplane_band_keys → candidates → exact cosine verify
+    (similarity.cosine_arrays, DOUBLE via ann.as_doubles; pass ``dim``
+    to skip its driver-side probe)."""
+    embeddings, dim = as_doubles(embeddings, vec_col, dim)
     d = embeddings.select(
         F.col(id_col).cast("string").alias("spec_id"),
         F.col(vec_col).alias("_v"),
-        F.explode(F.array(*keys)).alias("block_key"),
+        F.explode(hyperplane_band_keys(vec_col, n_planes, bands, dim, seed)).alias("block_key"),
     )
     a = d.select(F.col("spec_id").alias("a"), F.col("_v").alias("_va"), "block_key").dropDuplicates(["a", "block_key"])
     b = d.select(F.col("spec_id").alias("b"), F.col("_v").alias("_vb"), "block_key").dropDuplicates(["b", "block_key"])
-    dot = F.aggregate(F.zip_with("_va", "_vb", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform("_va", lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform("_vb", lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
     return (
         a.join(b, "block_key")
         .filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.round(dot / (na * nb), 6).alias("cosine"))
+        .select("a", "b", cosine_arrays(F.col("_va"), F.col("_vb")).alias("cosine"))
         .filter(F.col("cosine") >= cosine_threshold)
         .distinct()
     )

@@ -119,7 +119,7 @@ def er_vocab(
        is common — e.g. tiny fixtures), fall back to the unpruned
        ranking rather than emptying every vector.
 
-    2. The CALLER passes an auto-scaled ``k`` (see ERConfig.vocab_k):
+    2. The CALLER passes an auto-scaled ``k`` (the pipeline's top_vocab):
        a fixed top-1000 over a 40k-file corpus keeps only the most
        corpus-common tokens, because tfidf_sum_mean grows with document
        frequency — the rare high-IDF identifiers that actually

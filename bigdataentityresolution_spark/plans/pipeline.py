@@ -63,7 +63,9 @@ class ERConfig:
     ClassVar constants are fixed, like the reference's compile-time
     MOST_SIGN=1000 (src/boWords.c) and ×12 pairs_limit (src/functs.c:23):
     read them as ``config.x``, set none. Every one of them, field or
-    constant, joins the checkpoint fingerprints (STAGES)."""
+    constant, joins the checkpoint fingerprints (STAGES). The edge
+    threshold and every gate bar are not settings: edge_gates calibrates
+    them on each run's labeled pairs."""
 
     shingle_n: ClassVar[int] = 2
     # MinHash sketch width / LSH banding. 64 perms in 32 bands × 2 rows
@@ -77,17 +79,6 @@ class ERConfig:
     num_perm: int = 64
     bands: int = 32
     per_block_cap: ClassVar[int] = 64
-    # Vocabulary size for the pair-join TF-IDF vectors. "auto" scales with
-    # the corpus: min(max(1000, n_docs), 1_000_000). The
-    # reference's fixed MOST_SIGN=1000 (src/boWords.c) is correct for its
-    # ~30k-record camera-spec corpus whose natural vocabulary is small,
-    # but significance (tfidf_sum_mean) GROWS with document frequency, so
-    # over a large code corpus a fixed top-1000 keeps only corpus-common
-    # tokens and drops every rare discriminative identifier — measured on
-    # the HARD tier (40k files): cross-template non-clone cosine 0.6-0.78,
-    # precision 0.005. The 1M cap bounds the vocab-index broadcast
-    # (~24 MB); past it, move to feature hashing, not a bigger k.
-    vocab_k: ClassVar[str] = "auto"
     # Drop terms appearing in > this fraction of docs from the ER vocab
     # (boilerplate carries no pairwise discrimination; see tfidf.er_vocab).
     # The prune auto-falls-back on tiny/common-vocab corpora.
@@ -106,13 +97,6 @@ class ERConfig:
     newton_rounds: ClassVar[int] = 5  # IRLS is quadratic — 5 rounds reach |step| < 1e-4
     self_train: bool = True
     self_train_limit_factor: ClassVar[int] = 12  # pairs_limit = train_size × 12 (src/functs.c:23)
-    # Edge decision threshold: "auto" calibrates the F1-maximizing
-    # threshold on the labeled train pairs
-    # (scoring.calibrate_edge_threshold — the reference's moving
-    # threshold climbs to its 0.8 clamp whenever positives outnumber
-    # negatives, which zeroes discovery on corpora where the compact
-    # model's probabilities don't saturate).
-    edge_threshold: ClassVar[str] = "auto"
     # Precision-first link policy: a PREDICTED edge must clear BOTH an
     # exact TF-IDF cosine floor and a MinHash est-Jaccard floor, not just
     # the model threshold. Rationale: one false edge chains two clusters
@@ -129,8 +113,8 @@ class ERConfig:
     edge_cosine_floor: ClassVar[float] = 0.5
     edge_jaccard_floor: ClassVar[float] = 0.45
     # High-confidence override: an edge whose model probability clears
-    # this bar is accepted under RELAXED floors (the *_override_* minima
-    # below) instead of the full floors. Motivated by the HARD corpus
+    # a calibrated bar is accepted under RELAXED floors (the *_override_*
+    # minima below) instead of the full floors. Motivated by the HARD corpus
     # tier (synthetic.generate_hard_corpus): adversarial low-overlap true
     # clones sit at est-Jaccard 0.3-0.45 — under the full floors alone
     # they are unreachable (recall 0.49 measured), while the trained
@@ -143,18 +127,11 @@ class ERConfig:
     # features — "dissimilar ⇒ confident match" — and a floor-free
     # override then merged 4.3k unrelated files into one cluster).
     # The relaxed minima are a structural sanity bar the model cannot
-    # override: no edge below them is accepted no matter the score.
-    # "auto" calibrates the bar on the labeled pairs inside
-    # the relaxed region (scoring.calibrate_override_bar, which records
-    # the evidence rules and their measurements), clamped to [0.8, 0.99]
-    # — 0.8 is the reference's own confidence clamp (src/logistic.c:734)
-    # kept as the structural minimum. A fixed bar was the r4 failure mode
-    # this replaces: true adversarial clones score proba 0.95-0.98 and a
-    # hardcoded 0.98 bar rejected every one of them (hard-tier recall
-    # 0.69 measured; 0.84 calibrated at the r4 32/16 banding, 0.971
-    # hard-kind at the shipped 64/32 banding — precision 0.9997
-    # throughout).
-    edge_high_conf_override: ClassVar[str] = "auto"
+    # override: no edge below them is accepted no matter the score. The
+    # bar (edge_gates, scoring.calibrate_override_bar) gave hard-tier
+    # recall 0.69 when fixed at 0.98, 0.84 calibrated at the r4 32/16
+    # banding and 0.971 hard-kind at the shipped 64/32 banding, precision
+    # 0.9997 throughout.
     # 0.12 in lockstep with sig_prefilter (r4; was 0.2): an edge the
     # prefilter admits must also be ACCEPTABLE, else the featurization
     # was wasted — and the 64-perm estimate at 0.12 is as reliable as
@@ -177,7 +154,7 @@ class ERConfig:
     # last at fd3f363). Candidates from this channel bypass the
     # est-Jaccard prefilter (they are chosen BECAUSE they sit below it);
     # their acceptance gate is the exact TF-IDF cosine + a separately
-    # calibrated high-confidence bar (see edge_semantic_override below).
+    # calibrated high-confidence bar (edge_gates).
     semantic_channel: bool = True
     semantic_topk: ClassVar[int] = 5
     # Hot top-terms are capped like every other channel; 32 (vs the
@@ -193,9 +170,6 @@ class ERConfig:
     # negatives score proba <= 0.22, so the bar lands at its 0.8
     # structural floor there while orphan true pairs score 0.84+.
     edge_semantic_cosine_min: ClassVar[float] = 0.35
-    # "auto" calibrates on the labeled pairs inside the semantic gate's
-    # region (see edge_gates); with the channel off the gate is dropped.
-    edge_semantic_override: ClassVar[str] = "auto"
     # Connected-components loop controls: round bound and reliable-
     # checkpoint cadence. Each `cc_checkpoint_every` rounds the frontier
     # is persisted (parquet when a workdir/checkpoint_dir is set) —
@@ -257,7 +231,7 @@ ALL_FIELDS = tuple(ERConfig.__annotations__)
 STAGES: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
     "signatures": (("files",), ("shingle_n", "num_perm", "seed")),
     "postings": (("files",), ()),
-    "top_vocab": (("files", "postings"), ("vocab_k", "max_df_ratio")),
+    "top_vocab": (("files", "postings"), ("max_df_ratio",)),
     "prep": (("files", "postings", "signatures", "top_vocab"), ("lev_bound", "tf_mode")),
     "blocking": (("signatures",), ("bands", "num_perm")),
     "candidates": (("signatures",), ("bands", "num_perm", "per_block_cap")),
@@ -483,7 +457,7 @@ def run_er_pipeline(
     workdir: str | None = None,
     config: ERConfig = ERConfig(),
 ) -> dict:
-    """Run the full pipeline; returns dict with labels/matches/model/metrics.
+    """Run the full pipeline; returns dict with labels/model/metrics.
 
     files: (spec_id, repo, path, commit, lang, content[, content_sha])
     labeled_pairs: (left_spec_id, right_spec_id, label[, split])
@@ -506,8 +480,11 @@ def run_er_pipeline(
     # index_vocab folded into the stage: the dense term_idx assignment is
     # a single-partition global sort by nature (measured ~1-2 s at bench
     # scale), so it runs ONCE here, cached/checkpointed, and at production
-    # vocab sizes a resumed run never repeats it. k is ERConfig.vocab_k's
-    # "auto" size.
+    # vocab sizes a resumed run never repeats it. k scales with the
+    # corpus: the reference's fixed MOST_SIGN=1000 (src/boWords.c) suits
+    # its ~30k-record camera-spec corpus, whose natural vocabulary is
+    # small; tfidf.er_vocab gives why a fixed k fails on a large corpus
+    # and why 1M caps it.
     vocab_k = min(max(1000, n_docs), 1_000_000)
 
     def top_vocab(o):
@@ -711,7 +688,6 @@ def run_er_pipeline(
         "edge_threshold": thr,
         "gates": gates,
         "labels": outs["cluster"],
-        "matches": C.extract_matches(outs["cluster"]),
         "runner": runner,
     }
 

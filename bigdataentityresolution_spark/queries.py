@@ -1123,9 +1123,9 @@ def _sql_dot(vec_expr: str, row) -> str:
 
 
 def _lsh_keys_sql(vec_expr: str, n_planes: int, bands: int, seed: int, dim: int) -> str:
-    """DuckDB twin of ann._hyperplane_bits + band-key assembly: the SAME
-    numpy-generated hyperplanes (ann.hyperplanes is the single source of
-    truth) embedded as SQL literals."""
+    """DuckDB twin of ann.hyperplane_band_keys: the SAME numpy-generated
+    hyperplanes (ann.hyperplanes is the single source of truth) embedded
+    as SQL literals."""
     from bigdataentityresolution_spark.operators.ann import hyperplanes
 
     planes = hyperplanes(n_planes, dim, seed)

@@ -5,7 +5,7 @@ No reference analog (batch-only engine, SURVEY.md §2.11). Provides:
 - stream_events_windowed: watermarked tumbling-window aggregate over the
   events relation — the streaming twin of queries.events_tumbling_window
   (same logical plan, readStream source, append mode).
-- stream_dedup_new_files: incremental exact-dedup of a growing source
+- stream_exact_dedup: incremental exact-dedup of a growing source
   table — new files are checked against the seen-fingerprint state with
   dropDuplicates on the content digest + watermark.
 

@@ -45,6 +45,7 @@ def main() -> None:
     from bigdataentityresolution_spark.functions.text import tokenize
     from bigdataentityresolution_spark.operators import blocking as B
     from bigdataentityresolution_spark.operators import tfidf as TI
+    from bigdataentityresolution_spark.plans.pipeline import ERConfig
     from bigdataentityresolution_spark.session import get_spark
 
     spark = get_spark(app_name="plans", master="local[4]", shuffle_partitions=8)
@@ -73,17 +74,20 @@ def main() -> None:
         plan_of(p),
     ))
 
-    # 3. minhash signatures: one scan, no pre-agg shuffle of token rows
+    # 3. minhash signatures at the pipeline's banding: one scan, no
+    # pre-agg shuffle of token rows
+    cfg = ERConfig()
     sigs = B.minhash_signatures_df(
         docs.select(F.col("doc_id").cast("string").alias("spec_id"), "text"),
-        id_col="spec_id", text_col="text", tokenizer=tokenize("text"),
+        id_col="spec_id", text_col="text", shingle_n=cfg.shingle_n,
+        num_perm=cfg.num_perm, seed=cfg.seed, tokenizer=tokenize("text"),
     )
     sections.append((
         "MinHash signatures: map-side sketch, tiny shuffle",
-        "32 min-aggregates partially aggregate per mapper; the Exchange "
-        "carries one 256 B signature row per record, never token or "
-        "shingle rows. All gram hashing is numeric (xxhash64 + polynomial "
-        "fold) inside the scan stage.",
+        f"{cfg.num_perm} min-aggregates partially aggregate per mapper; the "
+        f"Exchange carries one {4 * cfg.num_perm} B signature row (INT slots) "
+        "per record, never token or shingle rows. All gram hashing is "
+        "numeric (xxhash64 + polynomial fold) inside the scan stage.",
         plan_of(sigs),
     ))
 
@@ -102,7 +106,9 @@ def main() -> None:
     ))
 
     # 4b. in-block candidate generation with est-Jaccard prefilter
-    cand = B.candidate_pairs_with_est(sigs, bands=16, num_perm=32, per_block_cap=64)
+    cand = B.candidate_pairs_with_est(
+        sigs, bands=cfg.bands, num_perm=cfg.num_perm, per_block_cap=cfg.per_block_cap
+    )
     sections.append((
         "Candidate pairs: in-block est-Jaccard, no signature join",
         "Pair generation + the MinHash agreement fraction happen inside "

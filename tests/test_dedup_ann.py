@@ -118,7 +118,7 @@ def test_ivf_topk_self_hit(spark, vectors):
 
 def test_embedding_near_dup_pairs(spark, vectors):
     pairs = D.embedding_near_dup_pairs(
-        vectors, cosine_threshold=0.99, n_planes=16, bands=8, rows_per_band=2
+        vectors, cosine_threshold=0.99, n_planes=16, bands=8
     )
     rows = pairs.collect()
     assert len(rows) > 0
@@ -126,3 +126,40 @@ def test_embedding_near_dup_pairs(spark, vectors):
     found = {(r["a"], r["b"]) for r in rows}
     assert any(a in {"0", "1", "2", "3"} and b in {"0", "1", "2", "3"} for a, b in found)
     assert all(r["cosine"] >= 0.99 for r in rows)
+
+
+def test_hyperplane_band_keys_shape(spark, vectors):
+    """bands keys "i:b_b…" of n_planes // bands sign bits each, in plane
+    order: the bits of hyperplanes(n_planes, dim, seed) · v >= 0."""
+    one = vectors.filter(F.col("vec_id") == 5)
+    v = np.array(one.first()["embedding"])
+    expect = [int(d >= 0) for d in A.hyperplanes(12, 16, 7) @ v]
+    for bands in (1, 3, 4, 6, 12):
+        keys = A.hyperplane_band_keys("embedding", 12, bands, 16, 7)
+        got = one.select(keys.alias("k")).first()["k"]
+        assert len(got) == bands
+        assert [k.split(":")[0] for k in got] == [str(i) for i in range(bands)]
+        bits = [k.split(":")[1].split("_") for k in got]
+        assert all(len(b) == 12 // bands for b in bits)
+        assert [int(x) for b in bits for x in b] == expect
+
+
+@pytest.mark.parametrize("n_planes,bands", [(16, 5), (12, 8), (8, 16), (16, 0)])
+def test_banded_vector_operators_reject_non_divisor(spark, vectors, n_planes, bands):
+    """bands must divide n_planes, checked at call time: a non-divisor
+    used to band on fewer bits than asked (lsh_topk 16/5 on 15) or fail
+    inside the Spark job (an index past the last bit)."""
+    queries = vectors.limit(2).select(F.col("vec_id").alias("query_id"), "embedding")
+    with pytest.raises(ValueError, match="must divide"):
+        A.lsh_topk(vectors, queries, n_planes=n_planes, bands=bands, dim=16)
+    with pytest.raises(ValueError, match="must divide"):
+        D.embedding_near_dup_pairs(vectors, n_planes=n_planes, bands=bands, dim=16)
+
+
+def test_vector_operators_on_empty_corpus(spark, vectors):
+    """An empty corpus gives no rows, also when dim is left to the probe."""
+    empty = vectors.limit(0)
+    queries = vectors.limit(2).select(F.col("vec_id").alias("query_id"), "embedding")
+    assert A.lsh_topk(empty, queries).count() == 0
+    assert A.ivf_topk(empty, queries).count() == 0
+    assert D.embedding_near_dup_pairs(empty).count() == 0

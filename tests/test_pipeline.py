@@ -486,7 +486,7 @@ def test_erconfig_settable_fields():
     cfg = P.ERConfig()
     assert (cfg.shingle_n, cfg.seed, cfg.per_block_cap) == (2, 42, 64)
     # cluster's fingerprint reads the constants too
-    assert len(P.STAGES["cluster"][1]) == 26
+    assert len(P.STAGES["cluster"][1]) == 22
     with pytest.raises(TypeError):
         P.ERConfig(per_block_cap=32)
 
@@ -586,7 +586,7 @@ def test_accept_path_gate_table(spark):
 
 
 def test_gate_calibration_uses_acceptance_region(spark):
-    """An "auto" bar is calibrated over its gate's own region: a labeled
+    """A bar is calibrated over its gate's own region: a labeled
     negative with f_cosine == 0 but a non-empty vocab projection is
     outside the override region (acceptance exempts only f_vocab_cov ==
     0), so it grants no evidence and the bar stays at its 0.99 cap."""
