@@ -104,21 +104,74 @@ def release(spark, result) -> None:
     time.sleep(1.0)
 
 
-def warm_reps(spark, reps, run):
-    """Call ``run()`` (a run_er_pipeline result) ``reps`` times in this
-    JVM, forcing each run's labels (the distinct cluster count) inside
-    its timed window and releasing the previous run between reps.
-    Returns (the last result, its cluster count, every rep's wall); the
-    caller releases the last result after its accounting."""
+# SPARK_GRAFT_BENCH_REPS > 1 (DEFAULT 2 since r4) → run the full
+# pipeline that many times in the SAME JVM and report the min
+# (steady-state), for er_pipeline and er_hard alike. Rationale, measured:
+# every distinct plan shape pays a one-time JIT/codegen warm-up (~2-5 s
+# per stage, serial, core-count independent — e.g. the signature stage
+# runs 5.5 s cold / 1.3 s warm). On a real cluster executors are
+# long-lived and amortize this across hours; in a <2-minute sandbox run
+# the warm-up is ~half the wall and masks the engine's scaling. Rep 0
+# (cold) is also reported in rep_secs. The warm rep is warm only because
+# the codegen cache holds every generated class of a run
+# (session.CODEGEN_CACHE_ENTRIES): while it kept Spark's default 100 of
+# the ~270 a run generates, the warm rep recompiled every class evicted
+# from it, and C2 JIT-compiled them again. An untimed pass over a
+# miniature corpus instead recovered only ~HALF the JIT delta (measured
+# r4, sf0.1, same session: 40.8 s cold / 32.2 s mini-warmup / 23.3 s
+# in-JVM warm rep): the miniature corpus compiles different AQE/join plan
+# shapes than the bench-scale run. An in-JVM second rep is the honest
+# warm number.
+BENCH_REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
+
+
+def bench_er(spark, files, pairs, config, quality) -> tuple[dict, int]:
+    """The ER bench body: cache and count ``files`` and ``pairs``, run
+    the pipeline under ``config`` BENCH_REPS times in this JVM (each
+    rep's timed window forces its labels, the distinct cluster count;
+    the previous rep is released between reps) and report the min.
+
+    Candidate ACCOUNTING runs outside the timed window, once on the
+    final rep (its values are deterministic across reps): the pipeline
+    itself never materializes the cross-channel distinct union (its
+    featurization reads per-channel survivors), so the union count is
+    bookkeeping for the pairs/sec metric, not engine work — and measured
+    ~2-3 s of pure counting inflated the r5 wall before this moved. Both
+    channels (r5+): the union IS the engine's candidate set; lexical-only
+    rides alongside for r4 comparability. ``quality(labels)`` adds its
+    keys, then the run and the inputs' caches are released. Returns
+    (the keys both ER benches report, the final rep's cluster count)."""
+    from bigdataentityresolution_spark.plans.pipeline import run_er_pipeline
+
+    files = files.cache()
+    pairs = pairs.cache()
+    n_files = files.count()  # materializes the cache
+    pairs.count()
     rep_secs = []
-    for _ in range(max(1, reps)):
+    for _ in range(BENCH_REPS):
         if rep_secs:
             release(spark, result)
         t0 = time.time()
-        result = run()
+        result = run_er_pipeline(spark, files, pairs, workdir=None, config=config)
         n_clusters = result["labels"].select("cluster_id").distinct().count()
         rep_secs.append(time.time() - t0)
-    return result, n_clusters, rep_secs
+    elapsed = min(rep_secs)
+    n_candidates = result["candidates_all"].count()
+    n_candidates_lexical = result["candidates"].count()
+    out = {
+        "sec": elapsed,
+        "rep_secs": [round(s, 3) for s in rep_secs],
+        "n_files": n_files,
+        "n_candidates": n_candidates,
+        "n_candidates_lexical": n_candidates_lexical,
+        "candidate_pairs_per_sec": n_candidates / elapsed,
+        "candidate_pairs_per_sec_lexical": n_candidates_lexical / elapsed,
+        **quality(result["labels"]),
+    }
+    release(spark, result)
+    files.unpersist()
+    pairs.unpersist()
+    return out, n_clusters
 
 
 def bench_er_hard(spark) -> dict:
@@ -134,60 +187,38 @@ def bench_er_hard(spark) -> dict:
         ERConfig,
         labeled_pair_f1,
         pairwise_f1,
-        run_er_pipeline,
     )
 
     files, truth, pairs = ensure_hard_corpus(spark)
-    files = files.cache()
-    pairs = pairs.cache()
-    n_files = files.count()
-    pairs.count()
-    # Timing protocol (VERDICT r4 #3): SPARK_GRAFT_HARD_REPS reps in the
-    # same JVM, min reported, all reps recorded. Default 2: er_hard runs
-    # after the er_pipeline phase has compiled every plan shape this
-    # pipeline uses, so rep 0 is already warm-shaped, but one rep leaves
-    # the wall at the mercy of a single host-noise episode. The tag below
-    # makes the protocol explicit; _regressions reports a changed tag as
-    # a protocol break instead of comparing walls across it.
-    reps = int(os.environ.get("SPARK_GRAFT_HARD_REPS", "2"))
-    result, _, rep_secs = warm_reps(
-        spark, reps, lambda: run_er_pipeline(spark, files, pairs, workdir=None, config=ERConfig())
+
+    def quality(labels) -> dict:
+        m = pairwise_f1(labels, truth)
+        lm = labeled_pair_f1(labels, pairs)
+        return {
+            "precision": round(m["precision"], 4),
+            "recall": round(m["recall"], 4),
+            "f1": round(m["f1"], 4),
+            "true_pairs": m["true_pairs"],
+            "pred_pairs": m["pred_pairs"],
+            "labeled_pair_f1": round(lm["f1"], 4),
+            "labeled_pair_fp": lm["fp"],
+            "labeled_pair_fn": lm["fn"],
+            **_hard_recall_by_kind(labels, truth),
+        }
+
+    out, _ = bench_er(spark, files, pairs, ERConfig(), quality)
+    # Timing protocol (VERDICT r4 #3): BENCH_REPS reps, min reported, all
+    # recorded. er_hard runs after the er_pipeline phase has compiled
+    # every plan shape this pipeline uses, so rep 0 is already
+    # warm-shaped, but one rep leaves the wall at the mercy of a single
+    # host-noise episode. The tag makes the protocol explicit;
+    # _regressions reports a changed tag as a protocol break instead of
+    # comparing walls across it.
+    out["rep_protocol"] = (
+        f"{BENCH_REPS}-rep min, warm plan shapes "
+        "(er_pipeline phase precompiles them in the same JVM)"
     )
-    elapsed = min(rep_secs)
-    # accounting outside the timed window, once on the final rep (same
-    # protocol as bench_er_pipeline): the cross-channel distinct union is
-    # bookkeeping, not pipeline work, and its value is deterministic
-    # across reps
-    n_candidates = result["candidates_all"].count()
-    n_candidates_lexical = result["candidates"].count()
-    m = pairwise_f1(result["labels"], truth)
-    by_kind = _hard_recall_by_kind(result["labels"], truth)
-    lm = labeled_pair_f1(result["labels"], pairs)
-    release(spark, result)
-    files.unpersist()
-    pairs.unpersist()
-    return {
-        "sec": elapsed,
-        "rep_secs": [round(s, 3) for s in rep_secs],
-        "rep_protocol": (
-            f"{max(1, reps)}-rep min, warm plan shapes "
-            "(er_pipeline phase precompiles them in the same JVM)"
-        ),
-        "n_files": n_files,
-        "n_candidates": n_candidates,
-        "n_candidates_lexical": n_candidates_lexical,
-        "candidate_pairs_per_sec": n_candidates / elapsed,
-        "candidate_pairs_per_sec_lexical": n_candidates_lexical / elapsed,
-        "precision": round(m["precision"], 4),
-        "recall": round(m["recall"], 4),
-        "f1": round(m["f1"], 4),
-        "true_pairs": m["true_pairs"],
-        "pred_pairs": m["pred_pairs"],
-        "labeled_pair_f1": round(lm["f1"], 4),
-        "labeled_pair_fp": lm["fp"],
-        "labeled_pair_fn": lm["fn"],
-        **by_kind,
-    }
+    return out
 
 
 def truth_pairs_by_kind(truth):
@@ -311,16 +342,12 @@ def bench_hotkey(spark) -> dict:
 
 
 def bench_er_pipeline(spark, self_train: bool = True) -> dict:
-    from bigdataentityresolution_spark.plans.pipeline import (
-        ERConfig,
-        pairwise_f1,
-        run_er_pipeline,
-    )
+    from bigdataentityresolution_spark.plans.pipeline import ERConfig, pairwise_f1
 
     files, truth, pairs = ensure_corpus(spark)
-    # Cache the source OUTSIDE the timed window: the pipeline legitimately
-    # scans the source table several times (signatures / postings / prefix
-    # projection), and on a real cluster those scans hit distributed
+    # bench_er caches the source OUTSIDE the timed window: the pipeline
+    # legitimately scans the source table several times (signatures /
+    # postings / prefix projection), and on a real cluster those scans hit distributed
     # columnar storage whose aggregate bandwidth grows with executors. A
     # single local disk does not — it serializes the 32-thread run and
     # would benchmark the VM's disk, not the engine.
@@ -336,61 +363,10 @@ def bench_er_pipeline(spark, self_train: bool = True) -> dict:
     n_parts = int(os.environ.get("SPARK_GRAFT_INPUT_PARTS", "0"))
     if n_parts > 0:
         files = files.repartition(n_parts)
-    files = files.cache()
-    pairs = pairs.cache()
-    n_files = files.count()  # materializes the cache
-    pairs.count()
-
-    # SPARK_GRAFT_BENCH_REPS > 1 (DEFAULT 2 since r4) → run the full
-    # pipeline that many times in the SAME JVM and report the min
-    # (steady-state). Rationale, measured: every distinct plan shape pays
-    # a one-time JIT/codegen warm-up (~2-5 s per stage, serial,
-    # core-count independent — e.g. the signature stage runs 5.5 s cold /
-    # 1.3 s warm). On a real cluster executors are long-lived and
-    # amortize this across hours; in a <2-minute sandbox run the warm-up
-    # is ~half the wall and masks the engine's scaling. Rep 0 (cold) is
-    # also reported in rep_secs. The warm rep is warm only because the
-    # codegen cache holds every generated class of a run
-    # (session.CODEGEN_CACHE_ENTRIES): while it kept Spark's default 100
-    # of the ~270 a run generates, the warm rep recompiled every class
-    # evicted from it, and C2 JIT-compiled them again.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    # An untimed pass over a miniature corpus instead recovered only ~HALF
-    # the JIT delta (measured r4, sf0.1, same session: 40.8 s cold / 32.2 s
-    # mini-warmup / 23.3 s in-JVM warm rep): the miniature corpus compiles
-    # different AQE/join plan shapes than the bench-scale run. An in-JVM
-    # second rep is the honest warm number.
-    result, n_clusters, rep_secs = warm_reps(spark, reps, lambda: run_er_pipeline(
-        spark, files, pairs, workdir=None, config=ERConfig(self_train=self_train)
-    ))
-    elapsed = min(rep_secs)
-    # Candidate ACCOUNTING runs outside the timed window, once on the
-    # final rep (its values are deterministic across reps): the pipeline
-    # itself never materializes the cross-channel distinct union (its
-    # featurization reads per-channel survivors), so the union count is
-    # bookkeeping for the pairs/sec metric, not engine work — and
-    # measured ~2-3 s of pure counting inflated the r5 wall before this
-    # moved. n_clusters stays inside (it forces the final labels like
-    # every round). Both channels (r5+): the union IS the engine's
-    # candidate set; lexical-only rides alongside for r4 comparability.
-    n_candidates = result["candidates_all"].count()
-    n_candidates_lexical = result["candidates"].count()
-    f1 = pairwise_f1(result["labels"], truth)
-    release(spark, result)
-
-    return {
-        "sec": elapsed,
-        "rep_secs": [round(s, 3) for s in rep_secs],
-        "self_train": self_train,
-        "n_files": n_files,
-        "n_candidates": n_candidates,
-        "n_candidates_lexical": n_candidates_lexical,
-        "n_clusters": n_clusters,
-        "candidate_pairs_per_sec": n_candidates / elapsed,
-        "candidate_pairs_per_sec_lexical": n_candidates_lexical / elapsed,
-        "files_per_sec": n_files / elapsed,
-        "f1": round(f1["f1"], 4),
-    }
+    out, n_clusters = bench_er(spark, files, pairs, ERConfig(self_train=self_train),
+                               lambda labels: {"f1": round(pairwise_f1(labels, truth)["f1"], 4)})
+    return {"self_train": self_train, **out, "n_clusters": n_clusters,
+            "files_per_sec": out["n_files"] / out["sec"]}
 
 
 def bench_tfidf(spark) -> float:
@@ -553,7 +529,6 @@ def main() -> None:
         queries["ann_lsh_topk"] = round(bench_ann(spark), 3)
         queries["tpch_q1"] = round(bench_tpch_q1(spark), 3)
 
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
     out = {
         "metric": "candidate_pairs_per_sec",
         "value": round(er["candidate_pairs_per_sec"], 1),
@@ -581,8 +556,8 @@ def main() -> None:
         # onward are warm-timed. warmup_pass (the untimed miniature-corpus
         # pass, removed) stays false so readers keep the key.
         "timing": {
-            "mode": "warm" if reps > 1 else "cold",
-            "reps": reps,
+            "mode": "warm" if BENCH_REPS > 1 else "cold",
+            "reps": BENCH_REPS,
             "warmup_pass": False,
         },
         "er": {k: (round(v, 3) if isinstance(v, float) else v) for k, v in er.items()},

@@ -87,7 +87,11 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _observation_sigs(observations, timeout_sec: float = 10.0) -> list:
+# How long _observation_sigs waits, in all, for the metrics rows.
+OBSERVATION_TIMEOUT_SEC = 10.0
+
+
+def _observation_sigs(observations) -> list:
     """Bounded-wait collection of the per-round observe() signatures.
 
     ADVICE.md r2: ``Observation.get`` awaits the Scala metrics future with
@@ -103,7 +107,7 @@ def _observation_sigs(observations, timeout_sec: float = 10.0) -> list:
     entirely) pay the timeout before the caller's direct-agg fallback."""
     import time
 
-    deadline = time.monotonic() + timeout_sec
+    deadline = time.monotonic() + OBSERVATION_TIMEOUT_SEC
     sigs = []
     for o in observations:
         if o._jo is None:

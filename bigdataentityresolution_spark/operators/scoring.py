@@ -397,20 +397,24 @@ def fit_lr(
     return model
 
 
-def _ridge_penalty(d: int, ridge: float, n_total: int) -> np.ndarray:
-    """(d+1)² ridge penalty, intercept UNPENALIZED (conventional ridge;
-    the r1 version shrank the bias toward 0 and distorted the predicted
-    base rate — ADVICE.md). The n-scaling keeps the penalty's relative
-    strength constant as the pair count grows."""
-    p = np.eye(d + 1) * (ridge * max(1.0, float(n_total)))
-    p[0, 0] = 0.0
-    return p
-
-
 # The most rows the driver reads in one collect: the IRLS fit's driver
 # path ((d+1) float64s per row — 2M pairs ≈ 64 MB) and the calibration
 # read (plans.pipeline.edge_gates).
 DRIVER_MAX_ROWS = 2_000_000
+# fit_lr_newton's Hessian damping (per pair, see _ridge_penalty) and its
+# stop: a Newton step whose largest |component| is below NEWTON_TOL.
+RIDGE = 1e-3
+NEWTON_TOL = 1e-4
+
+
+def _ridge_penalty(d: int, n_total: int) -> np.ndarray:
+    """(d+1)² RIDGE penalty, intercept UNPENALIZED (conventional ridge;
+    the r1 version shrank the bias toward 0 and distorted the predicted
+    base rate — ADVICE.md). The n-scaling keeps the penalty's relative
+    strength constant as the pair count grows."""
+    p = np.eye(d + 1) * (RIDGE * max(1.0, float(n_total)))
+    p[0, 0] = 0.0
+    return p
 
 
 def _driver_rows(df: DataFrame) -> pd.DataFrame | None:
@@ -445,8 +449,6 @@ def fit_lr_newton(
     feature_cols: tuple[str, ...] = FEATURE_COLS,
     label_col: str = "label",
     max_rounds: int = 8,
-    ridge: float = 1e-3,
-    tol: float = 1e-4,
 ) -> LRModel:
     """IRLS (Newton) fit — the pipeline's production trainer.
 
@@ -517,7 +519,7 @@ def fit_lr_newton(
         if n == 0:
             break
         g = sums[2 : d + 3]
-        h = sums[d + 3 :].reshape(d + 1, d + 1) + _ridge_penalty(d, ridge, n)
+        h = sums[d + 3 :].reshape(d + 1, d + 1) + _ridge_penalty(d, n)
         step = np.linalg.solve(h, g)
         beta = beta - step
         model = replace(
@@ -527,7 +529,7 @@ def fit_lr_newton(
             rounds_trained=model.rounds_trained + 1,
         )
         model = update_threshold(model, n_pos, n - n_pos)
-        if float(np.abs(step).max()) < tol:
+        if float(np.abs(step).max()) < NEWTON_TOL:
             break
     if batched is not None:
         batched.unpersist()

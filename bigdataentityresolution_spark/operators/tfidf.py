@@ -92,12 +92,16 @@ def top_k_vocab(vocab_df: DataFrame, k: int = 1000) -> DataFrame:
     return vocab_df.orderBy(F.desc("tfidf_sum_mean"), F.asc("term")).limit(k)
 
 
+# The fewest terms er_vocab's max-df prune may leave before it falls back
+# to the unpruned vocabulary.
+MIN_VOCAB_AFTER_PRUNE = 200
+
+
 def er_vocab(
     vocab_df: DataFrame,
     n_docs: int,
     k: int,
     max_df_ratio: float | None = 0.35,
-    min_vocab_after_prune: int = 200,
 ) -> DataFrame:
     """The ER pipeline's vocabulary: top-k by significance AFTER a max-df
     boilerplate prune.
@@ -115,7 +119,7 @@ def er_vocab(
        tokens, driving cross-template non-clone cosine to 0.6-0.78 and
        precision to 0.005; with the prune those pairs fall below the
        cosine floor. Guard: if the prune leaves fewer than
-       ``min_vocab_after_prune`` terms (a corpus whose whole vocabulary
+       MIN_VOCAB_AFTER_PRUNE terms (a corpus whose whole vocabulary
        is common — e.g. tiny fixtures), fall back to the unpruned
        ranking rather than emptying every vector.
 
@@ -136,7 +140,7 @@ def er_vocab(
         # A full count, not limit(n).count(): a limit inside a codegen stage
         # names its counter from a JVM-wide sequence, so its generated class
         # is new on every run and never hits the codegen cache.
-        if pruned.count() >= min_vocab_after_prune:
+        if pruned.count() >= MIN_VOCAB_AFTER_PRUNE:
             vocab_df = pruned
     return top_k_vocab(vocab_df, k)
 

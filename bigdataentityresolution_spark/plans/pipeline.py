@@ -63,9 +63,9 @@ class ERConfig:
     ClassVar constants are fixed, like the reference's compile-time
     MOST_SIGN=1000 (src/boWords.c) and ×12 pairs_limit (src/functs.c:23):
     read them as ``config.x``, set none. Every one of them, field or
-    constant, joins the checkpoint fingerprints (STAGES). The edge
-    threshold and every gate bar are not settings: edge_gates calibrates
-    them on each run's labeled pairs."""
+    constant, joins the checkpoint fingerprints (STAGES). The gate bars
+    (the edge threshold is the floors bar) are not settings: edge_gates
+    calibrates them on each run's labeled pairs."""
 
     shingle_n: ClassVar[int] = 2
     # MinHash sketch width / LSH banding. 64 perms in 32 bands × 2 rows
@@ -276,27 +276,29 @@ def stage_fingerprints(config: ERConfig, sources: dict) -> dict[str, str | None]
 
 class Gate(NamedTuple):
     """One edge-acceptance path: a scored pair inside ``region`` whose
-    proba clears ``bar`` (no extra bar when None) may become an edge."""
+    proba clears ``bar`` may become an edge."""
 
     name: str
     region: Column
-    bar: float | None
+    bar: float
 
 
-def edge_gates(config: ERConfig, labeled: DataFrame, model: S.LRModel) -> tuple[float, list[Gate]]:
-    """The edge threshold and the ordered edge-acceptance table derived
-    from ``config``:
+def edge_gates(config: ERConfig, labeled: DataFrame, model: S.LRModel) -> list[Gate]:
+    """The ordered edge-acceptance table derived from ``config``:
 
-      floors    full cosine + est-Jaccard floors, no bar beyond the threshold
-      override  relaxed floors + the high-confidence bar
-      semantic  exact-cosine floor + its own bar (semantic channel only)
+      floors    full cosine + est-Jaccard floors; bar: the edge threshold
+      override  relaxed floors; bar: max(threshold, high-confidence bar)
+      semantic  exact-cosine floor; bar: max(threshold, its own bar)
+                (semantic channel only)
 
-    The threshold and every bar are calibrated on ``labeled`` (label +
-    feature columns + f_vocab_cov) under ``model`` from ONE ordered driver
-    read (label, proba, and an in-region flag per barred gate); each bar
-    over its gate's own region, so the region that grants the bar is
-    exactly the region it admits. Past DRIVER_MAX_ROWS it raises
-    ValueError rather than calibrate on an arbitrary subset.
+    The threshold and every high-confidence bar are calibrated on
+    ``labeled`` (label + feature columns + f_vocab_cov) under ``model``
+    from ONE ordered driver read (label, proba, and an in-region flag per
+    calibrated gate); each bar over its gate's own region, so the region
+    that grants the bar is exactly the region it admits. No bar is below
+    the threshold, so a pair some gate admits always clears it. Past
+    DRIVER_MAX_ROWS it raises ValueError rather than calibrate on an
+    arbitrary subset.
 
     A cosine floor exempts pairs where either doc has an EMPTY vocab
     projection (f_vocab_cov == 0, so f_cosine is identically 0): they
@@ -328,20 +330,30 @@ def edge_gates(config: ERConfig, labeled: DataFrame, model: S.LRModel) -> tuple[
         raise ValueError(f"more than DRIVER_MAX_ROWS={S.DRIVER_MAX_ROWS} labeled pairs to calibrate on")
     thr = S.calibrate_edge_threshold(pdf["label"].to_numpy(), pdf["proba"].to_numpy(), model.threshold)
     neg = pdf[pdf["label"] == 0.0]
-    return thr, [Gate("floors", floors, None)] + [
-        Gate(name, region, S.calibrate_override_bar(neg["proba"][neg[name]].to_numpy()))
+    return [Gate("floors", floors, thr)] + [
+        Gate(name, region, max(thr, S.calibrate_override_bar(neg["proba"][neg[name]].to_numpy())))
         for name, region in regions.items()
     ]
 
 
 def accept_path(gates: list[Gate]) -> Column:
-    """Name of the first gate whose region holds the pair and whose bar
-    its proba clears; NULL when no gate accepts it."""
+    """The edge decision: name of the first gate whose region holds the
+    pair and whose bar its proba clears; NULL when no gate accepts it."""
     path = None
     for g in gates:
-        ok = g.region if g.bar is None else g.region & (F.col("proba") >= F.lit(g.bar))
+        ok = g.region & (F.col("proba") >= F.lit(g.bar))
         path = F.when(ok, g.name) if path is None else path.when(ok, g.name)
     return path
+
+
+def oriented_pairs(labeled_pairs: DataFrame, *cols: str) -> DataFrame:
+    """``labeled_pairs`` as (a, b, *cols), a the least of its two spec
+    ids and b the greatest: the orientation of every candidate pair."""
+    return labeled_pairs.select(
+        F.least("left_spec_id", "right_spec_id").alias("a"),
+        F.greatest("left_spec_id", "right_spec_id").alias("b"),
+        *cols,
+    )
 
 
 def union_pairs(channels: list[DataFrame]) -> DataFrame:
@@ -494,21 +506,28 @@ def run_er_pipeline(
             )
         )
 
+    # connected components over ``edges`` and every file, checkpointed
+    # under <workdir>/<prefix>_<fingerprint> when checkpointing
+    def components(edges: DataFrame, prefix: str, fingerprint: str) -> DataFrame:
+        return C.connected_components(
+            edges,
+            nodes=files.select("spec_id"),
+            checkpoint_dir=os.path.join(workdir, f"{prefix}_{fingerprint}") if workdir else None,
+            max_iter=config.cc_max_iter,
+            checkpoint_every=config.cc_checkpoint_every,
+            cached=runner.cached,
+        )
+
     # ---- stage: label closure (reference semantics: ALL labels) ------------
     # (spec_id, cluster_id) over the positive labels, computed once: the
     # final clustering builds on it (final_cluster), as every later step
     # of the reference reads its one readCSV closure (src/functs.c:539-675).
     def closure(o):
-        cc_dir = os.path.join(workdir, f"cc_closure_{fp['closure']}") if workdir else None
-        return C.connected_components(
+        return components(
             labeled_pairs.filter(F.col("label") == 1).select(
                 F.col("left_spec_id").alias("a"), F.col("right_spec_id").alias("b")
             ),
-            nodes=files.select("spec_id"),
-            checkpoint_dir=cc_dir,
-            max_iter=config.cc_max_iter,
-            checkpoint_every=config.cc_checkpoint_every,
-            cached=runner.cached,
+            "cc_closure", fp["closure"],
         )
 
     # ---- stage: training pairs + features ----------------------------------
@@ -527,12 +546,7 @@ def run_er_pipeline(
             from bigdataentityresolution_spark.sources.readers import hash_split
 
             lp = hash_split(lp, seed=config.seed)
-        lp = lp.filter(F.col("split") == "train")
-        tp = lp.select(
-            F.least("left_spec_id", "right_spec_id").alias("a"),
-            F.greatest("left_spec_id", "right_spec_id").alias("b"),
-            "label",
-        ).distinct()
+        tp = oriented_pairs(lp.filter(F.col("split") == "train"), "label").distinct()
         # no prefilter: every labeled pair must be featurized; f_vocab_cov
         # rides along because the gate regions calibrated here read it
         return S.pair_features(
@@ -643,9 +657,11 @@ def run_er_pipeline(
     # labeled 0 (we never add a predicted edge a human label contradicts;
     # the reference adds no predicted edges at all).
     # calibrated on the TRUE labeled pairs (never on pseudo-labels), after
-    # the self-train refit if one ran
-    thr, gates = edge_gates(config, train_pairs, model)
-    fp_cluster = _sha([fp["cluster"], thr, [(g.name, g.bar) for g in gates]])
+    # the self-train refit if one ran; every scored pair carries its
+    # decision, the accepting gate's name or NULL
+    gates = edge_gates(config, train_pairs, model)
+    scored = scored.withColumn("accept_path", accept_path(gates))
+    fp_cluster = _sha([fp["cluster"], [(g.name, g.bar) for g in gates]])
     label_clusters = outs["closure"]
 
     def final_cluster(o):
@@ -655,26 +671,11 @@ def run_er_pipeline(
         label_edges = label_clusters.filter(F.col("spec_id") != F.col("cluster_id")).select(
             F.col("spec_id").alias("a"), F.col("cluster_id").alias("b")
         )
-        neg_label_pairs = labeled_pairs.filter(F.col("label") == 0).select(
-            F.least("left_spec_id", "right_spec_id").alias("a"),
-            F.greatest("left_spec_id", "right_spec_id").alias("b"),
-        )
-        accepted = scored.filter(
-            (F.col("proba") >= F.lit(float(thr))) & accept_path(gates).isNotNull()
-        )
-        pred_edges = accepted.select("a", "b").join(
+        neg_label_pairs = oriented_pairs(labeled_pairs.filter(F.col("label") == 0))
+        pred_edges = scored.filter(F.col("accept_path").isNotNull()).select("a", "b").join(
             neg_label_pairs, ["a", "b"], "left_anti"
         )
-        edges = label_edges.unionByName(pred_edges)
-        cc_dir = os.path.join(workdir, f"cc_final_{fp_cluster}") if workdir else None
-        return C.connected_components(
-            edges,
-            nodes=files.select("spec_id"),
-            checkpoint_dir=cc_dir,
-            max_iter=config.cc_max_iter,
-            checkpoint_every=config.cc_checkpoint_every,
-            cached=runner.cached,
-        )
+        return components(label_edges.unionByName(pred_edges), "cc_final", fp_cluster)
 
     outs.update(run_stages(runner, {"cluster": final_cluster}, {"cluster": fp_cluster})[0])
     return {
@@ -685,7 +686,6 @@ def run_er_pipeline(
         "train_pairs": train_pairs,
         "model": model,
         "scored": scored,
-        "edge_threshold": thr,
         "gates": gates,
         "labels": outs["cluster"],
         "runner": runner,
@@ -705,11 +705,7 @@ def labeled_pair_f1(predicted_labels: DataFrame, labeled_pairs: DataFrame) -> di
     sides through falsely-accepted UNLABELED edges — exactly what the
     hard corpus tier's template groups try to force.
     """
-    lp = labeled_pairs.select(
-        F.least("left_spec_id", "right_spec_id").alias("a"),
-        F.greatest("left_spec_id", "right_spec_id").alias("b"),
-        "label",
-    ).distinct()
+    lp = oriented_pairs(labeled_pairs, "label").distinct()
     la = predicted_labels.select(F.col("spec_id").alias("a"), F.col("cluster_id").alias("_ca"))
     lb = predicted_labels.select(F.col("spec_id").alias("b"), F.col("cluster_id").alias("_cb"))
     joined = lp.join(la, "a").join(lb, "b").withColumn(

@@ -82,9 +82,6 @@ def _jvm_opts(driver_mem: str) -> str:
     gc_threads = os.environ.get("SPARK_GRAFT_GC_THREADS")
     if gc_threads:
         opts.append(f"-XX:ParallelGCThreads={gc_threads}")
-    gc_log = os.environ.get("SPARK_GRAFT_GC_LOG")
-    if gc_log:
-        opts.append(f"-Xlog:gc*:file={gc_log}:time,uptime")
     return " ".join(opts)
 
 

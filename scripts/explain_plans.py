@@ -4,7 +4,8 @@
 Plan-only (no jobs run). Each section demonstrates a property the engine
 is designed around: parquet pushdown/pruning, map-side partial
 aggregation, broadcast pruning joins, whole-stage codegen spans. Every
-other section of PLANS.md is kept byte-for-byte.
+other section of PLANS.md is kept byte-for-byte, and so is a section
+whose plan did not change (normalize_ids).
 """
 
 from __future__ import annotations
@@ -25,7 +26,25 @@ def plan_of(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue().strip()
+    return normalize_ids(buf.getvalue().strip())
+
+
+# Spark numbers expression ids (name#12), exchange plan ids (plan_id=30)
+# and lambda variables (lambda x_3) from counters shared by every plan
+# of the session, so one changed plan would renumber every later one.
+_IDS = re.compile(r"(#|plan_id=|lambda x_)(\d+)")
+
+
+def normalize_ids(plan: str) -> str:
+    """``plan`` with each kind of session-wide id renumbered from 0 in
+    the order it first appears, so the text depends on this plan alone."""
+    seen: dict[str, dict[str, int]] = {}
+
+    def renumber(m: re.Match) -> str:
+        ids = seen.setdefault(m.group(1), {})
+        return m.group(1) + str(ids.setdefault(m.group(2), len(ids)))
+
+    return _IDS.sub(renumber, plan)
 
 
 def merge_sections(text: str, generated: dict[str, str]) -> str:

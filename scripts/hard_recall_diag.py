@@ -12,9 +12,10 @@ stage that dropped it:
 - prefilter_dropped: became a candidate but est-Jaccard fell below
                    sig_prefilter at featurization (pipeline.py cand
                    features), so it was never scored (proba is NULL)
-- below_threshold: scored, but proba < calibrated edge threshold
-- gate_rejected:   proba >= threshold but no acceptance gate passed it
-                   (pipeline.accept_path is NULL)
+- gate_rejected:   scored, but no acceptance gate passed it (its
+                   accept_path is NULL); broken down below by the gate
+                   regions that hold it (a floors-region pair sat below
+                   the floors bar, the calibrated edge threshold)
 - clustered_apart: the DIRECT pair was dropped but recall is pairwise
                    over clusters — these leaves are only truly lost if
                    no other member path links them (already counted in
@@ -51,11 +52,7 @@ def main() -> None:
 
     from bigdataentityresolution_spark.operators.clustering import extract_matches
     from bigdataentityresolution_spark.session import get_spark
-    from bigdataentityresolution_spark.plans.pipeline import (
-        ERConfig,
-        accept_path,
-        run_er_pipeline,
-    )
+    from bigdataentityresolution_spark.plans.pipeline import ERConfig, run_er_pipeline
 
     os.environ["SPARK_GRAFT_CPUS"] = str(args.cpus)
     spark = get_spark(app_name="hard_recall_diag")
@@ -66,8 +63,7 @@ def main() -> None:
     labels = result["labels"].cache()
     labels.count()
     gates = result["gates"]
-    print(f"pipeline: {time.time() - t0:.1f}s  thr={result['edge_threshold']:.4f} "
-          f"gates={ {g.name: g.bar for g in gates} }")
+    print(f"pipeline: {time.time() - t0:.1f}s  gates={ {g.name: g.bar for g in gates} }")
 
     true_pairs = bench.truth_pairs_by_kind(truth).cache()
     pred_pairs = extract_matches(labels).select("a", "b")
@@ -81,9 +77,8 @@ def main() -> None:
     )
     scored = result["scored"].select(
         F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"),
-        "proba", "f_cosine", "f_jaccard", "f_vocab_cov",
+        "proba", "accept_path", "f_cosine", "f_jaccard", "f_vocab_cov",
     )
-    thr = float(result["edge_threshold"])
     diag = (
         missed.join(cand, ["a", "b"], "left")
         .join(scored, ["a", "b"], "left")
@@ -92,11 +87,10 @@ def main() -> None:
             F.when(F.col("is_cand").isNull(), "not_candidate")
             # NULL proba = candidate that the est-Jaccard prefilter
             # dropped before scoring (ADVICE r4: without this branch the
-            # NULL falls through `proba < thr` into gate_rejected and
-            # pollutes the proba aggregations below)
+            # NULL falls into gate_rejected and pollutes the proba
+            # aggregations below)
             .when(F.col("proba").isNull(), "prefilter_dropped")
-            .when(F.col("proba") < thr, "below_threshold")
-            .when(accept_path(gates).isNull(), "gate_rejected")
+            .when(F.col("accept_path").isNull(), "gate_rejected")
             .otherwise("accepted"),
         )
     ).cache()
@@ -106,7 +100,7 @@ def main() -> None:
 
     print("== feature distribution of scored-but-rejected misses ==")
     (
-        diag.filter(F.col("stage").isin("below_threshold", "gate_rejected"))
+        diag.filter(F.col("stage") == "gate_rejected")
         .groupBy("kind", "stage")
         .agg(
             F.count("*").alias("n"),

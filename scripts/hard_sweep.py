@@ -60,7 +60,6 @@ def main() -> None:
     names = sys.argv[1:] or list(CONFIGS)
     os.environ.setdefault("SPARK_GRAFT_HARD_SCALE", "1.0")
     import bench
-    from pyspark.sql import functions as F
 
     from bigdataentityresolution_spark.session import get_spark
     from bigdataentityresolution_spark.plans.pipeline import (
@@ -76,9 +75,6 @@ def main() -> None:
     pairs = pairs.cache()
     files.count()
 
-    kind = F.regexp_extract("spec_id", r"src/(hard|orphan)", 1)
-    t = truth.withColumn("kind", kind).cache()
-
     for name in names:
         cfg = ERConfig(**CONFIGS[name])
         t0 = time.time()
@@ -89,7 +85,7 @@ def main() -> None:
         wall = time.time() - t0
         m = pairwise_f1(labels, truth)
         lm = labeled_pair_f1(labels, pairs)
-        by_kind = bench._hard_recall_by_kind(labels, t)
+        by_kind = bench._hard_recall_by_kind(labels, truth)
         print(json.dumps({
             "config": name,
             "wall_sec": round(wall, 1),
@@ -102,7 +98,6 @@ def main() -> None:
             "labeled_f1": round(lm["f1"], 4),
             "labeled_fp": lm["fp"],
             "labeled_fn": lm["fn"],
-            "thr": round(float(result["edge_threshold"]), 4),
             "gates": {g.name: g.bar for g in result["gates"]},
         }), flush=True)
         labels.unpersist()

@@ -91,3 +91,28 @@ def test_explain_plans_replaces_only_its_sections():
     out = merge_sections(text, {title: new, "Brand new": added})
     assert out == text.replace(old, new) + added
     assert merge_sections("", {title: new}).endswith(new)
+
+
+def test_explain_plans_normalizes_session_ids():
+    """A plan's expression ids, exchange plan ids and lambda variables are
+    renumbered from 0 in first-seen order, per kind: the same plan built
+    after a different one in the session reads byte-for-byte the same."""
+    from scripts.explain_plans import normalize_ids
+
+    plan = (
+        "Input [2]: [doc_id#40L, term#52]\n"
+        "Arguments: hashpartitioning(doc_id#40L, term#52, 8), [plan_id=91]\n"
+        "filter(split(text#41), lambdafunction(NOT (lambda x_7#60 = ), lambda x_7#60, false))\n"
+        "Results [2]: [term#52, count(1)#55L AS tf#53L], [plan_id=97]"
+    )
+    expected = (
+        "Input [2]: [doc_id#0L, term#1]\n"
+        "Arguments: hashpartitioning(doc_id#0L, term#1, 8), [plan_id=0]\n"
+        "filter(split(text#2), lambdafunction(NOT (lambda x_0#3 = ), lambda x_0#3, false))\n"
+        "Results [2]: [term#1, count(1)#4L AS tf#5L], [plan_id=1]"
+    )
+    assert normalize_ids(plan) == expected
+    shifted = plan.replace("#4", "#14").replace("#5", "#15").replace("#60", "#160")
+    shifted = shifted.replace("plan_id=9", "plan_id=19").replace("x_7", "x_17")
+    assert normalize_ids(shifted) == expected
+    assert normalize_ids(expected) == expected

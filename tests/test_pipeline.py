@@ -85,14 +85,14 @@ def test_model_quality(pipeline_result):
 
 
 def _decisions(result) -> tuple:
-    """Every decision a run makes, exactly: the fit, the calibrated
-    threshold and bars, and a sha of the sorted labels."""
+    """Every decision a run makes, exactly: the fit, the calibrated gate
+    bars (the floors bar is the edge threshold), and a sha of the sorted
+    labels."""
     model = result["model"]
     labels = sorted(map(tuple, result["labels"].collect()))
     return (
         model.weights,
         model.bias,
-        result["edge_threshold"],
         [(g.name, g.bar) for g in result["gates"]],
         hashlib.sha256(repr(labels).encode()).hexdigest(),
     )
@@ -409,8 +409,7 @@ def test_degenerate_inputs(spark, tiny_tables, case):
     n_labels = r["labels"].count()
     if case == "empty_corpus":
         assert n_labels == 0
-        assert r["edge_threshold"] == 0.5
-        assert bars == {"override": 0.99, "semantic": 0.99, "floors": None}
+        assert bars == {"floors": 0.5, "override": 0.99, "semantic": 0.99}
     else:
         assert n_labels == files_df.count()
     if case == "positives_only":
@@ -538,30 +537,47 @@ def test_config_space():
     assert seen["accepted"] > 100 and seen["rejected"] > 100, seen
 
 
-def _gate_table(spark, config, bars):
-    """edge_gates(config) with each bar pinned (no calibration evidence
-    needed): the regions come from the config, the bars from ``bars``."""
+def _gate_table(spark, config, thr, calibrated):
+    """edge_gates(config) with the threshold and each calibrated bar
+    pinned (no calibration evidence needed), bars built as edge_gates
+    builds them: floors at ``thr``, every other gate at max(thr, its
+    ``calibrated`` bar). The regions come from the config."""
     from bigdataentityresolution_spark.operators import scoring as S
 
     labeled = spark.createDataFrame(
         [], "label int, f_cosine double, f_jaccard double, f_lev double, f_vocab_cov int"
     )
-    _, gates = P.edge_gates(config, labeled, S.LRModel(weights=(0.0, 0.0, 0.0), bias=0.0))
-    return [g._replace(bar=bars[g.name]) for g in gates]
+    gates = P.edge_gates(config, labeled, S.LRModel(weights=(0.0, 0.0, 0.0), bias=0.0))
+    return [
+        g._replace(bar=thr if g.name == "floors" else max(thr, calibrated[g.name])) for g in gates
+    ]
+
+
+def _paths(spark, gates, rows):
+    """accept_path(gates) of each (f_cosine, f_jaccard, f_vocab_cov, proba)."""
+    df = spark.createDataFrame(
+        [r[:4] for r in rows], "f_cosine double, f_jaccard double, f_vocab_cov int, proba double"
+    )
+    return [r["path"] for r in df.select(P.accept_path(gates).alias("path")).collect()]
 
 
 def test_accept_path_gate_table(spark):
-    # Pinned bars, so the table reads only the regions: floors cos 0.5 /
-    # jacc 0.45; override jacc 0.12, cos 0.35, bar 0.9; semantic cos 0.35,
-    # bar 0.85 (dropped with the channel off).
-    bars = {"floors": None, "override": 0.9, "semantic": 0.85}
-    with_sem = _gate_table(spark, P.ERConfig(), bars)
-    no_sem = _gate_table(spark, P.ERConfig(semantic_channel=False), bars)
-    assert [g.name for g in with_sem] == ["floors", "override", "semantic"]
+    # Pinned bars, so the table reads only the regions and the bars:
+    # floors cos 0.5 / jacc 0.45, bar thr 0.3; override jacc 0.12, cos
+    # 0.35, bar 0.9; semantic cos 0.35, bar 0.85 (dropped with the
+    # channel off).
+    calibrated = {"override": 0.9, "semantic": 0.85}
+    with_sem = _gate_table(spark, P.ERConfig(), 0.3, calibrated)
+    no_sem = _gate_table(spark, P.ERConfig(semantic_channel=False), 0.3, calibrated)
+    assert [(g.name, g.bar) for g in with_sem] == [
+        ("floors", 0.3), ("override", 0.9), ("semantic", 0.85)
+    ]
     assert [g.name for g in no_sem] == ["floors", "override"]
     # (f_cosine, f_jaccard, f_vocab_cov, proba, path, path without semantic)
     rows = [
         (0.6, 0.5, 5, 0.5, "floors", "floors"),          # inside floors
+        (0.6, 0.5, 5, 0.3, "floors", "floors"),          # floors at thr
+        (0.6, 0.5, 5, 0.2999, None, None),               # floors just below thr
         (0.5, 0.45, 5, 0.5, "floors", "floors"),         # exactly at both floors
         (0.4999, 0.5, 5, 0.5, None, None),               # cosine just below floor
         (0.6, 0.4499, 5, 0.5, None, None),               # jaccard just below floor
@@ -576,13 +592,22 @@ def test_accept_path_gate_table(spark):
         (0.35, 0.05, 5, 0.8499, None, None),             # semantic just below its bar
         (0.3499, 0.05, 5, 0.99, None, None),             # cosine just outside semantic
     ]
-    df = spark.createDataFrame(
-        [r[:4] for r in rows],
-        "f_cosine double, f_jaccard double, f_vocab_cov int, proba double",
-    )
     for gates, col in ((with_sem, 4), (no_sem, 5)):
-        got = [r["path"] for r in df.select(P.accept_path(gates).alias("path")).collect()]
-        assert got == [r[col] for r in rows]
+        assert _paths(spark, gates, rows) == [r[col] for r in rows]
+
+    # A calibrated bar below thr is raised to it: at thr 0.95 the
+    # override and semantic pairs need proba 0.95, not their 0.9 / 0.85.
+    high = _gate_table(spark, P.ERConfig(), 0.95, calibrated)
+    assert [g.bar for g in high] == [0.95, 0.95, 0.95]
+    rows = [
+        (0.0, 0.2, 0, 0.95, "override"),     # override at thr
+        (0.0, 0.2, 0, 0.9499, None),         # clears its calibrated 0.9, not thr
+        (0.35, 0.05, 5, 0.95, "semantic"),   # semantic at thr
+        (0.35, 0.05, 5, 0.9, None),          # clears its calibrated 0.85, not thr
+        (0.6, 0.5, 5, 0.95, "floors"),       # floors at thr
+        (0.6, 0.5, 5, 0.9499, None),         # floors just below thr
+    ]
+    assert _paths(spark, high, rows) == [r[4] for r in rows]
 
 
 def test_gate_calibration_uses_acceptance_region(spark):
@@ -599,7 +624,7 @@ def test_gate_calibration_uses_acceptance_region(spark):
 
     def override_bar(vocab_cov):
         df = spark.createDataFrame([(0, 0.0, 0.3, 0.5, vocab_cov)] * 160 + pos, schema)
-        return {g.name: g.bar for g in P.edge_gates(cfg, df, m_low)[1]}["override"]
+        return {g.name: g.bar for g in P.edge_gates(cfg, df, m_low)}["override"]
 
     assert override_bar(3) == 0.99
     assert override_bar(0) == 0.8

@@ -429,11 +429,13 @@ def test_calibration_rejects_more_rows_than_driver_max(spark, monkeypatch):
     )
 
     def decisions():
-        thr, gates = P.edge_gates(P.ERConfig(), df, m)
-        return thr, [(g.name, g.bar) for g in gates]
+        return [(g.name, g.bar) for g in P.edge_gates(P.ERConfig(), df, m)]
 
     expected = decisions()
-    assert expected[1] == [("floors", None), ("override", 0.8), ("semantic", 0.8)]
+    # the floors bar is the calibrated edge threshold itself
+    pdf = df.select(F.col("label").cast("double"), S.proba_expr(m).alias("proba")).toPandas()
+    thr = S.calibrate_edge_threshold(pdf["label"].to_numpy(), pdf["proba"].to_numpy(), m.threshold)
+    assert expected == [("floors", thr), ("override", 0.8), ("semantic", 0.8)]
     monkeypatch.setattr(S, "DRIVER_MAX_ROWS", 169)
     with pytest.raises(ValueError, match="DRIVER_MAX_ROWS=169"):
         decisions()
