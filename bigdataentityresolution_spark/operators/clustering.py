@@ -22,10 +22,14 @@ Semantics preserved from the reference:
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from bigdataentityresolution_spark.functions.hashes import multiset_signature
+from bigdataentityresolution_spark.plans import checkpoint as CK
 
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
@@ -154,22 +158,23 @@ def connected_components(
     is bit-identical too, and equality of consecutive multiset
     signatures implies the set fixpoint the loop is looking for.
 
-    checkpoint_dir: when set, round state is written as RELIABLE parquet
-    (round_<k>/ + _cc_manifest.json) instead of localCheckpoint, and a
-    rerun with the same dir RESUMES from the last completed round —
-    localCheckpoint blocks live on executors, so on a real cluster one
-    executor loss kills a multi-hour closure (VERDICT.md 'What's wrong'
-    #4). The caller owns dir lifecycle (pass a per-input-fingerprint
-    path; stale state for different edges is the caller's bug).
+    checkpoint_dir: when set, each batch's round state is a RELIABLE
+    checkpoint in the stage format (plans.checkpoint): round_<k>/data/
+    parquet, then round_<k>/_manifest.json with ``round`` and ``sig``,
+    committed once the batch's signatures are read. It replaces
+    localCheckpoint, whose blocks live on executors, so on a real
+    cluster one executor loss kills a multi-hour closure (VERDICT.md
+    'What's wrong' #4). A rerun with the same dir RESUMES from the
+    highest round whose manifest is complete; a dir without one (or
+    written before this format) starts again from round 0. The caller
+    owns dir lifecycle (pass a per-input-fingerprint path; stale state
+    for different edges is the caller's bug).
 
     cached: without a checkpoint_dir, the labels read the last round's
     localCheckpoint, whose blocks stay until its RDD is unpersisted;
     when a list is given, that RDD is appended to it (the pipeline
     passes its StageRunner.cached, so runner.release() frees it).
     """
-    import json
-    import os
-
     # below 1, the loop either never runs a round (labels that never
     # converged) or never advances (an empty batch, looped forever)
     if max_iter < 1 or checkpoint_every < 1:
@@ -179,22 +184,14 @@ def connected_components(
     spark = edges.sparkSession
     e = _canonical_edges(edges)
     rounds_done = 0
-    prev_sig: tuple[int, int] | None = None
+    prev_sig: tuple[int, int, int] | None = None
 
-    manifest_path = (
-        os.path.join(checkpoint_dir, "_cc_manifest.json") if checkpoint_dir else None
-    )
-    if manifest_path and os.path.exists(manifest_path):
-        try:
-            with open(manifest_path) as f:
-                m = json.load(f)
-            rpath = os.path.join(checkpoint_dir, f"round_{m['round']}")
-            if os.path.exists(os.path.join(rpath, "_SUCCESS")):
-                e = spark.read.parquet(rpath)
-                rounds_done = int(m["round"])
-                prev_sig = tuple(m["sig"]) if m.get("sig") else None
-        except (OSError, json.JSONDecodeError, KeyError):
-            pass  # unreadable state → recompute from scratch
+    rounds = glob.glob(os.path.join(checkpoint_dir, "round_*")) if checkpoint_dir else []
+    done = [m for m in map(CK.read_manifest, rounds) if m is not None]
+    if done:  # resume from the highest round whose manifest is complete
+        m = max(done, key=lambda m: m["round"])
+        e = spark.read.parquet(os.path.join(checkpoint_dir, f"round_{m['round']}", CK.DATA))
+        rounds_done, prev_sig = m["round"], tuple(m["sig"])
 
     converged = False
     while rounds_done < max_iter and not converged:
@@ -214,8 +211,7 @@ def connected_components(
             rounds_done += 1
         if checkpoint_dir:
             rpath = os.path.join(checkpoint_dir, f"round_{rounds_done}")
-            e.write.mode("overwrite").parquet(rpath)
-            e = spark.read.parquet(rpath)
+            e = CK.write_data(e, rpath)
         else:
             # cuts the doubling lineage; the eager job also delivers the
             # observe() signature metrics
@@ -236,11 +232,8 @@ def connected_components(
                 converged = True
                 break
             prev_sig = sig
-        if manifest_path:
-            tmp = manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"round": rounds_done, "sig": list(prev_sig)}, f)
-            os.replace(tmp, manifest_path)  # atomic: kill-safe
+        if checkpoint_dir:
+            CK.commit_manifest(rpath, round=rounds_done, sig=list(prev_sig))
 
     if cached is not None and not checkpoint_dir:
         cached.append(e._jdf.queryExecution().analyzed().rdd().toJavaRDD())

@@ -435,12 +435,15 @@ def _ordered(pdf: pd.DataFrame) -> pd.DataFrame:
 def _irls_sums(pdf: pd.DataFrame, feature_cols: tuple[str, ...], beta: np.ndarray) -> np.ndarray:
     """One IRLS round's sums over ``pdf``'s rows at coefficients ``beta``
     (intercept first): [n, n_pos, gradient (d+1), Hessian ((d+1)², row
-    major)]. The feature count is tiny, so the Hessian is driver-solvable."""
-    x = np.column_stack([np.ones(len(pdf)), pdf[list(feature_cols)].to_numpy(dtype=np.float64)])
+    major)]. The feature count is tiny, so the Hessian is driver-solvable.
+    Sums are numpy reductions over one column each, not BLAS products:
+    BLAS picks its summation order by thread count and CPU model."""
+    x = np.vstack([np.ones(len(pdf)), pdf[list(feature_cols)].to_numpy(dtype=np.float64).T])
     y = pdf["label"].to_numpy(dtype=np.float64)
-    p = 1.0 / (1.0 + np.exp(-(x @ beta)))
-    g = x.T @ (p - y)
-    h = x.T @ (x * (p * (1.0 - p))[:, None])
+    p = 1.0 / (1.0 + np.exp(-sum(b * col for b, col in zip(beta, x))))
+    g = (x * (p - y)).sum(axis=1)
+    xw = x * (p * (1.0 - p))
+    h = np.stack([(xw * col).sum(axis=1) for col in x])
     return np.concatenate([[len(y), (y == 1.0).sum()], g, h.ravel()])
 
 

@@ -209,13 +209,13 @@ def doc_vectors_indexed(
     remains the default for reference parity (src/boWords.c:606-619).
     """
     indexed_vocab = index_vocab(top_vocab)
-    lengths = doc_lengths(postings_df)
     with_idf = postings_df.join(
         F.broadcast(indexed_vocab.select("term", "term_idx", "idf")), "term"
-    ).join(lengths, "doc_id")
-    if tf_mode == "log":
+    )
+    if tf_mode == "log":  # needs no doc length: no per-doc aggregate, no join
         tf_term = F.lit(1.0) + F.log(F.col("tf").cast("double"))
     elif tf_mode == "raw":
+        with_idf = with_idf.join(doc_lengths(postings_df), "doc_id")
         tf_term = F.col("tf").cast("double") / F.col("n_tokens")
     else:
         raise ValueError(f"unknown tf_mode {tf_mode!r} (expected 'raw' or 'log')")

@@ -1,31 +1,74 @@
-"""Stage checkpointing: parquet output + _manifest.json per stage.
+"""The one checkpoint format: parquet data + an atomic _manifest.json.
 
 North-rule requirement: "checkpoint per-partition lineage + match
-metrics so any stage resumes mid-run". Each stage directory holds
+metrics so any stage resumes mid-run". A checkpoint is <base>/data/
+(parquet) and <base>/_manifest.json, written after the data (tmp +
+os.replace); a manifest that parses and says status "complete" means
+its data is complete. The lineage is one entry per written file (one
+per write task) with its rows from the parquet footer, so no job
+recounts what the write produced; ``rows`` is their sum.
 
-  <workdir>/<stage>/data/          parquet output
-  <workdir>/<stage>/_manifest.json
-
-The manifest records the stage name, its fingerprint, total rows, schema,
-and per-partition row counts (lineage). `StageRunner.run` returns the
-cached parquet when the manifest is complete under the given fingerprint,
-else recomputes. A fingerprint covers what its stage reads: source
-identities, config fields and upstream fingerprints (plans.pipeline.STAGES).
-
-The reference has no analog (single-process, all in RAM, SIGINT just
-aborts — src/functs.c:2228-2232); this is new engine capability.
+StageRunner checkpoints each pipeline stage at <workdir>/<stage>/ and
+resumes it when the manifest is complete under the stage's fingerprint
+(what it reads: plans.pipeline.STAGES); connected_components keeps its
+round state at <checkpoint_dir>/round_<k>/. The reference has no analog
+(single-process, all in RAM, SIGINT just aborts — src/functs.c:2228-2232).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 MANIFEST = "_manifest.json"
+DATA = "data"
+
+
+def write_data(df: DataFrame, base: str) -> DataFrame:
+    """Write ``df`` as the data at ``base``; return it read back under the
+    schema written (made nullable, as inference would, without its job).
+    The old manifest goes first: a killed write leaves none saying complete."""
+    mpath = os.path.join(base, MANIFEST)
+    if os.path.exists(mpath):
+        os.remove(mpath)
+    dpath = os.path.join(base, DATA)
+    df.write.mode("overwrite").parquet(dpath)
+    return df.sparkSession.read.schema(df.schema).parquet(dpath)
+
+
+def commit_manifest(base: str, **fields) -> dict:
+    """Mark the data at ``base`` complete: ``fields`` plus the lineage."""
+    parts = [
+        {"file": os.path.basename(p), "rows": pq.read_metadata(p).num_rows}
+        for p in sorted(glob.glob(os.path.join(base, DATA, "part-*")))
+    ]
+    manifest = {
+        **fields,
+        "status": "complete",
+        "rows": sum(p["rows"] for p in parts),
+        "partitions": parts,
+        "written_at": time.time(),
+    }
+    mpath = os.path.join(base, MANIFEST)
+    with open(mpath + ".tmp", "w") as f:
+        json.dump(manifest, f, indent=2)
+    os.replace(mpath + ".tmp", mpath)  # atomic: a killed run never leaves a half manifest
+    return manifest
+
+
+def read_manifest(base: str) -> dict | None:
+    """The manifest at ``base``; None if missing, unreadable or incomplete."""
+    try:
+        with open(os.path.join(base, MANIFEST)) as f:
+            m = json.load(f)
+    except (OSError, json.JSONDecodeError):
+        return None
+    return m if isinstance(m, dict) and m.get("status") == "complete" else None
 
 
 class StageRunner:
@@ -39,23 +82,6 @@ class StageRunner:
         self.cached: list[DataFrame] = []  # cached stage outputs (unpersist via release())
         if self.enabled:
             os.makedirs(workdir, exist_ok=True)
-
-    def _paths(self, stage: str) -> tuple[str, str]:
-        base = os.path.join(self.workdir, stage)
-        return os.path.join(base, "data"), os.path.join(base, MANIFEST)
-
-    def valid_manifest(self, stage: str, fingerprint: str) -> dict | None:
-        _, mpath = self._paths(stage)
-        if not os.path.exists(mpath):
-            return None
-        try:
-            with open(mpath) as f:
-                m = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return None
-        if m.get("fingerprint") != fingerprint or m.get("status") != "complete":
-            return None
-        return m
 
     def run(
         self,
@@ -78,39 +104,18 @@ class StageRunner:
             self.manifests[stage] = {"stage": stage, "resumed": False}
             return df
 
-        dpath, mpath = self._paths(stage)
-        m = self.valid_manifest(stage, fingerprint)
-        if m is not None:
-            m["resumed"] = True
-            self.manifests[stage] = m
-            return self.spark.read.parquet(dpath)
+        base = os.path.join(self.workdir, stage)
+        m = read_manifest(base)
+        if m is not None and m.get("fingerprint") == fingerprint:
+            self.manifests[stage] = {**m, "resumed": True}
+            return self.spark.read.parquet(os.path.join(base, DATA))
 
-        df = fn()
-        df.write.mode("overwrite").parquet(dpath)
-        out = self.spark.read.parquet(dpath)
-        per_part = [
-            {"partition": int(r["pid"]), "rows": int(r["rows"])}
-            for r in out.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        ]
-        manifest = {
-            "stage": stage,
-            "status": "complete",
-            "fingerprint": fingerprint,
-            "rows": sum(p["rows"] for p in per_part),
-            "n_partitions": len(per_part),
-            "partitions": per_part,
-            "schema": out.schema.simpleString(),
-            "written_at": time.time(),
-            "metrics": metrics or {},
-            "resumed": False,
-        }
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=2)
-        os.replace(tmp, mpath)  # atomic: a killed run never leaves a half manifest
-        self.manifests[stage] = manifest
+        out = write_data(fn(), base)
+        m = commit_manifest(
+            base, stage=stage, fingerprint=fingerprint,
+            schema=out.schema.simpleString(), metrics=metrics or {},
+        )
+        self.manifests[stage] = {**m, "resumed": False}
         return out
 
     def cache(self, df: DataFrame) -> DataFrame:
@@ -128,6 +133,6 @@ class StageRunner:
         self.cached.clear()
 
     def invalidate(self, stage: str) -> None:
-        _, mpath = self._paths(stage)
+        mpath = os.path.join(self.workdir, stage, MANIFEST)
         if os.path.exists(mpath):
             os.remove(mpath)

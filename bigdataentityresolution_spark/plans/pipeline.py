@@ -416,12 +416,13 @@ def run_stages(
     scheduler (src/jobscheduler.c) on Spark's thread-safe one: a stage is
     submitted, in STAGES order among the ready ones, once every stage it
     reads (STAGES, restricted to ``builders``) is materialized — written
-    in checkpoint mode, counted once in cache mode, so no reader touches
-    a cache before it is filled. A cache-mode stage that no stage reads
-    is not counted. ``then[stage]`` runs on the materialized output in
-    the same thread and pool. Each stage's wall ``start``/``end`` and
-    ``pool`` join ``runner.manifests[stage]``. An exception in any stage
-    is raised once the running stages end; no later stage starts.
+    in checkpoint mode, counted once (its ``rows``) in cache mode, so no
+    reader touches a cache before it is filled. A cache-mode stage that
+    no stage reads is not counted. ``then[stage]`` runs on the
+    materialized output in the same thread and pool. Each stage's wall
+    ``start``/``end`` and ``pool`` join ``runner.manifests[stage]``. An
+    exception in any stage is raised once the running stages end; no
+    later stage starts.
 
     Returns ({stage: output}, {stage: then[stage]'s result})."""
     then = then or {}
@@ -439,7 +440,7 @@ def run_stages(
             start = time.time()
             df = runner.run(name, lambda: builders[name](outs), fingerprints[name])
             if not runner.enabled and name in read:
-                df.count()
+                runner.manifests[name]["rows"] = df.count()
             runner.manifests[name].update(start=start, end=time.time(), pool=pool)
             outs[name] = df
             if name in then:
@@ -639,11 +640,11 @@ def run_er_pipeline(
 
     # ---- one self-training round (count_retrain < 1, src/functs.c:1717) ---
     if config.self_train:
-        train_size = train_pairs.count()
         pseudo = S.self_training_pseudo_labels(
             scored,
             known_pairs=train_pairs.select("a", "b"),
-            limit=config.self_train_limit_factor * max(train_size, 1),
+            limit=config.self_train_limit_factor
+            * max(runner.manifests["train_features"]["rows"], 1),
         ).select("a", "b", "label", *S.FEATURE_COLS)
         refit_input = train_pairs.select("a", "b", "label", *S.FEATURE_COLS).unionByName(
             pseudo

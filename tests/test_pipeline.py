@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import dataclasses
 import hashlib
+import os
 import shutil
 
 import pytest
@@ -14,6 +15,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bigdataentityresolution_spark.operators import clustering as C
+from bigdataentityresolution_spark.plans import checkpoint as CK
 from bigdataentityresolution_spark.plans import pipeline as P
 
 
@@ -174,6 +176,43 @@ def test_checkpoint_resume_equivalence(spark, tiny_tables, tmp_path_factory):
     # manifests carry per-partition lineage
     m = r2["runner"].manifests["candidates"]
     assert m["rows"] == sum(p["rows"] for p in m["partitions"])
+
+
+@pytest.mark.parametrize("case", ["tiny", "empty_corpus"])
+def test_manifest_lineage_from_written_files(spark, pipeline_result, tiny_tables, tmp_path, case):
+    """Each stage manifest has one entry per file its write produced, with
+    the rows Spark reads from that file, and ``rows`` is their sum. A
+    cache-mode run counts the same rows for every stage another stage
+    reads. An empty corpus writes rows 0 everywhere and resumes every
+    stage."""
+    files_df, _, pairs_df = tiny_tables
+    if case == "empty_corpus":
+        files_df, pairs_df = files_df.limit(0), pairs_df.limit(0)
+    wd = str(tmp_path)
+    cfg = P.ERConfig(self_train=False)
+    r = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=cfg)
+    r["runner"].release()
+    read = {s for reads, _ in P.STAGES.values() for s in reads}
+    for stage in P.STAGES:
+        m = CK.read_manifest(os.path.join(wd, stage))
+        assert m == {k: v for k, v in r["runner"].manifests[stage].items() if k in m}
+        data = spark.read.parquet(os.path.join(wd, stage, CK.DATA))
+        per_file = {
+            os.path.basename(row["f"]): row["count"]
+            for row in data.groupBy(F.input_file_name().alias("f")).count().collect()
+        }
+        files = {p["file"]: p["rows"] for p in m["partitions"]}
+        assert set(per_file) <= set(files), stage
+        assert files == {f: per_file.get(f, 0) for f in files}, stage
+        assert m["rows"] == sum(files.values()) == data.count(), stage
+        if case == "empty_corpus":
+            assert m["rows"] == 0, stage
+        elif stage in read:
+            assert pipeline_result["runner"].manifests[stage]["rows"] == m["rows"], stage
+    if case == "empty_corpus":
+        r2 = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=cfg)
+        assert _resumed(r2) == set(P.STAGES)
+        r2["runner"].release()
 
 
 def test_identical_second_run_compiles_no_class(spark, tiny_tables, tmp_path):

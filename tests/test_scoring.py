@@ -117,6 +117,39 @@ def test_threshold_clamp_bounds():
     assert m4.threshold == pytest.approx(0.5 + (0.5 / -1.0) * 0.5)
 
 
+_IRLS_BITS = """
+import hashlib
+import numpy as np
+import pandas as pd
+from bigdataentityresolution_spark.operators import scoring as S
+rng = np.random.default_rng(7)
+cols = ("f0", "f1", "f2", "f3")
+pdf = pd.DataFrame(rng.random((50_000, 4)), columns=cols)
+pdf["label"] = (rng.random(50_000) < 0.3).astype(float)
+sums = S._irls_sums(pdf, cols, np.array([0.1, -0.5, 1.3, 0.7, -2.0]))
+print(hashlib.sha256(sums.tobytes()).hexdigest())
+"""
+
+
+def test_irls_sums_independent_of_blas_threads():
+    """The IRLS sums are bit-equal whatever thread count the BLAS runs:
+    the kernel sums with numpy reductions, not BLAS products, whose
+    kernel (and summation order) the thread count picks."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = [
+        subprocess.run(
+            [sys.executable, "-c", _IRLS_BITS], cwd=root, check=True, capture_output=True,
+            text=True, env={**os.environ, "OPENBLAS_NUM_THREADS": str(n)},
+        ).stdout
+        for n in (1, 2)
+    ]
+    assert out[0] == out[1] != ""
+
+
 def test_fit_lr_newton_distributed_matches_driver_local(spark, separable, monkeypatch):
     """Past DRIVER_MAX_ROWS (distributed per-batch gradient + Hessian
     partials, scoring.py) the fit must equal the driver-local ordered

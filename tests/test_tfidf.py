@@ -81,14 +81,19 @@ def test_doc_vectors_pruned_to_vocab(spark, docs_df):
     p = TI.postings(docs_df)
     v = TI.vocab(p, n_docs=len(DOCS))
     top = TI.index_vocab(TI.top_k_vocab(v, 3))
-    vecs = TI.doc_vectors_indexed(p, top, n_docs=len(DOCS), tf_mode="raw").collect()
     term_of = {r["term_idx"]: r["term"] for r in top.collect()}
     kept_terms = set(term_of.values())
     oracle = py_tfidf(DOCS)
-    for r in vecs:
-        terms = {i: term_of.get(i) for i in r["features"]}
-        assert set(terms.values()).issubset(kept_terms)
-        for i, w in r["features"].items():
-            assert w > 0
-            # raw mode: the reference weight tf / n_tokens * idf, as float32
-            assert abs(w - oracle[(r["doc_id"], terms[i])][4]) < 1e-6
+    for tf_mode in ("raw", "log"):
+        vecs = TI.doc_vectors_indexed(p, top, n_docs=len(DOCS), tf_mode=tf_mode).collect()
+        assert vecs
+        for r in vecs:
+            terms = {i: term_of.get(i) for i in r["features"]}
+            assert set(terms.values()).issubset(kept_terms)
+            for i, w in r["features"].items():
+                assert w > 0
+                tf, _, _, idf, raw = oracle[(r["doc_id"], terms[i])]
+                # raw: the reference weight tf / n_tokens * idf; log: the
+                # sublinear (1 + ln tf) * idf; both as float32
+                expect = raw if tf_mode == "raw" else (1 + math.log(tf)) * idf
+                assert abs(w - expect) < 1e-6, tf_mode
