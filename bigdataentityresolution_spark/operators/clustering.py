@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -159,16 +160,15 @@ def connected_components(
     signatures implies the set fixpoint the loop is looking for.
 
     checkpoint_dir: when set, each batch's round state is a RELIABLE
-    checkpoint in the stage format (plans.checkpoint): round_<k>/data/
-    parquet, then round_<k>/_manifest.json with ``round`` and ``sig``,
-    committed once the batch's signatures are read. It replaces
-    localCheckpoint, whose blocks live on executors, so on a real
-    cluster one executor loss kills a multi-hour closure (VERDICT.md
-    'What's wrong' #4). A rerun with the same dir RESUMES from the
-    highest round whose manifest is complete; a dir without one (or
-    written before this format) starts again from round 0. The caller
-    owns dir lifecycle (pass a per-input-fingerprint path; stale state
-    for different edges is the caller's bug).
+    checkpoint (plans.checkpoint): round_<k>/data/ parquet, then its
+    manifest with ``round`` and ``sig``, committed once the batch's
+    signatures are read; the next batch reads it, and the other round
+    dirs are deleted. It replaces localCheckpoint, whose blocks live on
+    executors, so on a real cluster one executor loss kills a multi-hour
+    closure (VERDICT.md 'What's wrong' #4). A rerun with the same dir
+    RESUMES from the highest complete round, else from round 0. The
+    caller owns dir lifecycle (pass a per-input-fingerprint path; stale
+    state for different edges is the caller's bug).
 
     cached: without a checkpoint_dir, the labels read the last round's
     localCheckpoint, whose blocks stay until its RDD is unpersisted;
@@ -190,18 +190,11 @@ def connected_components(
     done = [m for m in map(CK.read_manifest, rounds) if m is not None]
     if done:  # resume from the highest round whose manifest is complete
         m = max(done, key=lambda m: m["round"])
-        e = spark.read.parquet(os.path.join(checkpoint_dir, f"round_{m['round']}", CK.DATA))
+        e = CK.read_data(spark, os.path.join(checkpoint_dir, f"round_{m['round']}"), m)
         rounds_done, prev_sig = m["round"], tuple(m["sig"])
 
     converged = False
     while rounds_done < max_iter and not converged:
-        # EVERY round in the batch carries its own observe() signature;
-        # all of them ride the ONE materializing action. Fixpoint is then
-        # detected from consecutive IN-BATCH signatures — the loop no
-        # longer needs a whole extra no-op batch (2 star shuffles + a
-        # driver barrier) just to see that the signature stopped moving
-        # (r2 executors-mode profiling: that trailing verify batch was a
-        # flat 3-4 s of latency per CC call at ANY core count).
         observations = []
         for _ in range(checkpoint_every):
             e = _canonical_edges(_large_star(e))
@@ -211,7 +204,7 @@ def connected_components(
             rounds_done += 1
         if checkpoint_dir:
             rpath = os.path.join(checkpoint_dir, f"round_{rounds_done}")
-            e = CK.write_data(e, rpath)
+            CK.write_data(e, rpath)
         else:
             # cuts the doubling lineage; the eager job also delivers the
             # observe() signature metrics
@@ -219,12 +212,10 @@ def connected_components(
         try:
             batch_sigs = _observation_sigs(observations)
         except Exception:
-            # Degenerate plans (e.g. an EMPTY edge set collapses to a
-            # zero-task LocalTableScan) can skip the CollectMetrics nodes
-            # entirely — no metrics row, Observation.get fails. Fall back
-            # to one direct aggregation of the materialized batch output
-            # (old per-batch semantics: convergence then needs one more
-            # no-op batch — fine for the empty/degenerate case).
+            # Degenerate plans (an EMPTY edge set collapses to a zero-task
+            # LocalTableScan) can skip the CollectMetrics nodes: no metrics
+            # row. One direct aggregation of the batch output stands in
+            # (convergence then needs one more no-op batch; fine here).
             row = e.agg(*multiset_signature("a", "b")).collect()[0]
             batch_sigs = [(int(row["n"]), int(row["h"]), int(row["s"]))]
         for sig in batch_sigs:
@@ -233,7 +224,11 @@ def connected_components(
                 break
             prev_sig = sig
         if checkpoint_dir:
-            CK.commit_manifest(rpath, round=rounds_done, sig=list(prev_sig))
+            m = CK.commit_manifest(rpath, e.schema, round=rounds_done, sig=list(prev_sig))
+            e = CK.read_data(spark, rpath, m)
+            # resume reads only the highest complete round: drop the others
+            for r in set(glob.glob(os.path.join(checkpoint_dir, "round_*"))) - {rpath}:
+                shutil.rmtree(r)
 
     if cached is not None and not checkpoint_dir:
         cached.append(e._jdf.queryExecution().analyzed().rdd().toJavaRDD())

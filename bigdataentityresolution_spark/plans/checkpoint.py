@@ -3,10 +3,10 @@
 North-rule requirement: "checkpoint per-partition lineage + match
 metrics so any stage resumes mid-run". A checkpoint is <base>/data/
 (parquet) and <base>/_manifest.json, written after the data (tmp +
-os.replace); a manifest that parses and says status "complete" means
-its data is complete. The lineage is one entry per written file (one
-per write task) with its rows from the parquet footer, so no job
-recounts what the write produced; ``rows`` is their sum.
+os.replace): a manifest that parses, says status "complete" and holds
+the written schema means its data is complete, and read_data opens it
+under that schema, so no job infers it. The lineage is one entry per
+written file with its rows from the parquet footer; ``rows`` is their sum.
 
 StageRunner checkpoints each pipeline stage at <workdir>/<stage>/ and
 resumes it when the manifest is complete under the stage's fingerprint
@@ -24,25 +24,28 @@ import time
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "_manifest.json"
 DATA = "data"
 
 
-def write_data(df: DataFrame, base: str) -> DataFrame:
-    """Write ``df`` as the data at ``base``; return it read back under the
-    schema written (made nullable, as inference would, without its job).
-    The old manifest goes first: a killed write leaves none saying complete."""
+def _drop_manifest(base: str) -> None:
     mpath = os.path.join(base, MANIFEST)
     if os.path.exists(mpath):
         os.remove(mpath)
-    dpath = os.path.join(base, DATA)
-    df.write.mode("overwrite").parquet(dpath)
-    return df.sparkSession.read.schema(df.schema).parquet(dpath)
 
 
-def commit_manifest(base: str, **fields) -> dict:
-    """Mark the data at ``base`` complete: ``fields`` plus the lineage."""
+def write_data(df: DataFrame, base: str) -> None:
+    """Write ``df`` as the data at ``base``. The old manifest goes first:
+    a killed write leaves none saying complete."""
+    _drop_manifest(base)
+    df.write.mode("overwrite").parquet(os.path.join(base, DATA))
+
+
+def commit_manifest(base: str, schema: StructType, **fields) -> dict:
+    """Mark the data at ``base`` complete: ``fields``, the ``schema`` it
+    was written under, and the lineage."""
     parts = [
         {"file": os.path.basename(p), "rows": pq.read_metadata(p).num_rows}
         for p in sorted(glob.glob(os.path.join(base, DATA, "part-*")))
@@ -50,6 +53,7 @@ def commit_manifest(base: str, **fields) -> dict:
     manifest = {
         **fields,
         "status": "complete",
+        "schema": schema.jsonValue(),
         "rows": sum(p["rows"] for p in parts),
         "partitions": parts,
         "written_at": time.time(),
@@ -62,13 +66,22 @@ def commit_manifest(base: str, **fields) -> dict:
 
 
 def read_manifest(base: str) -> dict | None:
-    """The manifest at ``base``; None if missing, unreadable or incomplete."""
+    """The manifest at ``base``; None if missing, unreadable, incomplete or
+    without a recorded schema (written by older code)."""
     try:
         with open(os.path.join(base, MANIFEST)) as f:
             m = json.load(f)
     except (OSError, json.JSONDecodeError):
         return None
-    return m if isinstance(m, dict) and m.get("status") == "complete" else None
+    complete = isinstance(m, dict) and m.get("status") == "complete"
+    return m if complete and isinstance(m.get("schema"), dict) else None
+
+
+def read_data(spark: SparkSession, base: str, manifest: dict) -> DataFrame:
+    """The data at ``base`` under the schema ``manifest`` records (Spark
+    makes it nullable, as inference would, without inference's job)."""
+    schema = StructType.fromJson(manifest["schema"])
+    return spark.read.schema(schema).parquet(os.path.join(base, DATA))
 
 
 class StageRunner:
@@ -83,13 +96,7 @@ class StageRunner:
         if self.enabled:
             os.makedirs(workdir, exist_ok=True)
 
-    def run(
-        self,
-        stage: str,
-        fn,
-        fingerprint: str = "",
-        metrics: dict | None = None,
-    ) -> DataFrame:
+    def run(self, stage: str, fn, fingerprint: str = "", metrics: dict | None = None) -> DataFrame:
         """Return the stage output, from checkpoint when valid.
 
         fn: () -> DataFrame. fingerprint: over what the stage reads
@@ -106,17 +113,14 @@ class StageRunner:
 
         base = os.path.join(self.workdir, stage)
         m = read_manifest(base)
-        if m is not None and m.get("fingerprint") == fingerprint:
-            self.manifests[stage] = {**m, "resumed": True}
-            return self.spark.read.parquet(os.path.join(base, DATA))
-
-        out = write_data(fn(), base)
-        m = commit_manifest(
-            base, stage=stage, fingerprint=fingerprint,
-            schema=out.schema.simpleString(), metrics=metrics or {},
-        )
-        self.manifests[stage] = {**m, "resumed": False}
-        return out
+        resumed = m is not None and m.get("fingerprint") == fingerprint
+        if not resumed:
+            df = fn()
+            write_data(df, base)
+            m = commit_manifest(base, df.schema, stage=stage, fingerprint=fingerprint,
+                                metrics=metrics or {})
+        self.manifests[stage] = {**m, "resumed": resumed}
+        return read_data(self.spark, base, m)
 
     def cache(self, df: DataFrame) -> DataFrame:
         """Keep a stage output cached until release(). A cache-mode output
@@ -133,6 +137,4 @@ class StageRunner:
         self.cached.clear()
 
     def invalidate(self, stage: str) -> None:
-        mpath = os.path.join(self.workdir, stage, MANIFEST)
-        if os.path.exists(mpath):
-            os.remove(mpath)
+        _drop_manifest(os.path.join(self.workdir, stage))

@@ -2,10 +2,12 @@
 resumes from the last completed round (VERDICT.md r1 'What's wrong' #4 —
 localCheckpoint state dies with an executor; parquet round state + an
 atomic manifest survives). Round state is a checkpoint in the stage
-format: round_<k>/data/ + round_<k>/_manifest.json (plans.checkpoint)."""
+format: round_<k>/data/ + round_<k>/_manifest.json (plans.checkpoint),
+and only the highest complete round stays on disk."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -55,6 +57,8 @@ def test_cc_checkpoint_resume_equals_fresh(spark, chain_edges, tmp_path):
     resumed = connected_components(chain_edges, checkpoint_dir=ckpt)
     assert _labels(resumed) == expected
     assert _last_round(ckpt) > 2
+    # once a round commits, the lower rounds are deleted
+    assert os.listdir(ckpt) == [f"round_{_last_round(ckpt)}"]
 
 
 def test_cc_completed_dir_short_circuits(spark, chain_edges, tmp_path):
@@ -70,20 +74,29 @@ def test_cc_completed_dir_short_circuits(spark, chain_edges, tmp_path):
 
 
 def test_cc_old_layout_dir_is_ignored(spark, chain_edges, tmp_path):
-    """A dir in the layout before the shared format (_cc_manifest.json
-    naming a bare round_2/ parquet) has no round manifest: CC starts
-    again from round 0 and converges to the fresh labels."""
+    """Round state written by older code has no complete round manifest:
+    neither the layout before the shared format (_cc_manifest.json
+    naming a bare round_2/ parquet) nor a round manifest without a
+    recorded schema. CC starts again from round 0, converges to the
+    fresh labels in the fresh number of rounds, and deletes the stale
+    rounds, leaving one complete round."""
+    fresh = str(tmp_path / "fresh")
+    expected = _labels(connected_components(chain_edges, checkpoint_dir=fresh))
     ckpt = tmp_path / "cc"
-    expected = _labels(connected_components(chain_edges))
-    # round 2 of the old layout, holding edges that are NOT the chain's
-    # state, so resuming from it would give other labels
-    spark.createDataFrame([("n00", "n23")], "a string, b string").write.parquet(
-        str(ckpt / "round_2")
-    )
+    # edges that are NOT the chain's state, so resuming from them would
+    # give other labels
+    stale = spark.createDataFrame([("n00", "n23")], "a string, b string")
+    stale.write.parquet(str(ckpt / "round_2"))
     (ckpt / "_cc_manifest.json").write_text(json.dumps({"round": 2, "sig": [1, 2, 3]}))
+    stale.write.parquet(str(ckpt / "round_4" / "data"))
+    (ckpt / "round_4" / "_manifest.json").write_text(
+        json.dumps({"round": 4, "sig": [1, 2, 3], "status": "complete", "rows": 1})
+    )
 
     assert _labels(connected_components(chain_edges, checkpoint_dir=str(ckpt))) == expected
-    assert read_manifest(str(ckpt / "round_2"))["round"] == 2
+    assert _last_round(ckpt) == _last_round(fresh)
+    assert not glob.glob(str(ckpt / "round_2" / "*.parquet"))
+    assert len([d for d in os.listdir(ckpt) if read_manifest(str(ckpt / d))]) == 1
 
 
 @pytest.mark.parametrize("kwargs", [{"checkpoint_every": 0}, {"max_iter": 0}])

@@ -5,7 +5,9 @@ checkpoint/resume equivalence, and the stage table's fingerprints
 from __future__ import annotations
 
 import dataclasses
+import glob
 import hashlib
+import json
 import os
 import shutil
 
@@ -163,19 +165,22 @@ def _sorted_labels(result) -> list:
     return sorted(map(tuple, result["labels"].collect()))
 
 
-def test_checkpoint_resume_equivalence(spark, tiny_tables, tmp_path_factory):
+def test_checkpoint_resume_equivalence(spark, pipeline_result, tiny_tables, tmp_path_factory):
     """Kill-and-resume: a second run over the same workdir must reuse
-    every stage (manifest hit) and produce identical clusters."""
+    every stage (manifest hit). The checkpointed run, its full resume and
+    the cache-mode run make bit-equal decisions: weights, threshold,
+    bars and labels."""
     files_df, truth_df, pairs_df = tiny_tables
     wd = str(tmp_path_factory.mktemp("ckpt"))
-    cfg = P.ERConfig(self_train=False)
-    r1 = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=cfg)
-    r2 = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=cfg)
-    assert _sorted_labels(r1) == _sorted_labels(r2)
+    r1 = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd)
+    r2 = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd)
     assert _resumed(r2) == set(P.STAGES)
+    assert _decisions(r1) == _decisions(r2) == _decisions(pipeline_result)
     # manifests carry per-partition lineage
     m = r2["runner"].manifests["candidates"]
     assert m["rows"] == sum(p["rows"] for p in m["partitions"])
+    r1["runner"].release()
+    r2["runner"].release()
 
 
 @pytest.mark.parametrize("case", ["tiny", "empty_corpus"])
@@ -213,6 +218,25 @@ def test_manifest_lineage_from_written_files(spark, pipeline_result, tiny_tables
         r2 = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=cfg)
         assert _resumed(r2) == set(P.STAGES)
         r2["runner"].release()
+
+
+def test_resume_submits_no_job(spark, base_workdir):
+    """A resumed stage is read under the schema its manifest records, the
+    schema Spark would infer: resuming submits no Spark job."""
+    sc = spark.sparkContext
+    runner = CK.StageRunner(spark, base_workdir)
+    for stage in P.STAGES:
+        m = CK.read_manifest(os.path.join(base_workdir, stage))
+        group = f"resume-{stage}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = runner.run(stage, lambda: pytest.fail(f"{stage} recomputed"), m["fingerprint"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], stage
+        assert runner.manifests[stage]["resumed"], stage
+        inferred = spark.read.parquet(os.path.join(base_workdir, stage, CK.DATA)).schema
+        assert out.schema == inferred, stage
 
 
 def test_identical_second_run_compiles_no_class(spark, tiny_tables, tmp_path):
@@ -420,6 +444,42 @@ def test_resume_follows_input(spark, tiny_tables, base_workdir, tmp_path):
     r2 = P.run_er_pipeline(spark, tampered, pairs_df, workdir=wd2, config=RESUME_CFG)
     assert _resumed(r2) == set()
     assert set(r2["runner"].manifests) == set(P.STAGES)
+
+
+@pytest.mark.parametrize("case", ["one_stage", "whole_workdir"])
+def test_checkpoint_written_by_older_code_recomputes(
+    spark, tiny_tables, base_workdir, tmp_path, case
+):
+    """Older code recorded a stage's schema as a simpleString and none in
+    CC round manifests. Such a manifest is not complete, so its stage
+    recomputes once, with the same labels. With one such stage, its
+    readers resume (their manifests are complete under unchanged
+    fingerprints); a workdir older code wrote whole reruns every stage,
+    and its CC rounds start again from round 0."""
+    files_df, _, pairs_df = tiny_tables
+    wd = _copy_workdir(base_workdir, tmp_path)
+    old = {"candidates"} if case == "one_stage" else set(P.STAGES)
+    for stage in old:
+        base = os.path.join(wd, stage)
+        m = CK.read_manifest(base)
+        with open(os.path.join(base, CK.MANIFEST), "w") as f:
+            json.dump({**m, "schema": CK.read_data(spark, base, m).schema.simpleString()}, f)
+    if case == "whole_workdir":
+        for mpath in glob.glob(os.path.join(wd, "cc_*", "round_*", CK.MANIFEST)):
+            with open(mpath) as f:
+                m = json.load(f)
+            with open(mpath, "w") as f:
+                json.dump({k: v for k, v in m.items() if k != "schema"}, f)
+    assert not any(CK.read_manifest(os.path.join(wd, s)) for s in old)
+
+    r = P.run_er_pipeline(spark, files_df, pairs_df, workdir=wd, config=RESUME_CFG)
+    assert _resumed(r) == set(P.STAGES) - old
+    rounds = glob.glob(os.path.join(wd, "cc_*", "round_*"))
+    assert rounds and all(CK.read_manifest(d) for d in rounds)
+    cluster = os.path.join(base_workdir, "cluster")
+    expected = CK.read_data(spark, cluster, CK.read_manifest(cluster))
+    assert _sorted_labels(r) == sorted(map(tuple, expected.collect()))
+    r["runner"].release()
 
 
 def _degenerate_inputs(case, files_df, pairs_df):
