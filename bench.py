@@ -465,13 +465,6 @@ def _regressions(
         if prev is not None and None not in (was, is_) and was != is_:
             out[name] = {"prev": prev, "now": now, "protocol_break": {"prev": was, "now": is_}}
             continue
-        if prev is None and name == "er_pipeline_noselftrain":
-            # r1/r2 benched er_pipeline with self_train=False — that key
-            # is the comparable ancestor of the noselftrain variant
-            prev = prior.get("er_pipeline")
-        elif name == "er_pipeline" and "er_pipeline_noselftrain" in queries and \
-                "er_pipeline_noselftrain" not in prior:
-            continue  # prior er_pipeline was the noselftrain variant
         if prev and prev > 0 and now / prev > threshold:
             out[name] = {"prev": prev, "now": now, "ratio": round(now / prev, 2)}
     return out

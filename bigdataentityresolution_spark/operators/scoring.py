@@ -11,13 +11,17 @@ Re-expression of the reference's classifier stage (src/logistic.c):
   featurizer, :func:`pair_features`, shared by train and candidate
   pairs (cosine over top-k-pruned TF-IDF maps, MinHash-estimated
   Jaccard, bounded prefix Levenshtein — all JVM expressions,
-  functions/similarity.py) and trains them with :func:`fit_lr_newton`:
-  one synchronous IRLS loop whose per-round sums run in local numpy
-  over one ordered driver read, or per hash batch in an applyInPandas
-  kernel past DRIVER_MAX_ROWS, folded in batch order. The fit is a
-  function of the rows' values alone — a deterministic replacement for
-  the reference's racy Hogwild (SURVEY.md §2.10). :func:`fit_lr` keeps
-  the reference's synchronous mini-batch GD for §2 parity.
+  functions/similarity.py) and trains them with :func:`fit_lr_newton`.
+- One logistic-regression core serves both trainers: one kernel
+  (_irls_sums: n, n_pos, gradient, Hessian and Σ|p − y| at the current
+  coefficients), one row source (_round_sums: local numpy over one
+  ordered driver read, or past DRIVER_MAX_ROWS one applyInPandas per
+  round over 64 hash batches folded in batch order) and one loop
+  (_fit). :func:`fit_lr_newton` takes the damped Newton step;
+  :func:`fit_lr` takes the reference's GD step (lr·g/n) and its
+  mean-|missed| stop, kept for §2 parity. The fit is a function of the
+  rows' values alone — a deterministic replacement for the reference's
+  racy Hogwild (SURVEY.md §2.10).
 
 Deliberate deviations (SURVEY.md §7.2, documented not cargo-culted):
 - bias gradient = mean(missed), not the reference's mean(|missed|)
@@ -31,6 +35,7 @@ Deliberate deviations (SURVEY.md §7.2, documented not cargo-culted):
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, replace
 
 import numpy as np
@@ -260,20 +265,18 @@ def prune_weak_examples(
     return scored.filter((p >= F.lit(limit1)) | (p <= F.lit(limit0)))
 
 
-def proba_expr(model: LRModel, feature_cols: tuple[str, ...] = FEATURE_COLS) -> Column:
+def proba_expr(model: LRModel) -> Column:
     """sigmoid(b + w·x) as a JVM expression (calc_s, src/logistic.c:915-950)."""
     z = F.lit(float(model.bias))
-    for wj, c in zip(model.weights, feature_cols):
+    for wj, c in zip(model.weights, FEATURE_COLS):
         z = z + F.lit(float(wj)) * F.col(c)
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 
-def predict(
-    scored: DataFrame, model: LRModel, feature_cols: tuple[str, ...] = FEATURE_COLS
-) -> DataFrame:
+def predict(scored: DataFrame, model: LRModel) -> DataFrame:
     """Adds proba + predict columns (logistic_predict_proba_dataList,
     src/logistic.c:522-552: predict = proba >= threshold)."""
-    return scored.withColumn("proba", proba_expr(model, feature_cols)).withColumn(
+    return scored.withColumn("proba", proba_expr(model)).withColumn(
         "predict", (F.col("proba") >= F.lit(float(model.threshold))).cast("int")
     )
 
@@ -297,109 +300,9 @@ def update_threshold(model: LRModel, n_pos: int, n_neg: int) -> LRModel:
     return replace(model, fit1=fit1, fit0=fit0, threshold=t)
 
 
-def _batch_gradient_kernel(feature_cols: tuple[str, ...], weights: np.ndarray, bias: float):
-    """applyInPandas kernel: one (n_pairs, b_grad, grad_0..grad_d) row per
-    batch. Arrow-columnar in, numpy vectorized — no per-row Python."""
-
-    d = len(feature_cols)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf[list(feature_cols)].to_numpy(dtype=np.float64)
-        y = pdf["label"].to_numpy(dtype=np.float64)
-        z = bias + x @ weights
-        proba = 1.0 / (1.0 + np.exp(-z))
-        missed = proba - y
-        n = len(pdf)
-        grad = (x * missed[:, None]).sum(axis=0) / n
-        out = {
-            "n_pairs": [n],
-            "b_grad": [missed.mean()],
-            "abs_missed_sum": [np.abs(missed).sum()],
-        }
-        for j in range(d):
-            out[f"g{j}"] = [grad[j]]
-        return pd.DataFrame(out)
-
-    schema = "n_pairs long, b_grad double, abs_missed_sum double, " + ", ".join(
-        f"g{j} double" for j in range(d)
-    )
-    return kernel, schema
-
-
-def fit_lr(
-    pairs: DataFrame,
-    feature_cols: tuple[str, ...] = FEATURE_COLS,
-    label_col: str = "label",
-    model: LRModel | None = None,
-    max_rounds: int = 2,
-    batch_size: int = 500,
-) -> LRModel:
-    """Synchronous mini-batch GD.
-
-    Per round: batch id = row hash mod n_batches (deterministic stand-in
-    for the reference's arrival-order batching, 500 pairs/batch
-    src/functs.c:20); applyInPandas computes per-batch gradients
-    (ONE shuffle on batch id); driver averages (weighted by batch size),
-    updates weights (w -= lr·grad, weights_update src/logistic.c:773-801)
-    and the moving threshold; stops when mean |missed| <= stop_limit or
-    after max_rounds (reference: trained_times > 1 → stop,
-    src/logistic.c:454 — default max_rounds=2 mirrors it; pipelines may
-    raise it).
-    """
-    model = model or LRModel(weights=tuple(0.0 for _ in feature_cols))
-    df = pairs.select(
-        *[F.col(c).cast("double").alias(c) for c in feature_cols],
-        F.col(label_col).cast("double").alias("label"),
-    ).cache()
-    n_total = df.count()
-    if n_total == 0:
-        return model
-    n_batches = max(1, (n_total + batch_size - 1) // batch_size)
-    batched = df.withColumn(
-        "_batch",
-        F.pmod(F.xxhash64(*feature_cols, "label"), F.lit(n_batches)),
-    )
-
-    label_counts = {
-        int(r["label"]): r["n"]
-        for r in df.groupBy("label").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-
-    for _ in range(max_rounds):
-        kernel, schema = _batch_gradient_kernel(feature_cols, model.w(), model.bias)
-
-        def with_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            return kernel(_ordered(pdf)).assign(_batch=pdf["_batch"].iat[0])
-
-        # each batch's rows sorted, the partials folded in batch-id order:
-        # the same fit under any partitioning of ``pairs``
-        rows = batched.groupBy("_batch").applyInPandas(with_batch, schema + ", _batch long")
-        stats = sorted(rows.collect(), key=lambda r: r["_batch"])
-        n = sum(r["n_pairs"] for r in stats)
-        b_grad = sum(r["b_grad"] * r["n_pairs"] for r in stats) / n
-        grad = np.array(
-            [sum(r[f"g{j}"] * r["n_pairs"] for r in stats) / n for j in range(len(feature_cols))]
-        )
-        mean_abs_missed = sum(r["abs_missed_sum"] for r in stats) / n
-
-        new_w = model.w() - model.lr * grad
-        model = replace(
-            model,
-            weights=tuple(float(v) for v in new_w),
-            bias=float(model.bias - model.lr * b_grad),
-            rounds_trained=model.rounds_trained + 1,
-        )
-        model = update_threshold(model, label_counts.get(1, 0), label_counts.get(0, 0))
-        if mean_abs_missed <= model.stop_limit:
-            break
-
-    df.unpersist()
-    return model
-
-
-# The most rows the driver reads in one collect: the IRLS fit's driver
-# path ((d+1) float64s per row — 2M pairs ≈ 64 MB) and the calibration
-# read (plans.pipeline.edge_gates).
+# The most rows the driver reads in one collect: the fit's driver path
+# ((d+1) float64s per row — 2M pairs ≈ 64 MB) and the calibration read
+# (plans.pipeline.edge_gates).
 DRIVER_MAX_ROWS = 2_000_000
 # fit_lr_newton's Hessian damping (per pair, see _ridge_penalty) and its
 # stop: a Newton step whose largest |component| is below NEWTON_TOL.
@@ -433,110 +336,146 @@ def _ordered(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def _irls_sums(pdf: pd.DataFrame, feature_cols: tuple[str, ...], beta: np.ndarray) -> np.ndarray:
-    """One IRLS round's sums over ``pdf``'s rows at coefficients ``beta``
-    (intercept first): [n, n_pos, gradient (d+1), Hessian ((d+1)², row
-    major)]. The feature count is tiny, so the Hessian is driver-solvable.
-    Sums are numpy reductions over one column each, not BLAS products:
-    BLAS picks its summation order by thread count and CPU model."""
+    """One training round's sums over ``pdf``'s rows at coefficients
+    ``beta`` (intercept first): [n, n_pos, gradient (d+1), Hessian
+    ((d+1)², row major), Σ|p − y|]. The gradient and Σ|p − y| serve the
+    GD step and its stop, the gradient and Hessian the Newton step; the
+    feature count is tiny, so the Hessian is driver-solvable. Sums are
+    numpy reductions over one column each, not BLAS products: BLAS picks
+    its summation order by thread count and CPU model."""
     x = np.vstack([np.ones(len(pdf)), pdf[list(feature_cols)].to_numpy(dtype=np.float64).T])
     y = pdf["label"].to_numpy(dtype=np.float64)
     p = 1.0 / (1.0 + np.exp(-sum(b * col for b, col in zip(beta, x))))
-    g = (x * (p - y)).sum(axis=1)
+    missed = p - y
+    g = (x * missed).sum(axis=1)
     xw = x * (p * (1.0 - p))
     h = np.stack([(xw * col).sum(axis=1) for col in x])
-    return np.concatenate([[len(y), (y == 1.0).sum()], g, h.ravel()])
+    return np.concatenate([[len(y), (y == 1.0).sum()], g, h.ravel(), [np.abs(missed).sum()]])
 
 
-def fit_lr_newton(
-    pairs: DataFrame,
-    feature_cols: tuple[str, ...] = FEATURE_COLS,
-    label_col: str = "label",
-    max_rounds: int = 8,
-) -> LRModel:
-    """IRLS (Newton) fit — the pipeline's production trainer.
-
-    One Newton loop; each round's (n, n_pos, gradient, Hessian) sums come
-    from one kernel (_irls_sums), run where the rows are:
+@contextmanager
+def _round_sums(pairs: DataFrame):
+    """Yields ``round_sums(beta)``: the _irls_sums of ``pairs``' feature
+    and label columns at ``beta``, computed where the rows are:
     - up to DRIVER_MAX_ROWS rows (the common case: labeled pairs are tiny
       next to the corpus): ONE ordered collect (_driver_rows), every
-      round in local numpy. This removes max_rounds driver-barrier jobs —
-      profiling showed the per-round applyInPandas+collect cycle was the
-      single largest NON-scaling stage of the ER pipeline (13-30 s wall
-      at bench scale regardless of core count, pure scheduling latency).
+      round in local numpy. This removes one driver-barrier job per
+      round — profiling showed the per-round applyInPandas+collect cycle
+      was the single largest NON-scaling stage of the ER pipeline (13-30
+      s wall at bench scale regardless of core count, pure scheduling
+      latency).
     - more: per round, one applyInPandas job runs the kernel over each
       of 64 hash batches (rows sorted within the batch) and the driver
-      folds the partial sums in batch-id order.
-    Both paths sum in an order fixed by the rows' values, so the fit is
-    bit-equal under any partitioning of ``pairs``. Converges in ~5
-    rounds where the reference's lr=0.6 GD (kept in fit_lr for parity)
-    needs hundreds.
-
-    Threshold bookkeeping matches fit_lr. Regularization (be precise —
-    r4 audit): the ridge·n·I penalty (intercept diagonal zeroed, see
-    _ridge_penalty) sits in the HESSIAN ONLY, i.e. Levenberg-style step
-    damping, NOT an L2-penalized objective — iterated to convergence it
-    would reach the unpenalized MLE. The effective regularizer is
-    damping + the bounded round budget (max_rounds ≤ 8), which is what
-    keeps near-separable fits from blowing the weights up in a
-    noise-chosen direction (measured: w_jaccard ≈ +30, w_cosine ≈ −9.5
-    at ridge 1e-8 — the sign on cosine was WRONG and MinHash noise-tail
-    pairs crossed the threshold). A true-ridge variant (penalty in the
-    gradient too) was tried in r4 and REJECTED on measurement: it
-    flattens the fit enough that the calibrated edge threshold drops
-    (0.45 → 0.18 on the tiny hard corpus) and full-floor template
-    negatives walk over it (pairwise precision 0.95 → 0.17), while the
-    hard-tier conditional structure the model needs (same cosine,
-    LOWER lev ⇒ clone, not boilerplate — a legitimately negative
-    conditional weight) is weakened. The damped/early-stopped fit is
-    the behavior every committed quality number rests on.
-    """
-    d = len(feature_cols)
+      folds the partial sums in batch-id order; the batches' cache is
+      released on exit.
+    Both routes sum in an order fixed by the rows' values, so the sums
+    are bit-equal under any partitioning of ``pairs``."""
     df = pairs.select(
-        *[F.col(c).cast("double").alias(c) for c in feature_cols],
-        F.col(label_col).cast("double").alias("label"),
+        *[F.col(c).cast("double").alias(c) for c in FEATURE_COLS],
+        F.col("label").cast("double").alias("label"),
     )
     pdf = _driver_rows(df)
-    batched = None
     if pdf is not None:
-        def round_sums(beta: np.ndarray) -> np.ndarray:
-            return _irls_sums(pdf, feature_cols, beta)
-    else:
-        batched = df.withColumn(
-            "_batch", F.pmod(F.xxhash64(*feature_cols, "label"), F.lit(64))
-        ).cache()
-        schema = "_batch long, " + ", ".join(f"s{i} double" for i in range(2 + (d + 1) * (d + 2)))
+        yield lambda beta: _irls_sums(pdf, FEATURE_COLS, beta)
+        return
+    d = len(FEATURE_COLS)
+    batched = df.withColumn(
+        "_batch", F.pmod(F.xxhash64(*FEATURE_COLS, "label"), F.lit(64))
+    ).cache()
+    schema = "_batch long, " + ", ".join(f"s{i} double" for i in range(3 + (d + 1) * (d + 2)))
 
-        def round_sums(beta: np.ndarray) -> np.ndarray:
-            def kernel(part: pd.DataFrame) -> pd.DataFrame:
-                sums = _irls_sums(_ordered(part), feature_cols, beta)
-                return pd.DataFrame([[int(part["_batch"].iat[0]), *sums]])
+    def round_sums(beta: np.ndarray) -> np.ndarray:
+        def kernel(part: pd.DataFrame) -> pd.DataFrame:
+            sums = _irls_sums(_ordered(part), FEATURE_COLS, beta)
+            return pd.DataFrame([[int(part["_batch"].iat[0]), *sums]])
 
-            rows = sorted(batched.groupBy("_batch").applyInPandas(kernel, schema).collect())
-            return np.sum([r[1:] for r in rows], axis=0)
+        rows = sorted(batched.groupBy("_batch").applyInPandas(kernel, schema).collect())
+        return np.sum([r[1:] for r in rows], axis=0)
 
-    model = LRModel(weights=tuple(0.0 for _ in feature_cols))
-    beta = np.zeros(d + 1)
-    for _ in range(max_rounds):
-        sums = round_sums(beta)
-        n, n_pos = int(sums[0]), int(sums[1])
-        if n == 0:
-            break
-        g = sums[2 : d + 3]
-        h = sums[d + 3 :].reshape(d + 1, d + 1) + _ridge_penalty(d, n)
-        step = np.linalg.solve(h, g)
-        beta = beta - step
-        model = replace(
-            model,
-            weights=tuple(float(v) for v in beta[1:]),
-            bias=float(beta[0]),
-            rounds_trained=model.rounds_trained + 1,
-        )
-        model = update_threshold(model, n_pos, n - n_pos)
-        if float(np.abs(step).max()) < NEWTON_TOL:
-            break
-    if batched is not None:
+    try:
+        yield round_sums
+    finally:
         batched.unpersist()
+
+
+def _fit(pairs: DataFrame, max_rounds: int, step) -> LRModel:
+    """The one training loop: per round, the sums at the current
+    coefficients give ``step(sums, n) -> (delta, stop)``; the
+    coefficients move by ``-delta`` and the moving threshold counts the
+    round's labels (update_threshold). Stops after ``stop`` or
+    ``max_rounds`` rounds; an empty input trains nothing."""
+    model = LRModel()
+    beta = np.zeros(len(FEATURE_COLS) + 1)
+    with _round_sums(pairs) as round_sums:
+        for _ in range(max_rounds):
+            sums = round_sums(beta)
+            n, n_pos = int(sums[0]), int(sums[1])
+            if n == 0:
+                break
+            delta, stop = step(sums, n)
+            beta = beta - delta
+            model = replace(
+                model,
+                weights=tuple(float(v) for v in beta[1:]),
+                bias=float(beta[0]),
+                rounds_trained=model.rounds_trained + 1,
+            )
+            model = update_threshold(model, n_pos, n - n_pos)
+            if stop:
+                break
     return model
+
+
+def fit_lr(pairs: DataFrame, max_rounds: int = 2) -> LRModel:
+    """The reference's synchronous GD (weights_update,
+    src/logistic.c:773-801): per round w -= lr·g/n over all pairs, the
+    moving threshold updated; stops when mean |missed| <= stop_limit or
+    after max_rounds (reference: trained_times > 1 → stop,
+    src/logistic.c:454 — default max_rounds=2 mirrors it). Synchronous:
+    one full-batch step per round (the size-weighted mean of any batches'
+    gradients), where the reference's threads step per 500-pair batch
+    (src/functs.c:20; SURVEY.md §2.10)."""
+    d = len(FEATURE_COLS)
+
+    def gd_step(sums: np.ndarray, n: int):
+        return LRModel.lr * (sums[2 : d + 3] / n), sums[-1] / n <= LRModel.stop_limit
+
+    return _fit(pairs, max_rounds, gd_step)
+
+
+def fit_lr_newton(pairs: DataFrame, max_rounds: int = 8) -> LRModel:
+    """IRLS (Newton) fit — the pipeline's production trainer: the one
+    training loop (_fit) with the damped Newton step. Converges in ~5
+    rounds where the reference's lr=0.6 GD (fit_lr, kept for parity)
+    needs hundreds.
+
+    Regularization (be precise — r4 audit): the ridge·n·I penalty
+    (intercept diagonal zeroed, see _ridge_penalty) sits in the HESSIAN
+    ONLY, i.e. Levenberg-style step damping, NOT an L2-penalized
+    objective — iterated to convergence it would reach the unpenalized
+    MLE. The effective regularizer is damping + the bounded round budget
+    (max_rounds ≤ 8), which is what keeps near-separable fits from
+    blowing the weights up in a noise-chosen direction (measured:
+    w_jaccard ≈ +30, w_cosine ≈ −9.5 at ridge 1e-8 — the sign on cosine
+    was WRONG and MinHash noise-tail pairs crossed the threshold). A
+    true-ridge variant (penalty in the gradient too) was tried in r4 and
+    REJECTED on measurement: it flattens the fit enough that the
+    calibrated edge threshold drops (0.45 → 0.18 on the tiny hard
+    corpus) and full-floor template negatives walk over it (pairwise
+    precision 0.95 → 0.17), while the hard-tier conditional structure
+    the model needs (same cosine, LOWER lev ⇒ clone, not boilerplate — a
+    legitimately negative conditional weight) is weakened. The
+    damped/early-stopped fit is the behavior every committed quality
+    number rests on.
+    """
+    d = len(FEATURE_COLS)
+
+    def newton_step(sums: np.ndarray, n: int):
+        h = sums[d + 3 : -1].reshape(d + 1, d + 1) + _ridge_penalty(d, n)
+        delta = np.linalg.solve(h, sums[2 : d + 3])
+        return delta, float(np.abs(delta).max()) < NEWTON_TOL
+
+    return _fit(pairs, max_rounds, newton_step)
 
 
 def calibrate_edge_threshold(label: np.ndarray, proba: np.ndarray, fallback: float) -> float:
@@ -662,12 +601,12 @@ def calibrate_override_bar(neg_proba: np.ndarray) -> float:
     return float(min(max(worst + headroom, BAR_FLOOR), BAR_CAP))
 
 
-def accuracy(scored: DataFrame, label_col: str = "label") -> float:
+def accuracy(scored: DataFrame) -> float:
     """corrects / total (logistic_score, src/logistic.c:601-615) — the
     global definition, not the reference's per-batch mean-of-means quirk
     (src/functs.c:1504-1508)."""
     row = scored.select(
-        F.avg((F.col("predict") == F.col(label_col)).cast("double")).alias("acc")
+        F.avg((F.col("predict") == F.col("label")).cast("double")).alias("acc")
     ).collect()[0]
     return float(row["acc"]) if row["acc"] is not None else 0.0
 

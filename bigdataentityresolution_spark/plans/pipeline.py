@@ -245,31 +245,21 @@ STAGES: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
 }
 
 
-# Stages whose output changed shape under the same reads and fields: the
-# revision joins their fingerprint, so a workdir written by older code
-# recomputes them (and, by the cascade, their readers) instead of resuming
-# the old shape. closure 2: labels only (1 also packed the negative
-# cluster edges into it, tagged by a kind column).
-REVISIONS = {"closure": 2}
-
-
 def _sha(payload) -> str:
     return hashlib.sha256(json.dumps(payload).encode()).hexdigest()[:16]
 
 
 def stage_fingerprints(config: ERConfig, sources: dict) -> dict[str, str | None]:
     """Checkpoint fingerprint of every stage in STAGES: the sha of
-    [name, [fingerprint of each read], [value of each field]] (plus its
-    REVISIONS entry, if any), where a source's fingerprint is its
-    identity in ``sources`` ("files", "labels"; any JSON value, e.g. a
-    multiset_signature triple). A stage the config switches off
-    (sem_candidates without the semantic channel) has fingerprint None."""
+    [name, [fingerprint of each read], [value of each field]], where a
+    source's fingerprint is its identity in ``sources`` ("files",
+    "labels"; any JSON value, e.g. a multiset_signature triple). A stage
+    the config switches off (sem_candidates without the semantic channel)
+    has fingerprint None."""
     fp = dict(sources)
     off = set() if config.semantic_channel else {"sem_candidates"}
     for name, (reads, cfg_fields) in STAGES.items():
         key = [name, [fp[r] for r in reads], [getattr(config, f) for f in cfg_fields]]
-        if name in REVISIONS:
-            key.append(REVISIONS[name])
         fp[name] = None if name in off else _sha(key)
     return {name: fp[name] for name in STAGES}
 

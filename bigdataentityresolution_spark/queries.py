@@ -682,10 +682,12 @@ def q_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_gradient_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-batch partial gradient reduction of the mini-batch LR loop
     (src/logistic.c:346-472: per-batch gradient sums reduced across the
-    thread pool), exercised through the PRODUCTION Arrow kernel
-    (scoring._batch_gradient_kernel) at fixed weights w=(0.7,-1.3),
-    b=0.25 over features derived from the events table. Oracle:
-    closed-form SQL (gradient_j = sum(x_j*(sigmoid(w.x)-y))/n per batch).
+    thread pool), exercised through the PRODUCTION training kernel
+    (scoring._irls_sums, the one both trainers run) at fixed coefficients
+    b=0.25, w=(0.7,-1.3) over features derived from the events table:
+    n_pairs = s[0], b_grad = s[2]/n, g_j = s[3+j]/n, abs_missed_sum =
+    s[-1]. Oracle: closed-form SQL (gradient_j = sum(x_j*(sigmoid(w.x)-y))/n
+    per batch).
 
     Known flake mode (latent, documented — VERDICT r3 'What's wrong' #3):
     the hash compare depends on round(·, 6) agreeing between the kernel's
@@ -699,7 +701,7 @@ def q_gradient_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from bigdataentityresolution_spark.operators.scoring import _batch_gradient_kernel
+    from bigdataentityresolution_spark.operators.scoring import _irls_sums
 
     ev = _load(spark, sf_dir, "events").select(
         F.pmod(F.col("event_id"), F.lit(8)).alias("batch"),
@@ -709,14 +711,19 @@ def q_gradient_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0.0))
         .alias("label"),
     )
-    kernel, schema = _batch_gradient_kernel(("x1", "x2"), np.array([0.7, -1.3]), 0.25)
+    beta = np.array([0.25, 0.7, -1.3])
 
-    def with_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = kernel(pdf)
-        out.insert(0, "batch", [int(pdf["batch"].iloc[0])])
-        return out
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        s = _irls_sums(pdf, ("x1", "x2"), beta)
+        n = s[0]
+        return pd.DataFrame(
+            [[int(pdf["batch"].iat[0]), int(n), s[2] / n, s[-1], s[3] / n, s[4] / n]]
+        )
 
-    res = ev.groupBy("batch").applyInPandas(with_batch, "batch long, " + schema)
+    res = ev.groupBy("batch").applyInPandas(
+        kernel,
+        "batch long, n_pairs long, b_grad double, abs_missed_sum double, g0 double, g1 double",
+    )
     return res.select(
         "batch",
         "n_pairs",

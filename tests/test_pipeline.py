@@ -367,18 +367,6 @@ def test_stage_fingerprint_cascade():
         assert {s for s in base if got[s] != base[s]} == expected, (base_fields, fields, source)
 
 
-def test_closure_fingerprint_skips_packed_format():
-    """The closure stage once stored its labels and the negative cluster
-    edges packed in one relation, under the fingerprint of the bare
-    [name, reads, fields]. A workdir written then must not resume it:
-    cluster would read the packed negative edges as must-link edges."""
-    sources = {"files": [100, 7, 9], "labels": [40, 3, 5]}
-    cfg = P.ERConfig()
-    packed = P._sha(["closure", [sources["files"], sources["labels"]],
-                     [cfg.cc_max_iter, cfg.cc_checkpoint_every]])
-    assert P.stage_fingerprints(cfg, sources)["closure"] != packed
-
-
 RESUME_CFG = P.ERConfig(self_train=False)
 
 
